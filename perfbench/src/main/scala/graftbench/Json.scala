@@ -1,0 +1,36 @@
+package graftbench
+
+/** Just enough JSON writing for the driver's result file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case b: Boolean => b.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case raw: Raw => raw.json
+    case m: Map[_, _] => m.map { case (k, x) => str(k.toString) + ":" + value(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+
+  /** Already-encoded JSON. */
+  final case class Raw(json: String)
+
+  def obj(fields: (String, Any)*): String =
+    fields.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+
+  def arr(xs: Iterable[Any]): Raw = Raw(value(xs))
+}
