@@ -121,28 +121,31 @@ object BpeOps {
       .agg(count(lit(1)).as("freq"))
     var vocab = mat(checkpointDir)(
       freq.withColumn("seq", expr(seq0("word"))))
-    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val bests = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, String, Long)]
     var saturated = false
     var i = 1
     while (i <= merges && !saturated) {
       val best = pairCounts(vocab)
         .orderBy(desc("cnt"), col("lhs"), col("rhs"))
         .limit(1)
-        .select(lit(i).as("merge_rank"), col("lhs"), col("rhs"),
-          concat(col("lhs"), col("rhs")).as("merged"), col("cnt"))
+        .select(col("lhs"), col("rhs"), col("cnt"))
       // ONE materialization per round (round 21; was three — best
       // checkpoint, isEmpty probe, vocab checkpoint — each a scheduled
       // job, and the driver-side job train was the top of the
       // q_bpe_train/q_bpe_encode profile). The winner rides into the
       // vocab update as the broadcast side of a LEFT join, so:
       //  - the SATURATION guard (round-10 probe find: once every word
-      //    is one symbol no pair remains) is now structural — an empty
+      //    is one symbol no pair remains) is structural — an empty
       //    winner leaves every `lhs` null and the vocab passes through
       //    UNCHANGED instead of being emptied by the old crossJoin;
-      //    the saturation signal itself rides the checkpoint job as an
-      //    observe() metric (count of non-null lhs), not its own action;
-      //  - the winning row is re-read from the checkpoint (every vocab
-      //    row carries it) instead of being its own materialization.
+      //  - the saturation signal AND the winning row ride the checkpoint
+      //    job as observe() metrics: every vocab row carries the same
+      //    winner, so max() over the rows IS the winner (idempotent under
+      //    re-execution; the count of non-null lhs can only over-count,
+      //    and is only tested against zero). The winner lands on the
+      //    driver as plain values, so no round's vocab-sized checkpoint
+      //    stays referenced by the merge table.
       // Results are bit-identical: same deterministic winner, same merge
       // application, same honest end of the merge table at saturation.
       val obs = org.apache.spark.sql.Observation()
@@ -150,28 +153,23 @@ object BpeOps {
         vocab.join(broadcast(best), lit(true), "left")
           .withColumn("seq", when(col("lhs").isNull, col("seq"))
             .otherwise(expr(mergeStep("seq", "lhs", "rhs"))))
-          .observe(obs, count(col("lhs")).as("n_win")))
-      saturated = obs.get("n_win").asInstanceOf[Long] == 0L
+          .observe(obs, count(col("lhs")).as("n_win"),
+            max(col("lhs")).as("lhs"), max(col("rhs")).as("rhs"),
+            max(col("cnt")).as("cnt")))
+      val win = obs.get
+      saturated = win("n_win").asInstanceOf[Long] == 0L
       vocab = next.select(col("word"), col("freq"), col("seq"))
       if (!saturated) {
-        bests += next
-          .filter(col("lhs").isNotNull).limit(1)
-          .select(col("merge_rank"), col("lhs"), col("rhs"),
-            col("merged"), col("cnt"))
+        val (lhs, rhs) = (win("lhs").toString, win("rhs").toString)
+        bests += ((i, lhs, rhs, lhs + rhs, win("cnt").asInstanceOf[Long]))
         i += 1
       }
     }
-    // a same-schema empty seed keeps the reduce total when saturation
-    // hits on round 1 (every word already a single symbol — e.g. a
-    // one-char-word corpus): the merge table is honestly empty. The
-    // seed is the ROUND PROJECTION over a limit(0) source, so its
-    // schema tracks the per-round select by construction (the
-    // positional union can never drift), and OptimizeLimitZero folds
-    // it to an empty relation at planning — no runtime cost
-    val zero = pairCounts(vocab).limit(0)
-      .select(lit(0).as("merge_rank"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("cnt"))
-    ((zero +: bests.toSeq).reduce(_.union(_)).orderBy("merge_rank"), vocab)
+    // saturation on round 1 (every word already a single symbol — e.g.
+    // a one-char-word corpus) leaves the merge table honestly empty
+    import documents.sparkSession.implicits._
+    (bests.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "cnt")
+      .orderBy("merge_rank"), vocab)
   }
 
   /** The merge table collapsed to ONE row carrying the rank-ordered

@@ -780,15 +780,18 @@ object DedupOps {
     * half the job; the keep/drop decision needs the transitive closure
     * (A≈B, B≈C ⇒ one cluster) with one representative per cluster.
     *
-    * Distributed min-label propagation: every doc starts labeled with its
-    * own id; each round takes the min of its own and its neighbors'
-    * labels; converges to the component-minimum in O(graph diameter)
-    * rounds (near-dup components are clique-ish — 2-3 rounds in
-    * practice). Each round is two co-partitioned joins over the EDGE set
-    * (≪ corpus, bounded by LSH collisions), never over n² — the same
-    * iterate-to-fixpoint shape GraphX/GraphFrames use at cluster scale.
-    * The DuckDB oracle walks the same closure with a recursive CTE —
-    * same RESULT, single-node plan.
+    * Hybrid connected components ([[connectedComponents]]): the pair
+    * graph is a checkpointed symmetric EDGE set (≪ corpus, bounded by
+    * LSH collisions), never n². While it has more than
+    * [[LocalFinishEdges]] directed edges, distributed min-label
+    * propagation with pointer jumping runs over it — a few joins per
+    * round, O(log diameter) rounds, the iterate-to-fixpoint shape
+    * GraphX/GraphFrames use at cluster scale; once the graph (at the
+    * start) or its contracted residual (after a round) fits the bound,
+    * the driver finishes it with one union-find, the hybrid
+    * local/distributed finish of GraphFrames (Kiveris et al., SoCC
+    * 2014). The DuckDB oracle walks the same closure with a recursive
+    * CTE — same RESULT, single-node plan.
     *
     * (k, bands) size the MinHash pair graph the closure runs over —
     * defaults are the fixture contract the oracle mirrors; a production
@@ -868,6 +871,13 @@ object DedupOps {
     * column; `pairs` has (`doc_a`, `doc_b`). Output: (doc_id,
     * cluster_id) with cluster_id = the component's minimum doc_id.
     *
+    * Hybrid finish: the graph is solved on the driver as soon as it is
+    * small enough to hold there ([[LocalFinishEdges]]), and by
+    * distributed label-propagation rounds until then — see
+    * [[ccWithRounds]]. Near-dup graphs below the bound (every sf0.1
+    * fixture) cost one edge checkpoint and one collect instead of a
+    * train of per-round jobs; corpus-scale graphs keep the rounds.
+    *
     * `checkpointDir`: when set, every per-round materialization is a
     * RELIABLE checkpoint into that directory (HDFS/object store on a
     * cluster) instead of `localCheckpoint` — localCheckpoint blocks live
@@ -880,12 +890,46 @@ object DedupOps {
                           checkpointDir: Option[String] = None): DataFrame =
     ccWithRounds(vertices, pairs, maxIters, checkpointDir)._1
 
-  /** [[connectedComponents]] + the number of propagation rounds it took
-    * (the last round is the no-change fixpoint probe) — exposed so the
-    * O(log diameter) pointer-jumping guarantee is spec-testable. */
+  /** Directed-edge bound of the driver-side CC finish: a graph (or a
+    * contracted residual graph) with at most this many directed edges is
+    * collected and solved by [[minRootLabels]]. 2^20 directed edges are
+    * 16 MB as (src, dst) longs; the driver holds half of them (one
+    * direction), a sorted id array and an int parent array over at most
+    * 2^20 endpoints (12 MB), and the returned label relation — tens of MB
+    * in all, far inside any driver heap. Past the bound, job count stops
+    * being the cost that matters and the distributed rounds take over. */
+  private[graft] val LocalFinishEdges: Int = 1 << 20
+
+  /** [[connectedComponents]] + the number of distributed propagation
+    * rounds it ran — exposed so the O(log diameter) pointer-jumping
+    * guarantee and the finish paths are spec-testable.
+    *
+    * Three ways to finish, all bit-identical:
+    *  - ROUND 0: the symmetric edge checkpoint observes its own row
+    *    count. At most `localFinishEdges` → collect one direction of the
+    *    edges, union-find on the driver, return the labels as a local
+    *    relation. No rounds run (rounds = 0).
+    *  - MID-LOOP: otherwise the distributed rounds run; after any round
+    *    whose observed `changed` is at most the bound, the CONTRACTED
+    *    residual graph — distinct (label(src), label(dst)) with different
+    *    labels — is collected through `limit(bound + 1)`. If it fits, it
+    *    is union-found and each label maps to its root by a broadcast
+    *    join; if not, the rounds go on.
+    *  - DISTRIBUTED: rounds to the fixpoint (`localFinishEdges = 0`
+    *    forces this path; it is the only one for large graphs).
+    *
+    * Why the local finishes are exact: labels only decrease, are always
+    * doc_ids of the vertex's own component, and a component's minimum
+    * always labels itself. So a component's labels form exactly one
+    * component of the contracted graph, whose min-root is the component
+    * minimum. Why the observed counts are safe: speculation or
+    * re-execution can only OVER-count, which can only skip a finish,
+    * never collect an unbounded set (the mid-loop read is limit-bound
+    * regardless). */
   private[graft] def ccWithRounds(vertices: DataFrame, pairs: DataFrame,
                                   maxIters: Int,
-                                  checkpointDir: Option[String] = None)
+                                  checkpointDir: Option[String] = None,
+                                  localFinishEdges: Int = LocalFinishEdges)
       : (DataFrame, Int) = {
     // Eager checkpointing everywhere, NOT cache: caching truncates
     // re-execution but keeps the logical plan, so an iterate-to-fixpoint
@@ -899,13 +943,6 @@ object DedupOps {
     def mat(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    val dbg = sys.env.contains("GRAFT_DEBUG_CLUSTERS")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"  [clusters] $tag: ${(now - t0) / 1e9}%.3f s")
-      t0 = now
-    }
     // the symmetric edge closure in ONE materialization (round 21; was
     // two — a pairs checkpoint, then a union of two branches over it into
     // a second checkpoint): exploding each pair into its two directions
@@ -913,21 +950,69 @@ object DedupOps {
     // checkpoint write+read cycle (and its scheduled job) disappears.
     // Pre-partitioned by the per-round join key ONCE — checkpointing
     // preserves outputPartitioning, so every round's edges⋈labels join
-    // shuffles only the label side, never the edges.
+    // shuffles only the label side, never the edges. The edge count
+    // rides the same job as an observe() metric (the round-0 gate).
+    val edgeObs = org.apache.spark.sql.Observation()
     val edges = mat(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst")))
-    lap("pair edges")
-    // Iterate ONLY over edge-touched vertices: a near-dup graph is sparse
-    // — the overwhelming share of a real corpus has no candidate pair at
-    // all and is trivially its own singleton cluster. Keeping isolated
-    // vertices out of the loop shrinks every round's joins, checkpoints,
-    // and convergence counts from O(corpus) to O(touched vertices); the
-    // singletons re-enter once, join-free, after the fixpoint.
-    val touched = edges.select(col("src").as("doc_id")).distinct()
+      .repartition(col("dst"))
+      .observe(edgeObs, count(lit(1)).as("edges")))
+    val (labels, touched, rounds) =
+      if (edgeObs.get("edges").asInstanceOf[Long] <= localFinishEdges) {
+        // round-0 finish: one direction of the symmetric closure carries
+        // every edge once (src == dst keeps a self-paired vertex)
+        val local = localPairs(edges, minRootLabels(collectLongPairs(
+          edges.filter(col("src") <= col("dst")), "src", "dst")),
+          "doc_id", "cluster_id")
+        (local, local.select(col("doc_id")), 0)
+      } else {
+        // Iterate ONLY over edge-touched vertices: a near-dup graph is
+        // sparse — the overwhelming share of a real corpus has no
+        // candidate pair at all and is trivially its own singleton
+        // cluster. Keeping isolated vertices out of the loop shrinks every
+        // round's joins, checkpoints, and convergence counts from
+        // O(corpus) to O(touched vertices); the singletons re-enter once,
+        // join-free, after the fixpoint.
+        val touched = edges.select(col("src").as("doc_id")).distinct()
+        val (lbl, iters) =
+          propagate(edges, touched, maxIters, localFinishEdges, mat)
+        (lbl, touched, iters)
+      }
+    val isolated = vertices
+      .join(touched, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    (labels.union(isolated), rounds)
+  }
+
+  /** Two id columns of `df` collected to the driver as long pairs. */
+  private def collectLongPairs(df: DataFrame, a: String, b: String)
+      : Array[(Long, Long)] = {
+    import df.sparkSession.implicits._
+    df.select(col(a).cast("long"), col(b).cast("long"))
+      .as[(Long, Long)].collect()
+  }
+
+  /** Driver-side id pairs back as a local relation, cast to the id type
+    * of `edges`' `src`, so a local finish returns exactly the schema of
+    * the distributed path. */
+  private def localPairs(edges: DataFrame, rows: Array[(Long, Long)],
+                         a: String, b: String): DataFrame = {
+    import edges.sparkSession.implicits._
+    val idType = edges.schema("src").dataType
+    rows.toSeq.toDF(a, b)
+      .select(col(a).cast(idType).as(a), col(b).cast(idType).as(b))
+  }
+
+  /** The distributed rounds of [[ccWithRounds]] over the edge-touched
+    * vertices, until the fixpoint or until the contracted residual graph
+    * fits `localFinishEdges` and is solved on the driver (the mid-loop
+    * finish). Returns (doc_id, cluster_id) labels and the rounds run. */
+  private def propagate(edges: DataFrame, touched: DataFrame, maxIters: Int,
+                        localFinishEdges: Int, mat: DataFrame => DataFrame)
+      : (DataFrame, Int) = {
     // `chg` = did this label move LAST round (round 20): a vertex's
     // neighbor-min can only decrease when a neighbor's label decreased
     // in the previous round, so the neighbor-min join needs only the
@@ -942,7 +1027,6 @@ object DedupOps {
       col("doc_id").as("cluster_id"),
       col("doc_id").as("prev"),
       lit(true).as("chg")))
-    lap("touched vertices")
 
     // One propagation step: neighbor-min, then pointer jump (follow the
     // label's label). Plain neighbor-min needs O(path length) rounds on
@@ -979,9 +1063,35 @@ object DedupOps {
           stepped("prev").as("prev"))
     }
 
+    // Mid-loop finish: the contracted residual graph — every edge
+    // relabeled by its endpoints' current labels, self-loops dropped,
+    // deduplicated — read through a limit, so an oversized residual
+    // costs one bounded collect and the rounds go on. If it fits, its
+    // min-roots relabel the frame through a broadcast join (labels that
+    // are already roots keep themselves).
+    def finish(lbl: DataFrame): Option[DataFrame] = {
+      def side(end: String) = lbl.select(col("doc_id").as(end),
+        col("cluster_id").as(s"l_$end"))
+      val contracted = collectLongPairs(
+        edges.join(side("dst"), "dst").join(side("src"), "src")
+          .filter(col("l_src") =!= col("l_dst"))
+          .select(col("l_src"), col("l_dst"))
+          .distinct()
+          .limit(localFinishEdges + 1), "l_src", "l_dst")
+      Option.when(contracted.length <= localFinishEdges) {
+        val roots = localPairs(edges,
+          minRootLabels(contracted).filter { case (l, r) => l != r },
+          "label", "root")
+        lbl.join(broadcast(roots), col("cluster_id") === col("label"), "left")
+          .select(col("doc_id"),
+            coalesce(col("root"), col("cluster_id")).as("cluster_id"))
+      }
+    }
+
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < maxIters) {
+    var finished: Option[DataFrame] = None
+    while (changed > 0 && iter < maxIters && finished.isEmpty) {
       // one step per materialized round — batching two steps per
       // checkpoint was measured SLOWER (deeper per-round plans cost more
       // in planning/codegen than the saved checkpoint+count jobs)
@@ -1010,17 +1120,53 @@ object DedupOps {
         col("cluster_id").as("prev"),
         (col("cluster_id") < col("prev")).as("chg"))
       iter += 1
-      lap(s"round $iter (changed=$changed)")
+      if (changed > 0 && changed <= localFinishEdges)
+        finished = finish(labels)
     }
     // a non-converged result is WRONG (labels are not component minima,
     // pairs may split across clusters) — fail loudly, never return it
-    require(changed == 0,
+    require(changed == 0 || finished.isDefined,
       s"connectedComponents did not converge within $maxIters rounds " +
         s"($changed labels still changing) — raise maxIters")
-    val isolated = vertices
-      .join(touched, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    (labels.select(col("doc_id"), col("cluster_id")).union(isolated), iter)
+    (finished.getOrElse(labels.select(col("doc_id"), col("cluster_id"))), iter)
+  }
+
+  /** Min-root union-find over an undirected edge list, on the driver:
+    * every endpoint → the minimum id of its component. Ids are
+    * compressed to indices of their sorted distinct array, so linking
+    * the larger root under the smaller keeps every root at its set's
+    * minimum id — the label the distributed rounds converge to. Working
+    * set: two longs per edge (sorted endpoints) and an int parent per
+    * distinct endpoint. */
+  private def minRootLabels(edges: Array[(Long, Long)])
+      : Array[(Long, Long)] = {
+    val ends = new Array[Long](edges.length * 2)
+    var i = 0
+    while (i < edges.length) {
+      ends(2 * i) = edges(i)._1
+      ends(2 * i + 1) = edges(i)._2
+      i += 1
+    }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    i = 0
+    while (i < ends.length) {
+      if (n == 0 || ends(i) != ends(n - 1)) { ends(n) = ends(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ends, 0, n, id)
+    edges.foreach { case (a, b) =>
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Array.tabulate(n)(k => (ends(k), ends(find(k))))
   }
 
   /** §2-28 `q_dedup_embedding`: blocked cosine near-dup pairs (cos ≥ τ)
@@ -1276,21 +1422,28 @@ object DedupOps {
       : DataFrame =
     connectedComponents(
       embeddings.select(col("vec_id").as("doc_id")),
-      // the rp pair graph (hard recall floor + the (bands, bits)
-      // corpus-size knob — SURVEY §8), NOT the fixed-width tiled one.
-      // Block-stream checkpointing follows the CC durability mode: on
-      // the reliable path a localCheckpointed subtree would truncate
-      // lineage and void executor-loss recovery (see
-      // embeddingRpCandidates); on the local path lineage is truncated
-      // by mat() regardless, so the checkpoint just saves computing the
-      // rp keys once per self-join side.
-      cosineVerifiedPairs(embeddings,
-        embeddingRpCandidates(embeddings, bands, bitsPerBand,
-          checkpoint = checkpointDir.isEmpty), tau)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
+      embeddingClusterPairs(embeddings, tau, bands, bitsPerBand,
+        checkpointDir.isEmpty),
       maxIters, checkpointDir)
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
       .orderBy("vec_id")
+
+  /** The (doc_a, doc_b) pair graph [[dedupEmbeddingClusters]] closes:
+    * the rp pair graph (hard recall floor + the (bands, bits)
+    * corpus-size knob — SURVEY §8), NOT the fixed-width tiled one.
+    * Block-stream checkpointing (`checkpoint`) follows the CC durability
+    * mode: on the reliable path a localCheckpointed subtree would
+    * truncate lineage and void executor-loss recovery (see
+    * embeddingRpCandidates); on the local path lineage is truncated by
+    * the CC materializations regardless, so the checkpoint just saves
+    * computing the rp keys once per self-join side. */
+  private[graft] def embeddingClusterPairs(embeddings: DataFrame,
+                                           tau: Double, bands: Int,
+                                           bitsPerBand: Int,
+                                           checkpoint: Boolean): DataFrame =
+    cosineVerifiedPairs(embeddings,
+      embeddingRpCandidates(embeddings, bands, bitsPerBand, checkpoint), tau)
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
 
   /** §2-86 `q_dedup_embedding_representative`: the EMBEDDING family's
     * keep/drop DECISION — [[dedupEmbeddingClusters]]' components reduced

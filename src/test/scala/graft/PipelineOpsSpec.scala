@@ -327,9 +327,26 @@ class PipelineOpsSpec extends SparkSpec {
     val reliableEmb = collect(DedupOps.dedupEmbeddingClusters(embs,
       checkpointDir = Some(dir)))
     assert(reliableEmb == localEmb)
-    // the rounds really went through reliable storage
     val files = new java.io.File(dir).listFiles
     assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
+    // these fixtures are small enough for the driver-side finish, so
+    // the runs above never reach a distributed round: run the same
+    // graphs again with the finish disabled, rounds into a fresh dir
+    val roundsDir =
+      java.nio.file.Files.createTempDirectory("graft_cc_rounds").toString
+    def distributed(vertices: org.apache.spark.sql.DataFrame,
+                    pairs: org.apache.spark.sql.DataFrame) =
+      collect(DedupOps.ccWithRounds(vertices, pairs, maxIters = 50,
+        checkpointDir = Some(roundsDir), localFinishEdges = 0)._1)
+    assert(distributed(docs.select("doc_id"), DedupOps.minhashPairs(docs)) ==
+      localDocs)
+    assert(distributed(embs.select(col("vec_id").as("doc_id")),
+      DedupOps.embeddingClusterPairs(embs, 0.4, graft.plans.RpLsh.Bands,
+        graft.plans.RpLsh.BitsPerBand, checkpoint = false)) == localEmb)
+    // the rounds really went through reliable storage
+    val roundFiles = new java.io.File(roundsDir).listFiles
+    assert(roundFiles != null && roundFiles.nonEmpty,
+      s"no checkpoint data under $roundsDir")
   }
 
   test("kmeans/pq fits: reliable-checkpoint path matches the local path") {
@@ -349,14 +366,19 @@ class PipelineOpsSpec extends SparkSpec {
     assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
   }
 
-  test("CC convergence count rides the checkpoint job (no per-round count job)") {
+  /** First-stage names (the action call sites) of every job a CC run
+    * on a `n`-node chain schedules, plus the rounds it reports. AQE off
+    * so every Dataset action is exactly one scheduler job (with AQE each
+    * exchange materializes as its own stage-job and the accounting
+    * measures shuffle count, not action count). Broadcast futures can
+    * still fire their own 1-stage jobs on a fixture this small, which
+    * is why callers key on stage NAMES, not raw job totals. */
+  private def ccChainJobs(n: Long, localFinishEdges: Int)
+      : (Seq[String], Int) = {
     import spark.implicits._
-    // chain graph: several pointer-jumping rounds, so a reintroduced
-    // per-round count() job would show up multiplied by the round count
-    val n = 32L
     val verts = (0L until n).toDF("doc_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val group = "cc-job-fold-spec"
+    val group = s"cc-job-spec-$localFinishEdges"
     val jobStages =
       new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -367,18 +389,11 @@ class PipelineOpsSpec extends SparkSpec {
           jobStages.add(js.stageInfos.map(_.name).toSeq)
     }
     spark.sparkContext.addSparkListener(listener)
-    // AQE off so every Dataset action is exactly one scheduler job
-    // (with AQE each exchange materializes as its own stage-job and the
-    // accounting measures shuffle count, not action count; the fold
-    // holds under AQE too — this just makes it countable). Broadcast
-    // futures still fire their own 1-stage jobs on a fixture this small
-    // (the checkpointed label frame carries accurate stats, so the
-    // planner broadcasts it), which is why the assertions key on stage
-    // NAMES — the action call sites — not raw job totals.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.setJobGroup(group, "cc job fold spec")
+    spark.sparkContext.setJobGroup(group, "cc job spec")
     val rounds = try {
-      DedupOps.ccWithRounds(verts, pairs, maxIters = 50)._2
+      DedupOps.ccWithRounds(verts, pairs, maxIters = 50,
+        localFinishEdges = localFinishEdges)._2
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -386,7 +401,14 @@ class PipelineOpsSpec extends SparkSpec {
     Thread.sleep(2000) // listener bus is async
     spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    val actions = jobStages.asScala.toSeq.map(_.headOption.getOrElse(""))
+    (jobStages.asScala.toSeq.map(_.headOption.getOrElse("")), rounds)
+  }
+
+  test("CC convergence count rides the checkpoint job (no per-round count job)") {
+    // chain graph, distributed path pinned (finish disabled): several
+    // pointer-jumping rounds, so a reintroduced per-round count() job
+    // would show up multiplied by the round count
+    val (actions, rounds) = ccChainJobs(32L, localFinishEdges = 0)
     val checkpoints = actions.count(_.toLowerCase.contains("checkpoint"))
     val counts = actions.count(_.startsWith("count at"))
     // 2 one-off materializations (exploded symmetric edges, initial
@@ -399,6 +421,65 @@ class PipelineOpsSpec extends SparkSpec {
       s"$checkpoints checkpoint actions for $rounds rounds (want ${2 + rounds}): $actions")
     assert(counts == 0,
       s"$counts count() jobs — the convergence count is a separate job again: $actions")
+  }
+
+  test("CC round-0 finish: one edge checkpoint, one collect, no rounds") {
+    // the same chain under the default bound: the edge count rides the
+    // edge checkpoint, the edges cross to the driver in one collect, and
+    // the union-find replaces every round — exactly two jobs
+    val (actions, rounds) = ccChainJobs(32L, DedupOps.LocalFinishEdges)
+    assert(rounds == 0, s"$rounds distributed rounds ran: $actions")
+    assert(actions.count(_.toLowerCase.contains("checkpoint")) == 1, actions)
+    assert(actions.count(_.startsWith("collect at")) == 1, actions)
+    assert(actions.size == 2, s"${actions.size} jobs: $actions")
+  }
+
+  test("CC: round-0, mid-loop and all-distributed finishes give identical labels") {
+    import spark.implicits._
+    def labelsOf(verts: org.apache.spark.sql.DataFrame,
+                 pairs: org.apache.spark.sql.DataFrame, bound: Int) = {
+      val (df, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50,
+        localFinishEdges = bound)
+      (df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, rounds)
+    }
+    def agree(verts: org.apache.spark.sql.DataFrame,
+              pairs: org.apache.spark.sql.DataFrame, midBound: Int,
+              expected: Set[(Long, Long)]): Unit = {
+      val nDirected = 2 * pairs.count()
+      assert(midBound < nDirected, "mid-loop bound must skip the round-0 finish")
+      val (round0, r0) = labelsOf(verts, pairs, DedupOps.LocalFinishEdges)
+      val (mid, rMid) = labelsOf(verts, pairs, midBound)
+      val (dist, rDist) = labelsOf(verts, pairs, 0)
+      assert(dist == expected)
+      assert(round0 == dist, s"round-0 finish: ${round0 -- dist} vs ${dist -- round0}")
+      assert(mid == dist, s"mid-loop finish: ${mid -- dist} vs ${dist -- mid}")
+      assert(r0 == 0)
+      // the mid-loop finish ran at least one round and cut the loop short
+      assert(rMid >= 1 && rMid < rDist, s"mid-loop $rMid rounds, distributed $rDist")
+    }
+    // the 33-node chain (diameter 32): 64 directed edges, so a bound of
+    // 48 forces distributed rounds until `changed` drops to it
+    agree((0L to 32L).toDF("doc_id"),
+      (0L until 32L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+      midBound = 48, (0L to 32L).map(_ -> 0L).toSet)
+    // several components with non-minimal entry points (a reversed
+    // chain, a star around a high id, a clique, one pair) plus isolated
+    // vertices that appear in no pair
+    val chain = (20L until 30L).map(i => (i + 1, i))
+    val star = (41L to 47L).map(i => (50L, i))
+    val clique = for (a <- 60L to 64L; b <- a + 1 to 64L) yield (b, a)
+    val pairList = chain ++ star ++ clique :+ ((80L, 70L))
+    val isolated = Seq(1L, 2L, 35L, 99L)
+    val ids = (pairList.flatMap { case (a, b) => Seq(a, b) } ++ isolated).distinct
+    val expected = ids.map { id =>
+      id -> (if (id >= 20 && id <= 30) 20L
+        else if (id >= 41 && id <= 50) 41L
+        else if (id >= 60 && id <= 64) 60L
+        else if (id == 70 || id == 80) 70L
+        else id)
+    }.toSet
+    agree(ids.toDF("doc_id"), pairList.toDF("doc_a", "doc_b"),
+      midBound = 40, expected)
   }
 
   test("dedupIncremental: exactly the cross-set restriction of the full pair universe, via a broadcast probe") {
@@ -647,7 +728,9 @@ class PipelineOpsSpec extends SparkSpec {
     val diameter = 32
     val verts = (0L to diameter.toLong).toDF("doc_id")
     val pairs = (0L until diameter.toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50)
+    // the distributed path (finish disabled) — the one this bound is for
+    val (labels, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50,
+      localFinishEdges = 0)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == diameter + 1 && got.values.forall(_ == 0L), got)
     // log2(32) = 5 propagation-doubling rounds, +1 fixpoint probe, +2
