@@ -29,10 +29,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // an Int, so the summary line's "cpus" and the per-core file name
-    // stay valid for any value (a non-numeric `*` or an empty string
-    // falls back to the machine's processor count)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors)
+    // stay valid for any value: 32 when unset, and a value that is not a
+    // positive integer (`*`, an empty string) falls back to the
+    // machine's processor count
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(v =>
+      v.trim.toIntOption.filter(_ > 0)
+        .getOrElse(Runtime.getRuntime.availableProcessors))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)

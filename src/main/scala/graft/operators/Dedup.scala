@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.{TextFuns, VectorFuns}
 
@@ -782,16 +783,15 @@ object DedupOps {
     *
     * Hybrid connected components ([[connectedComponents]]): the pair
     * graph is a checkpointed symmetric EDGE set (≪ corpus, bounded by
-    * LSH collisions), never n². While it has more than
-    * [[LocalFinishEdges]] directed edges, distributed min-label
-    * propagation with pointer jumping runs over it — a few joins per
-    * round, O(log diameter) rounds, the iterate-to-fixpoint shape
-    * GraphX/GraphFrames use at cluster scale; once the graph (at the
-    * start) or its contracted residual (after a round) fits the bound,
-    * the driver finishes it with one union-find, the hybrid
-    * local/distributed finish of GraphFrames (Kiveris et al., SoCC
-    * 2014). The DuckDB oracle walks the same closure with a recursive
-    * CTE — same RESULT, single-node plan.
+    * LSH collisions), never n². A graph of at most
+    * [[LocalFinishEdges]] directed edges is collected and finished on
+    * the driver with one union-find, the local end of GraphFrames'
+    * hybrid local/distributed components (Kiveris et al., SoCC 2014).
+    * A larger one runs distributed min-label propagation with pointer
+    * jumping — a few joins per round, O(log diameter) rounds, the
+    * iterate-to-fixpoint shape GraphX/GraphFrames use at cluster scale.
+    * The DuckDB oracle walks the same closure with a recursive CTE —
+    * same RESULT, single-node plan.
     *
     * (k, bands) size the MinHash pair graph the closure runs over —
     * defaults are the fixture contract the oracle mirrors; a production
@@ -871,12 +871,14 @@ object DedupOps {
     * column; `pairs` has (`doc_a`, `doc_b`). Output: (doc_id,
     * cluster_id) with cluster_id = the component's minimum doc_id.
     *
-    * Hybrid finish: the graph is solved on the driver as soon as it is
-    * small enough to hold there ([[LocalFinishEdges]]), and by
-    * distributed label-propagation rounds until then — see
+    * Hybrid finish: a graph small enough to hold on the driver
+    * ([[LocalFinishEdges]]) is solved there in one union-find; a larger
+    * one runs distributed label-propagation rounds — see
     * [[ccWithRounds]]. Near-dup graphs below the bound (every sf0.1
     * fixture) cost one edge checkpoint and one collect instead of a
-    * train of per-round jobs; corpus-scale graphs keep the rounds.
+    * train of per-round jobs; corpus-scale graphs keep the rounds. The
+    * driver finish needs integral ids (byte/short/int/long); ids of any
+    * other orderable type always take the rounds.
     *
     * `checkpointDir`: when set, every per-round materialization is a
     * RELIABLE checkpoint into that directory (HDFS/object store on a
@@ -890,42 +892,35 @@ object DedupOps {
                           checkpointDir: Option[String] = None): DataFrame =
     ccWithRounds(vertices, pairs, maxIters, checkpointDir)._1
 
-  /** Directed-edge bound of the driver-side CC finish: a graph (or a
-    * contracted residual graph) with at most this many directed edges is
-    * collected and solved by [[minRootLabels]]. 2^20 directed edges are
-    * 16 MB as (src, dst) longs; the driver holds half of them (one
-    * direction), a sorted id array and an int parent array over at most
-    * 2^20 endpoints (12 MB), and the returned label relation — tens of MB
-    * in all, far inside any driver heap. Past the bound, job count stops
+  /** Directed-edge bound of the driver-side CC finish: a graph with at
+    * most this many directed edges is collected and solved by
+    * [[minRootLabels]]. 2^20 directed edges are 16 MB as (src, dst)
+    * longs; the driver holds half of them (one direction), a sorted id
+    * array and an int parent array over at most 2^20 endpoints (12 MB),
+    * and the returned label relation — tens of MB in all, far inside any
+    * driver heap. Past the bound, job count stops
     * being the cost that matters and the distributed rounds take over. */
   private[graft] val LocalFinishEdges: Int = 1 << 20
 
   /** [[connectedComponents]] + the number of distributed propagation
     * rounds it ran — exposed so the O(log diameter) pointer-jumping
-    * guarantee and the finish paths are spec-testable.
+    * guarantee and both finish paths are spec-testable.
     *
-    * Three ways to finish, all bit-identical:
+    * Two ways to finish, bit-identical:
     *  - ROUND 0: the symmetric edge checkpoint observes its own row
-    *    count. At most `localFinishEdges` → collect one direction of the
-    *    edges, union-find on the driver, return the labels as a local
-    *    relation. No rounds run (rounds = 0).
-    *  - MID-LOOP: otherwise the distributed rounds run; after any round
-    *    whose observed `changed` is at most the bound, the CONTRACTED
-    *    residual graph — distinct (label(src), label(dst)) with different
-    *    labels — is collected through `limit(bound + 1)`. If it fits, it
-    *    is union-found and each label maps to its root by a broadcast
-    *    join; if not, the rounds go on.
-    *  - DISTRIBUTED: rounds to the fixpoint (`localFinishEdges = 0`
-    *    forces this path; it is the only one for large graphs).
+    *    count. At most `localFinishEdges` (and integral ids) → collect
+    *    one direction of the edges, union-find on the driver, return the
+    *    labels as a local relation. No rounds run (rounds = 0).
+    *  - DISTRIBUTED: otherwise rounds to the fixpoint
+    *    (`localFinishEdges = 0` forces this path).
     *
-    * Why the local finishes are exact: labels only decrease, are always
-    * doc_ids of the vertex's own component, and a component's minimum
-    * always labels itself. So a component's labels form exactly one
-    * component of the contracted graph, whose min-root is the component
-    * minimum. Why the observed counts are safe: speculation or
-    * re-execution can only OVER-count, which can only skip a finish,
-    * never collect an unbounded set (the mid-loop read is limit-bound
-    * regardless). */
+    * Why the local finish is exact: a min-root union-find labels every
+    * vertex with its component's minimum id, the label the rounds
+    * converge to. Why the observed count is safe: speculation or
+    * re-execution can only OVER-count, which can only skip the finish,
+    * never collect an unbounded set. A mid-loop finish (collect the
+    * contracted residual once a round's `changed` is small) is left
+    * out until a benchmark graph exceeds the bound and can measure it. */
   private[graft] def ccWithRounds(vertices: DataFrame, pairs: DataFrame,
                                   maxIters: Int,
                                   checkpointDir: Option[String] = None,
@@ -960,13 +955,16 @@ object DedupOps {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
       .observe(edgeObs, count(lit(1)).as("edges")))
+    // the driver finish round-trips ids through Long: exact for
+    // integral ids only, so any other id type keeps the rounds
+    val integralIds = edges.schema("src").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
     val (labels, touched, rounds) =
-      if (edgeObs.get("edges").asInstanceOf[Long] <= localFinishEdges) {
-        // round-0 finish: one direction of the symmetric closure carries
-        // every edge once (src == dst keeps a self-paired vertex)
-        val local = localPairs(edges, minRootLabels(collectLongPairs(
-          edges.filter(col("src") <= col("dst")), "src", "dst")),
-          "doc_id", "cluster_id")
+      if (integralIds &&
+        edgeObs.get("edges").asInstanceOf[Long] <= localFinishEdges) {
+        val local = localFinish(edges)
         (local, local.select(col("doc_id")), 0)
       } else {
         // Iterate ONLY over edge-touched vertices: a near-dup graph is
@@ -977,8 +975,7 @@ object DedupOps {
         // O(corpus) to O(touched vertices); the singletons re-enter once,
         // join-free, after the fixpoint.
         val touched = edges.select(col("src").as("doc_id")).distinct()
-        val (lbl, iters) =
-          propagate(edges, touched, maxIters, localFinishEdges, mat)
+        val (lbl, iters) = propagate(edges, touched, maxIters, mat)
         (lbl, touched, iters)
       }
     val isolated = vertices
@@ -987,31 +984,27 @@ object DedupOps {
     (labels.union(isolated), rounds)
   }
 
-  /** Two id columns of `df` collected to the driver as long pairs. */
-  private def collectLongPairs(df: DataFrame, a: String, b: String)
-      : Array[(Long, Long)] = {
-    import df.sparkSession.implicits._
-    df.select(col(a).cast("long"), col(b).cast("long"))
-      .as[(Long, Long)].collect()
-  }
-
-  /** Driver-side id pairs back as a local relation, cast to the id type
-    * of `edges`' `src`, so a local finish returns exactly the schema of
-    * the distributed path. */
-  private def localPairs(edges: DataFrame, rows: Array[(Long, Long)],
-                         a: String, b: String): DataFrame = {
+  /** The round-0 finish: one direction of the symmetric closure
+    * (every edge once; src == dst keeps a self-paired vertex) collected
+    * as long pairs, union-found on the driver, and returned as a local
+    * (doc_id, cluster_id) relation cast back to the id type of `src`,
+    * so it has exactly the schema of the distributed path. */
+  private def localFinish(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
+    val pairs = edges.filter(col("src") <= col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)].collect()
     val idType = edges.schema("src").dataType
-    rows.toSeq.toDF(a, b)
-      .select(col(a).cast(idType).as(a), col(b).cast(idType).as(b))
+    minRootLabels(pairs).toSeq.toDF("doc_id", "cluster_id")
+      .select(col("doc_id").cast(idType).as("doc_id"),
+        col("cluster_id").cast(idType).as("cluster_id"))
   }
 
   /** The distributed rounds of [[ccWithRounds]] over the edge-touched
-    * vertices, until the fixpoint or until the contracted residual graph
-    * fits `localFinishEdges` and is solved on the driver (the mid-loop
-    * finish). Returns (doc_id, cluster_id) labels and the rounds run. */
+    * vertices, to the fixpoint. Returns (doc_id, cluster_id) labels and
+    * the rounds run. */
   private def propagate(edges: DataFrame, touched: DataFrame, maxIters: Int,
-                        localFinishEdges: Int, mat: DataFrame => DataFrame)
+                        mat: DataFrame => DataFrame)
       : (DataFrame, Int) = {
     // `chg` = did this label move LAST round (round 20): a vertex's
     // neighbor-min can only decrease when a neighbor's label decreased
@@ -1063,35 +1056,9 @@ object DedupOps {
           stepped("prev").as("prev"))
     }
 
-    // Mid-loop finish: the contracted residual graph — every edge
-    // relabeled by its endpoints' current labels, self-loops dropped,
-    // deduplicated — read through a limit, so an oversized residual
-    // costs one bounded collect and the rounds go on. If it fits, its
-    // min-roots relabel the frame through a broadcast join (labels that
-    // are already roots keep themselves).
-    def finish(lbl: DataFrame): Option[DataFrame] = {
-      def side(end: String) = lbl.select(col("doc_id").as(end),
-        col("cluster_id").as(s"l_$end"))
-      val contracted = collectLongPairs(
-        edges.join(side("dst"), "dst").join(side("src"), "src")
-          .filter(col("l_src") =!= col("l_dst"))
-          .select(col("l_src"), col("l_dst"))
-          .distinct()
-          .limit(localFinishEdges + 1), "l_src", "l_dst")
-      Option.when(contracted.length <= localFinishEdges) {
-        val roots = localPairs(edges,
-          minRootLabels(contracted).filter { case (l, r) => l != r },
-          "label", "root")
-        lbl.join(broadcast(roots), col("cluster_id") === col("label"), "left")
-          .select(col("doc_id"),
-            coalesce(col("root"), col("cluster_id")).as("cluster_id"))
-      }
-    }
-
     var changed = 1L
     var iter = 0
-    var finished: Option[DataFrame] = None
-    while (changed > 0 && iter < maxIters && finished.isEmpty) {
+    while (changed > 0 && iter < maxIters) {
       // one step per materialized round — batching two steps per
       // checkpoint was measured SLOWER (deeper per-round plans cost more
       // in planning/codegen than the saved checkpoint+count jobs)
@@ -1120,15 +1087,13 @@ object DedupOps {
         col("cluster_id").as("prev"),
         (col("cluster_id") < col("prev")).as("chg"))
       iter += 1
-      if (changed > 0 && changed <= localFinishEdges)
-        finished = finish(labels)
     }
     // a non-converged result is WRONG (labels are not component minima,
     // pairs may split across clusters) — fail loudly, never return it
-    require(changed == 0 || finished.isDefined,
+    require(changed == 0,
       s"connectedComponents did not converge within $maxIters rounds " +
         s"($changed labels still changing) — raise maxIters")
-    (finished.getOrElse(labels.select(col("doc_id"), col("cluster_id"))), iter)
+    (labels.select(col("doc_id"), col("cluster_id")), iter)
   }
 
   /** Min-root union-find over an undirected edge list, on the driver:

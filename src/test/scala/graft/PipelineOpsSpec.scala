@@ -434,7 +434,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(actions.size == 2, s"${actions.size} jobs: $actions")
   }
 
-  test("CC: round-0, mid-loop and all-distributed finishes give identical labels") {
+  test("CC: round-0 and all-distributed finishes give identical labels") {
     import spark.implicits._
     def labelsOf(verts: org.apache.spark.sql.DataFrame,
                  pairs: org.apache.spark.sql.DataFrame, bound: Int) = {
@@ -443,25 +443,18 @@ class PipelineOpsSpec extends SparkSpec {
       (df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, rounds)
     }
     def agree(verts: org.apache.spark.sql.DataFrame,
-              pairs: org.apache.spark.sql.DataFrame, midBound: Int,
+              pairs: org.apache.spark.sql.DataFrame,
               expected: Set[(Long, Long)]): Unit = {
-      val nDirected = 2 * pairs.count()
-      assert(midBound < nDirected, "mid-loop bound must skip the round-0 finish")
       val (round0, r0) = labelsOf(verts, pairs, DedupOps.LocalFinishEdges)
-      val (mid, rMid) = labelsOf(verts, pairs, midBound)
       val (dist, rDist) = labelsOf(verts, pairs, 0)
       assert(dist == expected)
       assert(round0 == dist, s"round-0 finish: ${round0 -- dist} vs ${dist -- round0}")
-      assert(mid == dist, s"mid-loop finish: ${mid -- dist} vs ${dist -- mid}")
-      assert(r0 == 0)
-      // the mid-loop finish ran at least one round and cut the loop short
-      assert(rMid >= 1 && rMid < rDist, s"mid-loop $rMid rounds, distributed $rDist")
+      assert(r0 == 0 && rDist >= 1, s"round-0 $r0 rounds, distributed $rDist")
     }
-    // the 33-node chain (diameter 32): 64 directed edges, so a bound of
-    // 48 forces distributed rounds until `changed` drops to it
+    // the 33-node chain (diameter 32)
     agree((0L to 32L).toDF("doc_id"),
       (0L until 32L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
-      midBound = 48, (0L to 32L).map(_ -> 0L).toSet)
+      (0L to 32L).map(_ -> 0L).toSet)
     // several components with non-minimal entry points (a reversed
     // chain, a star around a high id, a clique, one pair) plus isolated
     // vertices that appear in no pair
@@ -478,8 +471,20 @@ class PipelineOpsSpec extends SparkSpec {
         else if (id == 70 || id == 80) 70L
         else id)
     }.toSet
-    agree(ids.toDF("doc_id"), pairList.toDF("doc_a", "doc_b"),
-      midBound = 40, expected)
+    agree(ids.toDF("doc_id"), pairList.toDF("doc_a", "doc_b"), expected)
+  }
+
+  test("CC: non-integral ids skip the driver finish and keep the rounds") {
+    import spark.implicits._
+    // the driver finish round-trips ids through Long; string ids must
+    // take the distributed rounds, under the default bound, and still
+    // label every vertex with its component minimum
+    val verts = Seq("a", "b", "c", "d", "e").toDF("doc_id")
+    val pairs = Seq(("c", "b"), ("b", "a"), ("e", "d")).toDF("doc_a", "doc_b")
+    val (labels, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50)
+    assert(rounds >= 1, "string ids reached the driver finish")
+    assert(labels.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d", "e" -> "d"))
   }
 
   test("dedupIncremental: exactly the cross-set restriction of the full pair universe, via a broadcast probe") {
