@@ -28,21 +28,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // an Int, so the summary line's "cpus" and the per-core file name
-    // stay valid for any value: 32 when unset, and a value that is not a
-    // positive integer (`*`, an empty string) falls back to the
-    // machine's processor count
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(v =>
-      v.trim.toIntOption.filter(_ > 0)
-        .getOrElse(Runtime.getRuntime.availableProcessors))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 when unset: the core count of the published bench runs
+    val cpus = GraftSession.cpus(default = 32)
+    val spark = GraftSession.local(cpus)
 
     // round 13 (VERDICT r12 item 7): a bench-only extra line so encode
     // regressions aren't masked by q_bpe_encode's ~55% fixed inline
@@ -78,7 +66,11 @@ object Bench {
         // NonFatal only: after an OutOfMemoryError/StackOverflowError the
         // JVM is in an unknown state and every subsequent timing would be
         // untrustworthy — let fatal errors abort the whole run loudly.
-        case scala.util.control.NonFatal(_) => None
+        // The reason goes to stderr: stdout carries only the JSON lines.
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          None
       }
     }
     def best(a: Option[Double], b: Option[Double]): Option[Double] =

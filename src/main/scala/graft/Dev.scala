@@ -1,0 +1,90 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Dev measurement harness (measure first): for each named query, split
+  * wall time into the three phases that look identical in a bench total
+  * but need opposite fixes —
+  *   build = DataFrame construction (operator code, driver-side jobs
+  *           like checkpoints, quantiles and bloom builds run HERE),
+  *   plan  = analysis + optimization + physical planning (`executedPlan`
+  *           forced),
+  *   exec  = the noop-sink run of the prepared plan —
+  * and count the Spark jobs the build and exec phases start. Each query
+  * runs `reps` times in one warm session (the first rep is the
+  * codegen-compile pass; read the later reps); `total` is the query's
+  * cold-to-result wall time. With `planOutDir planSuffix`, the last
+  * rep's formatted plan, as planned before it runs, is written to
+  * `<planOutDir>/<key>_<planSuffix>.txt` (the `plans/rNN/` evidence).
+  * The session is [[GraftSession.local]], the Bench session, so the
+  * numbers and plans are the ones the bench times. A failing key prints
+  * its stack trace to stderr and the run goes on; the exit status is
+  * non-zero if any key failed.
+  *
+  * Usage: runMain graft.Dev <keys|--all> [sfDir] [reps] [planOutDir planSuffix]
+  */
+object Dev {
+  private val Usage =
+    "usage: Dev <q1,q2,...|--all> [sfDir] [reps] [planOutDir planSuffix]"
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 1 && args.length != 4 && args.length <= 5, Usage)
+    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val reps = args.lift(2).map(_.toInt).getOrElse(3)
+    val planOut: Option[(Path, String)] =
+      if (args.length == 5) Some((Paths.get(args(3)), args(4))) else None
+    val names =
+      if (args(0) == "--all") SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(",").toSeq
+    val spark = GraftSession.local(GraftSession.cpus(default = 32))
+    val jobs = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    // seconds and jobs started while `f` runs; the drain makes every job
+    // `f` started visible to the listener before the count is read
+    def phase[A](f: => A): (A, Double, Int) = {
+      GraftBridge.drainListeners(spark.sparkContext)
+      val j0 = jobs.get
+      val t0 = System.nanoTime()
+      val a = f
+      val secs = (System.nanoTime() - t0) / 1e9
+      GraftBridge.drainListeners(spark.sparkContext)
+      (a, secs, jobs.get - j0)
+    }
+    def measure(name: String): Unit = (1 to reps).foreach { rep =>
+      val (df, tBuild, jBuild) = phase(SparkEntry.queries(name)(spark, sfDir))
+      val (_, tPlan, _) = phase(df.queryExecution.executedPlan)
+      if (rep == reps) planOut.foreach { case (dir, suffix) =>
+        Files.createDirectories(dir)
+        Files.writeString(dir.resolve(s"${name}_$suffix.txt"),
+          df.queryExecution.explainString(FormattedMode))
+      }
+      val (_, tExec, jExec) =
+        phase(df.write.format("noop").mode("overwrite").save())
+      println(f"[dev] $name rep$rep build=$tBuild%.3f plan=$tPlan%.3f " +
+        f"exec=$tExec%.3f total=${tBuild + tPlan + tExec}%.3f " +
+        s"jobs=$jBuild+$jExec")
+    }
+    val failed = names.filter { name =>
+      try { measure(name); false }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[dev] $name failed:")
+          e.printStackTrace()
+          true
+      }
+    }
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[dev] failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+}

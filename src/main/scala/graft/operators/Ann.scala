@@ -354,15 +354,6 @@ object AnnOps {
       .select(col("vec_id"), col("list_id"), col("dist"))
       .orderBy("vec_id")
 
-  /** The trained (list_id, c) centroid table [[kmeans]]' assignment
-    * refers to — the coarse-quantizer artifact an IVF build persists
-    * ([[pqSearchIvf]] ranks probe lists against it). */
-  def kmeansCentroids(embeddings: DataFrame, k: Int = 10,
-                      iters: Int = 2,
-                      checkpointDir: Option[String] = None): DataFrame =
-    kmeansPieces(q6Guarded(embeddings, checkpointDir), k, iters,
-      checkpointDir)._2
-
   /** Shared k-means fit over a [[q6Guarded]] frame: (final assignment
     * incl. q6s, final centroids). Taking the guarded frame (not the raw
     * embeddings) lets [[pqSearchIvf]] share ONE materialization across

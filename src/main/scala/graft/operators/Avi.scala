@@ -198,19 +198,6 @@ object AviOps {
     spark.createDataFrame(rdd, dhashSchema)
   }
 
-  /** §2-C `videoDedupRepresentative`: the video dedup endgame — two
-    * videos are duplicates when they SHARE a near-identical frame
-    * (Hamming ≤ 3 on any frame-hash pair: re-encodes, watermarks, and
-    * trims keep most frame hashes), clusters close over the shared-frame
-    * graph with the SAME machinery as the image/audio families
-    * (pigeonhole block candidates → connected components → one manifest
-    * row), so the three modalities cannot drift on cluster semantics.
-    * Output (cluster_id = min member, n_members, rep_dhash = the
-    * cluster's min frame hash).
-    *
-    * Scale: one decode pass (frames die at their hashes); candidates
-    * are 16-bit piece collisions, never n² videos × frames; CC rounds
-    * over the pair graph; one final cluster-keyed agg. */
   /** Minimal AVI WRITER — [[aviWalk]]'s inverse (the sink-side face, and
     * the synthetic-universe builder for `q_video_dedup_representative`):
     * one `vids` stream, frames as word-aligned `00dc` chunks, no index
@@ -419,7 +406,18 @@ object AviOps {
       }
       .start()
 
-  /** Frame-FREQUENCY guard (round 15): a frame hash carried by more
+  /** §2-C `videoDedupRepresentative`: the video dedup endgame — two
+    * videos are duplicates when they SHARE a near-identical frame
+    * (Hamming ≤ 3 on any frame-hash pair: re-encodes, watermarks, and
+    * trims keep most frame hashes), clusters close over the shared-frame
+    * graph through the image/audio endgame
+    * ([[MultimodalOps.hashClusterRepresentative]]: pigeonhole block
+    * candidates → connected components → one manifest row), so the
+    * three modalities cannot drift on cluster semantics. Output
+    * (cluster_id = min member, n_members, rep_dhash = the cluster's min
+    * frame hash).
+    *
+    * Frame-FREQUENCY guard (round 15): a frame hash carried by more
     * than one-in-`frameShareCap` of ALL videos is boilerplate footage —
     * a black intro/outro card, a network logo — and evidence of
     * nothing: left in the pair graph it would chain unrelated videos
@@ -433,25 +431,16 @@ object AviOps {
     * universe's groups are corpus/30 ≈ 3.3% — under the 10% default at
     * every SF, so the guard never touches the planted truth; the
     * ubiquitous-junk fixture is spec-graded. Integer-exact comparison
-    * (df·cap > n), no float shares. */
+    * (df·cap > n), no float shares.
+    *
+    * Scale: one decode pass (frames die at their hashes); candidates
+    * are 16-bit piece collisions, never n² videos × frames; CC rounds
+    * over the pair graph; one final cluster-keyed agg. */
   def videoDedupRepresentative(withPayload: DataFrame,
                                everyNth: Int = 2,
                                frameShareCap: Int = 10,
-                               frameDfFloor: Int = 4): DataFrame = {
-    val hashes = videoDhashes(withPayload, everyNth)
-      .select(col("doc_id"), col("dhash")).distinct()
-      .localCheckpoint(false) // CC-family lineage discipline
-    val paired = frameDfGuard(hashes, frameShareCap, frameDfFloor)
-    val pairs = DedupOps.simhashBlockCandidates(
-      paired.withColumnRenamed("dhash", "simhash"), pieceBits = 16)
-      .filter(col("hamming") <= 3)
-      .select(col("doc_a"), col("doc_b")).distinct()
-    DedupOps.connectedComponents(
-      hashes.select(col("doc_id")).distinct(), pairs)
-      .join(hashes, "doc_id")
-      .groupBy(col("cluster_id"))
-      .agg(countDistinct(col("doc_id")).as("n_members"),
-        min(col("dhash")).as("rep_dhash"))
-      .orderBy("cluster_id")
-  }
+                               frameDfFloor: Int = 4): DataFrame =
+    MultimodalOps.hashClusterRepresentative(
+      videoDhashes(withPayload, everyNth),
+      frameDfGuard(_, frameShareCap, frameDfFloor))
 }

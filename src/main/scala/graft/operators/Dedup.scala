@@ -696,7 +696,7 @@ object DedupOps {
     // (df ≤ cap survived the filter), so the non-owner docs come from
     // exploding `ds` — never from a join back to the fingerprint
     // stream, which would re-run the whole corpus scan + hash pass
-    // (recompute-per-branch; PlanProbe: 3 → 2 documents scans)
+    // (recompute-per-branch; the plan dump: 3 → 2 documents scans)
     fps
       .groupBy(col("f"))
       .agg(call_function("collect_set_capped", col("doc_id"), lit(dfCap))

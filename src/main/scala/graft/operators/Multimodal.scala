@@ -868,7 +868,8 @@ object MultimodalOps {
   def imageDedupRepresentative(documents: DataFrame,
                                groups: Int = 50): DataFrame =
     hashClusterRepresentative(
-      imageDhash(syntheticPayloads(documents, plantedImage(_, groups))))
+      imageDhash(syntheticPayloads(documents, plantedImage(_, groups))),
+      identity)
 
   /** The planted EVAL-image manifest for `q_contamination_image`: six
     * images over five groups — group 3 TWICE under different
@@ -953,22 +954,33 @@ object MultimodalOps {
       audioAhashIncremental(evalPayloads, corpusHash))
   }
 
-  /** The shared dedup ENDGAME over any (doc_id, dhash) frame: pigeonhole
-    * block candidates (Hamming ≤ 3), CC, one manifest row per cluster —
-    * used by the image and audio representatives so the two modalities
-    * cannot drift on the cluster semantics. */
-  private def hashClusterRepresentative(hashFrame: DataFrame): DataFrame = {
+  /** The shared dedup ENDGAME over any (doc_id, dhash) frame, used by
+    * the image, audio and video representatives so the modalities
+    * cannot drift on the cluster semantics: pigeonhole block candidates
+    * (Hamming ≤ 3) over the hashes `pairGuard` keeps, CC, one manifest
+    * row per cluster (cluster_id = min member, n_members, rep_dhash =
+    * the cluster's min hash). A doc may carry several hashes (a video's
+    * frames), so members count distinct docs; a hash the guard drops
+    * still counts for membership and the representative. With one hash
+    * per doc and `identity` as the guard, this is the plain
+    * one-row-per-doc cluster count. */
+  private[graft] def hashClusterRepresentative(
+      hashFrame: DataFrame,
+      pairGuard: DataFrame => DataFrame): DataFrame = {
     // hash ONCE; the frame feeds blocking, vertices, and the final join
     // (localCheckpoint — the CC-family lineage discipline)
-    val hashes = hashFrame.localCheckpoint(false)
+    val hashes = hashFrame.select(col("doc_id"), col("dhash")).distinct()
+      .localCheckpoint(false)
     val pairs = DedupOps.simhashBlockCandidates(
-      hashes.withColumnRenamed("dhash", "simhash"), pieceBits = 16)
+      pairGuard(hashes).withColumnRenamed("dhash", "simhash"), pieceBits = 16)
       .filter(col("hamming") <= 3)
       .select(col("doc_a"), col("doc_b")).distinct()
-    DedupOps.connectedComponents(hashes.select(col("doc_id")), pairs)
+    DedupOps.connectedComponents(
+      hashes.select(col("doc_id")).distinct(), pairs)
       .join(hashes, "doc_id")
       .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"), min(col("dhash")).as("rep_dhash"))
+      .agg(countDistinct(col("doc_id")).as("n_members"),
+        min(col("dhash")).as("rep_dhash"))
       .orderBy("cluster_id")
   }
 
@@ -1159,7 +1171,8 @@ object MultimodalOps {
   def audioDedupRepresentative(documents: DataFrame,
                                groups: Int = 40): DataFrame =
     hashClusterRepresentative(
-      audioAhash(syntheticPayloads(documents, plantedAudio(_, groups))))
+      audioAhash(syntheticPayloads(documents, plantedAudio(_, groups))),
+      identity)
 
   /** §2-C `imageDedupStream`: scrub-on-ingest for IMAGES — each
     * micro-batch of (doc_id, payload) decodes to dHashes and probes the

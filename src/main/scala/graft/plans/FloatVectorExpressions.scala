@@ -130,9 +130,9 @@ case class FloatNorm(child: Expression)
 
 /** Registration of the native functions.
   *
-  * Preferred: `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * Preferred: a [[graft.GraftSession]] session, which installs them.
   * [[GraftFunctions.register]] is the runtime-idempotent equivalent for
-  * sessions built elsewhere (tests, the driver's own session).
+  * sessions built elsewhere.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
