@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.VectorFuns
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -242,30 +243,14 @@ object AnnOps {
     * components drop the vector, and the magnitude bound is |v| ≤ 100 —
     * tighter than [[quantize]]'s 10⁶ because integer ARGMINs must stay
     * in int64 (|q6| ≤ 10⁸ ⇒ Σ₆₄(2·10⁸)² ≈ 2.6·10¹⁸ < 2⁶³). Lazily
-    * localCheckpointed: every consumer scans it iters+1 times, and
-    * [[pqSearchIvf]] threads ONE of these frames through its PQ fit,
+    * materialized ([[graft.Materialize]]): every consumer scans it
+    * iters+1 times, and [[pqSearchIvf]] threads ONE of these frames
+    * through its PQ fit,
     * coarse fit, and query lookup (four independent copies would pin
     * four corpus checkpoints in the block manager — the measured
     * accumulated-blocks hazard from the round-6 probes). */
-  private def q6Guarded(embeddings: DataFrame,
-                        checkpointDir: Option[String] = None): DataFrame =
-    mat(checkpointDir)(q6GuardedRaw(embeddings), eager = false)
-
-  /** Materialization mode for the iterative fits — the CC durability
-    * option ([[DedupOps.connectedComponents]]) extended to the index
-    * family: local checkpoint by default (fast; blocks on executors),
-    * or RELIABLE checkpoints into `checkpointDir` (HDFS/object store on
-    * a cluster) so a multi-hour 100 TB k-means/PQ training survives its
-    * first lost executor — localCheckpoint blocks die with the executor
-    * AND truncate lineage, so without this every per-round
-    * materialization is a single point of failure. Identical results
-    * through both paths (spec-asserted, the CC spec pattern). */
-  private def mat(checkpointDir: Option[String])(df: DataFrame,
-                                                 eager: Boolean): DataFrame = {
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
-    if (checkpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-  }
+  private def q6Guarded(embeddings: DataFrame): DataFrame =
+    Materialize(q6GuardedRaw(embeddings), eager = false)
 
   /** The guard+quantize chain WITHOUT the checkpoint — the single
     * definition of the index family's input contract, shared with
@@ -331,7 +316,7 @@ object AnnOps {
     * only shuffle per round is the (list, dim)-bounded centroid-update
     * agg (map-side partials; ≤ k·d rows move). `iters` fixed rounds =
     * `iters`+1 corpus scans, Lloyd's floor; the quantized stream is
-    * lazily localCheckpointed so the scans re-read ~8 B/component
+    * lazily materialized so the scans re-read ~8 B/component
     * instead of re-quantizing (and AQE's no-subtree-dedup can't bite).
     *
     * Input contract: NULL/non-finite components drop the vector (the
@@ -340,17 +325,14 @@ object AnnOps {
     * |q6| ≤ 10⁸ ⇒ Σ₆₄(2·10⁸)² ≈ 2.6·10¹⁸ < 2⁶³. Unit-norm embedding
     * corpora sit orders of magnitude inside it.
     *
-    * `checkpointDir`: when set, every per-round materialization (and the
-    * guarded input stream) is a RELIABLE checkpoint into that directory
-    * instead of localCheckpoint — the [[DedupOps.connectedComponents]]
-    * durability option extended to the fits, so a multi-hour 100 TB
-    * training survives executor loss. Identical results (spec-asserted);
-    * the local default stays the fast single-process choice. Applies to
-    * the whole family ([[pqEncode]], [[pqSearch]], [[pqSearchIvf]]). */
-  def kmeans(embeddings: DataFrame, k: Int = 10, iters: Int = 2,
-             checkpointDir: Option[String] = None): DataFrame =
-    kmeansPieces(q6Guarded(embeddings, checkpointDir), k, iters,
-      checkpointDir)._1
+    * Every per-round materialization (and the guarded input stream)
+    * goes through [[graft.Materialize]]: with a checkpoint directory set
+    * on the context, a multi-hour 100 TB training survives executor loss
+    * by re-reading reliable checkpoints. Identical results
+    * (spec-asserted); the same holds for the whole family ([[pqEncode]],
+    * [[pqSearch]], [[pqSearchIvf]]). */
+  def kmeans(embeddings: DataFrame, k: Int = 10, iters: Int = 2): DataFrame =
+    kmeansPieces(q6Guarded(embeddings), k, iters)._1
       .select(col("vec_id"), col("list_id"), col("dist"))
       .orderBy("vec_id")
 
@@ -358,8 +340,7 @@ object AnnOps {
     * incl. q6s, final centroids). Taking the guarded frame (not the raw
     * embeddings) lets [[pqSearchIvf]] share ONE materialization across
     * its coarse and product fits. */
-  private def kmeansPieces(g: DataFrame, k: Int, iters: Int,
-                           checkpointDir: Option[String] = None)
+  private def kmeansPieces(g: DataFrame, k: Int, iters: Int)
       : (DataFrame, DataFrame) = {
     val seeds = g
       .select(expr("md5(cast(vec_id as string))").as("h"), col("vec_id"),
@@ -400,8 +381,8 @@ object AnnOps {
           .as("cu"))
       // k-row frame: eager checkpoint cuts the per-round lineage (the
       // iterate-to-fixpoint lesson from connectedComponents) at the cost
-      // of one tiny job per round; reliable under checkpointDir ([[mat]]).
-      mat(checkpointDir)(
+      // of one tiny job per round
+      Materialize(
         c.join(upd, Seq("list_id"), "left")
           .select(col("list_id"), coalesce(col("cu"), col("c")).as("c")),
         eager = true)
@@ -440,10 +421,8 @@ object AnnOps {
     * pick m | dims (the 64-dim default uses 8×8) to encode the full
     * vector. */
   def pqEncode(embeddings: DataFrame, m: Int = 8, k: Int = 16,
-               iters: Int = 1,
-               checkpointDir: Option[String] = None): DataFrame =
-    pqPieces(q6Guarded(embeddings, checkpointDir), m, k, iters,
-      checkpointDir)._1
+               iters: Int = 1): DataFrame =
+    pqPieces(q6Guarded(embeddings), m, k, iters)._1
       .select(col("vec_id"), col("sub"), col("code"), col("dist"))
       .orderBy("vec_id", "sub")
 
@@ -451,10 +430,8 @@ object AnnOps {
     * m·k rows of dims/m-component integer centroids; the artifact a real
     * index build persists next to the codes. */
   def pqCodebook(embeddings: DataFrame, m: Int = 8, k: Int = 16,
-                 iters: Int = 1,
-                 checkpointDir: Option[String] = None): DataFrame =
-    pqPieces(q6Guarded(embeddings, checkpointDir), m, k, iters,
-      checkpointDir)._2
+                 iters: Int = 1): DataFrame =
+    pqPieces(q6Guarded(embeddings), m, k, iters)._2
 
   /** §2-C `pqSearch`: asymmetric-distance (ADC) search over the PQ index
     * — the query stays UNquantized: its per-(sub, code) squared
@@ -469,10 +446,9 @@ object AnnOps {
     * plan (the 32×-smaller index is what scans at 100 TB, like
     * [[annIvfQ8]] proves for the scalar index). */
   def pqSearch(embeddings: DataFrame, queryId: Long = 0L, topK: Int = 10,
-               m: Int = 8, k: Int = 16, iters: Int = 1,
-               checkpointDir: Option[String] = None): DataFrame = {
-    val g = q6Guarded(embeddings, checkpointDir)
-    val (codes, cb) = pqPieces(g, m, k, iters, checkpointDir)
+               m: Int = 8, k: Int = 16, iters: Int = 1): DataFrame = {
+    val g = q6Guarded(embeddings)
+    val (codes, cb) = pqPieces(g, m, k, iters)
     pqAdc(codes, cb, querySlices(g, queryId, m), queryId, topK)
   }
   // `q_pq_search` (§2-83) binds pqSearch under the oracle: the whole ADC
@@ -536,15 +512,14 @@ object AnnOps {
     * score — the same invariant the kmeans→annIvf composition pins). */
   def pqSearchIvf(embeddings: DataFrame, queryId: Long = 0L, topK: Int = 10,
                   nProbe: Int = 2, nLists: Int = 10, m: Int = 8,
-                  kCodes: Int = 16, iters: Int = 1,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  kCodes: Int = 16, iters: Int = 1): DataFrame = {
     // ONE guarded/checkpointed q6 frame threads through the PQ fit, the
     // coarse fit, and both query lookups — independent q6Guarded calls
     // here would quantize the corpus four times and pin four identical
     // checkpoint copies in the block manager
-    val g = q6Guarded(embeddings, checkpointDir)
-    val (codes, cb) = pqPieces(g, m, kCodes, iters, checkpointDir)
-    val (assignment, cents) = kmeansPieces(g, nLists, 2, checkpointDir)
+    val g = q6Guarded(embeddings)
+    val (codes, cb) = pqPieces(g, m, kCodes, iters)
+    val (assignment, cents) = kmeansPieces(g, nLists, 2)
     val q = g.filter(col("vec_id") === queryId)
       .select(col("q6s").as("qq"))
     val probed = cents
@@ -577,15 +552,13 @@ object AnnOps {
     *     probe ranks against.
     * The coarse fit runs 2 Lloyd rounds, [[pqSearchIvf]]'s fixed
     * geometry, so the persisted index searches bit-identically to the
-    * inline fit (spec-pinned). `checkpointDir` = the fit durability
-    * option. */
+    * inline fit (spec-pinned). */
   def pqIvfIndex(embeddings: DataFrame, nLists: Int = 10, m: Int = 8,
-                 kCodes: Int = 16, iters: Int = 1,
-                 checkpointDir: Option[String] = None)
+                 kCodes: Int = 16, iters: Int = 1)
       : (DataFrame, DataFrame, DataFrame) = {
-    val g = q6Guarded(embeddings, checkpointDir)
-    val (codes, cb) = pqPieces(g, m, kCodes, iters, checkpointDir)
-    val (assignment, cents) = kmeansPieces(g, nLists, 2, checkpointDir)
+    val g = q6Guarded(embeddings)
+    val (codes, cb) = pqPieces(g, m, kCodes, iters)
+    val (assignment, cents) = kmeansPieces(g, nLists, 2)
     (codes.select(col("vec_id"), col("sub"), col("code"))
       .join(assignment.select(col("vec_id"), col("list_id")), "vec_id"),
       cb, cents)
@@ -624,14 +597,13 @@ object AnnOps {
     * (vec_id, sub, sq) slices (lazily checkpointed — consumed per round
     * + finally), per-round broadcast assignment + (sub, code, pos)
     * update agg, [[kmeans]]' rounding. */
-  private def pqPieces(g: DataFrame, m: Int, k: Int, iters: Int,
-                       checkpointDir: Option[String] = None)
+  private def pqPieces(g: DataFrame, m: Int, k: Int, iters: Int)
       : (DataFrame, DataFrame) = {
     val sliceExpr = (src: String, out: String) =>
       s"transform(sequence(0, $m - 1), s -> named_struct(" +
         s"'sub', cast(s as int), " +
         s"'$out', slice($src, s * (size($src) div $m) + 1, size($src) div $m)))"
-    val slices = mat(checkpointDir)(
+    val slices = Materialize(
       g.select(col("vec_id"), explode(expr(sliceExpr("q6s", "sq"))).as("x"))
         .select(col("vec_id"), col("x.sub").as("sub"), col("x.sq").as("sq")),
       eager = false)
@@ -668,7 +640,7 @@ object AnnOps {
         .groupBy("sub", "code")
         .agg(expr("transform(sort_array(collect_list(struct(pos, cq))), x -> x.cq)")
           .as("cu"))
-      mat(checkpointDir)(
+      Materialize(
         cb.join(upd, Seq("sub", "code"), "left")
           .select(col("sub"), col("code"), coalesce(col("cu"), col("c")).as("c")),
         eager = true)
@@ -800,9 +772,9 @@ object AnnOps {
     // subtrees — when the caller passes a derived frame (the bench glue
     // quantizes floats inline; a real pipeline passes a parquet scan),
     // the whole quantization chain would run three times. One lazy
-    // localCheckpoint materializes it once (~1 byte/component — this is
+    // materialization stores it once (~1 byte/component — this is
     // the SMALL index); measured ~6 → 1.0-2.2 s at sf0.1.
-    val idx = index.localCheckpoint(false)
+    val idx = Materialize(index, eager = false)
     val listSums = idx
       .select(col("label"), col("scale6"),
         posexplode(col("qvs")).as(Seq("pos", "qv")))
@@ -865,7 +837,7 @@ object AnnOps {
                     nProbe: Int = 2): DataFrame = {
     val dec = "decimal(38,0)"
     val w = org.apache.spark.sql.expressions.Window
-    val idx = index.localCheckpoint(false)
+    val idx = Materialize(index, eager = false)
     val listSums = idx
       .select(col("label"), col("scale6"),
         posexplode(col("qvs")).as(Seq("pos", "qv")))

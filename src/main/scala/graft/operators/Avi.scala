@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
+import graft.Materialize
+
 /** AVI (RIFF) container parsing + MJPEG frame hashing — the VIDEO slot
   * of the multimodal estate, previously a declared stub.
   *
@@ -300,7 +302,8 @@ object AviOps {
     import spark.implicits._
     val corpusIndex = videoFrameIndex(
       syntheticVideos(documents, 30), everyNth = 1)
-      .localCheckpoint(false) // the probe AND the final hash join read it
+      // the probe AND the final hash join read it
+      .transform(Materialize(_, eager = false))
     val evalPayloads = syntheticVideos(VideoEvalIds.toDF("doc_id"), 30)
     MultimodalOps.evalContamination(corpusIndex,
       videoDhashIncremental(evalPayloads, corpusIndex, everyNth = 1))
@@ -341,7 +344,7 @@ object AviOps {
                       frameDfFloor: Int = 4): DataFrame =
     frameDfGuard(videoDhashes(withPayload, everyNth)
       .select(col("doc_id"), col("dhash")).distinct()
-      .localCheckpoint(false), frameShareCap, frameDfFloor)
+      .transform(Materialize(_, eager = false)), frameShareCap, frameDfFloor)
 
   /** The frame-frequency guard proper over a DISTINCT (doc_id, dhash)
     * frame — shared by [[videoFrameIndex]] and

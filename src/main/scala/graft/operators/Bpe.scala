@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Trained byte-pair-encoding tokenizer — the piece that turns every
   * token-denominated operator in the corpus estate ([[CorpusOps.pack]],
   * [[CorpusOps.tokenBudgetSample]], `q_mixture`, `q_curate`) from
@@ -88,28 +90,19 @@ object BpeOps {
       .groupBy("lhs", "rhs")
       .agg(sum(col("freq")).as("cnt"))
 
-  /** Materialization for the merge loop — localCheckpoint by default,
-    * reliable checkpoints under `checkpointDir` on a cluster (the
-    * [[AnnOps]] durability option: a multi-hour 100 TB training must
-    * survive a lost executor). */
-  private def mat(checkpointDir: Option[String])(df: DataFrame): DataFrame = {
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
-    if (checkpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-  }
-
   /** §2-97 `q_bpe_train`: learn the merge table — (merge_rank, lhs,
     * rhs, merged, cnt), rank in learning order, cnt the exact weighted
-    * pair count that won the round (ties: smallest (lhs, rhs)). */
-  def train(documents: DataFrame, merges: Int = Merges,
-            checkpointDir: Option[String] = None): DataFrame =
-    trainPieces(documents, merges, checkpointDir)._1
+    * pair count that won the round (ties: smallest (lhs, rhs)). The
+    * merge loop materializes through [[graft.Materialize]], so with a
+    * checkpoint directory set on the context a multi-hour 100 TB
+    * training survives a lost executor. */
+  def train(documents: DataFrame, merges: Int = Merges): DataFrame =
+    trainPieces(documents, merges)._1
 
   /** (merge table, final vocab (word, freq, seq)) — the vocab lets a
     * spec assert the row-level encoder reproduces the training
     * trajectory word-for-word. */
-  private[graft] def trainPieces(documents: DataFrame, merges: Int = Merges,
-                                 checkpointDir: Option[String] = None)
+  private[graft] def trainPieces(documents: DataFrame, merges: Int = Merges)
       : (DataFrame, DataFrame) = {
     // the [1, 64] cap is the ORACLE's (it unrolls one CTE per round —
     // enforced in oracleCtes); training itself runs any merge count: a
@@ -119,8 +112,8 @@ object BpeOps {
       .select(explode(expr(WordsExpr)).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("freq"))
-    var vocab = mat(checkpointDir)(
-      freq.withColumn("seq", expr(seq0("word"))))
+    var vocab = Materialize(
+      freq.withColumn("seq", expr(seq0("word"))), eager = true)
     val bests = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
     var saturated = false
@@ -149,13 +142,14 @@ object BpeOps {
       // Results are bit-identical: same deterministic winner, same merge
       // application, same honest end of the merge table at saturation.
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(checkpointDir)(
+      val next = Materialize(
         vocab.join(broadcast(best), lit(true), "left")
           .withColumn("seq", when(col("lhs").isNull, col("seq"))
             .otherwise(expr(mergeStep("seq", "lhs", "rhs"))))
           .observe(obs, count(col("lhs")).as("n_win"),
             max(col("lhs")).as("lhs"), max(col("rhs")).as("rhs"),
-            max(col("cnt")).as("cnt")))
+            max(col("cnt")).as("cnt")),
+        eager = true)
       val win = obs.get
       saturated = win("n_win").asInstanceOf[Long] == 0L
       vocab = next.select(col("word"), col("freq"), col("seq"))
@@ -277,9 +271,8 @@ object BpeOps {
 
   /** Train on `documents` and persist in one step. */
   def trainTokenizer(documents: DataFrame, path: String,
-                     merges: Int = Merges,
-                     checkpointDir: Option[String] = None): Unit = {
-    val (mt, vocab) = trainPieces(documents, merges, checkpointDir)
+                     merges: Int = Merges): Unit = {
+    val (mt, vocab) = trainPieces(documents, merges)
     writeTokenizer(mt, vocab, path)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.TextFuns
 
 /** Trained classifiers over the corpus — the model-in-the-loop quality
@@ -37,7 +38,7 @@ object ClassifierOps {
     * fallback).
     *
     * ONE corpus pass (the (lang, token) count agg — map-side partials,
-    * |langs|×|vocab|-bounded output, localCheckpointed); every derived
+    * |langs|×|vocab|-bounded output, materialized); every derived
     * frame (per-lang totals, vocab, the grid) is model-sized, not
     * corpus-sized. At 100 TB the model is still KBs → broadcastable. */
   def nbModel(documents: DataFrame): DataFrame = {
@@ -45,7 +46,8 @@ object ClassifierOps {
       .select(col("lang"), explode(TextFuns.tokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("n_tok"))
-      .localCheckpoint() // vocab-bounded; consumed by 4 branches below
+      // vocab-bounded; consumed by 4 branches below
+      .transform(Materialize(_, eager = true))
     val langTotals = counts.groupBy("lang").agg(sum("n_tok").as("n_lang"))
     val vocab = counts.select("token").distinct()
     val vsize = vocab.agg(count(lit(1)).as("v"))

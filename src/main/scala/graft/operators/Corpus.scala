@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.TextFuns
 
 /** Corpus-level training-data-pipeline operators (SURVEY.md §2-B rows
@@ -152,7 +153,7 @@ object CorpusOps {
       .select(col("doc_id"), explode(TextFuns.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = documents.agg(count(lit(1)).as("n_docs"))
     val scored = tf
@@ -270,7 +271,7 @@ object CorpusOps {
       // dedupe identical subtrees (the round-5 lesson) — without this
       // the corpus explode+filter runs twice; the checkpointed frame is
       // (matched docs × query terms) rows, tiny
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     tf
       .join(broadcast(dft), "term")
@@ -318,7 +319,7 @@ object CorpusOps {
       .agg(least(count(lit(1)), lit(255L)).as("tf"), min(col("dl")).as("dl"))
       // feeds the score join AND the df agg (the AQE no-subtree-dedup
       // lesson); (matched docs × probe vocabulary) rows, tiny
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf
       .join(broadcast(dft), "term")
@@ -365,7 +366,7 @@ object CorpusOps {
     * it (documented, not guarded).
     *
     * Plan shape at 100 TB: ONE scan+explode of the corpus into the
-    * bigram stream (lazily localCheckpointed — it feeds the count
+    * bigram stream (lazily materialized — it feeds the count
     * aggregation AND the probe side, and AQE does not dedupe repeated
     * subtrees, so without it the corpus would be scanned three times);
     * c2 is a vocabulary²-bounded aggregation with map-side partials; c1
@@ -387,7 +388,7 @@ object CorpusOps {
         "transform(sequence(1, size(toks) - 1), " +
           "i -> struct(toks[i-1] AS w1, toks[i] AS w2))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n2"))
     val c1 = c2.groupBy("w1").agg(sum(col("n2")).as("n1"))
     bigrams
@@ -453,14 +454,14 @@ object CorpusOps {
     // consumes this vocab-bounded frame, so the corpus-sized explode +
     // distinct never runs twice (a naive sizes-agg + inverted self-join
     // formulation plans FOUR independent corpus scans — measured, and
-    // ReuseExchange does not rescue it); the lazy localCheckpoint
+    // ReuseExchange does not rescue it); the lazy materialization
     // materializes the frame once at the first action. sort_array makes
     // the set order deterministic; the combination fan-out below is
     // C(sources-sharing, 2) per trigram — the same pair volume the
     // inverted-index join would emit, without the join.
     val byNgram = sh.groupBy("ngram")
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     // the pair dim comes from the DOCUMENTS, not the trigram stream: a
     // source whose every doc is shorter than one trigram must still
     // appear in every one of its pairs (n = 0) — "no overlap" is a
@@ -799,7 +800,7 @@ object CorpusOps {
     * stateless stream. Plan shape: the row-level gates (lang, quality,
     * probes, gopher, C4) all fuse into ONE WholeStageCodegen over one
     * corpus scan; the LM side re-reads the corpus once into the
-    * localCheckpointed bigram stream (2 scans total, pinned) and joins
+    * materialized bigram stream (2 scans total, pinned) and joins
     * back per doc_id; the rep window stays LAST so the wide text_hash
     * exchange moves full-gate survivors only. Group-soundness of
     * gate-before-window is preserved: every added gate is text-pure
@@ -1311,7 +1312,7 @@ object CorpusOps {
     // rather than re-run tokenize+count once per consumer
     val uni = tk.select(explode(col("tk")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val nTok = uni.agg(sum("c").as("n_tok"))
     pairCounts
       .join(broadcast(uni.select(col("tok").as("tok_a"), col("c").as("c_a"))), "tok_a")
@@ -1416,7 +1417,8 @@ object CorpusOps {
       .select(col("source"), explode(TextFuns.tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // vocab-bounded; consumed by 3 branches
+      // vocab-bounded; consumed by 3 branches
+      .transform(Materialize(_, eager = true))
     val srcTotals = counts.groupBy("source").agg(sum("c").as("n_src"))
     val tokTotals = counts.groupBy("token").agg(sum("c").as("c_tok"))
     val grand = counts.agg(sum("c").as("n_all"))
@@ -1465,9 +1467,11 @@ object CorpusOps {
         explode(TextFuns.tokens(col("text"))).as("token"))
       .groupBy(col("split"), col("token"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // vocab-bounded; consumed by 4 branches
+      // vocab-bounded; consumed by 4 branches
+      .transform(Materialize(_, eager = true))
     val vocabTokens = counts.select("token").distinct()
-      .localCheckpoint(false) // consumed twice (count + grid)
+      // consumed twice (count + grid)
+      .transform(Materialize(_, eager = false))
     val trainCounts = counts.filter(col("split") === "train")
     val vocabN = vocabTokens.agg(count(lit(1)).as("v"))
     val trainTok = trainCounts.select(col("token"), col("c").as("ct"))
@@ -1573,25 +1577,21 @@ object CorpusOps {
     *
     * Scale shape: the curated train split feeds BOTH the factor branch
     * (a per-source aggregate, KBs, broadcast back) and the manifest
-    * branch — so by default the operator MATERIALIZES it once
-    * (`localCheckpoint`; at 100 TB this is the standard persist-the-
-    * curated-split move, since that frame is the input to every
-    * downstream stage, and exchange reuse can NOT substitute: the two
-    * branches prune different columns, so their curate subtrees
-    * canonicalize differently and AQE sees distinct stages — verified
-    * empirically, plan-audited). After it, the whole composition is
-    * source-keyed only: one agg shuffle for the tallies, ONE
-    * source-partitioned exchange shared by the pack cumsum and the rank
-    * window (same partition key), and the tiny histogram broadcast for
-    * the closed-form pos. `materializeTrain = false` gives the fully
-    * declarative two-pass plan instead (both shapes plan-audited). The
-    * trailing orderBy is the harness's deterministic-output contract;
-    * the scale consumer is [[graft.sources.Sinks.writeOrdered]] on
-    * `pos`. */
-  def pipelineManifest(documents: DataFrame,
-                       materializeTrain: Boolean = true): DataFrame = {
-    val train0 = curated(documents).filter(col("split") === "train")
-    val train = if (materializeTrain) train0.localCheckpoint(true) else train0
+    * branch — so the operator MATERIALIZES it once ([[graft.Materialize]];
+    * at 100 TB this is the standard persist-the-curated-split move,
+    * since that frame is the input to every downstream stage, and
+    * exchange reuse can NOT substitute: the two branches prune different
+    * columns, so their curate subtrees canonicalize differently and AQE
+    * sees distinct stages — verified empirically, plan-audited). After
+    * it, the whole composition is source-keyed only: one agg shuffle for
+    * the tallies, ONE source-partitioned exchange shared by the pack
+    * cumsum and the rank window (same partition key), and the tiny
+    * histogram broadcast for the closed-form pos. The trailing orderBy
+    * is the harness's deterministic-output contract; the scale consumer
+    * is [[graft.sources.Sinks.writeOrdered]] on `pos`. */
+  def pipelineManifest(documents: DataFrame): DataFrame = {
+    val train = Materialize(
+      curated(documents).filter(col("split") === "train"), eager = true)
     val tallies = train.groupBy(col("source"))
       .agg(sum(col("n_tokens").cast("long")).as("tok_s"))
       .withColumn("wgt", syntheticTargetWgt)

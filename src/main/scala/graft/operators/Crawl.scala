@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Crawl-politeness + frontier discovery — the two steps that close the
   * crawl loop the round-10 estate built (WARC fetch → HTML extraction →
   * link extraction → THIS → back to fetch):
@@ -50,7 +52,7 @@ object CrawlOps {
     "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
 
   private[graft] def hostsOf(documents: DataFrame): DataFrame =
-    documents.select(col("source")).distinct().localCheckpoint(false)
+    Materialize(documents.select(col("source")).distinct(), eager = false)
 
   private[graft] def rulesOf(documents: DataFrame): DataFrame =
     rulesFrom(documents.select(col("source")).distinct())
@@ -410,7 +412,8 @@ object CrawlOps {
     val lvl0 = decodeSitemapBodies(
       declared.join(captures, "_canon")
         .select(col("source"), col("_canon").as("url"), col("body_bytes")))
-      .localCheckpoint(false) // tiny; the child walk AND the parse read it
+      // tiny; the child walk AND the parse read it
+      .transform(Materialize(_, eager = false))
     val children = lvl0.filter(col("body").contains("<sitemapindex"))
       .select(col("source"), explode(regexp_extract_all(col("body"),
         lit("<loc>([^<]*)</loc>"), lit(1))).as("child"))
@@ -875,7 +878,8 @@ object CrawlOps {
     val captures = graft.sources.WarcSource.httpResponseBytes(records)
       .filter(col("http_status").between(200, 299))
       .withColumn("_canon", UrlOps.canonIdn(col("target_uri")))
-      .localCheckpoint(false) // autodiscovery AND the body lookup read it
+      // autodiscovery AND the body lookup read it
+      .transform(Materialize(_, eager = false))
     val pages = captures.select(col("_canon").as("page_url"),
       when(expr("is_valid_utf8(body_bytes)"), decode(col("body_bytes"), "UTF-8"))
         .otherwise(decode(col("body_bytes"), "ISO-8859-1")).as("html"))
@@ -948,7 +952,7 @@ object CrawlOps {
     UrlOps.canonUrls(documents)
       .withColumn("_id",
         expr("CAST(regexp_extract(canon_url, '/docs/([0-9]+)$', 1) AS INT)"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
 
   private[graft] def headerSignals(documents: DataFrame): DataFrame =
     headerSignalsFrom(fetchUniverse(documents))
@@ -1505,7 +1509,8 @@ object CrawlOps {
       slice(lines, lit(1), greatest(size(lines) - 1, lit(0)))).otherwise(lines)
     bodies
       .select(col("source"), posexplode(kept).as(Seq("pos", "line")))
-      .localCheckpoint(false) // hosts-bounded; consumed by several branches
+      // hosts-bounded; consumed by several branches
+      .transform(Materialize(_, eager = false))
   }
 
   /** [[robotsParse]] / [[crawlDelayOf]] / [[sitemapUrlOf]] over ANY

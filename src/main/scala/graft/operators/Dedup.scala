@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.Materialize
 import graft.functions.{TextFuns, VectorFuns}
 
 /** Deduplication family (SURVEY.md §2-B rows 24-28) — the core of a
@@ -201,14 +202,14 @@ object DedupOps {
     // a self-join references the band frame twice, and AQE does NOT
     // dedupe the two identical subtrees (measured: the k salted digests
     // per shingle are computed twice). For wide signatures the lazy
-    // localCheckpoint materializes the (doc_id, band, key) stream once —
+    // materialization stores the (doc_id, band, key) stream once —
     // ~20 bytes/row × bands rows per doc, far cheaper to store than to
     // re-hash (k=128: 32 md5s per shingle, thousands of shingles per
     // doc). For narrow ones (the k=4 fixture config, one md5 per
     // shingle) recompute is cheaper than the block-cache round trip —
     // measured both ways at sf0.1.
     val bk = minhashBandKeys(documents, k, bands)
-    val bandKeys = if (k >= 16) bk.localCheckpoint(false) else bk
+    val bandKeys = if (k >= 16) Materialize(bk, eager = false) else bk
     bandKeys.as("a")
       .join(bandKeys.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -380,7 +381,7 @@ object DedupOps {
       explode(array(pieces: _*)).as("b"))
       .select(col("doc_id"), col("simhash"),
         col("b.p").as("p"), col("b.v").as("v"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     blocks.as("a")
       .join(blocks.as("b"),
         col("a.p") === col("b.p") && col("a.v") === col("b.v") &&
@@ -448,10 +449,10 @@ object DedupOps {
     // full shingle explode + capped-collect aggregation — and sizes
     // itself feeds two join sides; two lazy checkpoints make the
     // expensive index and the tiny per-doc sizes each compute once
-    val kept = ngramIndex(documents, dfCap).localCheckpoint(false)
+    val kept = Materialize(ngramIndex(documents, dfCap), eager = false)
     val sizes = kept.select(explode(col("ds")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     // all unordered doc pairs of each posting list; collect_list order is
     // nondeterministic, so least/greatest canonicalizes each pair
     val inter = kept
@@ -799,10 +800,9 @@ object DedupOps {
     * (clusters-over-the-wide-graph spec'd on planted near-dups in
     * PipelineOpsSpec). */
   def dedupClusters(documents: DataFrame, maxIters: Int = 50,
-                    checkpointDir: Option[String] = None,
                     k: Int = MinhashK, bands: Int = Bands): DataFrame =
     connectedComponents(documents.select(col("doc_id")),
-      minhashPairs(documents, k, bands), maxIters, checkpointDir)
+      minhashPairs(documents, k, bands), maxIters)
       .orderBy("doc_id")
 
   /** §2-117 `q_dup_inflation`: the DUPLICATION PROFILE — cluster-size
@@ -817,10 +817,9 @@ object DedupOps {
     * histogram is two tiny re-aggs over the CC output (cluster sizes →
     * size counts), both key-bounded; the corpus share is one broadcast
     * total. */
-  def dupInflation(documents: DataFrame, maxIters: Int = 50,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def dupInflation(documents: DataFrame, maxIters: Int = 50): DataFrame = {
     val clusters = connectedComponents(documents.select(col("doc_id")),
-      minhashPairs(documents, MinhashK, Bands), maxIters, checkpointDir)
+      minhashPairs(documents, MinhashK, Bands), maxIters)
     val sizes = clusters.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     val total = sizes.agg(sum(col("cluster_size")).as("n_total"))
@@ -853,9 +852,8 @@ object DedupOps {
     * representative, so the output is exactly the post-dedup corpus
     * manifest. */
   def dedupRepresentative(documents: DataFrame, maxIters: Int = 50,
-                          checkpointDir: Option[String] = None,
                           k: Int = MinhashK, bands: Int = Bands): DataFrame =
-    dedupClusters(documents, maxIters, checkpointDir, k, bands)
+    dedupClusters(documents, maxIters, k, bands)
       .join(documents.select(col("doc_id"),
         TextOps.qualityScore(col("text")).as("q")), "doc_id")
       .groupBy("cluster_id")
@@ -880,17 +878,13 @@ object DedupOps {
     * driver finish needs integral ids (byte/short/int/long); ids of any
     * other orderable type always take the rounds.
     *
-    * `checkpointDir`: when set, every per-round materialization is a
-    * RELIABLE checkpoint into that directory (HDFS/object store on a
-    * cluster) instead of `localCheckpoint` — localCheckpoint blocks live
-    * on executors and die with them, so a multi-hour 100 TB CC job would
-    * be killed by its first lost executor; the reliable path re-reads
-    * the checkpoint files instead. Identical results (spec-asserted);
-    * the local default stays the fast single-process choice. */
+    * Every materialization goes through [[graft.Materialize]]: with a
+    * checkpoint directory set on the context, a multi-hour 100 TB CC job
+    * re-reads reliable checkpoint files after a lost executor instead of
+    * dying with its local blocks. Identical results (spec-asserted). */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
-                          maxIters: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame =
-    ccWithRounds(vertices, pairs, maxIters, checkpointDir)._1
+                          maxIters: Int = 50): DataFrame =
+    ccWithRounds(vertices, pairs, maxIters)._1
 
   /** Directed-edge bound of the driver-side CC finish: a graph with at
     * most this many directed edges is collected and solved by
@@ -923,7 +917,6 @@ object DedupOps {
     * out until a benchmark graph exceeds the bound and can measure it. */
   private[graft] def ccWithRounds(vertices: DataFrame, pairs: DataFrame,
                                   maxIters: Int,
-                                  checkpointDir: Option[String] = None,
                                   localFinishEdges: Int = LocalFinishEdges)
       : (DataFrame, Int) = {
     // Eager checkpointing everywhere, NOT cache: caching truncates
@@ -931,13 +924,8 @@ object DedupOps {
     // loop builds a plan that doubles in depth per round and kills the
     // driver (plan-string generation alone OOMs). Checkpointing cuts the
     // lineage each round — the standard move for iterative graph
-    // algorithms. Local by default (fast, blocks on executors); with
-    // `checkpointDir` set the blocks go to reliable storage and the job
-    // survives executor loss.
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
+    // algorithms ([[graft.Materialize]]: reliable when the context has a
+    // checkpoint directory, local otherwise).
     // the symmetric edge closure in ONE materialization (round 21; was
     // two — a pairs checkpoint, then a union of two branches over it into
     // a second checkpoint): exploding each pair into its two directions
@@ -948,13 +936,13 @@ object DedupOps {
     // shuffles only the label side, never the edges. The edge count
     // rides the same job as an observe() metric (the round-0 gate).
     val edgeObs = org.apache.spark.sql.Observation()
-    val edges = mat(pairs
+    val edges = Materialize(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
-      .observe(edgeObs, count(lit(1)).as("edges")))
+      .observe(edgeObs, count(lit(1)).as("edges")), eager = true)
     // the driver finish round-trips ids through Long: exact for
     // integral ids only, so any other id type keeps the rounds
     val integralIds = edges.schema("src").dataType match {
@@ -975,7 +963,7 @@ object DedupOps {
         // O(corpus) to O(touched vertices); the singletons re-enter once,
         // join-free, after the fixpoint.
         val touched = edges.select(col("src").as("doc_id")).distinct()
-        val (lbl, iters) = propagate(edges, touched, maxIters, mat)
+        val (lbl, iters) = propagate(edges, touched, maxIters)
         (lbl, touched, iters)
       }
     val isolated = vertices
@@ -1003,8 +991,7 @@ object DedupOps {
   /** The distributed rounds of [[ccWithRounds]] over the edge-touched
     * vertices, to the fixpoint. Returns (doc_id, cluster_id) labels and
     * the rounds run. */
-  private def propagate(edges: DataFrame, touched: DataFrame, maxIters: Int,
-                        mat: DataFrame => DataFrame)
+  private def propagate(edges: DataFrame, touched: DataFrame, maxIters: Int)
       : (DataFrame, Int) = {
     // `chg` = did this label move LAST round (round 20): a vertex's
     // neighbor-min can only decrease when a neighbor's label decreased
@@ -1016,10 +1003,10 @@ object DedupOps {
     // is bit-identical (oracle-replayed), only the per-round label
     // shuffle shrinks from O(vertices) to O(frontier). Round 1 starts
     // all-true (everyone just "changed" to their own id).
-    var labels = mat(touched.select(col("doc_id"),
+    var labels = Materialize(touched.select(col("doc_id"),
       col("doc_id").as("cluster_id"),
       col("doc_id").as("prev"),
-      lit(true).as("chg")))
+      lit(true).as("chg")), eager = true)
 
     // One propagation step: neighbor-min, then pointer jump (follow the
     // label's label). Plain neighbor-min needs O(path length) rounds on
@@ -1076,9 +1063,10 @@ object DedupOps {
       // OVER-count `changed`; the loop tests it against zero, so an
       // over-count never converges early.
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(step(labels).repartition(col("doc_id"))
+      val next = Materialize(step(labels).repartition(col("doc_id"))
         .observe(obs,
-          count(when(col("cluster_id") < col("prev"), 1)).as("changed")))
+          count(when(col("cluster_id") < col("prev"), 1)).as("changed")),
+        eager = true)
       changed = obs.get("changed").asInstanceOf[Long]
       // prev resets to the new label for the next convergence compare;
       // chg records whether THIS round moved it (the next round's
@@ -1213,8 +1201,8 @@ object DedupOps {
     bandSelfJoin(embeddingLshBlocks(embeddings), checkpoint = false)
 
   /** Self-join a (vec_id, band, key) block stream into distinct ordered
-    * candidate pairs. With `checkpoint` the lazy localCheckpoint
-    * materializes the band keys once — AQE does not dedupe the two
+    * candidate pairs. With `checkpoint` a lazy [[graft.Materialize]]
+    * stores the band keys once — AQE does not dedupe the two
     * identical self-join subtrees, so an expensive key map (the rp
     * scheme's 128×64 integer dots) is otherwise computed twice
     * (measured on the MinHash twin of this shape). Cheap key maps
@@ -1223,7 +1211,7 @@ object DedupOps {
   private def bandSelfJoin(blockStream: DataFrame,
                            checkpoint: Boolean): DataFrame = {
     val blocks =
-      if (checkpoint) blockStream.localCheckpoint(false) else blockStream
+      if (checkpoint) Materialize(blockStream, eager = false) else blockStream
     blocks.as("a")
       .join(blocks.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -1317,18 +1305,15 @@ object DedupOps {
           .as(Seq("band", "key")))
   }
 
-  /** `checkpoint = false` is for consumers that re-materialize the pair
-    * stream through a RELIABLE checkpoint ([[dedupEmbeddingClusters]]):
-    * a lazily localCheckpointed subtree truncates lineage, so an
-    * executor lost during that materialization could not recompute its
-    * blocks — the executor-loss safety the checkpointDir option exists
-    * for would be silently void. */
+  /** The rp band-collision candidate pairs. The rp key map (128×64
+    * integer dots per vector) is expensive, so its block stream is
+    * materialized once ([[bandSelfJoin]] with `checkpoint`) — reliably
+    * whenever the context has a checkpoint directory. */
   private[graft] def embeddingRpCandidates(embeddings: DataFrame,
                                            bands: Int = graft.plans.RpLsh.Bands,
-                                           bits: Int = graft.plans.RpLsh.BitsPerBand,
-                                           checkpoint: Boolean = true)
+                                           bits: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
-    bandSelfJoin(embeddingRpBlocks(embeddings, bands, bits), checkpoint)
+    bandSelfJoin(embeddingRpBlocks(embeddings, bands, bits), checkpoint = true)
 
   /** §2-73 `q_dedup_embedding_incremental`: incremental (delta-vs-corpus)
     * EMBEDDING dedup — the rp-LSH twin of [[dedupIncremental]],
@@ -1381,33 +1366,23 @@ object DedupOps {
     * closure with a recursive CTE over the same band-key pair universe. */
   def dedupEmbeddingClusters(embeddings: DataFrame, tau: Double = 0.4,
                              maxIters: Int = 50,
-                             checkpointDir: Option[String] = None,
                              bands: Int = graft.plans.RpLsh.Bands,
                              bitsPerBand: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
     connectedComponents(
       embeddings.select(col("vec_id").as("doc_id")),
-      embeddingClusterPairs(embeddings, tau, bands, bitsPerBand,
-        checkpointDir.isEmpty),
-      maxIters, checkpointDir)
+      embeddingClusterPairs(embeddings, tau, bands, bitsPerBand), maxIters)
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
       .orderBy("vec_id")
 
   /** The (doc_a, doc_b) pair graph [[dedupEmbeddingClusters]] closes:
     * the rp pair graph (hard recall floor + the (bands, bits)
-    * corpus-size knob — SURVEY §8), NOT the fixed-width tiled one.
-    * Block-stream checkpointing (`checkpoint`) follows the CC durability
-    * mode: on the reliable path a localCheckpointed subtree would
-    * truncate lineage and void executor-loss recovery (see
-    * embeddingRpCandidates); on the local path lineage is truncated by
-    * the CC materializations regardless, so the checkpoint just saves
-    * computing the rp keys once per self-join side. */
+    * corpus-size knob — SURVEY §8), NOT the fixed-width tiled one. */
   private[graft] def embeddingClusterPairs(embeddings: DataFrame,
                                            tau: Double, bands: Int,
-                                           bitsPerBand: Int,
-                                           checkpoint: Boolean): DataFrame =
+                                           bitsPerBand: Int): DataFrame =
     cosineVerifiedPairs(embeddings,
-      embeddingRpCandidates(embeddings, bands, bitsPerBand, checkpoint), tau)
+      embeddingRpCandidates(embeddings, bands, bitsPerBand), tau)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
 
   /** §2-86 `q_dedup_embedding_representative`: the EMBEDDING family's
@@ -1435,18 +1410,17 @@ object DedupOps {
     * cluster_id (corpus-row-bounded, skew-safe under AQE); the argmin
     * is ONE partial-aggregatable struct-min — no window, no per-cluster
     * sort. The member frame feeds both passes, so it is lazily
-    * localCheckpointed once (the AQE no-subtree-dedup lesson). */
+    * materialized once (the AQE no-subtree-dedup lesson). */
   def dedupEmbeddingRepresentative(embeddings: DataFrame, tau: Double = 0.4,
                                    maxIters: Int = 50,
-                                   checkpointDir: Option[String] = None,
                                    bands: Int = graft.plans.RpLsh.Bands,
                                    bitsPerBand: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame = {
     val clusters = dedupEmbeddingClusters(embeddings, tau, maxIters,
-      checkpointDir, bands, bitsPerBand)
+      bands, bitsPerBand)
     val members = clusters
       .join(AnnOps.q6GuardedRaw(embeddings), "vec_id")
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val cent = members
       .select(col("cluster_id"), posexplode(col("q6s")).as(Seq("pos", "v")))
       .groupBy(col("cluster_id"), col("pos"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Link-graph analytics — the crawl estate's ranking layer (what a
   * frontier scheduler or a quality prior consumes): PageRank power
   * iteration over a deterministic synthetic link graph, INTEGER-exact
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each round is ONE edge-keyed join + ONE dst-keyed agg —
   * shuffle payload is O(edges) with map-side partials; rounds are the
-  * CC family's cost model (localCheckpoint per round keeps lineage
+  * CC family's cost model (a [[graft.Materialize]] per round keeps lineage
   * flat; a reliable checkpoint dir is the multi-hour variant). The
   * oracle unrolls the rounds as CTEs. */
 object GraphOps {
@@ -48,12 +50,12 @@ object GraphOps {
   def pagerank(documents: DataFrame, rounds: Int = Rounds): DataFrame = {
     val docs = documents.select(col("doc_id"))
     val nRow = docs.agg((max(col("doc_id")) + 1).as("n"))
-    val edges = edgesOf(documents).localCheckpoint(false)
+    val edges = Materialize(edgesOf(documents), eager = false)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val base = docs.crossJoin(broadcast(nRow))
     var p = base.select(col("doc_id"), expr(s"CAST($Q AS BIGINT) div n").as("pr"))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     (1 to rounds).foreach { _ =>
       val contrib = p
         .join(outdeg, p("doc_id") === outdeg("src"))
@@ -73,7 +75,8 @@ object GraphOps {
           (expr(s"(15 * (CAST($Q AS BIGINT) div n)) div 100") +
             expr("(85 * (coalesce(infl, CAST(0 AS BIGINT)) + (dang div n))) div 100"))
             .as("pr"))
-        .localCheckpoint(false) // lineage flat per round (the CC lesson)
+        // lineage flat per round (the CC lesson)
+        .transform(Materialize(_, eager = false))
     }
     p.orderBy("doc_id")
   }

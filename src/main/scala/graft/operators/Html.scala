@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.TextFuns
 
 /** HTML text extraction — the WARC → documents bridge (the trafilatura
@@ -119,7 +120,7 @@ object HtmlOps {
       documents.select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), extractText(synthHtml).as("text_extracted"))
       .select(col("doc_id"), posexplode(segArr).as(Seq("seg_pos", "seg")))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val blocklist = segs
       .select(md5(col("seg").cast("binary")).as("seg_hash"), col("doc_id"))
       .groupBy(col("seg_hash"))
@@ -1216,7 +1217,8 @@ object HtmlOps {
     * reassemble the article text before dedup/scoring/packing. */
   def paginationChainsOf(pages: DataFrame, maxParts: Int = 8): DataFrame = {
     val edges = nextEdgesOf(pages)
-      .localCheckpoint(false) // head detection AND every hop read it
+      // head detection AND every hop read it
+      .transform(Materialize(_, eager = false))
     val heads = edges.join(
       edges.select(col("dst").as("src")), Seq("src"), "left_anti")
       .select(col("src")).distinct()
@@ -1250,7 +1252,8 @@ object HtmlOps {
     * over the link-scale edge frame; never a driver loop. */
   def paginationCyclesOf(pages: DataFrame, maxParts: Int = 8): DataFrame = {
     val edges = nextEdgesOf(pages)
-      .localCheckpoint(false) // every hop reads it
+      // every hop reads it
+      .transform(Materialize(_, eager = false))
     val init = edges.select(col("src").as("start"), col("dst").as("cur"))
     val walks = (2 to maxParts).scanLeft(init) { (cur, _) =>
       val e = edges.select(col("src").as("_hop_src"),
@@ -1258,7 +1261,7 @@ object HtmlOps {
       cur.join(e, col("cur") === col("_hop_src"))
         .select(col("start"), col("_hop_dst").as("cur"))
     }
-    val visited = walks.reduce(_.unionByName(_)).localCheckpoint(false)
+    val visited = Materialize(walks.reduce(_.unionByName(_)), eager = false)
     val onCycle = visited.filter(col("cur") === col("start"))
       .select(col("start")).distinct()
     // the ORBIT is the mutually-reachable set, not everything the walk
@@ -1458,11 +1461,13 @@ object HtmlOps {
     val decls = hreflangOf(pages)
       .select(UrlOps.canonIdn(col("page_url")).as("src_url"),
         col("lang"), col("dst_url"))
-      .localCheckpoint(false) // vertices, edges, and lang agg read it
+      // vertices, edges, and lang agg read it
+      .transform(Materialize(_, eager = false))
     val urls = decls.select(col("src_url").as("url"))
       .unionByName(decls.select(col("dst_url").as("url"))).distinct()
       .select(col("url"), xxhash64(col("url")).as("doc_id"))
-      .localCheckpoint(false) // CC vertices AND the member join
+      // CC vertices AND the member join
+      .transform(Materialize(_, eager = false))
     val edges = decls
       .select(xxhash64(col("src_url")).as("doc_a"),
         xxhash64(col("dst_url")).as("doc_b"))
@@ -1810,7 +1815,7 @@ object HtmlOps {
     val spark = documents.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val pages = mediaSynthPages(documents)
-    val pairs = mediaPairsOf(pages).localCheckpoint(false)
+    val pairs = Materialize(mediaPairsOf(pages), eager = false)
     val urls = pairs.select(col("media_url"), col("kind")).distinct()
       .withColumn("_g", regexp_extract(col("media_url"),
         "([0-9]+)\\.[a-z0-9]+$", 1).cast("long"))
@@ -1858,7 +1863,7 @@ object HtmlOps {
     val spark = documents.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val pages = mediaSynthPages(documents)
-    val pairs = mediaPairsOf(pages).localCheckpoint(false)
+    val pairs = Materialize(mediaPairsOf(pages), eager = false)
     val urls = pairs.select(col("media_url"), col("kind")).distinct()
       .withColumn("_g", regexp_extract(col("media_url"),
         "([0-9]+)\\.[a-z0-9]+$", 1).cast("long"))
@@ -2050,13 +2055,13 @@ object HtmlOps {
     * genuinely normalize it away), so the expected clusters, captions,
     * and counts are SQL-computable from the pair universe alone while
     * Spark reproduces them through the real decode → dhash → cluster →
-    * caption-argmax pipeline. Pairs are mined ONCE (localCheckpoint —
+    * caption-argmax pipeline. Pairs are mined ONCE (materialized —
     * the payload universe derives from the same frame). */
   def imageDataset(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val pages = imgSynthPages(documents)
-    val pairs = imagePairsOf(pages).localCheckpoint(false)
+    val pairs = Materialize(imagePairsOf(pages), eager = false)
     val urls = pairs.select(col("img_url")).distinct()
       .withColumn("_g", regexp_extract(col("img_url"),
         "([0-9]+)\\.[a-z]+$", 1).cast("long"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Materialize
+
 /** Multimodal-column plumbing (SURVEY.md §2-B row 35 + §2-C).
   *
   * The contract for image/audio/video at 100 TB: payloads are opaque
@@ -904,7 +906,8 @@ object MultimodalOps {
     import spark.implicits._
     val corpusHash = imageDhash(
       syntheticPayloads(documents, plantedImage(_, 50)))
-      .localCheckpoint(false) // the probe AND the final hash join read it
+      // the probe AND the final hash join read it
+      .transform(Materialize(_, eager = false))
     val evalPayloads = syntheticPayloads(
       ImageEvalIds.toDF("doc_id"), plantedImage(_, 50))
     evalContamination(corpusHash,
@@ -947,7 +950,7 @@ object MultimodalOps {
     import spark.implicits._
     val corpusHash = audioAhash(
       syntheticPayloads(documents, plantedAudio(_, 40)))
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val evalPayloads = syntheticPayloads(
       AudioEvalIds.toDF("doc_id"), plantedAudio(_, 40))
     evalContamination(corpusHash,
@@ -968,9 +971,9 @@ object MultimodalOps {
       hashFrame: DataFrame,
       pairGuard: DataFrame => DataFrame): DataFrame = {
     // hash ONCE; the frame feeds blocking, vertices, and the final join
-    // (localCheckpoint — the CC-family lineage discipline)
+    // (materialized — the CC-family lineage discipline)
     val hashes = hashFrame.select(col("doc_id"), col("dhash")).distinct()
-      .localCheckpoint(false)
+      .transform(Materialize(_, eager = false))
     val pairs = DedupOps.simhashBlockCandidates(
       pairGuard(hashes).withColumnRenamed("dhash", "simhash"), pieceBits = 16)
       .filter(col("hamming") <= 3)

@@ -70,9 +70,10 @@ object Tables {
     * documented spread contract is "wrap raw scan projections", and a
     * frame that already carries a repartition/aggregate/join upstream
     * either is already spread or parallelizes itself at the exchange. */
-  private def scanSplitCount(df: DataFrame): Option[Long] = {
+  private[graft] def scanSplitCount(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.internal.SQLConf
     val session = df.sparkSession
     var fileSizes = List.empty[Long]
     var scans = 0
@@ -92,13 +93,18 @@ object Tables {
     walk(df.queryExecution.analyzed)
     if (!narrow || scans == 0) return None
     // FilePartition.maxSplitBytes: min(maxPartitionBytes,
-    //   max(openCostInBytes, (totalBytes incl. open costs) / parallelism))
+    //   max(openCostInBytes, (totalBytes incl. open costs) / minPartitionNum)),
+    // minPartitionNum = spark.sql.files.minPartitionNum, else
+    // spark.sql.leafNodeDefaultParallelism, else defaultParallelism
     val conf = session.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
     val maxPB = conf.filesMaxPartitionBytes
-    val cores = math.max(1, session.sparkContext.defaultParallelism)
+    val minPartitionNum = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(session.sparkContext.defaultParallelism))
     val totalBytes = fileSizes.map(_ + openCost).sum
-    val maxSplit = math.min(maxPB, math.max(openCost, totalBytes / cores))
+    val maxSplit =
+      math.min(maxPB, math.max(openCost, totalBytes / minPartitionNum))
     // split each file, then bin-pack descending — FilePartition's exact
     // close-when-over rule (parquet is splitable; all spread sources are)
     val splits = fileSizes.flatMap { len =>

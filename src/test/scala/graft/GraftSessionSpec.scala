@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,20 +21,12 @@ class GraftSessionSpec extends AnyFunSuite {
   test("SparkSession.builder and SPARK_GRAFT_CPUS appear only in GraftSession") {
     // this spec names both strings, so it is left out of its own scan
     val exempt = Set("GraftSession.scala", "GraftSessionSpec.scala")
-    val sources = Seq("src/main", "src/test").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }.filterNot(p => exempt(p.getFileName.toString))
+    val sources = SourceScan.files("src/main", "src/test")
+      .filterNot(p => exempt(p.getFileName.toString))
     assert(sources.size > 50, s"scan found only ${sources.size} files")
-    def sites(pattern: String): Seq[String] = sources.flatMap { p: Path =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if pattern.r.findFirstIn(line).isDefined => s"$p:${i + 1}"
-      }
-    }
     assert(Files.readString(Paths.get("src/main/scala/graft/GraftSession.scala"))
       .contains("SparkSession.builder()"))
-    assert(sites("""SparkSession\s*\.\s*builder""").isEmpty)
-    assert(sites("SPARK_GRAFT_CPUS").isEmpty)
+    assert(SourceScan.sites(sources, """SparkSession\s*\.\s*builder""").isEmpty)
+    assert(SourceScan.sites(sources, "SPARK_GRAFT_CPUS").isEmpty)
   }
 }

@@ -313,57 +313,99 @@ class PipelineOpsSpec extends SparkSpec {
     assert(leaks == expectedLeaks)
   }
 
+  /** `body` with `dir` as the context's checkpoint directory, so every
+    * [[graft.Materialize]] inside it checkpoints reliably. The previous
+    * directory (none) comes back in `finally`: every suite shares one
+    * SparkContext. */
+  private def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try body
+    finally org.apache.spark.CheckpointDirBridge.set(sc, previous)
+  }
+
+  /** `body` (which must collect its results) under a fresh checkpoint
+    * directory, asserting it was durable throughout: no stage named
+    * `localCheckpoint at …` ran, no RDD was persisted (a local
+    * checkpoint persists its blocks, lazily or not), and checkpoint
+    * files landed in the directory. The directory is deleted after. */
+  private def reliably[T](body: => T): T = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_reliable")
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.add(e.stageInfo.name)
+    }
+    org.apache.spark.GraftBridge.drainListeners(sc)
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      val result = withCheckpointDir(dir.toString)(body)
+      org.apache.spark.GraftBridge.drainListeners(sc)
+      val local = stages.asScala.filter(_.startsWith("localCheckpoint at"))
+      assert(local.isEmpty, s"local checkpoint stages: $local")
+      val persisted = sc.getPersistentRDDs.keySet -- persistedBefore
+      assert(persisted.isEmpty, s"RDDs persisted in reliable mode: $persisted")
+      val walk = java.nio.file.Files.walk(dir)
+      val files = try walk.iterator.asScala
+        .count(_.getFileName.toString.startsWith("part-"))
+      finally walk.close()
+      assert(files > 0, s"no checkpoint files under $dir")
+      result
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("connectedComponents: reliable-checkpoint path matches the local path on both cluster queries") {
     // localCheckpoint blocks die with their executor — a multi-hour
     // 100 TB CC job needs the reliable path; results must be identical
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val localDocs = collect(DedupOps.dedupClusters(docs))
-    val reliableDocs = collect(DedupOps.dedupClusters(docs,
-      checkpointDir = Some(dir)))
-    assert(reliableDocs == localDocs)
+    assert(reliably(collect(DedupOps.dedupClusters(docs))) == localDocs)
     val localEmb = collect(DedupOps.dedupEmbeddingClusters(embs))
-    val reliableEmb = collect(DedupOps.dedupEmbeddingClusters(embs,
-      checkpointDir = Some(dir)))
-    assert(reliableEmb == localEmb)
-    val files = new java.io.File(dir).listFiles
-    assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
+    assert(reliably(collect(DedupOps.dedupEmbeddingClusters(embs))) == localEmb)
     // these fixtures are small enough for the driver-side finish, so
     // the runs above never reach a distributed round: run the same
-    // graphs again with the finish disabled, rounds into a fresh dir
-    val roundsDir =
-      java.nio.file.Files.createTempDirectory("graft_cc_rounds").toString
+    // graphs again with the finish disabled
     def distributed(vertices: org.apache.spark.sql.DataFrame,
                     pairs: org.apache.spark.sql.DataFrame) =
-      collect(DedupOps.ccWithRounds(vertices, pairs, maxIters = 50,
-        checkpointDir = Some(roundsDir), localFinishEdges = 0)._1)
+      reliably(collect(DedupOps.ccWithRounds(vertices, pairs, maxIters = 50,
+        localFinishEdges = 0)._1))
     assert(distributed(docs.select("doc_id"), DedupOps.minhashPairs(docs)) ==
       localDocs)
     assert(distributed(embs.select(col("vec_id").as("doc_id")),
       DedupOps.embeddingClusterPairs(embs, 0.4, graft.plans.RpLsh.Bands,
-        graft.plans.RpLsh.BitsPerBand, checkpoint = false)) == localEmb)
-    // the rounds really went through reliable storage
-    val roundFiles = new java.io.File(roundsDir).listFiles
-    assert(roundFiles != null && roundFiles.nonEmpty,
-      s"no checkpoint data under $roundsDir")
+        graft.plans.RpLsh.BitsPerBand)) == localEmb)
   }
 
   test("kmeans/pq fits: reliable-checkpoint path matches the local path") {
-    // same durability option as CC: per-round localCheckpoint blocks die
-    // with their executor, so a multi-hour 100 TB training needs the
-    // reliable path; the trajectory must be bit-identical through both
-    val dir = java.nio.file.Files.createTempDirectory("graft_fit_ckpt").toString
+    // per-round localCheckpoint blocks die with their executor, so a
+    // multi-hour 100 TB training needs the reliable path; the
+    // trajectory must be bit-identical through both
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    assert(rows(AnnOps.kmeans(embs, checkpointDir = Some(dir))) ==
-      rows(AnnOps.kmeans(embs)))
-    assert(rows(AnnOps.pqEncode(embs, checkpointDir = Some(dir))) ==
-      rows(AnnOps.pqEncode(embs)))
-    assert(rows(AnnOps.pqSearchIvf(embs, checkpointDir = Some(dir))) ==
+    assert(reliably(rows(AnnOps.kmeans(embs))) == rows(AnnOps.kmeans(embs)))
+    assert(reliably(rows(AnnOps.pqEncode(embs))) == rows(AnnOps.pqEncode(embs)))
+    assert(reliably(rows(AnnOps.pqSearchIvf(embs))) ==
       rows(AnnOps.pqSearchIvf(embs)))
-    val files = new java.io.File(dir).listFiles
-    assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
+  }
+
+  test("BPE train, embedding representative, PageRank: reliable path matches the local path") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    assert(reliably(rows(BpeOps.train(docs, merges = 8))) ==
+      rows(BpeOps.train(docs, merges = 8)))
+    assert(reliably(rows(DedupOps.dedupEmbeddingRepresentative(embs))) ==
+      rows(DedupOps.dedupEmbeddingRepresentative(embs)))
+    assert(reliably(rows(GraphOps.pagerank(docs))) ==
+      rows(GraphOps.pagerank(docs)))
   }
 
   /** First-stage names (the action call sites) of every job a CC run

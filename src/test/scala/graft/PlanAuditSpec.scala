@@ -62,6 +62,26 @@ class PlanAuditSpec extends SparkSpec {
       s"spread must be a no-op on a multi-split scan:\n$pMulti")
   }
 
+  test("Tables.scanSplitCount equals the scan's split count under spark.sql.files.minPartitionNum") {
+    // Spark's maxSplitBytes divides by minPartitionNum when it is set,
+    // not by defaultParallelism; a small open cost lets the divisor,
+    // not the per-file floor, decide the split size
+    val df = spreadNeutralDocs.select(col("doc_id"))
+    val confs = Seq("spark.sql.files.minPartitionNum",
+      "spark.sql.files.openCostInBytes")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.files.minPartitionNum", 16L)
+      spark.conf.set("spark.sql.files.openCostInBytes", 1024L)
+      val splits = df.rdd.getNumPartitions
+      assert(splits > spark.sparkContext.defaultParallelism,
+        s"$splits splits: the divisor did not matter")
+      assert(Tables.scanSplitCount(df).contains(splits.toLong))
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   test("q_event_scan: equality AND time-range predicates reach the parquet scan") {
     val p = plan(EventOps.eventScan(Tables.events(spark, sfDir)))
     assert(p.contains("PushedFilters"))
@@ -190,13 +210,6 @@ class PlanAuditSpec extends SparkSpec {
       s"corpus re-scan after materialization:\n$p")
     assert(!p.contains("SortMergeJoin"), p)
     assert(!p.contains("ShuffledHashJoin"), p)
-    // declarative two-pass shape: same keys + curate's text_hash window
-    val p2 = plan(CorpusOps.pipelineManifest(
-      Tables.documents(spark, sfDir), materializeTrain = false))
-    assert(keysOf(p2) == Set("text_hash", "source"),
-      s"shuffle keys ${keysOf(p2)}:\n$p2")
-    assert(!p2.contains("SortMergeJoin"), p2)
-    assert(!p2.contains("ShuffledHashJoin"), p2)
   }
 
   test("q_bpe_encode: corpus side is a pure map — broadcast merges/vocab, zero corpus shuffle") {
