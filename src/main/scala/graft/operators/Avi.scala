@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
 import graft.Materialize
+import graft.plans.Bytes.{fourcc, latin1, le32, u32le}
 
 /** AVI (RIFF) container parsing + MJPEG frame hashing — the VIDEO slot
   * of the multimodal estate, previously a declared stub.
@@ -45,16 +46,9 @@ object AviOps {
     * framing, or no usable `avih` geometry — the caller routes
     * non-videos out of the video universe, never a thrown error. */
   def aviWalk(bytes: Array[Byte]): Option[AviInfo] = {
-    def u32(off: Int): Long =
-      if (off < 0 || off + 4 > bytes.length) -1L
-      else (bytes(off) & 0xffL) | (bytes(off + 1) & 0xffL) << 8 |
-        (bytes(off + 2) & 0xffL) << 16 | (bytes(off + 3) & 0xffL) << 24
-    def fourcc(off: Int): String =
-      if (off + 4 > bytes.length) ""
-      else new String(bytes, off, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (bytes.length < 12 || fourcc(0) != "RIFF" || fourcc(8) != "AVI ")
-      return None
-    val riffEnd = math.min(bytes.length.toLong, 8L + u32(4))
+    if (bytes.length < 12 || fourcc(bytes, 0) != "RIFF" ||
+      fourcc(bytes, 8) != "AVI ") return None
+    val riffEnd = math.min(bytes.length.toLong, 8L + u32le(bytes, 4))
     var usPerFrame = 0L
     var declared = 0L
     var w = -1
@@ -73,24 +67,24 @@ object AviOps {
       if (depth > MaxDepth) { ok = false; return }
       var off = start
       while (ok && off + 8 <= end) {
-        val id = fourcc(off.toInt)
-        val size = u32(off.toInt + 4)
+        val id = fourcc(bytes, off)
+        val size = u32le(bytes, off + 4)
         if (size < 0 || off + 8 + size > end) { ok = false; return }
         val dataOff = (off + 8).toInt
         if (id == "LIST") {
           if (size < 4) { ok = false; return }
-          val typ = fourcc(dataOff)
+          val typ = fourcc(bytes, dataOff)
           // 'rec ' groups inside movi recurse with movi membership kept
           walk(dataOff + 4L, dataOff + size, inMovi || typ == "movi",
             depth + 1)
         } else if (id == "avih" && size >= 40) {
-          usPerFrame = u32(dataOff)
-          declared = u32(dataOff + 16)
-          w = u32(dataOff + 32).toInt
-          h = u32(dataOff + 36).toInt
-        } else if (id == "strh" && size >= 8 && fourcc(dataOff) == "vids" &&
-          handler.isEmpty) {
-          handler = fourcc(dataOff + 4)
+          usPerFrame = u32le(bytes, dataOff)
+          declared = u32le(bytes, dataOff + 16)
+          w = u32le(bytes, dataOff + 32).toInt
+          h = u32le(bytes, dataOff + 36).toInt
+        } else if (id == "strh" && size >= 8 &&
+          fourcc(bytes, dataOff) == "vids" && handler.isEmpty) {
+          handler = fourcc(bytes, dataOff + 4)
         } else if (inMovi && id.length == 4 &&
           id(0).isDigit && id(1).isDigit && id(2) == 'd' &&
           (id(3) == 'b' || id(3) == 'c')) {
@@ -152,21 +146,11 @@ object AviOps {
     * None = too short to even hold a header. */
   private def dibToBmp(frame: Array[Byte]): Option[Array[Byte]] = {
     if (frame.length < 40) return None
-    val biSize = (frame(0) & 0xffL) | (frame(1) & 0xffL) << 8 |
-      (frame(2) & 0xffL) << 16 | (frame(3) & 0xffL) << 24
+    val biSize = u32le(frame, 0)
     if (biSize < 40 || biSize > frame.length) return None
-    val out = new Array[Byte](14 + frame.length)
-    out(0) = 'B'; out(1) = 'M'
-    def le32(off: Int, v: Long): Unit = {
-      out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    le32(2, out.length.toLong)
-    le32(10, 14 + biSize)
-    System.arraycopy(frame, 0, out, 14, frame.length)
-    Some(out)
+    // 'BM', file size, 4 reserved bytes, pixel-data offset
+    Some(latin1("BM") ++ le32(14L + frame.length) ++ new Array[Byte](4) ++
+      le32(14 + biSize) ++ frame)
   }
 
   /** §2-C `videoDhashes`: per-frame perceptual signatures — sampled
@@ -209,34 +193,25 @@ object AviOps {
   def buildAvi(frames: Seq[Array[Byte]], width: Int, height: Int,
                usPerFrame: Long = 40000L, handler: String = "MJPG")
       : Array[Byte] = {
-    def le32(n: Long): Array[Byte] = Array(
-      (n & 0xff).toByte, ((n >> 8) & 0xff).toByte,
-      ((n >> 16) & 0xff).toByte, ((n >> 24) & 0xff).toByte)
-    def ascii(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    require(handler.length == 4, s"handler must be a fourcc, got '$handler'")
     def chunk(id: String, data: Array[Byte]): Array[Byte] = {
       val pad =
         if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray
-      ascii(id) ++ le32(data.length) ++ data ++ pad
+      latin1(id) ++ le32(data.length) ++ data ++ pad
     }
     def list(typ: String, parts: Array[Byte]*): Array[Byte] =
-      chunk("LIST", ascii(typ) ++ parts.flatten.toArray)
-    val avihData = new Array[Byte](56)
-    def put(d: Array[Byte], off: Int, v: Long): Unit =
-      System.arraycopy(le32(v), 0, d, off, 4)
-    put(avihData, 0, usPerFrame)
-    put(avihData, 16, frames.length)
-    put(avihData, 32, width)
-    put(avihData, 36, height)
-    val strhData = new Array[Byte](56)
-    System.arraycopy(ascii("vids"), 0, strhData, 0, 4)
-    System.arraycopy(ascii(handler), 0, strhData, 4, 4)
-    val body = ascii("AVI ") ++
+      chunk("LIST", latin1(typ) ++ parts.flatten.toArray)
+    // avih: us_per_frame, 3 unread fields, total_frames, 3 more, w, h
+    val avihData = le32(usPerFrame) ++ new Array[Byte](12) ++
+      le32(frames.length) ++ new Array[Byte](12) ++ le32(width) ++
+      le32(height) ++ new Array[Byte](16)
+    val strhData = latin1("vids") ++ latin1(handler) ++ new Array[Byte](48)
+    val body = latin1("AVI ") ++
       list("hdrl", chunk("avih", avihData),
         list("strl", chunk("strh", strhData),
           chunk("strf", new Array[Byte](40)))) ++
       list("movi", frames.map(chunk("00dc", _)): _*)
-    ascii("RIFF") ++ le32(body.length) ++ body
+    latin1("RIFF") ++ le32(body.length) ++ body
   }
 
   /** Planted video corpus for the oracle query: per doc, a real AVI
@@ -249,21 +224,13 @@ object AviOps {
     * REAL container-walk → frame-sample → pixel-walk → dHash →
     * block-join → CC pipeline. */
   private def syntheticVideos(documents: DataFrame,
-                              groups: Int): DataFrame = {
-    val spark = documents.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType)))
-    spark.createDataFrame(
-      documents.select(col("doc_id").cast("long")).rdd.map { r =>
-        val id = r.getLong(0)
-        // id + groups keeps the group, shifts the brightness offset —
-        // two distinct byte streams, one planted hash
-        Row(id, buildAvi(Seq(
-          MultimodalOps.plantedImage(id, groups),
-          MultimodalOps.plantedImage(id + groups, groups)), 9, 8))
-      }, schema)
-  }
+                              groups: Int): DataFrame =
+    MultimodalOps.syntheticPayloads(documents, id =>
+      // id + groups keeps the group, shifts the brightness offset —
+      // two distinct byte streams, one planted hash
+      buildAvi(Seq(
+        MultimodalOps.plantedImage(id, groups),
+        MultimodalOps.plantedImage(id + groups, groups)), 9, 8))
 
   /** §2 `q_video_dedup_representative`: the video dedup endgame under
     * the ORACLE — the image/audio planted-truth pattern (§2 rows

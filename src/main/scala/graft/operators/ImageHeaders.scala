@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.Bytes.{fourcc, u16be, u16le, u32be, u32le}
+
 /** Header-only image geometry (round 19) — the cheap arm of the media
   * inventory for the web's dominant media type. The full pixel decoders
   * ([[MultimodalOps.pngWalk]], [[JpegDecode]], [[GifDecode]],
@@ -34,17 +36,6 @@ private[graft] object ImageHeaders {
     }
   }
 
-  private def u16be(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-  private def u32be(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-  private def u16le(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def s32le(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /** PNG: the IHDR chunk is REQUIRED to be first (spec §11.2.2), so
     * geometry sits at fixed offsets 16/20 past the 8-byte signature and
     * the 8-byte chunk preamble. */
@@ -74,10 +65,10 @@ private[graft] object ImageHeaders {
     * BITMAPCOREHEADER (u16 geometry). */
   private def bmp(b: Array[Byte]): Either[String, (Int, Int, String)] = {
     if (b.length < 26) return Left("bad_image_header")
-    val hdrSize = s32le(b, 14)
+    val hdrSize = u32le(b, 14).toInt
     if (hdrSize >= 40 && b.length >= 26) {
-      val w = s32le(b, 18)
-      val h = math.abs(s32le(b, 22).toLong)
+      val w = u32le(b, 18).toInt
+      val h = math.abs(u32le(b, 22).toInt.toLong)
       if (w <= 0 || h <= 0 || h > Int.MaxValue) Left("bad_image_header")
       else Right((w, h.toInt, "bmp"))
     } else if (hdrSize == 12 && b.length >= 22) {
@@ -127,8 +118,7 @@ private[graft] object ImageHeaders {
       else if (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 0x2a) false
       else return Left("bad_tiff_header")
     def u16(off: Int): Int = if (le) u16le(b, off) else u16be(b, off)
-    def u32(off: Int): Long =
-      if (le) s32le(b, off) & 0xffffffffL else u32be(b, off)
+    def u32(off: Int): Long = if (le) u32le(b, off) else u32be(b, off)
     val ifd = u32(4)
     if (ifd < 8 || ifd + 2 > b.length) return Left("bad_tiff_header")
     val n = math.min(u16(ifd.toInt), 512) // cap: a real IFD has dozens
@@ -174,14 +164,14 @@ private[graft] object ImageHeaders {
       val len = u32be(b, p)
       if (len < 0 || p + 12 + len > b.length) done = true // torn tail
       else {
-        val typ = new String(b, p + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+        val typ = fourcc(b, p + 4)
         typ match {
           case "acTL" if len >= 8 =>
             sawActl = true
             frames = u32be(b, p + 8).toInt
           case "fcTL" if len >= 26 =>
-            val num = ((b(p + 8 + 20) & 0xff) << 8) | (b(p + 8 + 21) & 0xff)
-            val den0 = ((b(p + 8 + 22) & 0xff) << 8) | (b(p + 8 + 23) & 0xff)
+            val num = u16be(b, p + 8 + 20)
+            val den0 = u16be(b, p + 8 + 22)
             val den = if (den0 == 0) 100 else den0
             durMs += num.toLong * 1000L / den
           case "IEND" => done = true
@@ -221,8 +211,7 @@ private[graft] object ImageHeaders {
           else {
             val label = b(p + 1) & 0xff
             if (label == 0xf9 && p + 5 < b.length && (b(p + 2) & 0xff) >= 4)
-              pendingDelayMs =
-                (((b(p + 4) & 0xff) | ((b(p + 5) & 0xff) << 8)) * 10).toLong
+              pendingDelayMs = u16le(b, p + 4) * 10L
             p = skipSubBlocks(p + 2)
           }
         case 0x2c => // image descriptor

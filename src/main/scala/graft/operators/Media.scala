@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Bytes._
+
 /** The MEDIA INVENTORY — round 18's deployment glue: one pass over a
   * WARC record frame that names every response's bytes
   * ([[graft.plans.MagicMime]], the declared-vs-sniffed audit) AND
@@ -191,37 +193,16 @@ object MediaOps {
 
   // ---------- oracle instantiation (q_media_inventory) ----------
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
   /** Deterministic synthetic WAV — PCM16 mono at 8 kHz,
     * `80 × (doc_id % 29 + 1)` frames = `10 × (doc_id % 29 + 1)` ms
-    * (integer-exact in both engines). */
-  private[graft] def wavSynth(docId: Long): Array[Byte] = {
-    val nFrames = 80 * (docId % 29 + 1).toInt
-    val dataLen = nFrames * 2
-    val ascii = (s: String) =>
-      s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    ascii("RIFF") ++ le32(4L + 24 + 8 + dataLen) ++ ascii("WAVE") ++
-      ascii("fmt ") ++ le32(16L) ++
-      le16(1) ++ le16(1) ++ le32(8000L) ++ le32(16000L) ++ le16(2) ++ le16(16) ++
-      ascii("data") ++ le32(dataLen.toLong) ++ new Array[Byte](dataLen)
-  }
+    * (integer-exact in both engines), all samples silent. */
+  private[graft] def wavSynth(docId: Long): Array[Byte] =
+    Wav.write(8000, 16, new Array[Byte](2 * 80 * (docId % 29 + 1).toInt))
 
-  private def be16(v: Int): Array[Byte] =
-    Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be32(v: Long): Array[Byte] = Array(
-    ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def ascii(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
   // chunk CRCs are zeroed: neither the header probe nor the animation
   // walk validates them (the full decoder route does)
   private def pngChunk(typ: String, data: Array[Byte]): Array[Byte] =
-    be32(data.length.toLong) ++ ascii(typ) ++ data ++ be32(0)
+    be32(data.length.toLong) ++ latin1(typ) ++ data ++ be32(0)
 
   /** Deterministic minimal JPEG — SOI + SOF0 (even doc_id, baseline) or
     * SOF2 (odd, progressive) carrying the shared W/H arithmetic + EOI.
@@ -276,7 +257,7 @@ object MediaOps {
         Array[Byte](0, 0) ++ // transparent idx + GCE terminator
         Array[Byte](0x2c) ++ le16(0) ++ le16(0) ++ le16(w) ++ le16(h) ++
         Array[Byte](0, 8, 1, 0, 0) // flags, LZW min code, 1-byte sub-block, end
-    ascii("GIF89a") ++ le16(w) ++ le16(h) ++ Array[Byte](0, 0, 0) ++
+    latin1("GIF89a") ++ le16(w) ++ le16(h) ++ Array[Byte](0, 0, 0) ++
       (0 until frames).map(_ => frame).reduce(_ ++ _) ++ Array[Byte](0x3b)
   }
 
@@ -284,7 +265,7 @@ object MediaOps {
   private[graft] def bmpSynth(docId: Long): Array[Byte] = {
     val w = 16 + (docId % 16) * 4
     val h = 16 + (docId % 9) * 4
-    ascii("BM") ++ le32(54L) ++ le32(0L) ++ le32(54L) ++
+    latin1("BM") ++ le32(54L) ++ le32(0L) ++ le32(54L) ++
       le32(40L) ++ le32(w) ++ le32(h) ++ le16(1) ++ le16(24) ++
       le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L)
   }
@@ -323,7 +304,7 @@ object MediaOps {
     * `10 × (doc_id % 29 + 1)` ms, integer-exact (the wavSynth clock). */
   private[graft] def flacSynth(docId: Long): Array[Byte] = {
     val ts = 80L * (docId % 29 + 1)
-    ascii("fLaC") ++
+    latin1("fLaC") ++
       Array[Byte](0x80.toByte, 0, 0, 34) ++ // last block, STREAMINFO, len 34
       be16(4096) ++ be16(4096) ++ new Array[Byte](6) ++ // block/frame sizes
       // 8000 Hz (20 bits) | channels-1 = 0 (3) | bps-1 = 15 (5) | ts (36)
@@ -390,13 +371,13 @@ object MediaOps {
           case 11 => ("image/svg+xml", svgSynth(id))
           case 12 => ("image/png", apngSynth(id))
           case 13 => ("application/pdf",
-            ascii(s"%PDF-1.${id % 8}\n1 0 obj\n<<>>\nendobj\n%%EOF\n"))
+            latin1(s"%PDF-1.${id % 8}\n1 0 obj\n<<>>\nendobj\n%%EOF\n"))
           case 14 => ("audio/flac", flacSynth(id))
           case 15 => ("image/tiff", tiffSynth(id))
           // a well-formed ftyp with no moov: sniffs video/mp4, walk
           // quarantines — the media_reason column's planted truth
           case _ => ("video/mp4",
-            be32(16) ++ ascii("ftyp") ++ ascii("isom") ++ be32(0))
+            be32(16) ++ latin1("ftyp") ++ latin1("isom") ++ be32(0))
         }
         val payload =
           (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.Bytes._
+
 /** Header-only WAV / AVI / QOI measurement (round 19) — the RIFF/QOI
   * companions of [[ImageHeaders]], completing "one cheap pass measures
   * everything" for every format the sniffer names. The full decoders
@@ -11,67 +13,38 @@ package graft.operators
   * a QOI's fixed 14-byte header — so the inventory's cost per payload
   * stays O(metadata).
   *
-  * Spec contract: on every payload the full decoders accept, the
-  * probe's numbers are IDENTICAL to the decoder's arithmetic; on the
-  * formats the decoders reject (e.g. MP3-in-WAV), the probe still
-  * measures from the declared byte rate — strictly wider triage. */
+  * Contract: on every payload the full decoders accept, the probe's
+  * numbers are IDENTICAL to the decoder's arithmetic — for WAV by
+  * construction, since probe and decoders read one walk ([[Wav.walk]])
+  * and one decodable-encoding rule ([[Wav.Fmt.decodable]]); for AVI/QOI
+  * by spec. On the formats the decoders reject (e.g. MP3-in-WAV), the
+  * probe still measures from the declared byte rate — strictly wider
+  * triage. */
 private[graft] object MediaHeaders {
 
-  private def u16le(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  private def u32be(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-  private def ascii(b: Array[Byte], off: Int, s: String): Boolean =
-    off + s.length <= b.length &&
-      s.indices.forall(j => b(off + j) == s.charAt(j).toByte)
-
-  /** WAV: (duration_ms, format name). The chunk walk reads `fmt ` and
-    * the `data` chunk's SIZE — sample bytes are never touched. PCM and
-    * G.711 durations use the exact frame arithmetic the full decoder
-    * uses (data / block_align frames over the sample rate); any other
-    * encoding (MP3-in-WAV, ADPCM, float) measures from the declared
-    * average byte rate — the header's own clock. */
+  /** WAV: (duration_ms, format name), off the shared [[Wav.walk]] — the
+    * `data` chunk's declared SIZE is read, sample bytes never. PCM and
+    * G.711 durations are the decoders' frame arithmetic (data /
+    * block_align frames over the sample rate); any other encoding
+    * (MP3-in-WAV, ADPCM, float) measures from the declared average byte
+    * rate — the header's own clock. */
   def wav(b: Array[Byte]): Either[String, (Long, String)] = {
-    if (b.length < 12 || !ascii(b, 0, "RIFF") || !ascii(b, 8, "WAVE"))
-      return Left("bad_wav_header")
-    var i = 12L
-    var fmtOff = -1L
-    var dataLen = -1L
-    while (i + 8 <= b.length && (fmtOff < 0 || dataLen < 0)) {
-      val sz = u32le(b, i.toInt + 4)
-      if (sz < 0) return Left("bad_wav_header")
-      if (ascii(b, i.toInt, "fmt ") && sz >= 16 && i + 24 <= b.length)
-        fmtOff = i + 8
-      else if (ascii(b, i.toInt, "data")) dataLen = sz
-      i += 8 + sz + (sz & 1)
+    val f = Wav.walk(b) match {
+      case Some(f) if f.channels >= 1 && f.rate > 0 => f
+      case _ => return Left("bad_wav_header")
     }
-    if (fmtOff < 0 || dataLen < 0) return Left("bad_wav_header")
-    val f = fmtOff.toInt
-    val audioFormat = u16le(b, f)
-    val nch = u16le(b, f + 2)
-    val rate = u32le(b, f + 4)
-    val byteRate = u32le(b, f + 8)
-    val bits = u16le(b, f + 14)
-    if (nch < 1 || rate <= 0) return Left("bad_wav_header")
-    val fmt = audioFormat match {
-      case 1 => s"pcm$bits"
-      case 3 => s"float$bits"
+    val fmt = f.audioFormat match {
+      case 1 => s"pcm${f.bits}"
+      case 3 => s"float${f.bits}"
       case 6 => "alaw"
       case 7 => "ulaw"
       case n => s"wav-fmt$n"
     }
-    val exactFrames = (audioFormat == 1 && (bits == 8 || bits == 16)) ||
-      ((audioFormat == 6 || audioFormat == 7) && bits == 8)
     val durationMs =
-      if (exactFrames) {
-        val blockAlign = nch * bits / 8
-        if (blockAlign <= 0) return Left("bad_wav_header")
-        (dataLen / blockAlign) * 1000L / rate
-      } else if (byteRate > 0) dataLen * 1000L / byteRate
+      if (f.decodable) {
+        if (f.blockAlign <= 0) return Left("bad_wav_header")
+        (f.dataLen / f.blockAlign) * 1000L / f.rate
+      } else if (f.byteRate > 0) f.dataLen * 1000L / f.byteRate
       else return Left("bad_wav_header")
     Right((durationMs, fmt))
   }
@@ -82,10 +55,7 @@ private[graft] object MediaHeaders {
     * Duration = us_per_frame × total_frames from `avih`, the container's
     * own declaration ([[AviOps.aviWalk]] reads the same fields). */
   def avi(b: Array[Byte]): Either[String, (Int, Int, Long, String)] = {
-    def fourcc(off: Int): String =
-      if (off + 4 > b.length) ""
-      else new String(b, off, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (b.length < 12 || fourcc(0) != "RIFF" || fourcc(8) != "AVI ")
+    if (b.length < 12 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "AVI ")
       return Left("bad_avi_header")
     val riffEnd = math.min(b.length.toLong, 8L + u32le(b, 4))
     var usPerFrame = 0L
@@ -98,12 +68,12 @@ private[graft] object MediaHeaders {
       if (depth > MaxDepth) return
       var off = start
       while (off + 8 <= end) {
-        val id = fourcc(off.toInt)
-        val size = u32le(b, off.toInt + 4)
+        val id = fourcc(b, off)
+        val size = u32le(b, off + 4)
         if (size < 0 || off + 8 + size > end) return
         val dataOff = (off + 8).toInt
         if (id == "LIST" && size >= 4) {
-          val typ = fourcc(dataOff)
+          val typ = fourcc(b, dataOff)
           // headers only: the movi payload LIST skips by its size
           if (typ != "movi") walk(dataOff + 4L, dataOff + size, depth + 1)
         } else if (id == "avih" && size >= 40) {
@@ -111,9 +81,9 @@ private[graft] object MediaHeaders {
           frames = u32le(b, dataOff + 16)
           w = u32le(b, dataOff + 32).toInt
           h = u32le(b, dataOff + 36).toInt
-        } else if (id == "strh" && size >= 8 && fourcc(dataOff) == "vids" &&
+        } else if (id == "strh" && size >= 8 && fourcc(b, dataOff) == "vids" &&
           handler.isEmpty) {
-          handler = fourcc(dataOff + 4)
+          handler = fourcc(b, dataOff + 4)
         }
         off = dataOff + size + (size & 1L)
       }
@@ -134,7 +104,7 @@ private[graft] object MediaHeaders {
     * stream) — duration reads −1, the caller's null, with no
     * quarantine (the header is honest, not torn). */
   def flac(b: Array[Byte]): Either[String, (Long, Int, Long)] = {
-    if (b.length < 42 || !ascii(b, 0, "fLaC")) return Left("bad_flac_header")
+    if (b.length < 42 || !matches(b, 0, "fLaC")) return Left("bad_flac_header")
     // block header: bit 7 = last-metadata-block, bits 0-6 = type (0 =
     // STREAMINFO); 3-byte big-endian length must be the fixed 34
     val blockType = b(4) & 0x7f
@@ -153,7 +123,7 @@ private[graft] object MediaHeaders {
 
   /** QOI: geometry from the fixed 14-byte header. */
   def qoi(b: Array[Byte]): Either[String, (Int, Int)] = {
-    if (b.length < 14 || !ascii(b, 0, "qoif")) return Left("bad_qoi_header")
+    if (b.length < 14 || !matches(b, 0, "qoif")) return Left("bad_qoi_header")
     val w = u32be(b, 4)
     val h = u32be(b, 8)
     if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Bytes.{be32, latin1, matches, u32be}
+
 /** MP3 METADATA — round 18, the audio twin of [[Mp4Ops]]: the round-18
   * `magic_mime` extension can NAME `audio/mpeg` bytes (the
   * shape-validated ID3v2 magic); this walk READS them — the ID3v2 text
@@ -68,10 +70,6 @@ object Mp3Ops {
   private def syncSafe(b: Array[Byte], off: Int): Int =
     ((b(off) & 0x7f) << 21) | ((b(off + 1) & 0x7f) << 14) |
       ((b(off + 2) & 0x7f) << 7) | (b(off + 3) & 0x7f)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) << 24 | (b(off + 1) & 0xffL) << 16 |
-      (b(off + 2) & 0xffL) << 8 | (b(off + 3) & 0xffL)
 
   /** Decode one ID3v2 text-frame payload by its encoding byte. */
   private def textOf(b: Array[Byte], off: Int, len: Int): String = {
@@ -141,7 +139,7 @@ object Mp3Ops {
         if ((bytes(5) & 0x40) != 0 && off + 4 <= tbEnd) {
           val es =
             if (tagVersion == 4) syncSafe(tb, off)
-            else u32(tb, off).toInt + 4
+            else u32be(tb, off).toInt + 4
           off += math.max(es, 4)
         }
         var ok = true
@@ -152,7 +150,7 @@ object Mp3Ops {
           else {
             val fs =
               if (tagVersion == 4) syncSafe(tb, off + 4)
-              else u32(tb, off + 4)
+              else u32be(tb, off + 4)
             if (fs < 0 || off + 10 + fs > tbEnd) ok = false
             else {
               // v2.4 per-frame unsync: the format flag bit 0x02, or the
@@ -286,17 +284,11 @@ object Mp3Ops {
       if (verBits == 3) { if (chMode == 3) 17 else 32 }
       else { if (chMode == 3) 9 else 17 }
     val xing = hdr + 4 + side
-    def u32be(off: Int): Long =
-      (bytes(off) & 0xffL) << 24 | (bytes(off + 1) & 0xffL) << 16 |
-        (bytes(off + 2) & 0xffL) << 8 | (bytes(off + 3) & 0xffL)
-    def tag4(off: Int, s: String): Boolean =
-      off + 4 <= bytes.length && bytes(off) == s(0).toByte &&
-        bytes(off + 1) == s(1).toByte && bytes(off + 2) == s(2).toByte &&
-        bytes(off + 3) == s(3).toByte
     val vbrFrames =
-      if (layer == 3 && (tag4(xing, "Xing") || tag4(xing, "Info")) &&
-        xing + 12 <= bytes.length && (u32be(xing + 4) & 1L) == 1L)
-        u32be(xing + 8)
+      if (layer == 3 &&
+        (matches(bytes, xing, "Xing") || matches(bytes, xing, "Info")) &&
+        xing + 12 <= bytes.length && (u32be(bytes, xing + 4) & 1L) == 1L)
+        u32be(bytes, xing + 8)
       else -1L
     // VBR tier 2 (round 19): hop every frame header by its declared
     // length — O(frames) 4-byte reads, no decode — summing samples, so
@@ -405,11 +397,6 @@ object Mp3Ops {
   private def ss(v: Int): Array[Byte] = Array(
     ((v >> 21) & 0x7f).toByte, ((v >> 14) & 0x7f).toByte,
     ((v >> 7) & 0x7f).toByte, (v & 0x7f).toByte)
-  private def be32(v: Int): Array[Byte] = Array(
-    ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def latin1(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
 
   private def textFrame(id: String, text: String, v4: Boolean): Array[Byte] = {
     val payload = Array[Byte](0) ++ latin1(text) // encoding 0 = latin-1
@@ -451,13 +438,7 @@ object Mp3Ops {
     * grade), Spark re-reads tag fields and the frame header through the
     * REAL walk while DuckDB states the construction arithmetic. */
   def mp3Meta(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val payloads = spark.createDataFrame(
-      documents.select(col("doc_id").cast("long")).rdd.map { r =>
-        Row(r.getLong(0), mp3Synth(r.getLong(0)))
-      }, schema)
+    val payloads = MultimodalOps.syntheticPayloads(documents, mp3Synth)
     val (clean, _) = mp3MetaOf(payloads.select(
       col("doc_id").cast("string").as("url"), col("payload")))
     clean

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Bytes._
+
 /** ISO-BMFF (MP4) container METADATA — round 18, the consumer of the
   * round-18 `magic_mime` extension: the real web's video estate is MP4
   * (`ftyp` box), and until now the estate could only NAME those bytes
@@ -52,25 +54,12 @@ object Mp4Ops {
     * truncated or fragmented-only file). Never throws on hostile
     * bytes. */
   def mp4Walk(bytes: Array[Byte]): Either[String, Mp4Info] = {
-    def u32(off: Long): Long =
-      if (off < 0 || off + 4 > bytes.length) -1L
-      else (bytes(off.toInt) & 0xffL) << 24 |
-        (bytes(off.toInt + 1) & 0xffL) << 16 |
-        (bytes(off.toInt + 2) & 0xffL) << 8 |
-        (bytes(off.toInt + 3) & 0xffL)
-    def u64(off: Long): Long =
-      if (off < 0 || off + 8 > bytes.length) -1L
-      else (u32(off) << 32) | u32(off + 4)
-    def fourcc(off: Long): String =
-      if (off < 0 || off + 4 > bytes.length) ""
-      else new String(bytes, off.toInt, 4,
-        java.nio.charset.StandardCharsets.ISO_8859_1)
     // `styp` is the segment twin of `ftyp` (ISO 14496-12 §8.16.2) — the
     // leading box of a real DASH/HLS media segment (round 19)
-    val lead = fourcc(4)
+    val lead = fourcc(bytes, 4)
     if (bytes.length < 16 || (lead != "ftyp" && lead != "styp"))
       return Left("not_mp4")
-    val majorBrand = fourcc(8)
+    val majorBrand = fourcc(bytes, 8)
     var timescale = 0L
     var duration = -1L
     var sawMoof = false
@@ -110,11 +99,11 @@ object Mp4Ops {
       if (depth > MaxDepth) return
       var off = start
       while (off + 8 <= end) {
-        val size0 = u32(off)
-        val typ = fourcc(off + 4)
+        val size0 = u32be(bytes, off)
+        val typ = fourcc(bytes, off + 4)
         var dataOff = off + 8
         val size =
-          if (size0 == 1L) { dataOff = off + 16; u64(off + 8) }
+          if (size0 == 1L) { dataOff = off + 16; s64be(bytes, off + 8) }
           else if (size0 == 0L) end - off // box runs to the end
           else size0
         if (size < dataOff - off || off + size > end) return // malformed: stop
@@ -127,8 +116,13 @@ object Mp4Ops {
             commitTrak()
           case "mvhd" =>
             val v = if (dataOff < bytes.length) bytes(dataOff.toInt) & 0xff else -1
-            if (v == 1) { timescale = u32(dataOff + 20); duration = u64(dataOff + 24) }
-            else if (v == 0) { timescale = u32(dataOff + 12); duration = u32(dataOff + 16) }
+            if (v == 1) {
+              timescale = u32be(bytes, dataOff + 20)
+              duration = s64be(bytes, dataOff + 24)
+            } else if (v == 0) {
+              timescale = u32be(bytes, dataOff + 12)
+              duration = u32be(bytes, dataOff + 16)
+            }
             // ISO 14496-12: an all-ones duration means UNKNOWN (a live
             // capture) — mark it, never compute a 49-day phantom
             if ((v == 0 && duration == 0xffffffffL) ||
@@ -136,17 +130,18 @@ object Mp4Ops {
           case "tkhd" =>
             val v = if (dataOff < bytes.length) bytes(dataOff.toInt) & 0xff else -1
             val base = if (v == 1) dataOff + 88 else dataOff + 76
-            val fw = u32(base); val fh = u32(base + 4)
+            val fw = u32be(bytes, base); val fh = u32be(bytes, base + 4)
             if (fw >= 0 && fh >= 0) { tW = (fw >> 16).toInt; tH = (fh >> 16).toInt }
           case "hdlr" =>
-            tHandler = fourcc(dataOff + 8)
+            tHandler = fourcc(bytes, dataOff + 8)
           case "mdhd" =>
             // media timescale — the clock trun/tfhd durations tick in
             val v = if (dataOff < bytes.length) bytes(dataOff.toInt) & 0xff else -1
-            tMdhd = if (v == 1) u32(dataOff + 20) else u32(dataOff + 12)
+            tMdhd = u32be(bytes, if (v == 1) dataOff + 20 else dataOff + 12)
           case "stsd" =>
             // fullbox(4) + entry_count(4), first entry: size(4) + format
-            if (u32(dataOff + 4) >= 1) tCodec = fourcc(dataOff + 12)
+            if (u32be(bytes, dataOff + 4) >= 1)
+              tCodec = fourcc(bytes, dataOff + 12)
           case "moof" =>
             sawMoof = true // fragmented stream: no movie-level duration
             walk(dataOff, dataEnd, depth + 1)
@@ -156,18 +151,18 @@ object Mp4Ops {
             walk(dataOff, dataEnd, depth + 1)
           case "tfhd" =>
             // fullbox flags pick the optional-field layout
-            val flags = (u32(dataOff) & 0xffffffL).toInt
-            trafTrack = u32(dataOff + 4)
+            val flags = (u32be(bytes, dataOff) & 0xffffffL).toInt
+            trafTrack = u32be(bytes, dataOff + 4)
             var p = dataOff + 8
             if ((flags & 0x01) != 0) p += 8 // base_data_offset
             if ((flags & 0x02) != 0) p += 4 // sample_description_index
-            trafDefDur = if ((flags & 0x08) != 0) u32(p) else -1L
+            trafDefDur = if ((flags & 0x08) != 0) u32be(bytes, p) else -1L
           case "trun" =>
             // one track's timeline only — the first track fragments name
             if (fragTrack < 0 && trafTrack >= 0) fragTrack = trafTrack
             if (trafTrack == fragTrack && fragTicks >= 0) {
-              val flags = (u32(dataOff) & 0xffffffL).toInt
-              val n = u32(dataOff + 4)
+              val flags = (u32be(bytes, dataOff) & 0xffffffL).toInt
+              val n = u32be(bytes, dataOff + 4)
               var p = dataOff + 8
               if ((flags & 0x01) != 0) p += 4 // data_offset
               if ((flags & 0x04) != 0) p += 4 // first_sample_flags
@@ -187,7 +182,7 @@ object Mp4Ops {
                   var i = 0L
                   var ok = true
                   while (ok && i < n) {
-                    val d = u32(p + i * stride)
+                    val d = u32be(bytes, p + i * stride)
                     if (d < 0) { fragTicks = -1L; ok = false } // torn
                     else { fragTicks += d; i += 1 }
                   }
@@ -207,17 +202,17 @@ object Mp4Ops {
             // count parallel timelines.
             if (sidxTimescale < 0 && dataOff + 4 <= dataEnd) {
               val v = bytes(dataOff.toInt) & 0xff
-              val ts = u32(dataOff + 8)
+              val ts = u32be(bytes, dataOff + 8)
               val cntOff = if (v == 1) dataOff + 28 else dataOff + 20
               if (ts > 0 && cntOff + 4 <= dataEnd) {
-                val n = u32(cntOff) & 0xffffL
+                val n = u32be(bytes, cntOff) & 0xffffL
                 var sum = 0L
                 var i = 0L
                 var ok = true
                 while (ok && i < n) {
                   val ro = cntOff + 4 + i * 12
                   if (ro + 12 > dataEnd) ok = false
-                  else { sum += u32(ro + 4); i += 1 }
+                  else { sum += u32be(bytes, ro + 4); i += 1 }
                 }
                 if (ok) { sidxTimescale = ts; sidxDuration = sum }
               }
@@ -378,15 +373,8 @@ object Mp4Ops {
 
   // ---------- oracle instantiation (q_mp4_meta) ----------
 
-  private def be32(v: Long): Array[Byte] = Array(
-    ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be64(v: Long): Array[Byte] = be32(v >> 32) ++ be32(v & 0xffffffffL)
-  private def cc(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-
   private def box(typ: String, body: Array[Byte]): Array[Byte] =
-    be32(8L + body.length) ++ cc(typ) ++ body
+    be32(8L + body.length) ++ latin1(typ) ++ body
 
   private def fullbox0(body: Array[Byte]): Array[Byte] =
     Array[Byte](0, 0, 0, 0) ++ body
@@ -400,11 +388,11 @@ object Mp4Ops {
         be32(w.toLong << 16) ++ be32(h.toLong << 16)))
 
   private def hdlr(handler: String): Array[Byte] =
-    box("hdlr", fullbox0(be32(0) ++ cc(handler) ++
+    box("hdlr", fullbox0(be32(0) ++ latin1(handler) ++
       new Array[Byte](12) ++ Array[Byte](0)))
 
   private def stsdWith(format: String): Array[Byte] = {
-    val entry = be32(16) ++ cc(format) ++ new Array[Byte](8)
+    val entry = be32(16) ++ latin1(format) ++ new Array[Byte](8)
     box("stbl", box("stsd", fullbox0(be32(1) ++ entry)))
   }
 
@@ -429,7 +417,7 @@ object Mp4Ops {
       case 2 => "M4A "
       case _ => "isom"
     }
-    val ftyp = box("ftyp", cc(brand) ++ be32(0) ++ cc(brand))
+    val ftyp = box("ftyp", latin1(brand) ++ be32(0) ++ latin1(brand))
     val mvhd =
       if (variant == 2)
         box("mvhd", Array[Byte](1, 0, 0, 0) ++ // version 1
@@ -446,7 +434,7 @@ object Mp4Ops {
       case 2 => trak(0, 0, "soun", "mp4a")
       case _ => trak(w, h, "vide", "avc1")
     }
-    ftyp ++ box("moov", mvhd ++ traks) ++ box("mdat", cc("x"))
+    ftyp ++ box("moov", mvhd ++ traks) ++ box("mdat", latin1("x"))
   }
 
   /** §2 `q_mp4_meta`: container metadata under the ORACLE — the
@@ -457,13 +445,7 @@ object Mp4Ops {
     * Any walk drift — big-endian reads, version offsets, 16.16
     * geometry, stsd entry framing — breaks the hash. */
   def mp4Meta(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val payloads = spark.createDataFrame(
-      documents.select(col("doc_id").cast("long")).rdd.map { r =>
-        Row(r.getLong(0), mp4Synth(r.getLong(0)))
-      }, schema)
+    val payloads = MultimodalOps.syntheticPayloads(documents, mp4Synth)
     val (clean, _) = mp4MetaOf(payloads.select(
       col("doc_id").cast("string").as("url"), col("payload")))
     clean

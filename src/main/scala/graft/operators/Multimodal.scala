@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Materialize
+import graft.plans.Bytes.{fourcc, u16le, u32be, u32le}
 
 /** Multimodal-column plumbing (SURVEY.md §2-B row 35 + §2-C).
   *
@@ -244,48 +245,18 @@ object MultimodalOps {
     * (truncated upload) — the caller falls back to the stub rather
     * than poisoning the batch. */
   private[graft] def decodeWav(bytes: Array[Byte], dim: Int): Option[Array[Float]] = {
-    def ascii(off: Int, s: String): Boolean =
-      off + s.length <= bytes.length &&
-        s.indices.forall(j => bytes(off + j) == s.charAt(j).toByte)
-    def u16(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-    if (bytes.length < 12 || !ascii(0, "RIFF") || !ascii(8, "WAVE")) return None
-    // chunk walk: collect fmt and data; sizes are unsigned 32-bit LE and
-    // chunks start word-aligned (odd sizes carry a pad byte)
-    var i = 12L
-    var fmtOff = -1L
-    var dataOff = -1L
-    var dataLen = -1L
-    while (i + 8 <= bytes.length && (fmtOff < 0 || dataOff < 0)) {
-      val sz = u32(i.toInt + 4)
-      // a declared-16 fmt chunk cut off at EOF must not read past the
-      // array: require the 16 fmt bytes actually present before accepting
-      if (ascii(i.toInt, "fmt ") && sz >= 16 && i + 24 <= bytes.length)
-        fmtOff = i + 8
-      else if (ascii(i.toInt, "data")) { dataOff = i + 8; dataLen = sz }
-      i += 8 + sz + (sz & 1)
-    }
-    if (fmtOff < 0 || dataOff < 0) return None
-    if (dataOff + dataLen > bytes.length) return None // truncated upload
-    val f = fmtOff.toInt
-    val audioFormat = u16(f)
-    val nch = u16(f + 2)
-    val rate = u32(f + 4)
-    val bits = u16(f + 14)
     // PCM (1) at 8/16 bits; G.711 A-law (6) / μ-law (7) at 8 bits —
     // round 10: the telephony codecs real call-center/voice crawls ship
     // (one table-free expansion per sample, normalized like 16-bit PCM)
-    val g711 = audioFormat == 6 || audioFormat == 7
-    if (!(audioFormat == 1 && (bits == 8 || bits == 16)) &&
-      !(g711 && bits == 8)) return None
-    if (nch < 1 || rate <= 0) return None
-    val blockAlign = nch * bits / 8
-    val nFrames = dataLen / blockAlign
+    val f = Wav.walk(bytes) match {
+      case Some(f) if f.dataOff + f.dataLen <= bytes.length && f.decodable &&
+        f.channels >= 1 && f.rate > 0 => f
+      case _ => return None // not WAV, truncated upload, or not decodable
+    }
+    val bits = f.bits
+    val nFrames = f.dataLen / f.blockAlign
     if (nFrames <= 0) return None
-    val chs = math.min(nch, 2)
+    val chs = math.min(f.channels, 2)
     val sum = new Array[Double](chs)
     val sumSq = new Array[Double](chs)
     val min = Array.fill(chs)(Float.MaxValue)
@@ -294,11 +265,11 @@ object MultimodalOps {
     while (frame < nFrames) {
       var c = 0
       while (c < chs) {
-        val off = (dataOff + frame * blockAlign).toInt + c * bits / 8
+        val off = (f.dataOff + frame * f.blockAlign).toInt + c * bits / 8
         val v =
-          if (g711 && audioFormat == 7) muLaw(bytes(off)) / 32768f
-          else if (g711) aLaw(bytes(off)) / 32768f
-          else if (bits == 16) (u16(off).toShort).toFloat / 32768f
+          if (f.audioFormat == 7) muLaw(bytes(off)) / 32768f
+          else if (f.g711) aLaw(bytes(off)) / 32768f
+          else if (bits == 16) u16le(bytes, off).toShort.toFloat / 32768f
           else ((bytes(off) & 0xff) - 128).toFloat / 128f
         sum(c) += v
         sumSq(c) += v.toDouble * v
@@ -310,7 +281,7 @@ object MultimodalOps {
     }
     def ch1(a: Array[Float]): Float = if (chs > 1) a(1) else 0f
     val feats = new Array[Float](dim)
-    val raw = Array[Float](nch.toFloat, rate.toFloat, nFrames.toFloat,
+    val raw = Array[Float](f.channels.toFloat, f.rate.toFloat, nFrames.toFloat,
       (sum(0) / nFrames).toFloat,
       if (chs > 1) (sum(1) / nFrames).toFloat else 0f,
       min(0), ch1(min), max(0), ch1(max),
@@ -360,22 +331,16 @@ object MultimodalOps {
     * BGR→RGB). Pixels feed in DISPLAY row order regardless of storage. */
   private[graft] def bmpWalk(bytes: Array[Byte],
                              sink: PixelSink): Option[(Int, Int)] = {
-    def u16(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-    def s32(off: Int): Int = u32(off).toInt
     if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    val dataOff = u32(10)
-    val hdrSize = u32(14)
+    val dataOff = u32le(bytes, 10)
+    val hdrSize = u32le(bytes, 14)
     if (hdrSize < 40) return None // core/OS2 headers out of scope
-    val w = s32(18)
-    val hRaw = s32(22)
+    val w = u32le(bytes, 18).toInt
+    val hRaw = u32le(bytes, 22).toInt
     val topDown = hRaw < 0
     val h = math.abs(hRaw.toLong).toInt
-    val bpp = u16(28)
-    val compression = u32(30)
+    val bpp = u16le(bytes, 28)
+    val compression = u32le(bytes, 30)
     if (w <= 0 || h <= 0 || bpp != 24 || compression != 0L) return None
     // rows pad to 4-byte words; compare by division (w near MaxInt would
     // overflow the row-size product and slip past a multiplied guard)
@@ -438,16 +403,11 @@ object MultimodalOps {
     val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
     if (bytes.length < 8 + 25 ||
       !sig.indices.forall(j => (bytes(j) & 0xff) == sig(j))) return None
-    def u32be(off: Int): Long =
-      ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-        ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-    def chunkType(off: Int): String =
-      new String(bytes, off, 4, "US-ASCII")
     // ---- chunk walk: IHDR first (per spec), gather IDAT, stop at IEND
     var i = 8
-    if (u32be(i) != 13L || chunkType(i + 4) != "IHDR") return None
-    val w = u32be(i + 8)
-    val h = u32be(i + 12)
+    if (u32be(bytes, i) != 13L || fourcc(bytes, i + 4) != "IHDR") return None
+    val w = u32be(bytes, i + 8)
+    val h = u32be(bytes, i + 12)
     val bitDepth = bytes(i + 16) & 0xff
     val colorType = bytes(i + 17) & 0xff
     val interlace = bytes(i + 20) & 0xff
@@ -482,8 +442,8 @@ object MultimodalOps {
     var plte: Array[Byte] = null
     var sawEnd = false
     while (!sawEnd && i + 8 <= bytes.length) {
-      val len = u32be(i)
-      val typ = chunkType(i + 4)
+      val len = u32be(bytes, i)
+      val typ = fourcc(bytes, i + 4)
       if (i + 8 + len + 4 > bytes.length) return None // truncated chunk
       if (typ == "IDAT") idat.write(bytes, i + 8, len.toInt)
       if (typ == "PLTE") {
@@ -631,11 +591,8 @@ object MultimodalOps {
                              sink: PixelSink): Option[(Int, Int)] = {
     if (bytes.length < 14 + 8 || bytes(0) != 'q' || bytes(1) != 'o' ||
       bytes(2) != 'i' || bytes(3) != 'f') return None
-    def u32be(off: Int): Long =
-      ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-        ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-    val w = u32be(4)
-    val h = u32be(8)
+    val w = u32be(bytes, 4)
+    val h = u32be(bytes, 8)
     val channels = bytes(12) & 0xff
     if (w <= 0 || h <= 0 || (channels != 3 && channels != 4)) return None
     val nPix = w * h
@@ -988,13 +945,14 @@ object MultimodalOps {
   }
 
   /** (doc_id, payload) frame synthesized row-level from a deterministic
-    * generator — the planted-corpus front of both dedup representatives. */
-  private def syntheticPayloads(documents: DataFrame,
-                                gen: Long => Array[Byte]): DataFrame = {
+    * generator — the planted-corpus front of the dedup representatives,
+    * the contamination screens and the container-metadata oracles. */
+  private[graft] def syntheticPayloads(documents: DataFrame,
+                                       gen: Long => Array[Byte]): DataFrame = {
     val spark = documents.sparkSession
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
-      StructField("payload", org.apache.spark.sql.types.BinaryType)))
+      StructField("payload", BinaryType)))
     spark.createDataFrame(
       documents.select(col("doc_id").cast("long")).rdd.map(r =>
         Row(r.getLong(0), gen(r.getLong(0)))), schema)
@@ -1011,51 +969,23 @@ object MultimodalOps {
     * re-encodes that preserve the waveform. None = not decodable WAV or
     * fewer than 72 frames. */
   private[graft] def ahashOf(bytes: Array[Byte]): Option[Long] = {
-    def ascii(off: Int, s: String): Boolean =
-      off + s.length <= bytes.length &&
-        s.indices.forall(j => bytes(off + j) == s.charAt(j).toByte)
-    def u16(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-    if (bytes.length < 12 || !ascii(0, "RIFF") || !ascii(8, "WAVE")) return None
-    var i = 12L
-    var fmtOff = -1L
-    var dataOff = -1L
-    var dataLen = -1L
-    while (i + 8 <= bytes.length && (fmtOff < 0 || dataOff < 0)) {
-      val sz = u32(i.toInt + 4)
-      // the decodeWav guard: a fmt chunk declaring size >= 16 but cut off
-      // at EOF must route to None, not read past the array
-      if (ascii(i.toInt, "fmt ") && sz >= 16 && i + 24 <= bytes.length)
-        fmtOff = i + 8
-      else if (ascii(i.toInt, "data")) { dataOff = i + 8; dataLen = sz }
-      i += 8 + sz + (sz & 1)
+    val f = Wav.walk(bytes) match {
+      case Some(f) if f.dataOff + f.dataLen <= bytes.length && f.decodable &&
+        f.channels >= 1 => f
+      case _ => return None
     }
-    if (fmtOff < 0 || dataOff < 0) return None
-    if (dataOff + dataLen > bytes.length) return None
-    val f = fmtOff.toInt
-    val audioFormat = u16(f)
-    val nch = u16(f + 2)
-    val bits = u16(f + 14)
-    val g711 = audioFormat == 6 || audioFormat == 7
-    if (!(audioFormat == 1 && (bits == 8 || bits == 16)) &&
-      !(g711 && bits == 8)) return None
-    if (nch < 1) return None
-    val blockAlign = nch * bits / 8
-    val nFrames = (dataLen / blockAlign).toInt
+    val nFrames = (f.dataLen / f.blockAlign).toInt
     if (nFrames < 72) return None
     val sums = new Array[Long](72)
     val counts = new Array[Long](72)
     var frame = 0
     while (frame < nFrames) {
       val wdw = (frame.toLong * 72 / nFrames).toInt
-      val off = (dataOff + frame.toLong * blockAlign).toInt
+      val off = (f.dataOff + frame.toLong * f.blockAlign).toInt
       val v: Int =
-        if (g711 && audioFormat == 7) muLaw(bytes(off)).toInt
-        else if (g711) aLaw(bytes(off)).toInt
-        else if (bits == 16) u16(off).toShort.toInt
+        if (f.audioFormat == 7) muLaw(bytes(off)).toInt
+        else if (f.g711) aLaw(bytes(off)).toInt
+        else if (f.bits == 16) u16le(bytes, off).toShort.toInt
         else bytes(off) & 0xff
       sums(wdw) += v
       counts(wdw) += 1
@@ -1097,18 +1027,7 @@ object MultimodalOps {
       if (w % 9 != 8) v += (if (((g >> (w % 9)) & 1) == 1) 6 else -6)
       w += 1
     }
-    val bos = new java.io.ByteArrayOutputStream(44 + nFrames)
-    def str(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le16(x: Int): Unit = { bos.write(x & 0xff); bos.write((x >> 8) & 0xff) }
-    def le32(x: Int): Unit = { le16(x & 0xffff); le16((x >> 16) & 0xffff) }
-    str("RIFF"); le32(36 + nFrames); str("WAVE")
-    str("fmt "); le32(16)
-    le16(1); le16(1) // PCM, mono
-    le32(8000); le32(8000) // rate, byte rate
-    le16(1); le16(8) // block align, 8-bit
-    str("data"); le32(nFrames)
-    bos.write(data)
-    bos.toByteArray
+    Wav.write(8000, 8, data)
   }
 
   /** §2-C `audioAhash`: (doc_id, dhash) for every payload that decodes

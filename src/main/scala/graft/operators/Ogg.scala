@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Bytes._
+
 /** Ogg container METADATA — round 18, closing the named-formats sweep
   * (MP4 row 170, MP3 row 171, WebP row 172): the sniffer names `OggS`
   * as `application/ogg`; this walk reads what the container says about
@@ -36,20 +38,7 @@ object OggOps {
     * (no OggS capture pattern), `bad_codec` (first page carries neither
     * an OpusHead nor a Vorbis ID header). Never throws. */
   def oggWalk(bytes: Array[Byte]): Either[String, OggInfo] = {
-    def u16le(off: Int): Int =
-      (bytes(off) & 0xff) | (bytes(off + 1) & 0xff) << 8
-    def u32le(off: Int): Long =
-      (bytes(off) & 0xffL) | (bytes(off + 1) & 0xffL) << 8 |
-        (bytes(off + 2) & 0xffL) << 16 | (bytes(off + 3) & 0xffL) << 24
-    def s64le(off: Int): Long =
-      u32le(off) | u32le(off + 4) << 32
-    def ascii(off: Int, s: String): Boolean =
-      bytes.length >= off + s.length && {
-        var i = 0
-        while (i < s.length && bytes(off + i) == s.charAt(i).toByte) i += 1
-        i == s.length
-      }
-    if (!ascii(0, "OggS")) return Left("not_ogg")
+    if (!matches(bytes, 0, "OggS")) return Left("not_ogg")
     var codec = ""
     var channels = 0
     var rate = 0
@@ -66,14 +55,14 @@ object OggOps {
     def parseComments(start: Int, end: Int): Unit = {
       commentsDone = true
       if (start + 4 > end) return
-      val vlen = u32le(start)
+      val vlen = u32le(bytes, start)
       if (vlen < 0 || start + 4 + vlen + 4 > end) return
       var p = (start + 4 + vlen).toInt
-      val n = u32le(p)
+      val n = u32le(bytes, p)
       p += 4
       var i = 0L
       while (i < n && p + 4 <= end) {
-        val clen = u32le(p)
+        val clen = u32le(bytes, p)
         p += 4
         if (clen < 0 || p + clen > end) i = n // torn list: stop
         else {
@@ -93,8 +82,8 @@ object OggOps {
         }
       }
     }
-    while (ok && off + 27 <= bytes.length && ascii(off, "OggS")) {
-      val granule = s64le(off + 6)
+    while (ok && off + 27 <= bytes.length && matches(bytes, off, "OggS")) {
+      val granule = s64le(bytes, off + 6)
       val nSegs = bytes(off + 26) & 0xff
       if (off + 27 + nSegs > bytes.length) ok = false
       else {
@@ -106,25 +95,26 @@ object OggOps {
         else {
           if (first) {
             first = false
-            if (ascii(payOff, "OpusHead") && payLen >= 19) {
+            if (matches(bytes, payOff, "OpusHead") && payLen >= 19) {
               codec = "opus"
               channels = bytes(payOff + 9) & 0xff
-              preskip = u16le(payOff + 10).toLong
+              preskip = u16le(bytes, payOff + 10).toLong
               rate = 48000 // the Opus granule clock, by spec
             } else if (payLen >= 16 && (bytes(payOff) & 0xff) == 1 &&
-              ascii(payOff + 1, "vorbis")) {
+              matches(bytes, payOff + 1, "vorbis")) {
               codec = "vorbis"
               channels = bytes(payOff + 11) & 0xff
-              rate = u32le(payOff + 12).toInt
+              rate = u32le(bytes, payOff + 12).toInt
             } else return Left("bad_codec")
           } else if (!commentsDone) {
             // the comment header is the stream's SECOND packet; real
             // comment headers fit one page, so the page payload bounds
             // the parse
-            if (codec == "opus" && ascii(payOff, "OpusTags"))
+            if (codec == "opus" && matches(bytes, payOff, "OpusTags"))
               parseComments(payOff + 8, payOff + payLen)
             else if (codec == "vorbis" && payLen >= 7 &&
-              (bytes(payOff) & 0xff) == 3 && ascii(payOff + 1, "vorbis"))
+              (bytes(payOff) & 0xff) == 3 &&
+              matches(bytes, payOff + 1, "vorbis"))
               parseComments(payOff + 7, payOff + payLen)
           }
           if (granule >= 0) lastGranule = math.max(lastGranule, granule)
@@ -183,22 +173,13 @@ object OggOps {
 
   // ---------- oracle instantiation (q_ogg_meta) ----------
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def le64(v: Long): Array[Byte] = le32(v & 0xffffffffL) ++ le32(v >>> 32)
-  private def cc(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-
   private def page(headerType: Int, granule: Long, seq: Int,
                    payload: Array[Byte]): Array[Byte] = {
     require(payload.length < 255 * 255)
     val full = payload.length / 255
     val segs = Array.fill[Byte](full)(0xff.toByte) :+
       (payload.length % 255).toByte
-    cc("OggS") ++ Array[Byte](0, headerType.toByte) ++ le64(granule) ++
+    latin1("OggS") ++ Array[Byte](0, headerType.toByte) ++ le64(granule) ++
       le32(7) ++ le32(seq.toLong) ++ le32(0) ++
       Array(segs.length.toByte) ++ segs ++ payload
   }
@@ -207,10 +188,10 @@ object OggOps {
 
   /** One VorbisComment block: vendor + the planted TITLE/ARTIST list. */
   private def comments(docId: Long): Array[Byte] = {
-    val vendor = cc("graft")
+    val vendor = latin1("graft")
     val list = Seq(s"TITLE=title $docId", s"ARTIST=artist ${docId % 50}")
     le32(vendor.length.toLong) ++ vendor ++ le32(list.length.toLong) ++
-      list.flatMap(s => le32(s.length.toLong) ++ cc(s)).toArray
+      list.flatMap(s => le32(s.length.toLong) ++ latin1(s)).toArray
   }
 
   /** Deterministic synthetic Ogg — variant doc_id%2: 0 = Opus
@@ -222,17 +203,18 @@ object OggOps {
   private[graft] def oggSynth(docId: Long): Array[Byte] = {
     val k = (docId % 29 + 1).toInt
     if (docId % 2 == 0) {
-      val id = cc("OpusHead") ++ Array[Byte](1, 2) ++ le16(OpusPreskip) ++
+      val id = latin1("OpusHead") ++ Array[Byte](1, 2) ++ le16(OpusPreskip) ++
         le32(48000L) ++ le16(0) ++ Array[Byte](0)
       page(0x02, 0L, 0, id) ++
-        page(0x00, 0L, 1, cc("OpusTags") ++ comments(docId)) ++
+        page(0x00, 0L, 1, latin1("OpusTags") ++ comments(docId)) ++
         page(0x04, 48L * (10 * k) + OpusPreskip, 2, Array[Byte](1, 2, 3))
     } else {
-      val id = Array[Byte](1) ++ cc("vorbis") ++ le32(0) ++ Array[Byte](2) ++
+      val id = Array[Byte](1) ++ latin1("vorbis") ++ le32(0) ++ Array[Byte](2) ++
         le32(44100L) ++ new Array[Byte](12) ++ Array[Byte](0x66, 1)
       page(0x02, 0L, 0, id) ++
         page(0x00, 0L, 1,
-          Array[Byte](3) ++ cc("vorbis") ++ comments(docId) ++ Array[Byte](1)) ++
+          Array[Byte](3) ++ latin1("vorbis") ++ comments(docId) ++
+            Array[Byte](1)) ++
         page(0x04, 4410L * k, 2, Array[Byte](1, 2, 3))
     }
   }
@@ -241,13 +223,7 @@ object OggOps {
     * pattern over both codec ID headers and the granule-position
     * duration arithmetic (pre-skip subtraction on the Opus side). */
   def oggMeta(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val payloads = spark.createDataFrame(
-      documents.select(col("doc_id").cast("long")).rdd.map { r =>
-        Row(r.getLong(0), oggSynth(r.getLong(0)))
-      }, schema)
+    val payloads = MultimodalOps.syntheticPayloads(documents, oggSynth)
     val (clean, _) = oggMetaOf(payloads.select(
       col("doc_id").cast("string").as("url"), col("payload")))
     clean

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Bytes._
+
 /** WebP GEOMETRY — round 18, the image member of the named-formats
   * trio (MP4 row 170, MP3 row 171): the round-18 sniffer names
   * `image/webp` (RIFF fourcc dispatch); this walk reads the header
@@ -36,27 +38,13 @@ object WebpOps {
     * `not_webp` (no RIFF/WEBP wrap), `bad_bitstream` (no parseable
     * VP8 /VP8L/VP8X chunk). Never throws on hostile bytes. */
   def webpWalk(bytes: Array[Byte]): Either[String, WebpInfo] = {
-    def u32le(off: Int): Long =
-      if (off < 0 || off + 4 > bytes.length) -1L
-      else (bytes(off) & 0xffL) | (bytes(off + 1) & 0xffL) << 8 |
-        (bytes(off + 2) & 0xffL) << 16 | (bytes(off + 3) & 0xffL) << 24
-    def u24le(off: Int): Int =
-      if (off < 0 || off + 3 > bytes.length) -1
-      else (bytes(off) & 0xff) | (bytes(off + 1) & 0xff) << 8 |
-        (bytes(off + 2) & 0xff) << 16
-    def u16le(off: Int): Int =
-      if (off < 0 || off + 2 > bytes.length) -1
-      else (bytes(off) & 0xff) | (bytes(off + 1) & 0xff) << 8
-    def fourcc(off: Int): String =
-      if (off + 4 > bytes.length) ""
-      else new String(bytes, off, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (bytes.length < 20 || fourcc(0) != "RIFF" || fourcc(8) != "WEBP")
-      return Left("not_webp")
-    val end = math.min(bytes.length.toLong, 8L + u32le(4))
+    if (bytes.length < 20 || fourcc(bytes, 0) != "RIFF" ||
+      fourcc(bytes, 8) != "WEBP") return Left("not_webp")
+    val end = math.min(bytes.length.toLong, 8L + u32le(bytes, 4))
     var off = 12L
     while (off + 8 <= end) {
-      val id = fourcc(off.toInt)
-      val size = u32le(off.toInt + 4)
+      val id = fourcc(bytes, off)
+      val size = u32le(bytes, off + 4)
       if (size < 0 || off + 8 + size > end) return Left("bad_bitstream")
       val p = (off + 8).toInt
       id match {
@@ -64,15 +52,15 @@ object WebpOps {
           // 3-byte frame tag, then the keyframe start code
           if ((bytes(p + 3) & 0xff) == 0x9d && (bytes(p + 4) & 0xff) == 0x01 &&
             (bytes(p + 5) & 0xff) == 0x2a) {
-            val w = u16le(p + 6) & 0x3fff
-            val h = u16le(p + 8) & 0x3fff
+            val w = u16le(bytes, p + 6) & 0x3fff
+            val h = u16le(bytes, p + 8) & 0x3fff
             return Right(WebpInfo("lossy", w, h, hasAlpha = false,
               hasAnim = false))
           }
           return Left("bad_bitstream")
         case "VP8L" if size >= 5 =>
           if ((bytes(p) & 0xff) == 0x2f) {
-            val b = u32le(p + 1)
+            val b = u32le(bytes, p + 1)
             val w = (b & 0x3fff).toInt + 1
             val h = ((b >> 14) & 0x3fff).toInt + 1
             val alpha = ((b >> 28) & 1) == 1
@@ -81,8 +69,8 @@ object WebpOps {
           return Left("bad_bitstream")
         case "VP8X" if size >= 10 =>
           val flags = bytes(p) & 0xff
-          val w = u24le(p + 4) + 1
-          val h = u24le(p + 7) + 1
+          val w = u24le(bytes, p + 4) + 1
+          val h = u24le(bytes, p + 7) + 1
           val anim = (flags & 0x02) != 0
           if (!anim)
             return Right(WebpInfo("extended", w, h,
@@ -96,13 +84,13 @@ object WebpOps {
           var o2 = off + 8 + size + (size & 1)
           var torn = false
           while (!torn && o2 + 8 <= end) {
-            val id2 = fourcc(o2.toInt)
-            val sz2 = u32le(o2.toInt + 4)
+            val id2 = fourcc(bytes, o2)
+            val sz2 = u32le(bytes, o2 + 4)
             if (sz2 < 0 || o2 + 8 + sz2 > end) torn = true
             else {
               if (id2 == "ANMF" && sz2 >= 16) {
                 frames += 1
-                dur += u24le(o2.toInt + 8 + 12)
+                dur += u24le(bytes, o2 + 8 + 12)
               }
               o2 += 8 + sz2 + (sz2 & 1)
             }
@@ -150,18 +138,8 @@ object WebpOps {
 
   // ---------- oracle instantiation (q_webp_meta) ----------
 
-  private def le32(v: Long): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def le24(v: Int): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte)
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def cc(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-
   private def chunk(id: String, body: Array[Byte]): Array[Byte] =
-    cc(id) ++ le32(body.length.toLong) ++ body ++
+    latin1(id) ++ le32(body.length.toLong) ++ body ++
       (if (body.length % 2 == 1) Array[Byte](0) else Array.empty[Byte])
 
   /** Deterministic synthetic WebP — variant doc_id%3: 0 = lossy `VP8 `
@@ -183,7 +161,7 @@ object WebpOps {
         chunk("VP8 ", Array[Byte](0, 0, 0) ++
           Array[Byte](0x9d.toByte, 0x01, 0x2a) ++ le16(w) ++ le16(h))
     }
-    cc("RIFF") ++ le32(4L + payload.length) ++ cc("WEBP") ++ payload
+    latin1("RIFF") ++ le32(4L + payload.length) ++ latin1("WEBP") ++ payload
   }
 
   /** §2 `q_webp_meta`: WebP geometry under the ORACLE — the
@@ -191,13 +169,7 @@ object WebpOps {
     * drift in LE packing, the 14-bit fields, or the minus-one
     * conventions breaks the hash. */
   def webpMeta(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val payloads = spark.createDataFrame(
-      documents.select(col("doc_id").cast("long")).rdd.map { r =>
-        Row(r.getLong(0), webpSynth(r.getLong(0)))
-      }, schema)
+    val payloads = MultimodalOps.syntheticPayloads(documents, webpSynth)
     val (clean, _) = webpMetaOf(payloads.select(
       col("doc_id").cast("string").as("url"), col("payload")))
     clean

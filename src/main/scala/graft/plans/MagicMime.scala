@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.Bytes.{matches, u16le, u32be, u32le}
+
 /** Magic-byte MIME sniffing (round 17; extended round 18) — the ingest
   * routing signal for when the Content-Type header LIES (the exact
   * failure the media-type gate documents: a latin-1-declared JPEG
@@ -24,25 +26,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen calls it directly. */
 object MagicMime {
 
-  private def ascii(b: Array[Byte], off: Int, s: String): Boolean =
-    b.length >= off + s.length && {
-      var i = 0
-      while (i < s.length && b(off + i) == s.charAt(i).toByte) i += 1
-      i == s.length
-    }
-
   def sniff(b: Array[Byte]): String = {
     if (b == null || b.length == 0) return "application/octet-stream"
-    if (b.length >= 8 && (b(0) & 0xff) == 0x89 && ascii(b, 1, "PNG"))
+    if (b.length >= 8 && (b(0) & 0xff) == 0x89 && matches(b, 1, "PNG"))
       return "image/png"
-    if (ascii(b, 0, "GIF87a") || ascii(b, 0, "GIF89a")) return "image/gif"
+    if (matches(b, 0, "GIF87a") || matches(b, 0, "GIF89a")) return "image/gif"
     if (b.length >= 3 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8 &&
       (b(2) & 0xff) == 0xff) return "image/jpeg"
-    if (ascii(b, 0, "%PDF-")) return "application/pdf"
-    if (ascii(b, 0, "RIFF") && b.length >= 12) {
-      if (ascii(b, 8, "WAVE")) return "audio/wav"
-      if (ascii(b, 8, "AVI ")) return "video/avi"
-      if (ascii(b, 8, "WEBP")) return "image/webp"
+    if (matches(b, 0, "%PDF-")) return "application/pdf"
+    if (matches(b, 0, "RIFF") && b.length >= 12) {
+      if (matches(b, 8, "WAVE")) return "audio/wav"
+      if (matches(b, 8, "AVI ")) return "video/avi"
+      if (matches(b, 8, "WEBP")) return "image/webp"
     }
     // ISO-BMFF: a 4-byte box size then `ftyp` — SHAPE-validated like the
     // ID3 check: the size prefix must be a plausible box size (0 =
@@ -50,20 +45,19 @@ object MagicMime {
     // version + compatible brands). Four printable text bytes decode to
     // ≥ 0x20202020, so a page containing "ftyp" at offset 4 never
     // matches.
-    if (b.length >= 8 && (ascii(b, 4, "ftyp") || ascii(b, 4, "styp")) && {
-      val sz = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-        ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
+    if (b.length >= 8 && (matches(b, 4, "ftyp") || matches(b, 4, "styp")) && {
+      val sz = u32be(b, 0)
       sz == 0L || sz == 1L || (sz >= 16L && sz <= 4096L)
     })
-      return if (b.length >= 11 && ascii(b, 8, "M4A")) "audio/mp4"
+      return if (b.length >= 11 && matches(b, 8, "M4A")) "audio/mp4"
       else "video/mp4" // `styp` = a DASH/HLS media segment (round 19)
-    if (ascii(b, 0, "OggS")) return "application/ogg"
-    if (ascii(b, 0, "wOFF")) return "font/woff"
-    if (ascii(b, 0, "wOF2")) return "font/woff2"
+    if (matches(b, 0, "OggS")) return "application/ogg"
+    if (matches(b, 0, "wOFF")) return "font/woff"
+    if (matches(b, 0, "wOF2")) return "font/woff2"
     // ID3v2: "ID3", version (major < 0x20, minor < 0x20 — any printable
     // text byte is >= 0x20), flags low nibble zero, 4 sync-safe size
     // bytes — the shape check keeps a text page starting "ID3 ..." out
-    if (b.length >= 10 && ascii(b, 0, "ID3") && (b(3) & 0xff) < 0x20 &&
+    if (b.length >= 10 && matches(b, 0, "ID3") && (b(3) & 0xff) < 0x20 &&
       (b(4) & 0xff) < 0x20 && (b(5) & 0x0f) == 0 && (b(6) & 0x80) == 0 &&
       (b(7) & 0x80) == 0 && (b(8) & 0x80) == 0 && (b(9) & 0x80) == 0)
       return "audio/mpeg"
@@ -73,11 +67,10 @@ object MagicMime {
     // data offset past the directory. Favicons are on every site root;
     // random binary passing ALL of that is essentially impossible.
     if (b.length >= 22 && b(0) == 0 && b(1) == 0 && b(2) == 1 && b(3) == 0 && {
-      val count = (b(4) & 0xff) | ((b(5) & 0xff) << 8)
-      val planes = (b(10) & 0xff) | ((b(11) & 0xff) << 8)
-      val bpp = (b(12) & 0xff) | ((b(13) & 0xff) << 8)
-      val off = (b(18) & 0xffL) | ((b(19) & 0xffL) << 8) |
-        ((b(20) & 0xffL) << 16) | ((b(21) & 0xffL) << 24)
+      val count = u16le(b, 4)
+      val planes = u16le(b, 10)
+      val bpp = u16le(b, 12)
+      val off = u32le(b, 18)
       count >= 1 && count <= 64 && b(9) == 0 && planes <= 1 &&
         (bpp == 0 || bpp == 1 || bpp == 2 || bpp == 4 || bpp == 8 ||
           bpp == 16 || bpp == 24 || bpp == 32) &&
@@ -93,25 +86,25 @@ object MagicMime {
     // is the epub mime - name and content land at fixed offsets (30-
     // byte local header + the 8-char name), so the dispatch is
     // deterministic (round 19)
-    if (ascii(b, 0, "PK\u0003\u0004"))
-      return if (ascii(b, 30, "mimetype") &&
-        ascii(b, 38, "application/epub+zip")) "application/epub+zip"
+    if (matches(b, 0, "PK\u0003\u0004"))
+      return if (matches(b, 30, "mimetype") &&
+        matches(b, 38, "application/epub+zip")) "application/epub+zip"
       else "application/zip"
     // empty archives open with the end-of-central-directory record
     // (PK\x05\x06) and spanned archives with the data-descriptor split
     // magic (PK\x07\x08) -- both are still zip, not text (round 20: the
     // EPUB narrowing to PK\x03\x04 must not shrink zip coverage)
-    if (ascii(b, 0, "PK\u0005\u0006") || ascii(b, 0, "PK\u0007\u0008"))
+    if (matches(b, 0, "PK\u0005\u0006") || matches(b, 0, "PK\u0007\u0008"))
       return "application/zip"
     // FLAC (round 20): the fLaC stream marker -- STREAMINFO follows at a
     // fixed offset, so the probe reads exact duration in O(header)
-    if (ascii(b, 0, "fLaC")) return "audio/flac"
+    if (matches(b, 0, "fLaC")) return "audio/flac"
     // TIFF (round 20): II*\0 (little-endian) / MM\0* (big-endian) -- the
     // embedded NUL keeps any text page out of the 4-byte magic
     if (b.length >= 4 && ((b(0) == 'I' && b(1) == 'I' && b(2) == 0x2a &&
       b(3) == 0) || (b(0) == 'M' && b(1) == 'M' && b(2) == 0 &&
       b(3) == 0x2a))) return "image/tiff"
-    if (ascii(b, 0, "qoif")) return "image/qoi"
+    if (matches(b, 0, "qoif")) return "image/qoi"
     // HTML: optional ASCII whitespace, then <!doctype or <html (any case)
     var w = 0
     while (w < b.length && w < 32 &&
@@ -153,7 +146,7 @@ object MagicMime {
         }
       }
     }
-    if (ascii(b, 0, "BM")) return "image/bmp"
+    if (matches(b, 0, "BM")) return "image/bmp"
     var i = 0
     val n = math.min(64, b.length)
     while (i < n) {

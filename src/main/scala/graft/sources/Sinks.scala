@@ -119,87 +119,6 @@ object Sinks {
       .sortWithinPartitions(orderCol)
       .write.mode("overwrite").parquet(path)
 
-  /** Z-ORDERED layout write (round 20) — multi-dimensional data
-    * skipping from open Spark primitives, the `OPTIMIZE ZORDER BY`
-    * shape without a table format: a single-key range sort
-    * ([[writeOrdered]]) makes ONE column's file-level min/max tight and
-    * leaves every other column's span at ~100% per file, so predicates
-    * on the second dimension prune nothing. Interleaving the bits of
-    * the two columns' EQUI-DEPTH bucket ranks (approxQuantile
-    * boundaries → bucket index → bit-interleave, all pure Column
-    * expressions over a broadcast literal array) gives a space-filling
-    * curve key: range-partitioning + sorting by it tiles the
-    * (c1 × c2) plane, so EVERY file carries a tight min/max box on
-    * BOTH original columns and parquet row-group/file stats prune
-    * queries on EITHER dimension — at 100 TB, the difference between
-    * reading one tile row of files and scanning the corpus for the
-    * second-dimension predicate.
-    *
-    * Cost, stated honestly: two driver-side approxQuantile jobs over
-    * the two key columns (equi-depth ranks keep skewed data tiling —
-    * uniform-width buckets would collapse under skew) + the one hash
-    * shuffle every clustered write pays. The z key is dropped before the
-    * bytes land — the layout IS the index. Numeric key columns only
-    * (cast upstream). `nFiles` must be a power of two: each output file
-    * is exactly one z-curve tile (one aligned prefix of the curve). */
-  def writeZOrdered(df: DataFrame, path: String, c1: String, c2: String,
-                    nFiles: Int = 32, bits: Int = 10): Unit = {
-    require(nFiles > 0 && (nFiles & (nFiles - 1)) == 0 &&
-      nFiles <= (1 << (2 * bits)),
-      s"nFiles must be a power of two <= 4^bits, got $nFiles")
-    val probes = (0 to (1 << bits)).map(_.toDouble / (1 << bits)).toArray
-    // Equi-depth boundaries; approxQuantile returns them sorted.
-    // Duplicate boundaries are kept DELIBERATELY: the rank below counts
-    // every boundary <= value, so a value sitting on a repeated quantile
-    // still lands at rank ~ floor(cdf * 2^bits) — collapsing duplicates
-    // (an earlier draft did) compresses the rank range below 2^bits and
-    // the bit-interleave then no longer halves the mass per bit, which
-    // skews the whole curve.
-    val b1 = df.stat.approxQuantile(c1, probes, 0.001)
-    val b2 = df.stat.approxQuantile(c2, probes, 0.001)
-    def bucket(c: String, bounds: Array[Double]) = {
-      // rank of the value among the interior boundaries — a codegen'd
-      // HOF over a literal array (the boundaries are KB-scale, they
-      // ride the plan)
-      val arr = array(bounds.drop(1).dropRight(1).map(lit): _*)
-      aggregate(arr, lit(0),
-        (acc, b) => acc + when(col(c).cast("double") >= b, 1).otherwise(0))
-    }
-    val z = (0 until bits).map { i =>
-      shiftleft(shiftright(bucket(c1, b1), i).bitwiseAND(1), 2 * i + 1)
-        .bitwiseOR(
-          shiftleft(shiftright(bucket(c2, b2), i).bitwiseAND(1), 2 * i))
-    }.reduce(_ bitwiseOR _)
-    // Tile = the top log2(nFiles) bits of z, i.e. one aligned curve
-    // prefix = one rectangle of the (c1 × c2) rank plane. Send each tile
-    // to its own partition EXACTLY: a sampled repartitionByRange(_z)
-    // boundary that lands mid-tile smears one tile across two files and
-    // widens both files' min/max boxes (measured: it cost the d-window
-    // assertion one extra file). Hash partitioning is exact but collides
-    // tile ids, so map each tile id through a representative int chosen
-    // so that pmod(murmur3(rep), nFiles) == tile — a driver-side O(n)
-    // search against the same hash Spark's HashPartitioning applies.
-    val tileBits = 31 - Integer.numberOfLeadingZeros(nFiles)
-    val shift = 2 * bits - tileBits
-    val reps = new Array[Int](nFiles)
-    val seen = new Array[Boolean](nFiles)
-    var needed = nFiles
-    var cand = 0
-    while (needed > 0) {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(cand, 42)
-      val p = ((h % nFiles) + nFiles) % nFiles
-      if (!seen(p)) { seen(p) = true; reps(p) = cand; needed -= 1 }
-      cand += 1
-    }
-    df.withColumn("_z", z)
-      .withColumn("_pk", element_at(array(reps.map(lit): _*),
-        shiftright(col("_z"), shift) + 1))
-      .repartition(nFiles, col("_pk"))
-      .sortWithinPartitions("_z")
-      .drop("_z", "_pk") // physical order survives the projection
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** MERGE (SCD-1 upsert) an updates frame into an existing partitioned
     * parquet layout by key, rewriting ONLY the partitions the updates
     * touch — the incremental-corpus-maintenance primitive (a new drop

@@ -203,7 +203,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("persisted tokenizer artifact round-trips bit-equal to the inline encode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokenizer")
+    val dir = SparkSpec.tempDir("graft_tokenizer")
       .toFile.getAbsolutePath
     BpeOps.trainTokenizer(docs, dir, merges = 8)
     val (mt, vocab) = BpeOps.readTokenizer(spark, dir)

@@ -843,7 +843,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("c4Badwords artifact face: a one-word-per-line file round-trips the gate") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_badwords")
+    val dir = SparkSpec.tempDir("graft_badwords")
     val f = dir.resolve("badwords.txt")
     // the published-list shape: one word per line, comments, a blank
     // line, mixed case, a duplicate

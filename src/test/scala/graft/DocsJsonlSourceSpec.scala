@@ -8,7 +8,7 @@ import graft.sources.DocsJsonlSource
 class DocsJsonlSourceSpec extends SparkSpec {
 
   test("split routes syntax breakage AND schema drift to quarantine, keeps clean rows") {
-    val dir = Files.createTempDirectory("graft_jsonl")
+    val dir = SparkSpec.tempDir("graft_jsonl")
     val lines = Seq(
       """{"doc_id": 1, "text": "good one", "lang": "en", "source": "s0", "n_chars": 8}""",
       """{"doc_id": 2, "text": "good two", "lang": "fr", "source": "s1", "n_chars": 8}""",

@@ -136,7 +136,7 @@ class EpubSpec extends SparkSpec {
   }
 
   test("epubDocumentsOf: declaration OR content routing into the clean corpus schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_epub")
+    val dir = SparkSpec.tempDir("graft_warc_epub")
     val honest = EpubOps.epubSynth("an honest book body", 0L)
     val lying = EpubOps.epubSynth("a mislabeled book body", 1L)
     val recs =

@@ -211,7 +211,7 @@ class EventOpsSpec extends SparkSpec {
     val utc = java.time.ZoneOffset.UTC
     val t = java.time.LocalDateTime.parse("2024-01-05T10:30:00")
     def readBack(write: String => Unit): org.apache.spark.sql.Row = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_layout")
+      val dir = SparkSpec.tempDir("graft_layout")
         .toFile.getAbsolutePath
       write(s"$dir/events.parquet")
       val df = Tables.events(spark, dir)

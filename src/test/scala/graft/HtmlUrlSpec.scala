@@ -215,7 +215,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warc ingest keys Unicode- and Punycode-host fetches to one identity") {
-    val dir = Files.createTempDirectory("graft_warc_idn")
+    val dir = SparkSpec.tempDir("graft_warc_idn")
     val recs =
       record("response", "http://bücher.example/page",
         http("200 OK", "text/html", "<p>erste fassung der seite</p>".getBytes(UTF_8))) ++
@@ -432,7 +432,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("real crawled robots.txt (CRLF, via WARC) parses through the general face") {
     import graft.operators.CrawlOps
     import org.apache.spark.sql.functions.regexp_extract
-    val dir = Files.createTempDirectory("graft_warc_robots")
+    val dir = SparkSpec.tempDir("graft_warc_robots")
     // a REAL robots body: CRLF endings, global Sitemap, a foreign group
     val robots = "# robots\r\n" +
       "Sitemap: http://h1.example.com/sitemap.xml\r\n" +
@@ -579,7 +579,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("robotsStatusesOf: latest /robots.txt fetch per host gates the matcher") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_rstat")
+    val dir = SparkSpec.tempDir("graft_warc_rstat")
     def robotsResp(host: String, status: String, date: String): Array[Byte] = {
       val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
         s"WARC-Date: $date\r\n" +
@@ -904,7 +904,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("revisit records: free exact-dedup evidence, counted in the ledger") {
-    val dir = Files.createTempDirectory("graft_warc_revisit")
+    val dir = SparkSpec.tempDir("graft_warc_revisit")
     val digestHdr = "WARC-Payload-Digest: sha1:AAAA1111\r\n"
     val recs =
       // prior capture with its payload digest
@@ -954,7 +954,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("a 304 response ledgers as not-modified, not a generic status failure") {
-    val dir = Files.createTempDirectory("graft_warc_304")
+    val dir = SparkSpec.tempDir("graft_warc_304")
     val recs =
       record("response", "http://nm.net/page",
         "HTTP/1.1 304 Not Modified\r\nETag: \"v1\"\r\n\r\n".getBytes(US_ASCII)) ++
@@ -972,7 +972,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments carries Last-Modified / ETag freshness headers") {
-    val dir = Files.createTempDirectory("graft_warc_fresh")
+    val dir = SparkSpec.tempDir("graft_warc_fresh")
     val recs =
       record("response", "http://f.net/dated",
         ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
@@ -998,7 +998,7 @@ class HtmlUrlSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.CrawlOps
     implicit val sqlCtx = spark.sqlContext
-    val logDir = Files.createTempDirectory("graft_fetchlog").toFile.getAbsolutePath
+    val logDir = SparkSpec.tempDir("graft_fetchlog").toFile.getAbsolutePath
     // fetch log v1: /docs/62 already fetched
     Seq("http://src3.example.com/docs/62").toDF("canon_url")
       .write.mode("overwrite").parquet(s"$logDir/v1")
@@ -1033,7 +1033,7 @@ class HtmlUrlSpec extends SparkSpec {
     import graft.operators.CrawlOps
     implicit val sqlCtx = spark.sqlContext
     val srcDocs = Seq((0L, "src3")).toDF("doc_id", "source")
-    val logDir = Files.createTempDirectory("graft_rstat_stream")
+    val logDir = SparkSpec.tempDir("graft_rstat_stream")
       .toFile.getAbsolutePath
     Seq.empty[String].toDF("canon_url")
       .write.mode("overwrite").parquet(s"$logDir/log")
@@ -1069,7 +1069,7 @@ class HtmlUrlSpec extends SparkSpec {
     import graft.operators.CrawlOps
     implicit val sqlCtx = spark.sqlContext
     val srcDocs = Seq((0L, "src3")).toDF("doc_id", "source")
-    val logDir = Files.createTempDirectory("graft_cursor").toFile.getAbsolutePath
+    val logDir = SparkSpec.tempDir("graft_cursor").toFile.getAbsolutePath
     // fetch log: /docs/62 fetched; cursors v1: cold (empty)
     Seq("http://src3.example.com/docs/62").toDF("canon_url")
       .write.mode("overwrite").parquet(s"$logDir/log")
@@ -1139,7 +1139,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments honors <link rel=canonical>: same-host overrides identity, cross-host is evidence") {
-    val dir = Files.createTempDirectory("graft_warc_canonical")
+    val dir = SparkSpec.tempDir("graft_warc_canonical")
     def page(canonTag: String, body: String): Array[Byte] =
       http("200 OK", "text/html",
         (s"<html><head>$canonTag</head><body><p>$body</p></body></html>")
@@ -1289,7 +1289,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("feed entries close the recrawl loop: a fresh pubDate re-queues its post") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_feedrecrawl")
+    val dir = SparkSpec.tempDir("graft_warc_feedrecrawl")
     val host = "news.example.com"
     val page = s"""<html><head><link rel="alternate"
       |type="application/rss+xml" href="/feed.xml"></head><body>n</body></html>"""
@@ -1447,7 +1447,7 @@ class HtmlUrlSpec extends SparkSpec {
 
   test("warcToDocuments carries page-level robots directives from both routes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_warc_noidx")
+    val dir = SparkSpec.tempDir("graft_warc_noidx")
     val metaPage = "<html><head><meta name=\"robots\" " +
       "content=\"noindex\"><title>t</title></head><body>secret page</body></html>"
     val openPage = "<html><head></head><body>open page</body></html>"
@@ -1498,7 +1498,7 @@ class HtmlUrlSpec extends SparkSpec {
     assert(follow == Set("http://a.example/x", "http://a.example/about"),
       follow.toString)
     // the header twin: X-Robots-Tag on a binary resource
-    val dir = Files.createTempDirectory("graft_warc_xrobots")
+    val dir = SparkSpec.tempDir("graft_warc_xrobots")
     val recs =
       record("response", "http://a.example/doc.pdf",
         ("HTTP/1.1 200 OK\r\nContent-Type: application/pdf\r\n" +
@@ -1540,7 +1540,7 @@ class HtmlUrlSpec extends SparkSpec {
     // shape (the second must count); a user-agent-scoped value
     // addresses someone else; tabs separate tokens; a directive that
     // itself carries a colon is NOT a scope
-    val dir = Files.createTempDirectory("graft_warc_xrobots17")
+    val dir = SparkSpec.tempDir("graft_warc_xrobots17")
     val recs =
       record("response", "http://u.example/two.pdf",
         ("HTTP/1.1 200 OK\r\nX-Robots-Tag: noarchive\r\n" +
@@ -1568,7 +1568,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("frontierOf: an X-Robots-Tag nofollow response gates its page's outlinks") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_hdrnofollow")
+    val dir = SparkSpec.tempDir("graft_warc_hdrnofollow")
     val recs = record("response", "http://hn.example.com/robots.txt",
       http("200 OK", "text/plain", "User-agent: *\r\n".getBytes(US_ASCII))) ++
       record("response", "http://hn.example.com/closed",
@@ -1591,7 +1591,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("frontierOf: nofollow links and nofollow pages never reach the frontier") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_nofollow")
+    val dir = SparkSpec.tempDir("graft_warc_nofollow")
     val recs = record("response", "http://nf.example.com/robots.txt",
       http("200 OK", "text/plain", "User-agent: *\r\n".getBytes(US_ASCII)))
     Files.write(dir.resolve("seg.warc"), recs)
@@ -1613,7 +1613,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("frontierOf/crawlScheduleOf: the real-data politeness loop, full-host keyed") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_realloop")
+    val dir = SparkSpec.tempDir("graft_warc_realloop")
     val newsRobots = "User-agent: *\r\nDisallow: /private\r\nCrawl-delay: 2\r\n"
     val recs =
       record("response", "http://www.news.example/robots.txt",
@@ -1680,7 +1680,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("sitemapSeedsOf: robots-declared sitemaps discovered from the crawl's own captures") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_smof")
+    val dir = SparkSpec.tempDir("graft_warc_smof")
     val host = "www.shop.example"
     val robots = s"User-agent: *\r\nDisallow: /secret\r\n" +
       s"Sitemap: http://$host/sitemap.xml\r\n"
@@ -1758,7 +1758,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("recrawlOf: header + sitemap freshness off a WARC crawl, scheduled politely") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_recrawlof")
+    val dir = SparkSpec.tempDir("graft_warc_recrawlof")
     val host = "www.shop.example"
     val robots = s"User-agent: *\r\nCrawl-delay: 2\r\nDisallow: /secret\r\n" +
       s"Sitemap: http://$host/sitemap.xml\r\n"
@@ -1843,7 +1843,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("feedSeedsOf: autodiscovered feeds parse from the crawl's own captures") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_feeds")
+    val dir = SparkSpec.tempDir("graft_warc_feeds")
     val host = "blog.example.com"
     val page = s"""<html><head><link rel="alternate"
       |type="application/rss+xml" href="/feed.xml"></head>
@@ -1904,7 +1904,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("expiresSignalsOf: max-age over Date wins, Expires falls back, no anchor drops") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_expires")
+    val dir = SparkSpec.tempDir("graft_warc_expires")
     def resp(headers: String): Array[Byte] =
       (s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" + headers +
         "\r\n<p>body</p>").getBytes(US_ASCII)
@@ -1937,7 +1937,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("recrawlOf: an expired stored copy re-queues with reason expired") {
     import spark.implicits._
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_recrawl_exp")
+    val dir = SparkSpec.tempDir("graft_warc_recrawl_exp")
     val host = "cache.shop.example"
     val recs =
       record("response", s"http://$host/robots.txt",
@@ -2031,7 +2031,7 @@ class HtmlUrlSpec extends SparkSpec {
       && one.head.getAs[Boolean]("trap"), one.toSeq.toString)
 
     // the WARC route: a REAL fetch log's url column feeds the same face
-    val dir = Files.createTempDirectory("graft_warc_traps")
+    val dir = SparkSpec.tempDir("graft_warc_traps")
     val recs =
       (1 to 7).map(i => record("response",
         s"http://cal.shop.example/view?sid=s$i",
@@ -2101,7 +2101,7 @@ class HtmlUrlSpec extends SparkSpec {
     import graft.operators.CrawlOps
     implicit val sqlCtx = spark.sqlContext
     val srcDocs = Seq((0L, "src3")).toDF("doc_id", "source")
-    val dir = Files.createTempDirectory("graft_recrawl_stream")
+    val dir = SparkSpec.tempDir("graft_recrawl_stream")
       .toFile.getAbsolutePath
     // the persisted fetch log: /docs/62 and /docs/82 fetched in July
     Seq(("http://src3.example.com/docs/62", "2026-07-10"),
@@ -2170,7 +2170,7 @@ class HtmlUrlSpec extends SparkSpec {
     (s"HTTP/1.1 $status\r\nContent-Type: $ctype\r\n\r\n").getBytes(US_ASCII) ++ body
 
   test("warcToDocuments: charset resolution, quarantine routes, canonical identity") {
-    val dir = Files.createTempDirectory("graft_warc_docs")
+    val dir = SparkSpec.tempDir("graft_warc_docs")
     val utf8Body = "<html><body><p>café &amp; the crawl page</p></body></html>"
     val latin1Body = "<html><p>naïve résumé</p></html>"
     val recs =
@@ -2220,7 +2220,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments decodes UTF-16 pages (BOM and declared); malformed quarantines") {
-    val dir = Files.createTempDirectory("graft_warc_utf16")
+    val dir = SparkSpec.tempDir("graft_warc_utf16")
     val body = "<html><p>utf-16 café こん</p></html>"
     val le = Array[Byte](0xFF.toByte, 0xFE.toByte) ++ body.getBytes("UTF-16LE")
     val be = Array[Byte](0xFE.toByte, 0xFF.toByte) ++ body.getBytes("UTF-16BE")
@@ -2255,7 +2255,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments decodes windows-1252 exactly and sniffs meta charsets") {
-    val dir = Files.createTempDirectory("graft_warc_cp1252")
+    val dir = SparkSpec.tempDir("graft_warc_cp1252")
     // curly quotes (93/94), apostrophe (92), em dash (97), euro (80) —
     // the 0x80–0x9F range where cp1252 and latin-1 disagree
     val cp1252Body = "<p>“hello” — it’s €5</p>"
@@ -2296,7 +2296,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("warcToDocuments de-chunks chunked bodies; malformed framing quarantines") {
     import java.io.ByteArrayOutputStream
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("graft_warc_chunked")
+    val dir = SparkSpec.tempDir("graft_warc_chunked")
     val html = "<html><body><p>the chunked crawl page body</p></body></html>"
     // split the page across three chunks, one with an extension token
     val chunked =
@@ -2339,7 +2339,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments gates on media type: binaries never charset-decode") {
-    val dir = Files.createTempDirectory("graft_warc_ct")
+    val dir = SparkSpec.tempDir("graft_warc_ct")
     // a fake JPEG whose bytes are VALID latin-1 AND valid UTF-8 — the
     // byte validators cannot catch it; only the media-type gate can
     val fakeJpeg = "JFIF-ish printable bytes pretending to be an image"
@@ -2378,7 +2378,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments decodes the legacy multibyte/regional charsets exactly") {
-    val dir = Files.createTempDirectory("graft_warc_legacy")
+    val dir = SparkSpec.tempDir("graft_warc_legacy")
     // JDK-encoded fixtures — the JDK's encoder is the second
     // implementation, the codec-spec convention
     val ja = "日本語のページです"
@@ -2429,7 +2429,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments: BOM precedence and XML-declaration charset sniffing") {
-    val dir = Files.createTempDirectory("graft_warc_bom")
+    val dir = SparkSpec.tempDir("graft_warc_bom")
     val bom = Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte)
     val utf8Page = "<p>bom page café</p>".getBytes(UTF_8)
     val xmlLatin1 = ("<?xml version=\"1.0\" encoding=\"ISO-8859-1\"?>" +
@@ -2468,7 +2468,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("warcToDocuments inflates gzip/deflate/zstd bodies; br and corrupt quarantine") {
     import java.io.ByteArrayOutputStream
     import java.util.zip.{Deflater, GZIPOutputStream}
-    val dir = Files.createTempDirectory("graft_warc_ce")
+    val dir = SparkSpec.tempDir("graft_warc_ce")
     val html = "<html><body><p>the gzip-encoded crawl page café</p></body></html>"
     val page = html.getBytes(UTF_8)
     val gzBody = { val o = new ByteArrayOutputStream()
@@ -2529,7 +2529,7 @@ class HtmlUrlSpec extends SparkSpec {
   test("warcToDocuments: chunked + gzip composition decodes through both codecs") {
     import java.io.ByteArrayOutputStream
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("graft_warc_tece")
+    val dir = SparkSpec.tempDir("graft_warc_tece")
     val html = "<p>chunk-framed gzip entity</p>"
     val gzBody = { val o = new ByteArrayOutputStream()
       val g = new GZIPOutputStream(o); g.write(html.getBytes(UTF_8)); g.finish()
@@ -2835,7 +2835,7 @@ class HtmlUrlSpec extends SparkSpec {
 
   test("redirectsOf pulls 3xx Location edges; a planted 301 chain resolves and enqueues") {
     import graft.operators.CrawlOps
-    val dir = Files.createTempDirectory("graft_warc_redir")
+    val dir = SparkSpec.tempDir("graft_warc_redir")
     def resp(uri: String, status: String, hdrs: String): Array[Byte] =
       record("response", uri,
         (s"HTTP/1.1 $status\r\n$hdrs\r\n\r\n").getBytes(US_ASCII))
@@ -2922,7 +2922,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("urlDedupBy collapses the warc bridge's refetches on the real url column") {
-    val dir = Files.createTempDirectory("graft_warc_urldedup")
+    val dir = SparkSpec.tempDir("graft_warc_urldedup")
     val body = "<p>the of and to page body</p>"
     Files.write(dir.resolve("seg.warc"),
       record("response", "HTTP://Site.COM:80/a?utm_source=x",
@@ -2941,7 +2941,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("urlFilterOf gates the real ingest output before any content operator") {
-    val dir = Files.createTempDirectory("graft_warc_urlfilter")
+    val dir = SparkSpec.tempDir("graft_warc_urlfilter")
     val body = "<p>the of and to page body</p>"
     Files.write(dir.resolve("seg.warc"),
       record("response", "http://ads.bad.site/promo",
@@ -2971,7 +2971,7 @@ class HtmlUrlSpec extends SparkSpec {
     // lists live as one-entry-per-line artifact files (comments and
     // blanks dropped by readBadwords), loaded into the gate over real
     // warcToDocuments output
-    val dir = Files.createTempDirectory("graft_warc_urlfilter_files")
+    val dir = SparkSpec.tempDir("graft_warc_urlfilter_files")
     val body = "<p>the of and to page body</p>"
     Files.write(dir.resolve("seg.warc"),
       record("response", "http://ads.bad.site/promo",
@@ -3002,7 +3002,7 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warc bridge chains into langId and dedupLines (the documents estate)") {
-    val dir = Files.createTempDirectory("graft_warc_chain")
+    val dir = SparkSpec.tempDir("graft_warc_chain")
     val page = "<p>the of and to in for is on that the of and to in for is on that</p>"
     Files.write(dir.resolve("seg.warc"),
       record("response", "http://en.site/x",
@@ -3084,7 +3084,7 @@ class HtmlUrlSpec extends SparkSpec {
     val j2 = rows("http://c.io/min")
     assert(j2.contains("\"links\":[]") && !j2.contains("title"), j2)
     // the full WAT loop: composer → sink → any WARC reader
-    val dir = Files.createTempDirectory("graft_watloop").resolve("out").toString
+    val dir = SparkSpec.tempDir("graft_watloop").resolve("out").toString
     graft.sources.WarcSink.writeWat(wat, dir)
     val back = graft.sources.WarcSource.read(spark, dir).collect()
     assert(back.length == 2)

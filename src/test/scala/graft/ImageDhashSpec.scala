@@ -216,7 +216,7 @@ class ImageDhashSpec extends SparkSpec {
   test("incremental + streaming audio dedup probe the persisted aHash table") {
     import spark.implicits._
     // corpus: groups 3 and 5 (planted), persisted fingerprints
-    val dir = java.nio.file.Files.createTempDirectory("graft_ahash_idx")
+    val dir = SparkSpec.tempDir("graft_ahash_idx")
       .toFile.getAbsolutePath
     MultimodalOps.audioAhash(
       Seq((10L, MultimodalOps.plantedAudio(3L, 40)),
@@ -286,7 +286,7 @@ class ImageDhashSpec extends SparkSpec {
       else lum(x, y))
     val reversed = pixels((x, y) => lum(W - 1 - x, y))
     // the standing corpus: two distinct images, hashed and persisted
-    val dir = java.nio.file.Files.createTempDirectory("graft_dhash_idx")
+    val dir = SparkSpec.tempDir("graft_dhash_idx")
       .toFile.getAbsolutePath
     MultimodalOps.imageDhash(
       Seq((10L, ppm(base)), (11L, bmp(reversed))).toDF("doc_id", "payload"))

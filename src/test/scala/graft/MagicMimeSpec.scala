@@ -117,7 +117,7 @@ class MagicMimeSpec extends SparkSpec {
   }
 
   test("warcToDocuments sniff gate: binary-behind-text quarantines, exotic charsets do not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_sniffgate")
+    val dir = SparkSpec.tempDir("graft_warc_sniffgate")
     def rec(uri: String, payload: Array[Byte]): Array[Byte] = {
       val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
         "WARC-Date: 2026-08-14T00:00:00Z\r\n" +
@@ -151,7 +151,7 @@ class MagicMimeSpec extends SparkSpec {
   }
 
   test("sniffedTypesOf: the lying Content-Type is flagged as mojibake risk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_sniff")
+    val dir = SparkSpec.tempDir("graft_warc_sniff")
     def rec(uri: String, payload: Array[Byte]): Array[Byte] = {
       val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
         "WARC-Date: 2026-08-14T00:00:00Z\r\n" +

@@ -20,7 +20,7 @@ class MediaInventorySpec extends SparkSpec {
       .getBytes(ISO_8859_1) ++ body
 
   test("mediaInventoryOf: names, measures, and flags one mixed segment in one pass") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_media")
+    val dir = SparkSpec.tempDir("graft_warc_media")
     val recs =
       warcRecord("http://m.example/clip.mp4",
         http("video/mp4", Mp4Ops.mp4Synth(1L))) ++
@@ -132,7 +132,7 @@ class MediaInventorySpec extends SparkSpec {
       assert(ImageIO.write(img, fmt, out), s"JDK must encode $fmt")
       out.toByteArray
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_imgeo")
+    val dir = SparkSpec.tempDir("graft_warc_imgeo")
     val recs =
       warcRecord("http://i.example/a.png", http("image/png", jdk("png", 33, 21))) ++
       warcRecord("http://i.example/b.gif",
@@ -271,7 +271,7 @@ class MediaInventorySpec extends SparkSpec {
     assert(MediaHeaders.avi("RIFFxxxxAVI but torn".getBytes(ISO_8859_1)).isLeft)
     assert(MediaHeaders.qoi("qoif".getBytes(ISO_8859_1)).isLeft)
     // and the inventory routes all three in one pass
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_riff")
+    val dir = SparkSpec.tempDir("graft_warc_riff")
     val recs =
       warcRecord("http://r.example/a.wav", http("audio/wav", pcm)) ++
       warcRecord("http://r.example/b.avi", http("video/avi", avi)) ++
@@ -291,7 +291,7 @@ class MediaInventorySpec extends SparkSpec {
       qi.getAs[String]("media_format") == "qoi", qi.toString)
     // and a PDF names its version (header-only; no measurement here —
     // pdfDocumentsOf is the measurement route)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_warc_pdfname")
+    val dir2 = SparkSpec.tempDir("graft_warc_pdfname")
     java.nio.file.Files.write(dir2.resolve("seg.warc"),
       warcRecord("http://r.example/d.pdf", http("application/pdf",
         graft.operators.PdfOps.pdfSynth("inventory names the version", 1))))
@@ -358,7 +358,7 @@ class MediaInventorySpec extends SparkSpec {
     assert(stillX.exists(m => m.hasAnim && m.nFrames == 0 &&
       m.durationMs == -1L), stillX)
     // and the inventory rows carry both durations
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_anim")
+    val dir = SparkSpec.tempDir("graft_warc_anim")
     java.nio.file.Files.write(dir.resolve("seg.warc"),
       warcRecord("http://a.example/loop.gif", http("image/gif", gif)) ++
       warcRecord("http://a.example/loop.webp", http("image/webp", webp)))
@@ -397,7 +397,7 @@ class MediaInventorySpec extends SparkSpec {
     assert(ImageHeaders.pngAnimation(apng).contains((2, 100L)),
       ImageHeaders.pngAnimation(apng))
     assert(ImageHeaders.pngAnimation(stillPng).isEmpty, "still PNG = None")
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_warc_apng")
+    val dir3 = SparkSpec.tempDir("graft_warc_apng")
     java.nio.file.Files.write(dir3.resolve("seg.warc"),
       warcRecord("http://a.example/loop.png", http("image/png", apng)))
     val ap = MediaOps.mediaInventoryOf(
@@ -407,7 +407,7 @@ class MediaInventorySpec extends SparkSpec {
   }
 
   test("SVG names and measures from the root tag; dimensionless stays NULL") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_svg")
+    val dir = SparkSpec.tempDir("graft_warc_svg")
     def svg(body: String): Array[Byte] = body.getBytes("UTF-8")
     val recs =
       warcRecord("http://s.example/sized.svg", http("image/svg+xml",
@@ -461,7 +461,7 @@ class MediaInventorySpec extends SparkSpec {
     assert(graft.plans.MagicMime.sniff((Seq[Byte](0, 0, 1, 0) ++ le16(1) ++
       entry(16, 16, 32, 4L)).toArray) != "image/x-icon")
     // and the inventory routes it (behind the typical lying text header)
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_ico")
+    val dir = SparkSpec.tempDir("graft_warc_ico")
     java.nio.file.Files.write(dir.resolve("seg.warc"),
       warcRecord("http://f.example/favicon.ico", http("text/plain", ico)))
     val r = MediaOps.mediaInventoryOf(
@@ -503,7 +503,7 @@ class MediaInventorySpec extends SparkSpec {
     val zeroRate = f.clone(); zeroRate(18) = 0; zeroRate(19) = 0; zeroRate(20) = 0
     assert(MediaHeaders.flac(zeroRate).isLeft)
     // and the inventory routes it
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_flac")
+    val dir = SparkSpec.tempDir("graft_warc_flac")
     java.nio.file.Files.write(dir.resolve("seg.warc"),
       warcRecord("http://f.example/a.flac", http("audio/flac", f)))
     val r = MediaOps.mediaInventoryOf(
@@ -535,7 +535,7 @@ class MediaInventorySpec extends SparkSpec {
     assert(ImageHeaders.tiff(noGeom).isLeft)
     assert(ImageHeaders.tiff(le.take(9)).isLeft)
     // and the inventory routes it
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_tiff")
+    val dir = SparkSpec.tempDir("graft_warc_tiff")
     java.nio.file.Files.write(dir.resolve("seg.warc"),
       warcRecord("http://f.example/scan.tif", http("image/tiff", be)))
     val r = MediaOps.mediaInventoryOf(
@@ -617,7 +617,7 @@ class MediaInventorySpec extends SparkSpec {
   }
 
   test("mediaInventoryOf: a sniffed-media payload that fails its walk carries the reason") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_media2")
+    val dir = SparkSpec.tempDir("graft_warc_media2")
     // real ftyp magic so the sniff routes to the MP4 walk, but no moov
     val bare = Mp4Ops.mp4Synth(0L).take(20).toArray
     java.nio.file.Files.write(dir.resolve("seg.warc"),

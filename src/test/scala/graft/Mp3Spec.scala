@@ -231,7 +231,7 @@ class Mp3Spec extends SparkSpec {
   }
 
   test("mp3MetaOfRecords: declaration OR content routes; the lying header sniffs in") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_mp3")
+    val dir = SparkSpec.tempDir("graft_warc_mp3")
     def warcRecord(uri: String, payload: Array[Byte]): Array[Byte] = {
       val hdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
         "WARC-Date: 2026-08-14T00:00:00Z\r\n" +

@@ -236,7 +236,7 @@ class Mp4Spec extends SparkSpec {
   }
 
   test("mp4MetaOfRecords: declaration OR content routes; the lying header sniffs in") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_mp4")
+    val dir = SparkSpec.tempDir("graft_warc_mp4")
     def http(ctype: String, body: Array[Byte]): Array[Byte] =
       (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n")
         .getBytes(ISO_8859_1) ++ body

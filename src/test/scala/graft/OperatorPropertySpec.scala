@@ -153,10 +153,21 @@ class OperatorPropertySpec extends SparkSpec {
       graft.operators.MediaHeaders.avi(bytes)
       graft.operators.MediaHeaders.qoi(bytes)
     }
-    // magic-grafted garbage for each probe family: the probe must enter
-    // its parser and survive
-    Seq("RIFF....WAVE", "RIFF....AVI ", "qoif....", "\u0089PNG\r\n\u001a\n",
-      "GIF89a", "BM......", "\u00ff\u00d8\u00ff\u00e0").foreach { magic =>
+    // the decoders decodeBatches and audioAhash call with no catch
+    // around them: a throw there kills the task
+    def decodeAll(g: Array[Byte]): Unit = {
+      MultimodalOps.decodeWav(g, 16)
+      MultimodalOps.decodeBmp(g, 16)
+      MultimodalOps.decodePng(g, 16)
+      MultimodalOps.decodeQoi(g, 16)
+      MultimodalOps.decodePpm(g, 16)
+      MultimodalOps.ahashOf(g)
+    }
+    // magic-grafted garbage for each probe and decoder family: the
+    // parser must enter and survive
+    Seq("RIFF....WAVE", "RIFF....WAVEfmt \u0010\u0000\u0000\u0000",
+      "RIFF....AVI ", "qoif....", "\u0089PNG\r\n\u001a\n", "GIF89a",
+      "BM......", "\u00ff\u00d8\u00ff\u00e0", "P6\n").foreach { magic =>
       (0 until 60).foreach { _ =>
         val g = Array.fill[Byte](rnd.nextInt(200) + 26)(rnd.nextInt.toByte)
         val m = magic.toCharArray.map(_.toByte)
@@ -167,8 +178,27 @@ class OperatorPropertySpec extends SparkSpec {
         graft.operators.MediaHeaders.wav(g)
         graft.operators.MediaHeaders.avi(g)
         graft.operators.MediaHeaders.qoi(g)
+        decodeAll(g)
       }
     }
+    // every truncation and seeded byte mutations of valid payloads
+    val media = graft.operators.MediaOps
+    Seq(MultimodalOps.plantedAudio(7L, 40), MultimodalOps.plantedImage(7L, 50),
+      media.wavSynth(3L), media.pngSynth(7L), media.jpegSynth(7L)).foreach { valid =>
+      (0 until valid.length).foreach(n => decodeAll(valid.take(n)))
+      (0 until 300).foreach { _ =>
+        val g = valid.clone()
+        (0 to rnd.nextInt(4)).foreach(_ =>
+          g(rnd.nextInt(g.length)) = rnd.nextInt.toByte)
+        decodeAll(g)
+        decodeAll(g.take(rnd.nextInt(g.length)))
+      }
+    }
+    // the planted payloads still decode \u2014 the mutations above start
+    // from inputs the decoders accept
+    assert(MultimodalOps.ahashOf(MultimodalOps.plantedAudio(7L, 40)).nonEmpty)
+    assert(MultimodalOps.decodeWav(media.wavSynth(3L), 16).nonEmpty)
+    assert(MultimodalOps.decodePpm(MultimodalOps.plantedImage(7L, 50), 16).nonEmpty)
     // a crafted deep-nest moov (8 bytes per level) hits the depth cap,
     // never a StackOverflowError
     val n = 50000

@@ -329,11 +329,11 @@ class PipelineOpsSpec extends SparkSpec {
     * directory, asserting it was durable throughout: no stage named
     * `localCheckpoint at …` ran, no RDD was persisted (a local
     * checkpoint persists its blocks, lazily or not), and checkpoint
-    * files landed in the directory. The directory is deleted after. */
+    * files landed in the directory. */
   private def reliably[T](body: => T): T = {
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_reliable")
+    val dir = SparkSpec.tempDir("graft_reliable")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageSubmitted(
@@ -356,10 +356,7 @@ class PipelineOpsSpec extends SparkSpec {
       finally walk.close()
       assert(files > 0, s"no checkpoint files under $dir")
       result
-    } finally {
-      sc.removeSparkListener(listener)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-    }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("connectedComponents: reliable-checkpoint path matches the local path on both cluster queries") {
@@ -1157,7 +1154,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("annIvfQ8 searches the persisted int8 index and recalls the float top-k") {
     // the index is genuinely int8 at rest: tinyint components, persisted
     // WITHOUT the float column, searched from the parquet round-trip
-    val dir = java.nio.file.Files.createTempDirectory("graft_q8_idx").toString
+    val dir = SparkSpec.tempDir("graft_q8_idx").toString
     AnnOps.quantizedVectors(embs).write.mode("overwrite").parquet(dir)
     val idx = spark.read.parquet(dir)
     assert(idx.schema("qvs").dataType.asInstanceOf[
@@ -1317,7 +1314,7 @@ class PipelineOpsSpec extends SparkSpec {
     }
     // deployment shape: codes + codebook round-trip through parquet and
     // the persisted-index search matches the inline fit bit for bit
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
+    val dir = SparkSpec.tempDir("graft_pq_idx").toString
     AnnOps.pqEncode(planted).write.mode("overwrite").parquet(s"$dir/codes")
     AnnOps.pqCodebook(planted).write.mode("overwrite").parquet(s"$dir/cb")
     val fromDisk = AnnOps.pqSearchIndex(

@@ -24,12 +24,9 @@ class PlanAuditSpec extends SparkSpec {
     * assert the 100 TB shape — a real corpus scan always has more
     * splits than cores; the single-file test layout is the exception,
     * and spread's conditional exchange on it is audited separately. */
-  private var spreadNeutralRoot: Option[java.nio.file.Path] = None
-
   private lazy val spreadNeutralDocs: DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_docs_multi")
-    spreadNeutralRoot = Some(root) // deleted in afterAll (ADVICE r20)
-    val dir = root.toFile.getAbsolutePath + "/documents.parquet"
+    val dir = SparkSpec.tempDir("graft_docs_multi").toFile.getAbsolutePath +
+      "/documents.parquet"
     Tables.documents(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .write.mode("overwrite").parquet(dir)
@@ -42,14 +39,6 @@ class PlanAuditSpec extends SparkSpec {
       s"spread-neutral fixture read back in ${df.rdd.getNumPartitions} " +
         "splits (< defaultParallelism) — bin-packing coalesced it")
     df
-  }
-
-  override def afterAll(): Unit = {
-    try spreadNeutralRoot.foreach { root =>
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } finally super.afterAll()
   }
 
   test("Tables.spread: conditional — exchange on a single-split scan, " +

@@ -12,7 +12,7 @@ import graft.sources.{Sinks, Tables}
 class SinksSpec extends SparkSpec {
 
   test("day-partitioned layout prunes partitions on read") {
-    val out = Files.createTempDirectory("graft_part").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_part").toFile.getAbsolutePath
     val events = Tables.events(spark, sfDir)
     Sinks.writePartitionedByDay(events, out)
     val back = Sinks.readPartitioned(spark, out)
@@ -29,7 +29,7 @@ class SinksSpec extends SparkSpec {
 
   test("annIvf over the label-partitioned layout: probe scan is dynamically partition-pruned") {
     import graft.operators.AnnOps
-    val out = Files.createTempDirectory("graft_ivf").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_ivf").toFile.getAbsolutePath
     val embs = Tables.embeddings(spark, sfDir)
     Sinks.writePartitionedByLabel(embs, out)
     val back = spark.read.parquet(out)
@@ -51,7 +51,7 @@ class SinksSpec extends SparkSpec {
 
   test("pqSearchIvfIndex: persisted list-partitioned codes are dynamically pruned, search is bit-identical") {
     import graft.operators.AnnOps
-    val dir = Files.createTempDirectory("graft_ivfpq").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft_ivfpq").toFile.getAbsolutePath
     val embs = Tables.embeddings(spark, sfDir)
     // build once, persist the three artifacts (codes list_id-partitioned)
     val (codes, codebook, centroids) = AnnOps.pqIvfIndex(embs)
@@ -96,9 +96,9 @@ class SinksSpec extends SparkSpec {
 
   test("compact: many small files become the byte-sized count, rows exact") {
     val events = Tables.events(spark, sfDir)
-    val in = java.nio.file.Files.createTempDirectory("graft_compact_in")
+    val in = SparkSpec.tempDir("graft_compact_in")
       .toFile.getAbsolutePath
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_out")
+    val out = SparkSpec.tempDir("graft_compact_out")
       .toFile.getAbsolutePath
     // simulate a chatty writer: many tiny files
     events.repartition(64).write.mode("overwrite").parquet(in)
@@ -124,7 +124,7 @@ class SinksSpec extends SparkSpec {
     import graft.operators.CorpusOps
     val docs = Tables.documents(spark, sfDir)
     val epoch = CorpusOps.epochOrder(docs)
-    val out = java.nio.file.Files.createTempDirectory("graft_ordered")
+    val out = SparkSpec.tempDir("graft_ordered")
       .toFile.getAbsolutePath
     Sinks.writeOrdered(epoch, out, "pos", nFiles = 8)
     // reading part files ONE AT A TIME in name order reproduces the
@@ -154,59 +154,8 @@ class SinksSpec extends SparkSpec {
     sortArgs.foreach(l => assert(l.contains("], false, 0"), s"global sort: $l"))
   }
 
-  test("writeZOrdered: every file carries a tight min/max box on BOTH keys") {
-    import spark.implicits._
-    // a 2-D uniform plane — the layout where a single-key sort leaves
-    // the second dimension's span at ~100% per file
-    val plane = (0 until 100000)
-      .map(i => (((i.toLong * 7919) % 1000).toInt,
-        ((i.toLong * 104729) % 1000).toInt))
-      .toDF("u", "d")
-    val zOut = java.nio.file.Files.createTempDirectory("graft_zorder")
-      .toFile.getAbsolutePath
-    Sinks.writeZOrdered(plane, zOut, "u", "d", nFiles = 16)
-    // per-file min/max boxes — exactly the stats parquet row-group/file
-    // skipping reads. (Per-file SPANS are the wrong assertion: a file
-    // straddling a top-bit z-boundary legitimately wraps one dimension
-    // high→low and shows a near-full span; the curve's guarantee is
-    // aggregate PRUNING power, asserted below, not per-file tightness.)
-    def boxes(dir: String): Seq[(Long, Long, Long, Long)] =
-      new java.io.File(dir).listFiles().toSeq
-        .filter(_.getName.endsWith(".parquet")).map { f =>
-          val r = spark.read.parquet(f.getAbsolutePath)
-            .agg(org.apache.spark.sql.functions.min(col("u")),
-                 org.apache.spark.sql.functions.max(col("u")),
-                 org.apache.spark.sql.functions.min(col("d")),
-                 org.apache.spark.sql.functions.max(col("d")))
-            .collect().head
-          (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
-           r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
-        }
-    def overlapU(bs: Seq[(Long, Long, Long, Long)], lo: Long, hi: Long) =
-      bs.count { case (umin, umax, _, _) => umax >= lo && umin <= hi }
-    def overlapD(bs: Seq[(Long, Long, Long, Long)], lo: Long, hi: Long) =
-      bs.count { case (_, _, dmin, dmax) => dmax >= lo && dmin <= hi }
-    val zB = boxes(zOut)
-    assert(zB.size > 8, s"want a real tiling, got ${zB.size} files")
-    // the skipping claim: a narrow predicate on EITHER dimension
-    // overlaps only the tile row/column of files, never the corpus
-    assert(overlapU(zB, 495, 505) <= zB.size / 2, s"u-window hits: $zB")
-    assert(overlapD(zB, 495, 505) <= zB.size / 2, s"d-window hits: $zB")
-    // the contrast that motivates the curve: a single-key range sort
-    // prunes its own key but leaves the OTHER dimension unprunable —
-    // every file overlaps any d-window
-    val oOut = java.nio.file.Files.createTempDirectory("graft_zorder_1d")
-      .toFile.getAbsolutePath
-    Sinks.writeOrdered(plane.withColumn("u", col("u").cast("long")),
-      oOut, "u", nFiles = 16)
-    val oB = boxes(oOut)
-    assert(overlapU(oB, 495, 505) <= oB.size / 2) // its own key prunes
-    assert(overlapD(oB, 495, 505) == oB.size,
-      s"single-key layout should leave d unprunable: $oB")
-  }
-
   test("compact refuses inPath == outPath (would clobber its own input)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_same")
+    val dir = SparkSpec.tempDir("graft_compact_same")
       .toFile.getAbsolutePath
     spark.range(10).write.mode("overwrite").parquet(dir)
     // equal after canonicalization too: a trailing slash must not fool it
@@ -220,9 +169,9 @@ class SinksSpec extends SparkSpec {
 
   test("compactPartitioned: one file per day directory, layout preserved") {
     val events = Tables.events(spark, sfDir)
-    val in = java.nio.file.Files.createTempDirectory("graft_cp_in")
+    val in = SparkSpec.tempDir("graft_cp_in")
       .toFile.getAbsolutePath
-    val out = java.nio.file.Files.createTempDirectory("graft_cp_out")
+    val out = SparkSpec.tempDir("graft_cp_out")
       .toFile.getAbsolutePath
     // a fragmented day layout: several files inside each day directory
     Sinks.withDay(events.repartition(8)).write.mode("overwrite")
@@ -245,7 +194,7 @@ class SinksSpec extends SparkSpec {
 
   test("upsertPartitioned rewrites only touched partitions and merges by key") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_upsert")
+    val path = SparkSpec.tempDir("graft_upsert")
       .toFile.getAbsolutePath
     val base = Seq(
       (1L, "one", "s0"), (2L, "two", "s0"),
@@ -280,7 +229,7 @@ class SinksSpec extends SparkSpec {
 
   test("upsertPartitioned auditKeyMoves catches a key moving partitions") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_upsert_mv")
+    val path = SparkSpec.tempDir("graft_upsert_mv")
       .toFile.getAbsolutePath
     Sinks.writePartitionedBy(Seq(
       (1L, "one", "s0"), (3L, "three", "s1")

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,4 +18,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession =
     GraftSession.local(4, warehouseDir = Some("/tmp/graft_test_warehouse"))
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+  private lazy val deleteOnExit: Unit = {
+    sys.addShutdownHook(tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
+    ()
+  }
+
+  /** A fresh directory under the system temp dir, deleted with its
+    * contents when the test JVM exits (`Test / fork` gives every test
+    * run its own JVM). */
+  def tempDir(prefix: String): Path = {
+    deleteOnExit
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
 }

@@ -11,7 +11,7 @@ import graft.sources.EventsJsonSource
 class StatsBombOpsSpec extends SparkSpec {
 
   private lazy val nested = {
-    val dir = Files.createTempDirectory("graft_sb").toFile
+    val dir = SparkSpec.tempDir("graft_sb").toFile
     // two "matches"; player 30486 passes, assists, gets subbed off in m2
     val m1 =
       """[

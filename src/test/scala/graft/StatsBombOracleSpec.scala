@@ -258,7 +258,7 @@ class StatsBombOracleSpec extends SparkSpec {
     val probe = Process(Seq("python3", "-c", "import duckdb, pandas")).!(ProcessLogger(_ => ()))
     assume(probe == 0, "python3 + duckdb unavailable; oracle compare skipped")
 
-    val dir = Files.createTempDirectory("graft_sb_oracle")
+    val dir = SparkSpec.tempDir("graft_sb_oracle")
     val (eventsDir, profilePath) = StatsBombFixture.write(dir)
 
     val nested = EventsJsonSource.read(spark, eventsDir).cache()

@@ -125,8 +125,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val gapMs = EventStream.GapUs / 1000
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val out = Files.createTempDirectory("graft_swin_sink").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_swin_ckpt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_swin_sink").toFile.getAbsolutePath
+    val ckpt = SparkSpec.tempDir("graft_swin_ckpt").toFile.getAbsolutePath
     val batch1 = Seq(
       Event(new Timestamp(base), 1L, "click", 1.0),
       Event(new Timestamp(base + 60000), 1L, "view", 1.0))
@@ -217,7 +217,7 @@ class StreamingSpec extends SparkSpec {
       (0 until 11).map(d =>
         Event(new Timestamp(base + d * dayMs), 2L, "click", 5.0))
     val fixture = evs.toDF()
-    val momentsDir = Files.createTempDirectory("graft_moments")
+    val momentsDir = SparkSpec.tempDir("graft_moments")
       .toFile.getAbsolutePath
     StatsOps.userMoments(fixture).write.mode("overwrite").parquet(s"$momentsDir/v1")
     @volatile var momentsPath = s"$momentsDir/v1"
@@ -365,8 +365,8 @@ class StreamingSpec extends SparkSpec {
   test("writePartitionedStream lands day-partitioned files batch readers prune") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_stream_sink").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_stream_sink").toFile.getAbsolutePath
+    val ckpt = SparkSpec.tempDir("graft_stream_ckpt").toFile.getAbsolutePath
     val input = MemoryStream[Event]
     val q = EventStream.writePartitionedStream(input.toDF(), out, ckpt)
     try {
@@ -388,8 +388,8 @@ class StreamingSpec extends SparkSpec {
   test("writePartitionedStream restart from checkpoint: no lost, no duplicate rows") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_restart_sink").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_restart_sink").toFile.getAbsolutePath
+    val ckpt = SparkSpec.tempDir("graft_restart_ckpt").toFile.getAbsolutePath
     val batch1 = Seq(
       Event(Timestamp.valueOf("2024-01-05 10:00:00"), 1L, "click", 1.0),
       Event(Timestamp.valueOf("2024-01-06 11:00:00"), 2L, "view", 2.0))
@@ -426,7 +426,7 @@ class StreamingSpec extends SparkSpec {
     // the standing corpus's PERSISTED band index (write-once in a real
     // pipeline; plain parquet here — the bucketed layout is
     // BucketedJoinSpec's subject)
-    val idxDir = Files.createTempDirectory("graft_inc_idx").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_inc_idx").toFile.getAbsolutePath
     DedupOps.minhashBandKeys(docs.filter(pmod(col("doc_id"), lit(m)) =!= 0),
       DedupOps.MinhashK, DedupOps.Bands).write.mode("overwrite").parquet(idxDir)
     val idx = spark.read.parquet(idxDir)
@@ -464,7 +464,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.DedupOps
     val docs = Tables.documents(spark, sfDir)
     val m = DedupOps.IncrementalDeltaMod
-    val idxDir = Files.createTempDirectory("graft_inc_idx2").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_inc_idx2").toFile.getAbsolutePath
     DedupOps.minhashBandKeys(docs.filter(pmod(col("doc_id"), lit(m)) =!= 0),
       DedupOps.MinhashK, DedupOps.Bands).write.mode("overwrite").parquet(idxDir)
     val idx = spark.read.parquet(idxDir)
@@ -472,8 +472,8 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val (d1, d2) = delta.splitAt(delta.length / 2)
-    val out = Files.createTempDirectory("graft_inc_sink").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_inc_ckpt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_inc_sink").toFile.getAbsolutePath
+    val ckpt = SparkSpec.tempDir("graft_inc_ckpt").toFile.getAbsolutePath
     def start(input: MemoryStream[(Long, String)]) =
       EventStream.dedupIncrementalStream(input.toDF().toDF("doc_id", "text"), idx)
         .writeStream.format("parquet").option("path", out)
@@ -506,7 +506,7 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.TextFuns
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val idxDir = Files.createTempDirectory("graft_curate_idx").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_curate_idx").toFile.getAbsolutePath
     corpus.select(md5(TextFuns.norm(col("text")).cast("binary")).as("text_hash"))
       .distinct().write.mode("overwrite").parquet(idxDir)
     val idx = spark.read.parquet(idxDir)
@@ -614,7 +614,7 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.TextFuns
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val idxDir = Files.createTempDirectory("graft_curate_idx2").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_curate_idx2").toFile.getAbsolutePath
     corpus.select(md5(TextFuns.norm(col("text")).cast("binary")).as("text_hash"))
       .distinct().write.mode("overwrite").parquet(idxDir)
     val idx = spark.read.parquet(idxDir)
@@ -622,8 +622,8 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "text", "source").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val (d1, d2) = delta.splitAt(delta.length / 2)
-    val out = Files.createTempDirectory("graft_curate_sink").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_curate_ckpt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_curate_sink").toFile.getAbsolutePath
+    val ckpt = SparkSpec.tempDir("graft_curate_ckpt").toFile.getAbsolutePath
     def start(input: MemoryStream[(Long, String, String)]) =
       EventStream.curateStream(input.toDF().toDF("doc_id", "text", "source"), idx)
         .writeStream.format("parquet").option("path", out)
@@ -654,8 +654,8 @@ class StreamingSpec extends SparkSpec {
     val m = DedupOps.IncrementalDeltaMod
     val corpusEmbs = embs.filter(pmod(col("vec_id"), lit(m)) =!= 0)
     // persisted corpus estate: the rp band index + the vector table
-    val idxDir = Files.createTempDirectory("graft_einc_idx").toFile.getAbsolutePath
-    val vecDir = Files.createTempDirectory("graft_einc_vec").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_einc_idx").toFile.getAbsolutePath
+    val vecDir = SparkSpec.tempDir("graft_einc_vec").toFile.getAbsolutePath
     DedupOps.embeddingRpBlocks(corpusEmbs).write.mode("overwrite").parquet(idxDir)
     corpusEmbs.select("vec_id", "embedding").write.mode("overwrite").parquet(vecDir)
     val idx = spark.read.parquet(idxDir)
@@ -734,7 +734,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.AnnOps
     // the PERSISTED index — built once, off disk for every micro-batch
-    val idxDir = Files.createTempDirectory("graft_serve_idx").toFile.getAbsolutePath
+    val idxDir = SparkSpec.tempDir("graft_serve_idx").toFile.getAbsolutePath
     AnnOps.quantizedVectors(Tables.embeddings(spark, sfDir))
       .write.mode("overwrite").parquet(idxDir)
     val embMap = Tables.embeddings(spark, sfDir)
@@ -775,7 +775,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.CorpusOps
     // persisted baseline manifest — a prior profileBySource output
-    val baseDir = Files.createTempDirectory("graft_profile_base").toFile
+    val baseDir = SparkSpec.tempDir("graft_profile_base").toFile
       .getAbsolutePath
     val corpus = Tables.documents(spark, sfDir)
     CorpusOps.profileBySource(corpus).write.mode("overwrite")
@@ -826,7 +826,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("EventsJsonSource reads and flattens StatsBomb-shaped nested JSON") {
-    val dir = Files.createTempDirectory("graft_json").toFile
+    val dir = SparkSpec.tempDir("graft_json").toFile
     val json =
       """[
         |{"id":"e1","index":1,"period":1,"timestamp":"00:00:01.000","minute":0,"second":1,
@@ -869,7 +869,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.ClassifierOps
     val docs = Tables.documents(spark, sfDir)
     // train once, persist the model pair (the deployable artifact)
-    val dir = java.nio.file.Files.createTempDirectory("graft_nbmodel").toString
+    val dir = SparkSpec.tempDir("graft_nbmodel").toString
     ClassifierOps.nbModel(docs).write.parquet(s"$dir/grid")
     ClassifierOps.nbPrior(docs).write.parquet(s"$dir/prior")
     val model = () => spark.read.parquet(s"$dir/grid")
@@ -900,7 +900,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.BpeOps
     val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tok_stream").toString
+    val dir = SparkSpec.tempDir("graft_tok_stream").toString
     BpeOps.trainTokenizer(docs, s"$dir/v1", merges = 8)
     @volatile var tokPath = s"$dir/v1"
     val expected = {

@@ -34,7 +34,7 @@ class WarcSourceSpec extends SparkSpec {
         "GET /a HTTP/1.1\r\n".getBytes(US_ASCII), "req")
 
   test("parses plain and member-gzipped WARC files with per-file parallelism") {
-    val dir = Files.createTempDirectory("graft_warc")
+    val dir = SparkSpec.tempDir("graft_warc")
     Files.write(dir.resolve("seg-0.warc"), warcBytes)
     // the Common Crawl layout: one gzip MEMBER per record, concatenated
     val gz = new ByteArrayOutputStream()
@@ -62,7 +62,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("cdxIndex records exact offsets; readAt re-reads exactly the indexed record") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_warc_cdx")
+    val dir = SparkSpec.tempDir("graft_warc_cdx")
     val plain = dir.resolve("seg-0.warc")
     Files.write(plain, warcBytes)
     // gz twin: one gzip member per record (the CC layout)
@@ -115,7 +115,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("cdxIndex member_length: offsets + lengths tile each file exactly") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_warc_cdxlen")
+    val dir = SparkSpec.tempDir("graft_warc_cdxlen")
     // CC layout gz: one member per record; plus a plain twin (members
     // degrade to records) — BOTH must tile to their file's size
     val recs = Seq(
@@ -188,7 +188,7 @@ class WarcSourceSpec extends SparkSpec {
   test("member_offset is the true compressed offset; readAtMember round-trips " +
     "every record on a multi-member .warc.gz") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_warc_member")
+    val dir = SparkSpec.tempDir("graft_warc_member")
     // the CC layout: one gzip member per record; capture each member's
     // true compressed start while building the file
     val recs = Seq(
@@ -246,7 +246,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("a gzip member holding several records: shared member_offset, " +
     "member_skip positions each record within it") {
-    val dir = Files.createTempDirectory("graft_warc_multirec")
+    val dir = SparkSpec.tempDir("graft_warc_multirec")
     val r0 = record("response", "http://m/0", httpPayload, "m0")
     val r1 = record("response", "http://m/1", httpPayload, "m1")
     val r2 = record("response", "http://m/2", httpPayload, "m2")
@@ -288,7 +288,7 @@ class WarcSourceSpec extends SparkSpec {
     val m0 = withFname(member(record("response", "http://f/0", httpPayload, "f0")),
       "seg-0.warc")
     val m1 = member(record("response", "http://f/1", httpPayload, "f1"))
-    val dir = Files.createTempDirectory("graft_warc_fname")
+    val dir = SparkSpec.tempDir("graft_warc_fname")
     Files.write(dir.resolve("named.warc.gz"), m0 ++ m1)
     val rows = WarcSource.read(spark, dir.toString).orderBy("offset").collect()
     assert(rows.map(_.getAs[String]("target_uri")).toSeq ==
@@ -416,7 +416,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("WARC bodies flow into the text estate: langId + exact dedup end-to-end") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_warc3")
+    val dir = SparkSpec.tempDir("graft_warc3")
     def resp(uri: String, body: String, id: String): Array[Byte] = {
       val payload = ("HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n" + body)
         .getBytes(US_ASCII)
@@ -473,7 +473,7 @@ class WarcSourceSpec extends SparkSpec {
     val payload = Array.fill[Byte](32 << 10)('x'.toByte)
     val all = (0 until 200).map(i =>
       record("response", s"http://x/$i", payload, s"r$i")).reduce(_ ++ _)
-    val f = Files.createTempDirectory("graft_warc_path").resolve("big.warc")
+    val f = SparkSpec.tempDir("graft_warc_path").resolve("big.warc")
     Files.write(f, all)
     var consumed = 0L
     val counting = new java.io.InputStream {
@@ -496,7 +496,7 @@ class WarcSourceSpec extends SparkSpec {
     // as the first test but asserting plan-level independence from
     // binaryFile (no 2 GiB content row anywhere: the scan's input is the
     // driver-listed path strings)
-    val dir = Files.createTempDirectory("graft_warc_pathroute")
+    val dir = SparkSpec.tempDir("graft_warc_pathroute")
     Files.write(dir.resolve("seg-0.warc"), warcBytes)
     Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray) // must be skipped
     Files.write(dir.resolve(".hidden.warc"), warcBytes) // must be skipped
@@ -542,7 +542,7 @@ class WarcSourceSpec extends SparkSpec {
   test("WarcSink round-trips: WET conversion records read back by WarcSource") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_wet").resolve("out").toString
+    val dir = SparkSpec.tempDir("graft_wet").resolve("out").toString
     val docs = Seq(
       ("http://a.net/1", "plain ascii text", "2026-08-14T00:00:00Z"),
       ("http://a.net/2", "café naïve — utf-8 survives", "2026-08-14T01:00:00Z"),
@@ -577,7 +577,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("WarcSink writes a CDX sidecar; readAtMember fetches every record by it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_wet_cdx").resolve("out").toString
+    val dir = SparkSpec.tempDir("graft_wet_cdx").resolve("out").toString
     val docs = Seq(
       ("http://s.net/1", "first record body", "2026-08-14T00:00:00Z"),
       ("http://s.net/2", "second record body", "2026-08-14T01:00:00Z"),
@@ -638,7 +638,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("WarcSink.writeWat: metadata records round-trip; hostile urls sanitize") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_wat").resolve("out").toString
+    val dir = SparkSpec.tempDir("graft_wat").resolve("out").toString
     // the WAT face: the caller composes its extraction frames into one
     // JSON column; a url carrying raw \t / \r\n (header-forgery + CDX
     // field-separator bytes) must reach both artifacts STRIPPED so the
@@ -677,7 +677,7 @@ class WarcSourceSpec extends SparkSpec {
     // three domains' captures interleaved in url order — exactly the
     // layout where a plain url sort scatters a domain across files but
     // the surt sort makes it contiguous
-    val dir = Files.createTempDirectory("graft_surt_cdx").resolve("wet").toString
+    val dir = SparkSpec.tempDir("graft_surt_cdx").resolve("wet").toString
     val docs = (0 until 4).flatMap(i => Seq(
       (s"http://a$i.com/p", s"a $i", "2026-08-15T00:00:00Z"),
       (s"http://b.net/p$i", s"b $i", "2026-08-15T00:00:00Z"),
@@ -685,7 +685,7 @@ class WarcSourceSpec extends SparkSpec {
       .toDF("url", "text", "fetch_date").repartition(2)
     graft.sources.WarcSink.writeWet(docs, dir)
     val idx = WarcSource.cdxIndex(WarcSource.read(spark, dir))
-    val out = Files.createTempDirectory("graft_surt_cdx").resolve("idx").toString
+    val out = SparkSpec.tempDir("graft_surt_cdx").resolve("idx").toString
     graft.sources.Sinks.writeOrdered(idx, out, "surt", nFiles = 3)
     // the domain query is a PREFIX predicate on the sort key: it pushes
     // to the parquet reader as StringStartsWith, so file/row-group
@@ -703,7 +703,7 @@ class WarcSourceSpec extends SparkSpec {
   test("readMembers: a CDX frame fetches exactly its records, distributed") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_wet_members").resolve("out").toString
+    val dir = SparkSpec.tempDir("graft_wet_members").resolve("out").toString
     val docs = (0 until 12).map(i =>
       (s"http://m.net/$i", s"body of record $i", "2026-08-14T00:00:00Z"))
       .toDF("url", "text", "fetch_date").repartition(3) // several segments
@@ -744,7 +744,7 @@ class WarcSourceSpec extends SparkSpec {
     // two crawls of the same two URLs land in one directory; the ledger
     // picks each URL's LATEST capture and re-fetches exactly those two
     // records by compressed member coordinates — no segment rescanned
-    val dir = Files.createTempDirectory("graft_warc_ledger")
+    val dir = SparkSpec.tempDir("graft_warc_ledger")
     def seg(name: String, date: String, marker: String): Unit = {
       val gz = new ByteArrayOutputStream()
       Seq("http://l.site/a", "http://l.site/b").foreach { u =>
@@ -780,7 +780,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("the full loop: WARC in → warcToDocuments → WET out → WARC in again") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_loop")
+    val dir = SparkSpec.tempDir("graft_loop")
     Files.write(dir.resolve("seg.warc"),
       record("response", "http://en.site/x",
         ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n" +
@@ -798,7 +798,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("httpResponses splits status and body; malformed tail drops cleanly") {
-    val dir = Files.createTempDirectory("graft_warc2")
+    val dir = SparkSpec.tempDir("graft_warc2")
     // valid records followed by a record whose declared length overruns
     // the buffer (truncated upload) — prior records must survive
     val truncated = record("response", "http://x/y", httpPayload, "trunc")
@@ -815,7 +815,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("httpResponses: an invalid-UTF-8 body yields NULL, never a job crash") {
-    val dir = Files.createTempDirectory("graft_warc_utf8")
+    val dir = SparkSpec.tempDir("graft_warc_utf8")
     // 0xC3 0x28 is an invalid UTF-8 sequence — Spark 4's strict decode
     // would throw MALFORMED_CHARACTER_CODING and kill the job; the
     // is_valid_utf8 gate must route it to a null body instead
