@@ -18,7 +18,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * and count the Spark jobs the build and exec phases start. Each query
   * runs `reps` times in one warm session (the first rep is the
   * codegen-compile pass; read the later reps); `total` is the query's
-  * cold-to-result wall time. With `planOutDir planSuffix`, the last
+  * cold-to-result wall time. A final line sums the last rep over the
+  * keys that finished it: build jobs, exec jobs, and the number of keys
+  * whose build ran no job. With `planOutDir planSuffix`, the last
   * rep's formatted plan, as planned before it runs, is written to
   * `<planOutDir>/<key>_<planSuffix>.txt` (the `plans/rNN/` evidence).
   * The session is [[GraftSession.local]], the Bench session, so the
@@ -58,6 +60,8 @@ object Dev {
       GraftBridge.drainListeners(spark.sparkContext)
       (a, secs, jobs.get - j0)
     }
+    // (build jobs, exec jobs) of each key's last rep, for the summary line
+    val lastRep = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     def measure(name: String): Unit = (1 to reps).foreach { rep =>
       val (df, tBuild, jBuild) = phase(SparkEntry.queries(name)(spark, sfDir))
       val (_, tPlan, _) = phase(df.queryExecution.executedPlan)
@@ -71,6 +75,7 @@ object Dev {
       println(f"[dev] $name rep$rep build=$tBuild%.3f plan=$tPlan%.3f " +
         f"exec=$tExec%.3f total=${tBuild + tPlan + tExec}%.3f " +
         s"jobs=$jBuild+$jExec")
+      if (rep == reps) lastRep += ((jBuild, jExec))
     }
     val failed = names.filter { name =>
       try { measure(name); false }
@@ -81,6 +86,9 @@ object Dev {
           true
       }
     }
+    println(s"[dev] rep$reps keys=${lastRep.size} " +
+      s"build_jobs=${lastRep.map(_._1).sum} exec_jobs=${lastRep.map(_._2).sum} " +
+      s"zero_build_keys=${lastRep.count(_._1 == 0)}")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[dev] failed: ${failed.mkString(",")}")

@@ -15,8 +15,13 @@ import org.apache.spark.sql.DataFrame
   *    die with them, and the lineage that could recompute them is cut;
   *    fast, and the right choice for one process.
   *
-  * Results are identical either way; `eager` is the caller's choice of
-  * materializing now (one job) or on the first action that reads it. */
+  * Results are identical either way. `eager = true` runs one job now
+  * that computes and stores the frame. `eager = false` is NOT free at
+  * the call: it builds the frame's RDD, and under adaptive execution (on
+  * by default) that runs every query stage below the frame's last
+  * exchange at once, 1 job over an aggregate and 2 over a join (0 and 1
+  * with AQE off). Only the final stage, and the storing, wait for the
+  * first action that reads the frame. */
 object Materialize {
   def apply(df: DataFrame, eager: Boolean): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)

@@ -284,7 +284,8 @@ object BpeOps {
   def readTokenizer(spark: org.apache.spark.sql.SparkSession,
                     path: String): (DataFrame, DataFrame) = {
     val p = path.stripSuffix("/")
-    (spark.read.parquet(s"$p/merges"), spark.read.parquet(s"$p/vocab"))
+    (graft.sources.Tables.parquet(spark, s"$p/merges"),
+      graft.sources.Tables.parquet(spark, s"$p/vocab"))
   }
 
   // ---------------------------------------------------------------

@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Output-layout helpers — the write side of the 100 TB contract.
   *
@@ -34,7 +36,7 @@ object Sinks {
 
   /** Read back a day-partitioned event layout. */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** The IVF index layout: embeddings partitioned by list id —
     * `path/label=N/part-*.parquet`. An `AnnOps.annIvf` probe over this
@@ -78,7 +80,7 @@ object Sinks {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes)
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(outPath)
     nFiles
@@ -95,7 +97,7 @@ object Sinks {
                          outPath: String, partitionCol: String,
                          maxRecordsPerFile: Long = 5000000L): Unit = {
     requireDistinctPaths(spark, inPath, outPath)
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(col(partitionCol))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
@@ -150,7 +152,12 @@ object Sinks {
     * Scale: cost ∝ touched partitions' bytes, not the corpus. The
     * touched-partition filter is a broadcast semi-join (partition values
     * are few); the replace is a key anti-join inside those partitions
-    * only. Returns the number of partition values rewritten.
+    * only. Returns the number of partition values rewritten, counted
+    * from the staging directory's `partitionCol=` listing.
+    *
+    * The layout is read with the partition column typed as in `updates`,
+    * not inferred from the directory names, so a string value that looks
+    * numeric (`007`) is merged into its own directory, not into `7`.
     *
     * Caller contract: `updates` carries ONE row per key (this is a
     * MERGE, not an append — two update rows for the same key would both
@@ -179,11 +186,14 @@ object Sinks {
       s"upsert: updates carry duplicate $keyCol ${dup.headOption.map(_.get(0))} " +
         "— a merge takes one row per key")
     val touched = updates.select(partitionCol).distinct()
+    val partitionSchema =
+      Some(StructType(Seq(updates.schema(partitionCol).copy(nullable = true))))
+    def layout = Tables.parquet(spark, path, partitionSchema)
     if (auditKeyMoves) {
       // opt-in full-layout check (reads key+partition columns only):
       // an update key alive OUTSIDE the touched partitions is a moved
       // key whose stale row this merge would strand
-      val stale = readPartitioned(spark, path)
+      val stale = layout
         .join(broadcast(touched), Seq(partitionCol), "left_anti")
         .join(broadcast(updates.select(keyCol).distinct()), Seq(keyCol), "left_semi")
         .select(col(keyCol), col(partitionCol))
@@ -194,7 +204,7 @@ object Sinks {
           s"${stale.headOption.map(_.get(1))}; include that partition's " +
           "rows in the update batch or delete the old row first")
     }
-    val existing = readPartitioned(spark, path)
+    val existing = layout
       .join(broadcast(touched), Seq(partitionCol), "left_semi")
     val merged = existing
       .join(broadcast(updates.select(keyCol).distinct()), Seq(keyCol), "left_anti")
@@ -202,15 +212,18 @@ object Sinks {
     merged.write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCol).parquet(staging)
-    val nTouched = spark.read.parquet(staging).select(partitionCol)
-      .distinct().count()
-    spark.read.parquet(staging)
+    val sp = new org.apache.hadoop.fs.Path(staging)
+    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirPrefix = ExternalCatalogUtils.escapePathName(partitionCol) + "="
+    val nTouched = fs.listStatus(sp)
+      .count(s => s.isDirectory && s.getPath.getName.startsWith(dirPrefix))
+      .toLong
+    Tables.parquetAs(spark, staging, merged.schema)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCol).parquet(path)
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+    fs.delete(sp, true)
     nTouched
   }
 

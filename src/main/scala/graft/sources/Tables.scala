@@ -1,13 +1,27 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
 
-/** Parquet table contract (see /root/repo/TESTDATA.md).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+
+/** Parquet table contract (see TESTDATA.md).
   *
-  * One parquet file-or-directory per table under a scale-factor dir. At
-  * cluster scale the same contract holds with partitioned directories —
-  * `spark.read.parquet` handles both, and Catalyst prunes partitions/columns
-  * from the declarative plan, so nothing here changes at 100 TB.
+  * One parquet file-or-directory per table under a scale-factor dir; at
+  * cluster scale the same contract holds with partitioned directories.
+  * Every parquet read in graft goes through [[parquet]]: it reads on the
+  * driver the one footer that `spark.read.parquet` would infer the schema
+  * from, and passes that schema to the reader. Inference gives the same
+  * schema but runs a Spark job (`mergeSchemasInParallel`) per read, and
+  * that job's fixed cost is most of a small query's build. With
+  * `spark.sql.parquet.mergeSchema` on, or no data file to read, it falls
+  * back to inference. Finding the footer costs one `listStatus` per
+  * directory level, never a listing of the whole tree, and Catalyst still
+  * prunes partitions and columns, so nothing here changes at 100 TB.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -22,7 +36,87 @@ object Tables {
     else raw(spark, dir, name)
 
   private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Read a parquet file or directory without a schema job.
+    *
+    * The data schema comes from the footer of the file that
+    * `ParquetUtils.inferSchema` reads when schemas are not merged,
+    * converted with `ParquetFileFormat.readSchemaFromFooter`
+    * and the session's `ParquetToSparkSchemaConverter`, so Spark's
+    * row-metadata key, `nanosAsLong`, `inferTimestampNTZ` and
+    * `binaryAsString` apply as they do in inference. Partition
+    * columns of a `col=value` layout are discovered from the listing as
+    * before and come last; `partitionSchema` types them instead of
+    * inference (a string column whose values look numeric, `007`, stays
+    * a string). Nothing is cached: each call reads its footer afresh.
+    *
+    * Falls back to `spark.read.parquet` (one schema job) when
+    * `spark.sql.parquet.mergeSchema` is on or no data file exists. */
+  def parquet(spark: SparkSession, path: String,
+              partitionSchema: Option[StructType] = None): DataFrame = {
+    val footer =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else footerSchema(spark, path)
+    (footer, partitionSchema) match {
+      case (None, None) => spark.read.parquet(path)
+      case _ =>
+        val data = footer.getOrElse(spark.read.parquet(path).schema)
+        val parts = partitionSchema.getOrElse(new StructType())
+        parquetAs(spark, path,
+          StructType(data.filterNot(f => parts.fieldNames.contains(f.name)) ++ parts))
+    }
+  }
+
+  /** Read a parquet file or directory with a schema the caller already
+    * holds (the frame that wrote it), so no footer is read either. */
+  private[graft] def parquetAs(spark: SparkSession, path: String,
+                               schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    schemaFile(root.getFileSystem(conf), root).map { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val meta = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
+
+  /** The file whose footer schema inference reads: `path` itself if it
+    * is a file; else a `_common_metadata`, then a `_metadata` summary;
+    * else the first data file in path order, skipping the names the
+    * file index hides (`_`/`.` prefixes other than `col=value`
+    * directories, `._COPYING_` files). Descends one directory level per
+    * `listStatus`. None when the path is missing or holds no data file. */
+  private def schemaFile(fs: FileSystem, path: Path): Option[FileStatus] =
+    try {
+      val status = fs.getFileStatus(path)
+      if (status.isFile) Some(status) else firstIn(fs, path)
+    } catch { case _: FileNotFoundException => None }
+
+  private def firstIn(fs: FileSystem, dir: Path): Option[FileStatus] = {
+    val listed = fs.listStatus(dir)
+    def summary(name: String) =
+      listed.find(c => c.isFile && c.getPath.getName == name)
+    summary(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(summary(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse {
+        val visible = listed.filterNot { c =>
+          val n = c.getPath.getName
+          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+            n.endsWith("._COPYING_")
+        }
+        // a directory's key is its name plus "/", the prefix of every
+        // path under it, so this order is the full-path order
+        visible.sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+          .iterator
+          .flatMap(c => if (c.isFile) Some(c) else firstIn(fs, c.getPath))
+          .nextOption()
+      }
+  }
 
   /** Spread a SMALL scan across the cluster before per-row-heavy work —
     * the guide-§2.5 input-skew fix (round 20). A scan whose split count

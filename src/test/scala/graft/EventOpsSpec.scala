@@ -214,7 +214,8 @@ class EventOpsSpec extends SparkSpec {
       val dir = SparkSpec.tempDir("graft_layout")
         .toFile.getAbsolutePath
       write(s"$dir/events.parquet")
-      val df = Tables.events(spark, dir)
+      val (df, jobs) = SparkSpec.jobsDuring(Tables.events(spark, dir))
+      assert(jobs == 0, "building the frame must start no job")
       assert(df.schema("ts").dataType == TimestampNTZType, df.schema.treeString)
       df.select("ts").collect().head
     }
@@ -233,6 +234,12 @@ class EventOpsSpec extends SparkSpec {
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(p))
     assert(fromTz.getAs[java.time.LocalDateTime]("ts") == t)
+    // current naive-micros (TIMESTAMP_NTZ) layout: passes through as stored
+    val fromNtz = readBack(p =>
+      Seq((1L, t, 42L, "click", 1.0, """{"k": 5}"""))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(p))
+    assert(fromNtz.getAs[java.time.LocalDateTime]("ts") == t)
   }
 
   test("funnel generalizes: 2-step and 4-step chains stay consistent") {

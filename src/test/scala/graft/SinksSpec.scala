@@ -227,6 +227,36 @@ class SinksSpec extends SparkSpec {
     assert(e.getMessage.contains("duplicate"))
   }
 
+  test("upsertPartitioned keeps string partition values that look numeric") {
+    import spark.implicits._
+    val path = SparkSpec.tempDir("graft_upsert_str")
+      .toFile.getAbsolutePath
+    Sinks.writePartitionedBy(Seq(
+      (1L, "one", "007"), (2L, "two", "007"), (3L, "three", "010")
+    ).toDF("doc_id", "text", "source"), path, "source")
+    val updates = Seq((1L, "one-v2", "007"), (5L, "five", "007"))
+      .toDF("doc_id", "text", "source")
+    assert(Sinks.upsertPartitioned(spark, updates, path, "source", "doc_id") == 1L)
+    assert(new java.io.File(path).list().filter(_.startsWith("source=")).toSet ==
+      Set("source=007", "source=010"))
+    val after = spark.read.schema("doc_id LONG, text STRING, source STRING")
+      .parquet(path).as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    assert(after == Seq((1L, "one-v2", "007"), (2L, "two", "007"),
+      (3L, "three", "010"), (5L, "five", "007")))
+  }
+
+  test("upsertPartitioned counts the partitions of a column whose name is escaped") {
+    import spark.implicits._
+    val path = SparkSpec.tempDir("graft_upsert_esc")
+      .toFile.getAbsolutePath
+    Sinks.writePartitionedBy(Seq((1L, "a", "x"), (2L, "b", "y"))
+      .toDF("doc_id", "text", "src:id"), path, "src:id")
+    assert(new java.io.File(path).list().toSet.contains("src%3Aid=x"))
+    val updates = Seq((1L, "a2", "x"), (3L, "c", "z"))
+      .toDF("doc_id", "text", "src:id")
+    assert(Sinks.upsertPartitioned(spark, updates, path, "src:id", "doc_id") == 2L)
+  }
+
   test("upsertPartitioned auditKeyMoves catches a key moving partitions") {
     import spark.implicits._
     val path = SparkSpec.tempDir("graft_upsert_mv")

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.GraftBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,6 +21,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession =
     GraftSession.local(4, warehouseDir = Some("/tmp/graft_test_warehouse"))
+
+  private lazy val jobsStarted: AtomicInteger = {
+    val n = new AtomicInteger
+    session.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    })
+    n
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it ran; the
+    * listener bus is drained on both sides, so the count is complete. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = session.sparkContext
+    val counter = jobsStarted
+    GraftBridge.drainListeners(sc)
+    val before = counter.get
+    val a = f
+    GraftBridge.drainListeners(sc)
+    (a, counter.get - before)
+  }
 
   private val tempDirs = new ConcurrentLinkedQueue[Path]()
   private lazy val deleteOnExit: Unit = {
