@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Materialize
+import graft.plans.HttpCodec
 
 /** Crawl-politeness + frontier discovery — the two steps that close the
   * crawl loop the round-10 estate built (WARC fetch → HTML extraction →
@@ -434,18 +435,11 @@ object CrawlOps {
     * comparison convention), keyed on the canonical URL. No body
     * decode — a freshness sweep must not pay the full ingest price. */
   def headerSignalsOf(records: DataFrame): DataFrame = {
-    val blank = "(?s)\\r?\\n\\r?\\n"
     records.filter(col("warc_type") === "response")
-      .withColumn("_l1", decode(col("payload"), "ISO-8859-1"))
-      .withColumn("_hdr",
-        when(regexp_extract(col("_l1"), blank, 0) === "", col("_l1"))
-          .otherwise(regexp_extract(col("_l1"), s"(?s)^(.*?)\\r?\\n\\r?\\n", 1)))
-      .withColumn("_lm", regexp_extract(col("_hdr"),
-        "(?im)^last-modified:([^\\r\\n]*)", 1))
-      .withColumn("lastmod", to_date(try_to_timestamp(
-        regexp_extract(col("_lm"),
-          "([0-9]{1,2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2})", 1),
-        lit("d MMM yyyy HH:mm:ss")).cast("timestamp")).cast("string"))
+      .withColumn("_hdr", HttpCodec.header(col("payload")))
+      .withColumn("lastmod", to_date(HttpCodec.date(
+        HttpCodec.field(col("_hdr"), "last-modified")).cast("timestamp"))
+        .cast("string"))
       .filter(col("lastmod").isNotNull)
       .select(UrlOps.canonIdn(col("target_uri")).as("canon_url"),
         col("lastmod"))
@@ -460,19 +454,14 @@ object CrawlOps {
     * (no anchor to count from — conservative). Same latin-1 header
     * split as [[headerSignalsOf]]; no body decode. */
   def expiresSignalsOf(records: DataFrame): DataFrame = {
-    val blank = "(?s)\\r?\\n\\r?\\n"
-    val imf = "([0-9]{1,2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2})"
-    def httpDate(hdr: Column, name: String): Column = try_to_timestamp(
-      regexp_extract(regexp_extract(hdr,
-        s"(?im)^$name:([^\\r\\n]*)", 1), imf, 1),
-      lit("d MMM yyyy HH:mm:ss"))
+    def httpDate(hdr: Column, name: String): Column =
+      HttpCodec.date(HttpCodec.field(hdr, name))
     records.filter(col("warc_type") === "response")
-      .withColumn("_l1", decode(col("payload"), "ISO-8859-1"))
-      .withColumn("_hdr",
-        when(regexp_extract(col("_l1"), blank, 0) === "", col("_l1"))
-          .otherwise(regexp_extract(col("_l1"), s"(?s)^(.*?)\\r?\\n\\r?\\n", 1)))
-      .withColumn("_maxage", regexp_extract(col("_hdr"),
-        "(?im)^cache-control:[^\\r\\n]*?max-age=([0-9]+)", 1))
+      .withColumn("_hdr", HttpCodec.header(col("payload")))
+      // repeated Cache-Control fields are one comma list (RFC 9110 §5.3)
+      .withColumn("_maxage", regexp_extract(
+        array_join(HttpCodec.fields(col("_hdr"), "cache-control"), ","),
+        "max-age=([0-9]+)", 1))
       .withColumn("_date", httpDate(col("_hdr"), "date"))
       .withColumn("expires",
         when(col("_maxage") =!= "" && col("_date").isNotNull,
@@ -493,17 +482,11 @@ object CrawlOps {
     * A corpus builder must drop noindex rows from BOTH routes before
     * any content operator runs. */
   def xRobotsOf(records: DataFrame): DataFrame = {
-    val blank = "(?s)\\r?\\n\\r?\\n"
-    val hdr = when(
-      regexp_extract(decode(col("payload"), "ISO-8859-1"), blank, 0) === "",
-      decode(col("payload"), "ISO-8859-1"))
-      .otherwise(regexp_extract(decode(col("payload"), "ISO-8859-1"),
-        s"(?s)^(.*?)\\r?\\n\\r?\\n", 1))
     // ALL occurrences: one X-Robots-Tag per directive is the common
     // server shape, so a single-extract reader misses a noindex in the
     // second header
-    val tags = regexp_extract_all(hdr,
-      lit("(?im)^x-robots-tag:[ \\t]*([^\\r\\n]*)"), lit(1))
+    val tags =
+      HttpCodec.fields(HttpCodec.header(col("payload")), "x-robots-tag")
     val (noidx, nofollow) = HtmlOps.robotsTokenFlagsAll(tags)
     records.filter(col("warc_type") === "response")
       .select(UrlOps.canonIdn(col("target_uri")).as("canon_url"),
@@ -517,28 +500,20 @@ object CrawlOps {
     * `mojibake_risk` is the dangerous direction — binary content
     * behind a text-prefixed (or missing) declaration, exactly the lie the
     * ingest media-type gate cannot see (it trusts the header) and the
-    * one that would decode into mojibake. The body offset comes from
-    * the latin-1 header split (byte↔char 1:1, so the char position IS
-    * the byte position) and only the first 512 body bytes ride the
-    * sniff — row-level, codegen'd, zero shuffles. */
+    * one that would decode into mojibake. Both sides read through
+    * [[HttpCodec]] (the declaration from the header block only) and
+    * only the first 512 body bytes ride the sniff — row-level,
+    * codegen'd, zero shuffles. */
   def sniffedTypesOf(records: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(records.sparkSession)
-    val l1 = decode(col("payload"), "ISO-8859-1")
-    val p1 = instr(l1, "\r\n\r\n")
-    val p2 = instr(l1, "\n\n")
-    val big = lit(Int.MaxValue)
-    val bodyStart = least(
-      coalesce(nullif(p1, lit(0)) + 4, big),
-      coalesce(nullif(p2, lit(0)) + 2, big))
-    val declared = lower(regexp_extract(l1,
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1))
+    val declared = HttpCodec.declaredMime(HttpCodec.header(col("payload")))
+    // an empty body (none, or no blank line) sniffs as octet-stream
     val sniffed = call_function("magic_mime",
-      substring(col("payload"), bodyStart, lit(512)))
+      substring(HttpCodec.body(col("payload")), 1, 512))
     records.filter(col("warc_type") === "response")
       .select(UrlOps.canonIdn(col("target_uri")).as("canon_url"),
         nullif(declared, lit("")).as("declared_mime"),
-        when(bodyStart < big, sniffed)
-          .otherwise(lit("application/octet-stream")).as("sniffed_mime"))
+        sniffed.as("sniffed_mime"))
       .withColumn("mismatch",
         col("declared_mime").isNotNull &&
           col("declared_mime") =!= col("sniffed_mime"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Materialize
 import graft.functions.TextFuns
+import graft.plans.HttpCodec
 
 /** HTML text extraction — the WARC → documents bridge (the trafilatura
   * slot of a from-the-web pipeline): strip script/style/comment blocks,
@@ -49,7 +50,7 @@ object HtmlOps {
     * soup in the footer; `&`/`<` in the body text entity-escaped), so the
     * extraction chain is exercised on every rule and the output is
     * oracle-hashable. Left = literal chunk, Right = per-row expression
-    * key (resolved per engine below). */
+    * key ([[synthKey]]). */
   private val HtmlParts: Seq[Either[String, String]] = Seq(
     Left("<html><head><title>"), Right("source"),
     Left(" page</title><style type=\"text/css\">body { margin: 0; }</style>" +
@@ -63,31 +64,59 @@ object HtmlOps {
       " &hellip; &copy; 2026 &trade; 5&deg; 3&frac12;&euro;" +
       " &unknown; &amp;#38; &#0; done</footer></body></html>"))
 
+  /** The per-row keys of the synthetic page templates (`HtmlParts`,
+    * `MainParts`, `MetaParts`, `MediaParts`, `ImgParts`), each as its
+    * Column face and its DuckDB-SQL face over a documents row. Both
+    * faces of a key give the same string, so both engines build the same
+    * page bytes. */
+  private def synthKey(key: String): (Column, String) = {
+    def mod(n: Int) =
+      ((col("doc_id") % n).cast("string"), s"CAST(doc_id % $n AS VARCHAR)")
+    key match {
+      case "source" => (col("source"), "source")
+      case "id" => (col("doc_id").cast("string"), "CAST(doc_id AS VARCHAR)")
+      case "host" => (concat(col("source"), lit(".example.com")),
+        "(source || '.example.com')")
+      case "escaped" => (replace(replace(col("text"), lit("&"), lit("&amp;")),
+        lit("<"), lit("&lt;")),
+        "replace(replace(text, '&', '&amp;'), '<', '&lt;')")
+      case "m3" => mod(3)
+      case "m5" => mod(5)
+      case "m7" => mod(7)
+      case "m7b" => (((col("doc_id") + 3) % 7).cast("string"),
+        "CAST((doc_id + 3) % 7 AS VARCHAR)")
+      case "m9" => mod(9)
+      case "m11" => mod(11)
+      case other => throw new IllegalArgumentException(other)
+    }
+  }
+
+  /** A synthetic page template rendered as a Column. */
+  private def synthPage(parts: Seq[Either[String, String]]): Column =
+    concat(parts.map {
+      case Left(s) => lit(s)
+      case Right(k) => synthKey(k)._1
+    }: _*)
+
+  /** A synthetic page template rendered as a DuckDB-SQL expression. */
+  private def synthPageSql(parts: Seq[Either[String, String]]): String =
+    parts.map {
+      case Left(s) => TextFuns.sqlLit(s)
+      case Right(k) => synthKey(k)._2
+    }.mkString(" || ")
+
   /** §2-119 `q_html_extract`: the extraction core under the oracle —
     * deterministic synthetic HTML per document (the corpus has no raw
     * HTML; both engines wrap the text identically), then the full strip/
     * decode/collapse chain, emitting the extracted text and its length.
     * Pure map: no shuffle, one scan, WholeStageCodegen end to end. */
-  /** The deterministic synthetic page as a Column (both engines build the
-    * same bytes — see [[HtmlParts]]). */
-  private def synthHtml: Column = {
-    val escaped = replace(replace(col("text"), lit("&"), lit("&amp;")),
-      lit("<"), lit("&lt;"))
-    concat(HtmlParts.map {
-      case Left(s) => lit(s)
-      case Right("source") => col("source")
-      case Right("id") => col("doc_id").cast("string")
-      case Right("escaped") => escaped
-      case Right(other) => throw new IllegalArgumentException(other)
-    }: _*)
-  }
-
   def htmlExtract(documents: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(documents.sparkSession)
     // spread a small scan before the fused extraction pass (guide §2.5)
     graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("source"), col("text")))
-      .select(col("doc_id"), extractText(synthHtml).as("text_extracted"))
+      .select(col("doc_id"),
+        extractText(synthPage(HtmlParts)).as("text_extracted"))
       .withColumn("n_chars_extracted", length(col("text_extracted")).cast("long"))
       .orderBy("doc_id")
   }
@@ -118,7 +147,8 @@ object HtmlOps {
     // expensive fused native pass) runs once per branch
     val segs = graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("source"), col("text")))
-      .select(col("doc_id"), extractText(synthHtml).as("text_extracted"))
+      .select(col("doc_id"),
+        extractText(synthPage(HtmlParts)).as("text_extracted"))
       .select(col("doc_id"), posexplode(segArr).as(Seq("seg_pos", "seg")))
       .transform(Materialize(_, eager = false))
     val blocklist = segs
@@ -169,9 +199,8 @@ object HtmlOps {
     *    back to an HTML META SNIFF (`<meta charset=…>` /
     *    `http-equiv=Content-Type`, first KB of the decoded body — the
     *    real web's most common layout is a header with no charset and a
-    *    meta that has one) — the byte-level header/body split rides a
-    *    bijective ISO-8859-1 decode (every byte ↔ one char), the body
-    *    re-encodes to its true bytes, and the resolved charset picks the
+    *    meta that has one) — the header/body split is [[HttpCodec]]'s
+    *    (the body stays its true bytes), and the resolved charset picks the
     *    decode branch: utf-8 default; iso-8859-1/latin-1; us-ascii;
     *    windows-1252 (the most common non-UTF-8 web charset — decoded
     *    EXACTLY via the latin-1 bijection + the 27-char 0x80–0x9F
@@ -219,27 +248,16 @@ object HtmlOps {
     * scan, zero shuffles); parallelism stays per-WARC-file. */
   def warcToDocuments(records: DataFrame): (DataFrame, DataFrame) = {
     graft.plans.GraftFunctions.register(records.sparkSession)
-    val blank = "(?s)\\r?\\n\\r?\\n"
-    val l1 = decode(col("payload"), "ISO-8859-1")
     val resp = records.filter(col("warc_type") === "response")
-      .withColumn("_l1", l1)
-      .withColumn("_hdr",
-        when(regexp_extract(col("_l1"), blank, 0) === "", col("_l1"))
-          .otherwise(regexp_extract(col("_l1"), s"(?s)^(.*?)\\r?\\n\\r?\\n", 1)))
-      .withColumn("_body_l1",
-        when(regexp_extract(col("_l1"), blank, 0) === "", lit(""))
-          .otherwise(regexp_replace(col("_l1"), s"(?s)^.*?\\r?\\n\\r?\\n", "")))
-      .withColumn("http_status",
-        regexp_extract(col("_hdr"), "^HTTP/[0-9.]+ ([0-9]{3})", 1).cast("int"))
-      .withColumn("_cs", lower(regexp_extract(col("_hdr"),
-        "(?im)^content-type:[^\\r\\n]*?charset=\"?([a-zA-Z0-9_.:-]+)", 1)))
+      .withColumn("_hdr", HttpCodec.header(col("payload")))
+      .withColumn("http_status", HttpCodec.status(col("_hdr")))
+      .withColumn("_cs", HttpCodec.declaredCharset(col("_hdr")))
       // media-type gate: a non-text body (image/pdf/octet-stream) must
       // never charset-decode into the corpus — a latin-1-declared JPEG
       // "decodes" successfully into pure mojibake. text/*, the XHTML/XML
       // application types, and a MISSING Content-Type (old servers; the
       // charset sniff handles those) stay on the text route.
-      .withColumn("_mime", lower(trim(regexp_extract(col("_hdr"),
-        "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1))))
+      .withColumn("_mime", HttpCodec.declaredMime(col("_hdr")))
       .withColumn("_ct_bad",
         col("_mime") =!= "" &&
           !col("_mime").startsWith("text/") &&
@@ -248,8 +266,8 @@ object HtmlOps {
       // must be final), so match chunked ANYWHERE in the value; any OTHER
       // non-identity coding in the list is undecodable row-level today →
       // its own quarantine reason below, never mojibake in the clean route
-      .withColumn("_te", lower(regexp_extract(col("_hdr"),
-        "(?im)^transfer-encoding:([^\\r\\n]*)", 1)))
+      .withColumn("_te",
+        lower(HttpCodec.field(col("_hdr"), "transfer-encoding")))
       .withColumn("_chunked", col("_te").rlike("\\bchunked\\b"))
       .withColumn("_te_other",
         regexp_replace(col("_te"), "\\bchunked\\b|\\bidentity\\b|[\\s,]", "") =!= "")
@@ -257,13 +275,13 @@ object HtmlOps {
       // decodes via the zstd-jni route Spark already ships (round 14);
       // any other non-identity coding (br/unknown) is undecodable
       // row-level today → quarantine, never mojibake in the clean route
-      .withColumn("_ce", lower(trim(regexp_extract(col("_hdr"),
-        "(?im)^content-encoding:([^\\r\\n]*)", 1))))
+      .withColumn("_ce",
+        lower(trim(HttpCodec.field(col("_hdr"), "content-encoding"))))
       .withColumn("_ce_gz", col("_ce").isin("gzip", "x-gzip", "deflate"))
       .withColumn("_ce_zstd", col("_ce") === "zstd")
       .withColumn("_ce_bad",
         !col("_ce").isin("", "identity") && !col("_ce_gz") && !col("_ce_zstd"))
-      .withColumn("_raw0", encode(col("_body_l1"), "ISO-8859-1"))
+      .withColumn("_raw0", HttpCodec.body(col("payload")))
       // wire-format order: TE framing wraps the CE-compressed entity, so
       // de-chunk FIRST (byte-level, charset-independent; null = malformed
       // framing → quarantine), THEN inflate the entity body
@@ -393,10 +411,7 @@ object HtmlOps {
     // with sitemap lastmods (CrawlOps.headerSignals' real face). The
     // RFC 9110 IMF-fixdate also lands as a DATE (weekday/zone dropped —
     // Spark's parser takes neither; fixdate is always GMT).
-    val lmDate = to_date(try_to_timestamp(
-      regexp_extract(col("_lm"),
-        "([0-9]{1,2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2})", 1),
-      lit("d MMM yyyy HH:mm:ss")))
+    val lmDate = to_date(HttpCodec.date(col("_lm")))
     // <link rel="canonical"> (round 16): the SITE-DECLARED identity,
     // honored BEFORE any content dedup runs (real pipelines do — a
     // ?ref= variant and its /print twin both point at one canonical).
@@ -432,8 +447,8 @@ object HtmlOps {
           hostOf(col("canonical_url")) === hostOf(col("_fetch_url")),
           col("canonical_url"))
           .otherwise(col("_fetch_url")))
-      .withColumn("_lm", nullif(trim(regexp_extract(col("_hdr"),
-        "(?im)^last-modified:([^\\r\\n]*)", 1)), lit("")))
+      .withColumn("_lm",
+        nullif(trim(HttpCodec.field(col("_hdr"), "last-modified")), lit("")))
       // page-level robots directives (round 16 continuation): meta
       // robots from the head sniff window (it lives in <head> by spec,
       // the rel=canonical slot) ∪ X-Robots-Tag from the header block —
@@ -442,8 +457,7 @@ object HtmlOps {
       .withColumn("_rb_meta", metaField(col("_sniff"), "name", "robots"))
       // ALL X-Robots-Tag occurrences: one header per directive is the
       // common server shape, so flags must OR across them
-      .withColumn("_rb_hdr", regexp_extract_all(col("_hdr"),
-        lit("(?im)^x-robots-tag:[ \\t]*([^\\r\\n]*)"), lit(1)))
+      .withColumn("_rb_hdr", HttpCodec.fields(col("_hdr"), "x-robots-tag"))
       .select(
         xxhash64(col("url")).as("doc_id"),
         col("url"),
@@ -453,8 +467,7 @@ object HtmlOps {
         col("warc_date").as("fetch_date"),
         col("_lm").as("last_modified"),
         lmDate.as("last_modified_date"),
-        nullif(trim(regexp_extract(col("_hdr"),
-          "(?im)^etag:([^\\r\\n]*)", 1)), lit("")).as("etag"),
+        nullif(trim(HttpCodec.field(col("_hdr"), "etag")), lit("")).as("etag"),
         // the WARC-layer payload digest (round 15) — the prior-capture
         // side `revisit` records compare against (revisitChurn)
         nullif(col("payload_digest"), lit("")).as("payload_digest"),
@@ -545,27 +558,6 @@ object HtmlOps {
     Left("</a></div><p>Deterministic closing paragraph with plenty of " +
       "ordinary words here.</p></body></html>"))
 
-  private def mainSynthPage: Column = {
-    val escaped = replace(replace(col("text"), lit("&"), lit("&amp;")),
-      lit("<"), lit("&lt;"))
-    concat(MainParts.map {
-      case Left(s) => lit(s)
-      case Right("escaped") => escaped
-      case Right("m7") => (col("doc_id") % 7).cast("string")
-      case Right("m7b") => ((col("doc_id") + 3) % 7).cast("string")
-      case Right(other) => throw new IllegalArgumentException(other)
-    }: _*)
-  }
-
-  private def mainSynthPageSql: String = MainParts.map {
-    case Left(s) => TextFuns.sqlLit(s)
-    case Right("escaped") =>
-      "replace(replace(text, '&', '&amp;'), '<', '&lt;')"
-    case Right("m7") => "CAST(doc_id % 7 AS VARCHAR)"
-    case Right("m7b") => "CAST((doc_id + 3) % 7 AS VARCHAR)"
-    case Right(other) => throw new IllegalArgumentException(other)
-  }.mkString(" || ")
-
   /** §2 `q_main_content`: per-page MAIN-CONTENT extraction — the
     * link-density / text-density segment scorer
     * ([[graft.plans.MainContent]], the boilerpipe core) under the
@@ -582,7 +574,7 @@ object HtmlOps {
     graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("text")))
       .select(col("doc_id"),
-        call_function("main_content", mainSynthPage).as("main_text"))
+        call_function("main_content", synthPage(MainParts)).as("main_text"))
       .withColumn("n_chars_main", length(col("main_text")).cast("long"))
       .orderBy("doc_id")
   }
@@ -597,20 +589,14 @@ object HtmlOps {
     * [[CrawlOps.redirectResolve]] / [[CrawlOps.frontierCore]] — the
     * enqueue path `q_redirects` grades on the synthetic twin. Pure
     * row-level header extraction — one scan, zero shuffles, the same
-    * latin-1 split discipline as [[warcToDocuments]]. */
+    * [[HttpCodec]] header read as [[warcToDocuments]]. */
   def redirectsOf(records: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(records.sparkSession)
-    val blank = "(?s)\\r?\\n\\r?\\n"
     records.filter(col("warc_type") === "response")
-      .withColumn("_l1", decode(col("payload"), "ISO-8859-1"))
-      .withColumn("_hdr",
-        when(regexp_extract(col("_l1"), blank, 0) === "", col("_l1"))
-          .otherwise(regexp_extract(col("_l1"), s"(?s)^(.*?)\\r?\\n\\r?\\n", 1)))
-      .withColumn("http_status",
-        regexp_extract(col("_hdr"), "^HTTP/[0-9.]+ ([0-9]{3})", 1).cast("int"))
+      .withColumn("_hdr", HttpCodec.header(col("payload")))
+      .withColumn("http_status", HttpCodec.status(col("_hdr")))
       .filter(col("http_status").between(300, 399))
-      .withColumn("_loc", regexp_extract(col("_hdr"),
-        "(?im)^location:[ \\t]*([^\\r\\n]+)", 1))
+      .withColumn("_loc", HttpCodec.field(col("_hdr"), "location"))
       .filter(col("_loc") =!= "")
       .withColumn("dst_url",
         UrlOps.canonIdn(UrlOps.resolve(col("target_uri"), col("_loc"))))
@@ -664,6 +650,17 @@ object HtmlOps {
       lit("/\">one again</a></p></body></html>"))
   }
 
+  /** The URL a page's relative references resolve against, over
+    * (page_url, html): the first `<base href>` resolved against the page
+    * URL, else the page URL itself. */
+  private def effBase: Column = {
+    val baseHref = regexp_extract(col("html"),
+      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
+    coalesce(
+      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
+      col("page_url"))
+  }
+
   /** Outlinks of REAL crawled pages — the general (page_url, html) face
     * of the link-extraction stage: pull `<base href>` (first one wins;
     * resolved against the page like any href), pull every `<a href>`
@@ -676,11 +673,6 @@ object HtmlOps {
     * HTML. Row-level extract + ONE distinct shuffle on (page, url). */
   def linksOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .select(col("page_url"), effBase.as("_base"),
         explode(regexp_extract_all(col("html"),
@@ -705,11 +697,6 @@ object HtmlOps {
   def feedLinksOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
     val ws = "[ \\t\\n\\f\\r]*"
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .select(col("page_url"), effBase.as("_base"),
         explode(regexp_extract_all(col("html"),
@@ -742,11 +729,6 @@ object HtmlOps {
     * face exists for the text. Row-level extract, zero shuffles. */
   def anchorsOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .select(col("page_url"), effBase.as("_base"),
         explode(regexp_extract_all(col("html"),
@@ -909,11 +891,6 @@ object HtmlOps {
     * fuses into the ingest scan. */
   def metaOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     val ogImg = UrlOps.canonIdn(UrlOps.resolve(effBase,
       metaField(col("html"), "property", "og:image")))
     pages.select(col("page_url"),
@@ -946,11 +923,6 @@ object HtmlOps {
     * so the sink's WARC-Date contract keeps working. */
   def watOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     val ogImg = UrlOps.canonIdn(UrlOps.resolve(col("_base"),
       metaField(col("html"), "property", "og:image")))
     val links = filter(
@@ -999,25 +971,6 @@ object HtmlOps {
     Left("7.jpg\">"),
     Left("</head><body><p>body</p></body></html>"))
 
-  private def metaSynthPage: Column =
-    concat(MetaParts.map {
-      case Left(s) => lit(s)
-      case Right("m9") => (col("doc_id") % 9).cast("string")
-      case Right("m7") => (col("doc_id") % 7).cast("string")
-      case Right("m11") => (col("doc_id") % 11).cast("string")
-      case Right("m5") => (col("doc_id") % 5).cast("string")
-      case Right(other) => throw new IllegalArgumentException(other)
-    }: _*)
-
-  private def metaSynthPageSql: String = MetaParts.map {
-    case Left(s) => TextFuns.sqlLit(s)
-    case Right("m9") => "CAST(doc_id % 9 AS VARCHAR)"
-    case Right("m7") => "CAST(doc_id % 7 AS VARCHAR)"
-    case Right("m11") => "CAST(doc_id % 11 AS VARCHAR)"
-    case Right("m5") => "CAST(doc_id % 5 AS VARCHAR)"
-    case Right(other) => throw new IllegalArgumentException(other)
-  }.mkString(" || ")
-
   /** §2 `q_meta_og`: head-metadata extraction under the oracle — the
     * synthetic head universe through the SAME field extractors as
     * [[metaOf]] (attribute-order pair, quote styles, whitespace
@@ -1032,7 +985,7 @@ object HtmlOps {
     graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("source")))
       .select(col("doc_id"), pageUrl.as("page_url"),
-        metaSynthPage.as("html"))
+        synthPage(MetaParts).as("html"))
       .select(col("doc_id"),
         titleOf(col("html")).as("title"),
         metaField(col("html"), "name", "description")
@@ -1123,11 +1076,6 @@ object HtmlOps {
     val ws = "[ \\t\\n\\f\\r]*"
     val pageNofollow =
       robotsTokenFlags(metaField(col("html"), "name", "robots"))._2
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .filter(!pageNofollow)
       .select(col("page_url"), effBase.as("_base"),
@@ -1189,11 +1137,6 @@ object HtmlOps {
   private[graft] def nextEdgesOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
     val ws = "[ \\t\\n\\f\\r]*"
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .select(col("page_url"), effBase.as("_base"),
         explode(regexp_extract_all(col("html"),
@@ -1350,11 +1293,6 @@ object HtmlOps {
     * shuffles. */
   def jsonLdOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     val img = UrlOps.canonIdn(UrlOps.resolve(col("_base"),
       col("_j.image")))
     pages
@@ -1426,11 +1364,6 @@ object HtmlOps {
   def hreflangOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
     val ws = "[ \\t\\n\\f\\r]*"
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     pages
       .select(col("page_url"), effBase.as("_base"),
         explode(regexp_extract_all(col("html"),
@@ -1610,11 +1543,6 @@ object HtmlOps {
     * fetch-log joins. */
   def imagePairsOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     imgTagsOf(pages.withColumn("_base", effBase), Seq("page_url", "_base"))
       .select(col("page_url"),
         UrlOps.canonIdn(UrlOps.resolve(col("_base"), col("src")))
@@ -1641,11 +1569,6 @@ object HtmlOps {
     * surface); row-level extract + ONE distinct shuffle. */
   def mediaPairsOf(pages: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(pages.sparkSession)
-    val baseHref = regexp_extract(col("html"),
-      "(?i)<base[^>]*href\\s*=\\s*[\"']([^\"'>]+)", 1)
-    val effBase = coalesce(
-      when(baseHref =!= "", UrlOps.resolve(col("page_url"), baseHref)),
-      col("page_url"))
     mediaSrcOf(pages.withColumn("_base", effBase), Seq("page_url", "_base"))
       .select(col("page_url"),
         UrlOps.canonIdn(UrlOps.resolve(col("_base"), col("src")))
@@ -1708,23 +1631,6 @@ object HtmlOps {
       "<audio src=\"data:audio/wav;base64,AAAA\" title=\"x\"></audio>" +
       "</body></html>"))
 
-  private def mediaSynthPage: Column =
-    concat(MediaParts.map {
-      case Left(s) => lit(s)
-      case Right("m7") => (col("doc_id") % 7).cast("string")
-      case Right("m9") => (col("doc_id") % 9).cast("string")
-      case Right("m5") => (col("doc_id") % 5).cast("string")
-      case Right(other) => throw new IllegalArgumentException(other)
-    }: _*)
-
-  private def mediaSynthPageSql: String = MediaParts.map {
-    case Left(s) => TextFuns.sqlLit(s)
-    case Right("m7") => "CAST(doc_id % 7 AS VARCHAR)"
-    case Right("m9") => "CAST(doc_id % 9 AS VARCHAR)"
-    case Right("m5") => "CAST(doc_id % 5 AS VARCHAR)"
-    case Right(other) => throw new IllegalArgumentException(other)
-  }.mkString(" || ")
-
   /** The synthetic media universe as (doc_id, page_url, html) — shared
     * by `q_media_pairs` and `q_media_dataset`. */
   private def mediaSynthPages(documents: DataFrame): DataFrame = {
@@ -1736,7 +1642,7 @@ object HtmlOps {
     graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("source")))
       .select(col("doc_id"), pageUrl.as("page_url"),
-        mediaSynthPage.as("html"))
+        synthPage(MediaParts).as("html"))
   }
 
   /** §2 `q_media_pairs`: media-source mining under the oracle — the
@@ -1984,31 +1890,6 @@ object HtmlOps {
     Left("\"><img src=\"//cdn."), Right("host"), Left("/shared/d"),
     Right("m11"), Left(".png\" alt=\"\"></body></html>"))
 
-  private def imgSynthPage: Column = {
-    val host = concat(col("source"), lit(".example.com"))
-    concat(ImgParts.map {
-      case Left(s) => lit(s)
-      case Right("m7") => (col("doc_id") % 7).cast("string")
-      case Right("m9") => (col("doc_id") % 9).cast("string")
-      case Right("m5") => (col("doc_id") % 5).cast("string")
-      case Right("m3") => (col("doc_id") % 3).cast("string")
-      case Right("m11") => (col("doc_id") % 11).cast("string")
-      case Right("host") => host
-      case Right(other) => throw new IllegalArgumentException(other)
-    }: _*)
-  }
-
-  private def imgSynthPageSql: String = ImgParts.map {
-    case Left(s) => TextFuns.sqlLit(s)
-    case Right("m7") => "CAST(doc_id % 7 AS VARCHAR)"
-    case Right("m9") => "CAST(doc_id % 9 AS VARCHAR)"
-    case Right("m5") => "CAST(doc_id % 5 AS VARCHAR)"
-    case Right("m3") => "CAST(doc_id % 3 AS VARCHAR)"
-    case Right("m11") => "CAST(doc_id % 11 AS VARCHAR)"
-    case Right("host") => "(source || '.example.com')"
-    case Right(other) => throw new IllegalArgumentException(other)
-  }.mkString(" || ")
-
   /** §2 `q_image_pairs`: image-text pair mining under the oracle — the
     * synthetic gallery page rides the SAME [[imgTagsOf]] core as the
     * real face, then resolve → [[UrlOps.canon]] (the oracle-shared
@@ -2026,7 +1907,7 @@ object HtmlOps {
     graft.sources.Tables.spread(
       documents.select(col("doc_id"), col("source")))
       .select(col("doc_id"), pageUrl.as("page_url"),
-        imgSynthPage.as("html"))
+        synthPage(ImgParts).as("html"))
   }
 
   def imagePairs(documents: DataFrame): DataFrame = {
@@ -2090,7 +1971,7 @@ object HtmlOps {
     s"""p AS (
        |  SELECT doc_id,
        |    'http://' || source || '.example.com/media/' || CAST(doc_id % 50 AS VARCHAR) || '/page.html' AS page_url,
-       |    $mediaSynthPageSql AS html
+       |    ${synthPageSql(MediaParts)} AS html
        |  FROM documents
        |), bl AS (
        |  SELECT doc_id, page_url,
@@ -2142,7 +2023,7 @@ object HtmlOps {
     s"""p AS (
        |  SELECT doc_id,
        |    'http://' || source || '.example.com/gal/' || CAST(doc_id % 50 AS VARCHAR) || '/page.html' AS page_url,
-       |    $imgSynthPageSql AS html
+       |    ${synthPageSql(ImgParts)} AS html
        |  FROM documents
        |), sc AS (
        |  SELECT doc_id, page_url,
@@ -2307,7 +2188,7 @@ object HtmlOps {
          |  SELECT doc_id,
          |    'http://' || source || '.example.com/m/' ||
          |      CAST(doc_id % 50 AS VARCHAR) || '/page.html' AS page_url,
-         |    $metaSynthPageSql AS html
+         |    ${synthPageSql(MetaParts)} AS html
          |  FROM documents
          |)
          |SELECT doc_id, $titleSql AS title,
@@ -2319,7 +2200,7 @@ object HtmlOps {
          |FROM h ORDER BY doc_id""".stripMargin,
     "q_main_content" ->
       s"""WITH h AS (
-         |  SELECT doc_id, $mainSynthPageSql AS html FROM documents
+         |  SELECT doc_id, ${synthPageSql(MainParts)} AS html FROM documents
          |)
          |SELECT doc_id,
          |  ${graft.plans.MainContent.extractSql("html")} AS main_text,
@@ -2449,7 +2330,7 @@ object HtmlOps {
          |FROM agg ORDER BY dhash""".stripMargin,
     "q_html_extract" ->
       s"""WITH h AS (
-         |  SELECT doc_id, $synthHtmlSql AS html FROM documents
+         |  SELECT doc_id, ${synthPageSql(HtmlParts)} AS html FROM documents
          |), $extractCtes
          |SELECT doc_id,
          |  text_extracted,
@@ -2458,7 +2339,7 @@ object HtmlOps {
          |ORDER BY doc_id""".stripMargin,
     "q_extract_clean" ->
       s"""WITH h AS (
-         |  SELECT doc_id, $synthHtmlSql AS html FROM documents
+         |  SELECT doc_id, ${synthPageSql(HtmlParts)} AS html FROM documents
          |), $extractCtes, toks AS (
          |  SELECT doc_id, string_split(lower(trim(text_extracted)), ' ') AS tk
          |  FROM ext
@@ -2494,16 +2375,6 @@ object HtmlOps {
          |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin
   )
-
-  /** The synthetic page, SQL face (shared by both html oracles). */
-  private def synthHtmlSql: String = HtmlParts.map {
-    case Left(s) => TextFuns.sqlLit(s)
-    case Right("source") => "source"
-    case Right("id") => "CAST(doc_id AS VARCHAR)"
-    case Right("escaped") =>
-      "replace(replace(text, '&', '&amp;'), '<', '&lt;')"
-    case Right(other) => throw new IllegalArgumentException(other)
-  }.mkString(" || ")
 
   /** The full strip/decode/collapse chain, SQL face — byte-identical to
     * [[extractText]] (shared regex subset; the entity decode is the

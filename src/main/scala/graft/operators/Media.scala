@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.plans.Bytes._
+import graft.plans.HttpCodec
 
 /** The MEDIA INVENTORY — round 18's deployment glue: one pass over a
   * WARC record frame that names every response's bytes
@@ -48,9 +49,7 @@ object MediaOps {
   def mediaInventoryOf(records: DataFrame): DataFrame = {
     val spark = records.sparkSession
     graft.plans.GraftFunctions.register(spark)
-    val l1 = decode(col("payload"), "ISO-8859-1")
-    val declared = lower(regexp_extract(l1,
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1))
+    val declared = HttpCodec.declaredMime(HttpCodec.header(col("payload")))
     val base = records.filter(col("warc_type") === "response")
       .select(UrlOps.canonIdn(col("target_uri")).as("canon_url"),
         nullif(declared, lit("")).as("declared_mime"),
@@ -59,7 +58,7 @@ object MediaOps {
       it.map { r =>
         val url = r.getString(0)
         val decl = if (r.isNullAt(1)) null else r.getString(1)
-        val body = PdfOps.httpBody(r.getAs[Array[Byte]](2))
+        val body = HttpCodec.body(r.getAs[Array[Byte]](2))
         val sniffed = graft.plans.MagicMime.sniff(
           java.util.Arrays.copyOf(body, math.min(body.length, 512)))
         def row(w: Any, h: Any, d: Any, f: Any, reason: Any): Row =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.plans.Bytes.{be32, latin1, matches, u32be}
+import graft.plans.HttpCodec
 
 /** MP3 METADATA — round 18, the audio twin of [[Mp4Ops]]: the round-18
   * `magic_mime` extension can NAME `audio/mpeg` bytes (the
@@ -367,30 +368,9 @@ object Mp3Ops {
     * routed by DECLARATION OR CONTENT (`audio/mpeg` header, or a body
     * whose shape-valid ID3v2 magic sniffs `audio/mpeg` behind a lying
     * header — the walk re-validates). */
-  def mp3MetaOfRecords(records: DataFrame): (DataFrame, DataFrame) = {
-    val spark = records.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val l1 = decode(col("payload"), "ISO-8859-1")
-    val p1 = instr(l1, "\r\n\r\n")
-    val p2 = instr(l1, "\n\n")
-    val big = lit(Int.MaxValue)
-    val bodyStart = least(
-      coalesce(nullif(p1, lit(0)) + 4, big),
-      coalesce(nullif(p2, lit(0)) + 2, big))
-    val declared = lower(regexp_extract(l1,
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1))
-    val sniffed = call_function("magic_mime",
-      substring(col("payload"), bodyStart, lit(16)))
-    val isMp3 = declared === "audio/mpeg" || sniffed === "audio/mpeg"
-    val rdd = records
-      .filter(col("warc_type") === "response" && isMp3)
-      .select(col("target_uri").cast("string"), col("payload"))
-      .rdd.mapPartitions { it =>
-        it.map(r => Row(r.getString(0), PdfOps.httpBody(r.getAs[Array[Byte]](1))))
-      }
-    mp3MetaOf(spark.createDataFrame(rdd, StructType(Seq(
-      StructField("url", StringType), StructField("payload", BinaryType)))))
-  }
+  def mp3MetaOfRecords(records: DataFrame): (DataFrame, DataFrame) =
+    mp3MetaOf(HttpCodec.routeByMime(records, Seq("audio/mpeg"), 16,
+      col("target_uri").cast("string")).withColumnRenamed("body", "payload"))
 
   // ---------- oracle instantiation (q_mp3_meta) ----------
 

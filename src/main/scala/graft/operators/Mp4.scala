@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.plans.Bytes._
+import graft.plans.HttpCodec
 
 /** ISO-BMFF (MP4) container METADATA — round 18, the consumer of the
   * round-18 `magic_mime` extension: the real web's video estate is MP4
@@ -339,37 +340,16 @@ object Mp4Ops {
       walked.filter(col("reason").isNotNull).select(col("url"), col("reason")))
   }
 
-  /** The WARC adapter ([[PdfOps.pdfTextOfRecords]]'s shape): responses
+  /** The WARC adapter ([[HttpCodec.routeByMime]]): responses
     * routed by DECLARATION OR CONTENT — a `video/mp4` header, or body
     * bytes whose `ftyp` box sniffs `video/mp4`/`audio/mp4` behind a
     * lying octet-stream header (the most common media lie on the real
     * web; the walk re-validates, so a sniff false positive is
     * impossible). */
-  def mp4MetaOfRecords(records: DataFrame): (DataFrame, DataFrame) = {
-    val spark = records.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val l1 = decode(col("payload"), "ISO-8859-1")
-    val p1 = instr(l1, "\r\n\r\n")
-    val p2 = instr(l1, "\n\n")
-    val big = lit(Int.MaxValue)
-    val bodyStart = least(
-      coalesce(nullif(p1, lit(0)) + 4, big),
-      coalesce(nullif(p2, lit(0)) + 2, big))
-    val declared = lower(regexp_extract(l1,
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1))
-    val sniffed = call_function("magic_mime",
-      substring(col("payload"), bodyStart, lit(16)))
-    val isMp4 = declared.isin("video/mp4", "audio/mp4") ||
-      sniffed.isin("video/mp4", "audio/mp4")
-    val rdd = records
-      .filter(col("warc_type") === "response" && isMp4)
-      .select(col("target_uri").cast("string"), col("payload"))
-      .rdd.mapPartitions { it =>
-        it.map(r => Row(r.getString(0), PdfOps.httpBody(r.getAs[Array[Byte]](1))))
-      }
-    mp4MetaOf(spark.createDataFrame(rdd, StructType(Seq(
-      StructField("url", StringType), StructField("payload", BinaryType)))))
-  }
+  def mp4MetaOfRecords(records: DataFrame): (DataFrame, DataFrame) =
+    mp4MetaOf(HttpCodec.routeByMime(records, Seq("video/mp4", "audio/mp4"),
+      16, col("target_uri").cast("string"))
+      .withColumnRenamed("body", "payload"))
 
   // ---------- oracle instantiation (q_mp4_meta) ----------
 

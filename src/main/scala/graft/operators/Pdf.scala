@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.HttpCodec
+
 /** Minimal PDF text extraction (round 17, SURVEY §2 row 163) — the one
   * high-volume token source the ingest media-type gate quarantined
   * wholesale (`application/pdf` at [[HtmlOps.warcToDocuments]]): a real
@@ -295,44 +297,6 @@ object PdfOps {
       both.filter(col("reason").isNotNull).select(col("url"), col("reason")))
   }
 
-  /** The WARC adapter: `application/pdf` responses' bodies through
-    * [[pdfTextOf]] — the consumer of what the ingest media-type gate
-    * quarantines as `content-type`. The header/body split happens on
-    * BYTES (the latin-1 header decode is for sniffing only; the body
-    * must stay binary or the walk sees mojibake). */
-  def pdfTextOfRecords(records: DataFrame): (DataFrame, DataFrame) = {
-    val spark = records.sparkSession
-    val isPdf = lower(regexp_extract(
-      decode(col("payload"), "ISO-8859-1"),
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1)) === "application/pdf"
-    val rdd = records
-      .filter(col("warc_type") === "response" && isPdf)
-      .select(col("target_uri").cast("string"), col("payload"))
-      .rdd.mapPartitions { it =>
-        it.map(r => Row(r.getString(0), httpBody(r.getAs[Array[Byte]](1))))
-      }
-    pdfTextOf(spark.createDataFrame(rdd, StructType(Seq(
-      StructField("url", StringType), StructField("payload", BinaryType)))))
-  }
-
-  /** Body bytes of an HTTP response payload — everything after the
-    * first blank line, split at BYTE level (the latin-1 header decode
-    * is for sniffing only; a body split on decoded text would hand the
-    * walk mojibake). */
-  private[graft] def httpBody(bytes: Array[Byte]): Array[Byte] = {
-    var cut = -1
-    var i = 0
-    while (cut < 0 && i < bytes.length - 1) {
-      if (bytes(i) == '\n' && bytes(i + 1) == '\n') cut = i + 2
-      else if (bytes(i) == '\r' && i + 3 < bytes.length &&
-        bytes(i + 1) == '\n' && bytes(i + 2) == '\r' &&
-        bytes(i + 3) == '\n') cut = i + 4
-      i += 1
-    }
-    if (cut < 0) Array.empty[Byte]
-    else java.util.Arrays.copyOfRange(bytes, cut, bytes.length)
-  }
-
   /** The PDF estate lifted into [[HtmlOps.warcToDocuments]]'s CLEAN
     * document schema — the route that gate quarantines as
     * `content-type` becomes corpus rows instead: same doc identity
@@ -350,8 +314,8 @@ object PdfOps {
     * route (round-20 self-review: this lived copy-pasted in the PDF and
     * EPUB routes — one header-evidence or schema fix would have had to
     * land twice or the two corpus faces silently diverge): a response
-    * routes here when its declared Content-Type IS `mime` or its body
-    * SNIFFS as `mime` (a binary behind a lying text header still lands —
+    * routes here ([[HttpCodec.routeByMime]]) when its declared
+    * Content-Type IS `mime` or its body SNIFFS as `mime` (a binary behind a lying text header still lands —
     * and the HTML route's magic gate quarantines it there as `sniff`,
     * so the routes stay exclusive); header evidence (Last-Modified +
     * parsed date, ETag, payload digest, X-Robots-Tag flags) stays
@@ -364,51 +328,27 @@ object PdfOps {
       sniffLen: Int, walk: Array[Byte] => Either[String, (String, Int)])
       : (DataFrame, DataFrame) = {
     val spark = records.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val l1 = decode(col("payload"), "ISO-8859-1")
-    val hdrCol = when(regexp_extract(l1, "(?s)\\r?\\n\\r?\\n", 0) === "", l1)
-      .otherwise(regexp_extract(l1, "(?s)^(.*?)\\r?\\n\\r?\\n", 1))
-    val p1 = instr(l1, "\r\n\r\n")
-    val p2 = instr(l1, "\n\n")
-    val big = lit(Int.MaxValue)
-    val bodyStart = least(
-      coalesce(nullif(p1, lit(0)) + 4, big),
-      coalesce(nullif(p2, lit(0)) + 2, big))
-    val isMime = lower(regexp_extract(hdrCol,
-      "(?im)^content-type:[ \\t]*([a-z0-9.+/-]+)", 1)) === mime ||
-      call_function("magic_mime",
-        substring(col("payload"), bodyStart, lit(sniffLen))) === mime
-    val lm = nullif(trim(regexp_extract(hdrCol,
-      "(?im)^last-modified:([^\\r\\n]*)", 1)), lit(""))
-    val lmDate = to_date(try_to_timestamp(
-      regexp_extract(lm,
-        "([0-9]{1,2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2})", 1),
-      lit("d MMM yyyy HH:mm:ss")))
-    val xr = HtmlOps.robotsTokenFlagsAll(regexp_extract_all(hdrCol,
-      lit("(?im)^x-robots-tag:[ \\t]*([^\\r\\n]*)"), lit(1)))
-    val base = records
-      .filter(col("warc_type") === "response" && isMime)
-      .select(
-        UrlOps.canonIdn(col("target_uri")).as("url"),
-        col("warc_date").as("fetch_date"),
-        lm.as("last_modified"),
-        lmDate.as("last_modified_date"),
-        nullif(trim(regexp_extract(hdrCol,
-          "(?im)^etag:([^\\r\\n]*)", 1)), lit("")).as("etag"),
-        nullif(col("payload_digest"), lit("")).as("payload_digest"),
-        xr._1.as("noindex"),
-        xr._2.as("nofollow"),
-        col("payload"))
-    val pIdx = base.schema.fieldIndex("payload")
-    val outSchema = StructType(
-      base.schema.fields.filterNot(_.name == "payload") ++ Seq(
-        StructField("text", StringType),
-        StructField("n_chars", LongType),
-        StructField("reason", StringType)))
+    val hdr = HttpCodec.header(col("payload"))
+    val lm = nullif(trim(HttpCodec.field(hdr, "last-modified")), lit(""))
+    val xr = HtmlOps.robotsTokenFlagsAll(HttpCodec.fields(hdr, "x-robots-tag"))
+    val base = HttpCodec.routeByMime(records, Seq(mime), sniffLen,
+      UrlOps.canonIdn(col("target_uri")),
+      col("warc_date").as("fetch_date"),
+      lm.as("last_modified"),
+      to_date(HttpCodec.date(lm)).as("last_modified_date"),
+      nullif(trim(HttpCodec.field(hdr, "etag")), lit("")).as("etag"),
+      nullif(col("payload_digest"), lit("")).as("payload_digest"),
+      xr._1.as("noindex"),
+      xr._2.as("nofollow"))
+    // `body` is the router's last column
+    val outSchema = StructType(base.schema.init ++ Seq(
+      StructField("text", StringType),
+      StructField("n_chars", LongType),
+      StructField("reason", StringType)))
     val walked = spark.createDataFrame(base.rdd.mapPartitions { it =>
       it.map { r =>
-        val keep = (0 until r.length).filterNot(_ == pIdx).map(r.get)
-        walk(httpBody(r.getAs[Array[Byte]](pIdx))) match {
+        val keep = r.toSeq.init
+        walk(r.getAs[Array[Byte]](r.length - 1)) match {
           case Right((t, _)) => Row.fromSeq(keep ++ Seq(t, t.length.toLong, null))
           case Left(reason)  => Row.fromSeq(keep ++ Seq(null, null, reason))
         }

@@ -2,12 +2,19 @@ package graft.plans
 
 import java.io.IOException
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, StructField, StructType}
 
 /** HTTP payload codecs for the WARC ingest path.
+  *
+  * This is the one place that knows the HTTP/1.x message layout: where
+  * a response's header block ends, how its fields read, and which
+  * responses a binary route takes. Every WARC operator reads a
+  * `payload` through it.
   *
   * Common Crawl `response` records preserve the HTTP message verbatim —
   * including `Transfer-Encoding: chunked` framing, whose hex size lines
@@ -17,6 +24,120 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * slot: one codegen-compatible row-level call, no UDF, no shuffle.
   */
 object HttpCodec {
+
+  // ---------- message layout ----------
+
+  /** The blank line that ends the header block: the leftmost
+    * `\r?\n\r?\n`. RFC 9112 §2.2 lets a recipient take a bare LF as a
+    * line terminator and ignore a CR before it, so `\n\n`, `\r\n\r\n`,
+    * `\n\r\n` and `\r\n\n` all end it. The Column faces below run
+    * the rule on the latin-1 view of the payload (one char per byte, so
+    * re-encoding restores the bytes); [[blankLine]] is its byte twin. */
+  private val BlankLine = "\\r?\\n\\r?\\n"
+
+  /** The header block of a binary `payload` as latin-1 text: everything
+    * before the first blank line, the whole payload when there is none. */
+  def header(payload: Column): Column =
+    regexp_replace(decode(payload, "ISO-8859-1"), s"(?s)$BlankLine.*", "")
+
+  /** The body bytes of a binary `payload`: everything after the first
+    * blank line, empty when there is none. */
+  def body(payload: Column): Column =
+    encode(regexp_extract(decode(payload, "ISO-8859-1"),
+      s"(?s)$BlankLine(.*)", 1), "ISO-8859-1")
+
+  /** [[body]] over bytes, for per-row walks that must see the body as
+    * binary. */
+  def body(payload: Array[Byte]): Array[Byte] = {
+    val end = blankLine(payload)._2
+    if (end < 0) Array.emptyByteArray
+    else java.util.Arrays.copyOfRange(payload, end, payload.length)
+  }
+
+  /** `[start, end)` of the first blank line in `b`, `(-1, -1)` when
+    * there is none. A CR is taken only when a LF follows it, which is
+    * where the regex's `\r?` lands too. */
+  def blankLine(b: Array[Byte]): (Int, Int) = {
+    var i = 0
+    while (i < b.length) {
+      var j = if (b(i) == '\r') i + 1 else i
+      if (j < b.length && b(j) == '\n') {
+        j += 1
+        if (j < b.length && b(j) == '\r') j += 1
+        if (j < b.length && b(j) == '\n') return (i, j + 1)
+      }
+      i += 1
+    }
+    (-1, -1)
+  }
+
+  /** The first value of header field `name` (case-insensitive) in a
+    * [[header]] block, blanks after the colon dropped; "" when the field
+    * is absent. */
+  def field(hdr: Column, name: String): Column =
+    regexp_extract(hdr, fieldPattern(name), 1)
+
+  /** Every value of header field `name`, in order: a field may repeat
+    * (one `X-Robots-Tag` per directive is the common server shape). */
+  def fields(hdr: Column, name: String): Column =
+    regexp_extract_all(hdr, lit(fieldPattern(name)), lit(1))
+
+  private def fieldPattern(name: String): String =
+    s"(?im)^$name:[ \\t]*([^\\r\\n]*)"
+
+  private def contentType(hdr: Column): Column = field(hdr, "content-type")
+
+  /** The declared media type, `type/subtype` of Content-Type in lower
+    * case; "" when the header declares none. */
+  def declaredMime(hdr: Column): Column =
+    lower(regexp_extract(contentType(hdr), "^([A-Za-z0-9.+/-]+)", 1))
+
+  /** Content-Type's `charset` parameter in lower case; "" when absent. */
+  def declaredCharset(hdr: Column): Column =
+    lower(regexp_extract(contentType(hdr),
+      "(?i)charset=\"?([a-zA-Z0-9_.:-]+)", 1))
+
+  /** The status code of the status line; null when the block does not
+    * start with one. */
+  def status(hdr: Column): Column =
+    regexp_extract(hdr, "^HTTP/[0-9.]+ ([0-9]{3})", 1).cast("int")
+
+  /** The RFC 9110 IMF-fixdate in a field value as a timestamp (weekday
+    * and zone dropped: Spark's parser takes neither, and a fixdate is
+    * always GMT); null when none parses. */
+  def date(value: Column): Column = try_to_timestamp(
+    regexp_extract(value,
+      "([0-9]{1,2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2})", 1),
+    lit("d MMM yyyy HH:mm:ss"))
+
+  /** The `response` records of a WARC record frame whose declared
+    * ([[declaredMime]]) or sniffed (`magic_mime` of the first `sniffLen`
+    * body bytes) media type is in `mimes`, as `(url, keep…, body)`.
+    * Routing by content as well as declaration lands a binary behind a
+    * lying header; the caller's walk re-validates the bytes, so a sniff
+    * false positive costs nothing. The body is split per row by the
+    * byte twin, so it reaches the walk as binary. */
+  def routeByMime(records: DataFrame, mimes: Seq[String], sniffLen: Int,
+                  url: Column, keep: Column*): DataFrame = {
+    val spark = records.sparkSession
+    GraftFunctions.register(spark)
+    val payload = col("payload")
+    val sniffed = call_function("magic_mime",
+      substring(body(payload), 1, sniffLen))
+    val picked = records
+      .filter(col("warc_type") === "response" &&
+        (declaredMime(header(payload)).isin(mimes: _*) ||
+          sniffed.isin(mimes: _*)))
+      .select((url.as("url") +: keep) :+ payload: _*)
+    val last = picked.schema.length - 1
+    spark.createDataFrame(
+      picked.rdd.mapPartitions(_.map { r =>
+        Row.fromSeq(r.toSeq.init :+ body(r.getAs[Array[Byte]](last)))
+      }),
+      StructType(picked.schema.init :+ StructField("body", BinaryType)))
+  }
+
+  // ---------- body codings ----------
 
   /** RFC 9112 §7.1 chunked-body decode: `hex-size[;ext]\r\n data \r\n`
     * repeated, terminated by a `0` chunk (trailers ignored). Returns the

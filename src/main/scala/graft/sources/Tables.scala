@@ -2,9 +2,13 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -28,9 +32,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Generic accessor — routes `events` through its typed reader (the raw
-    * parquet stores INT64 TIMESTAMP(NANOS), which the default reader
-    * rejects; see [[events]]), everything else reads directly. */
+  /** Generic accessor — routes `events` through its typed reader (which
+    * normalizes every stored `ts` layout; see [[events]]), everything
+    * else reads directly. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else raw(spark, dir, name)
@@ -54,14 +58,23 @@ object Tables {
     * Falls back to `spark.read.parquet` (one schema job) when
     * `spark.sql.parquet.mergeSchema` is on or no data file exists. */
   def parquet(spark: SparkSession, path: String,
-              partitionSchema: Option[StructType] = None): DataFrame = {
-    val footer =
-      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-      else footerSchema(spark, path)
-    (footer, partitionSchema) match {
+              partitionSchema: Option[StructType] = None): DataFrame =
+    parquetWith(spark, path, partitionSchema,
+      if (merging(spark)) None else footer(spark, path))
+
+  private def merging(spark: SparkSession): Boolean =
+    spark.sessionState.conf.isParquetSchemaMergingEnabled
+
+  /** [[parquet]] given the footer it would read (None: infer). */
+  private def parquetWith(spark: SparkSession, path: String,
+                          partitionSchema: Option[StructType],
+                          footer: Option[Footer]): DataFrame = {
+    val fromFooter = footer.map(ParquetFileFormat.readSchemaFromFooter(_,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    (fromFooter, partitionSchema) match {
       case (None, None) => spark.read.parquet(path)
       case _ =>
-        val data = footer.getOrElse(spark.read.parquet(path).schema)
+        val data = fromFooter.getOrElse(spark.read.parquet(path).schema)
         val parts = partitionSchema.getOrElse(new StructType())
         parquetAs(spark, path,
           StructType(data.filterNot(f => parts.fieldNames.contains(f.name)) ++ parts))
@@ -74,16 +87,28 @@ object Tables {
                                schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path)
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  /** The footer of [[schemaFile]], read on the driver. */
+  private def footer(spark: SparkSession, path: String): Option[Footer] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     schemaFile(root.getFileSystem(conf), root).map { file =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-      val meta = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      try new Footer(file.getPath, reader.getFooter) finally reader.close()
     }
   }
+
+  /** Whether a footer stores an INT64 TIMESTAMP(NANOS) column. */
+  private def storesNanos(footer: Footer): Boolean =
+    footer.getParquetMetadata.getFileMetaData.getSchema.getColumns.asScala
+      .exists { c =>
+        val t = c.getPrimitiveType
+        t.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+          (t.getLogicalTypeAnnotation match {
+            case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+            case _ => false
+          })
+      }
 
   /** The file whose footer schema inference reads: `path` itself if it
     * is a file; else a `_common_metadata`, then a `_metadata` summary;
@@ -246,12 +271,20 @@ object Tables {
     * type DuckDB's naive TIMESTAMP has, so oracle values match without any
     * session-timezone dependence. The current layout passes through
     * UNTOUCHED: `ts` stays the stored column, so time-range predicates on
-    * it push down to the parquet scan (row-group/page skipping). */
+    * it push down to the parquet scan (row-group/page skipping).
+    *
+    * A NANOS layout reads as a long under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which the scan reads from the
+    * session when it runs, so this sets it on the caller's session — only
+    * when the footer [[parquet]] reads stores such a column. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.expr
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = raw(spark, dir, "events")
+    val path = s"$dir/events.parquet"
+    val stored = footer(spark, path)
+    if (stored.exists(storesNanos))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = parquetWith(spark, path, None, if (merging(spark)) None else stored)
     df.schema("ts").dataType match {
       case TimestampNTZType => df
       case LongType =>

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.HttpCodec
+
 /** WARC (Web ARChive, ISO 28500) source — the container format web-crawl
   * corpora (Common Crawl and anything wget/heritrix writes) ship in, and
   * the raw input of every from-the-web training-data pipeline.
@@ -736,50 +738,38 @@ object WarcSource {
       .toDF()
   }
 
-  /** Project `response` records into (uri, HTTP status, body text) — the
-    * frame a text-extraction pipeline starts from. The header/body split
-    * rides the bijective ISO-8859-1 decode (every byte ↔ one char, so the
-    * split can never fail), the body re-encodes to its true bytes, and
-    * the UTF-8 decode is GATED on `is_valid_utf8`: an invalid-UTF-8 body
-    * yields a NULL `body`, never a job-killing
-    * `MALFORMED_CHARACTER_CODING` (Spark 4's `decode` is strict). This is
-    * the same discipline [[graft.operators.HtmlOps.warcToDocuments]]
-    * applies — that face additionally resolves declared charsets and
-    * routes failures to a quarantine ledger; this one is the minimal
-    * (status, body) projection. */
   /** Project `response` records into (uri, status, body BYTES) — the
     * binary twin of [[httpResponses]] for consumers that must sniff
-    * the payload themselves (gzipped sitemaps, image bytes): the
-    * header/body split rides the same bijective latin-1 view, but the
-    * body re-encodes to its raw bytes instead of gating on UTF-8. */
+    * the payload themselves (gzipped sitemaps, image bytes). The
+    * header/body split is [[HttpCodec]]'s. */
   def httpResponseBytes(records: DataFrame): DataFrame = {
-    val asText = decode(col("payload"), "ISO-8859-1")
     records
       .filter(col("warc_type") === "response")
-      .withColumn("_txt", asText)
       .withColumn("http_status",
-        regexp_extract(col("_txt"), "^HTTP/[0-9.]+ ([0-9]{3})", 1).cast("int"))
-      .withColumn("_body_l1",
-        when(regexp_extract(col("_txt"), "(?s)\\r?\\n\\r?\\n", 0) === "", lit(""))
-          .otherwise(regexp_replace(col("_txt"), "(?s)^.*?\\r?\\n\\r?\\n", "")))
-      .withColumn("body_bytes", encode(col("_body_l1"), "ISO-8859-1"))
+        HttpCodec.status(HttpCodec.header(col("payload"))))
+      .withColumn("body_bytes", HttpCodec.body(col("payload")))
       .select(col("file"), col("target_uri"), col("warc_date"),
         col("http_status"), col("body_bytes"))
   }
 
+  /** Project `response` records into (uri, HTTP status, body text) — the
+    * frame a text-extraction pipeline starts from. The header/body split
+    * is [[HttpCodec]]'s, and the UTF-8 decode is GATED on
+    * `is_valid_utf8`: an invalid-UTF-8 body yields a NULL `body`, never
+    * a job-killing `MALFORMED_CHARACTER_CODING` (Spark 4's `decode` is
+    * strict). This is the same discipline
+    * [[graft.operators.HtmlOps.warcToDocuments]] applies — that face
+    * additionally resolves declared charsets and routes failures to a
+    * quarantine ledger; this one is the minimal (status, body)
+    * projection. */
   def httpResponses(records: DataFrame): DataFrame = {
-    val asText = decode(col("payload"), "ISO-8859-1")
     records
       .filter(col("warc_type") === "response")
-      .withColumn("_txt", asText)
       .withColumn("http_status",
-        regexp_extract(col("_txt"), "^HTTP/[0-9.]+ ([0-9]{3})", 1).cast("int"))
+        HttpCodec.status(HttpCodec.header(col("payload"))))
       // body = everything after the FIRST blank line; a payload with no
       // blank line is a bare header block → empty body
-      .withColumn("_body_l1",
-        when(regexp_extract(col("_txt"), "(?s)\\r?\\n\\r?\\n", 0) === "", lit(""))
-          .otherwise(regexp_replace(col("_txt"), "(?s)^.*?\\r?\\n\\r?\\n", "")))
-      .withColumn("_raw", encode(col("_body_l1"), "ISO-8859-1"))
+      .withColumn("_raw", HttpCodec.body(col("payload")))
       .withColumn("body",
         when(expr("is_valid_utf8(_raw)"), decode(col("_raw"), "UTF-8")))
       .select(col("file"), col("target_uri"), col("warc_date"),

@@ -242,6 +242,43 @@ class EventOpsSpec extends SparkSpec {
     assert(fromNtz.getAs[java.time.LocalDateTime]("ts") == t)
   }
 
+  test("Tables.events sets nanosAsLong only for a footer that stores TIMESTAMP(NANOS)") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.TimestampNTZType
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def isSet = spark.sessionState.conf.getAllConfs.contains(key)
+    val before = spark.sessionState.conf.getAllConfs.get(key)
+    try {
+      spark.conf.unset(key)
+      // the current TIMESTAMP_NTZ layout leaves the caller's session alone
+      Tables.events(spark, sfDir).schema
+      assert(!isSet)
+      // an INT64 TIMESTAMP(NANOS) footer needs it, and reads truncated to micros
+      val dir = SparkSpec.tempDir("graft_nanos").toFile.getAbsolutePath
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; " +
+          "required int64 ts (TIMESTAMP(NANOS,false)); }")
+      val writer = ExampleParquetWriter
+        .builder(new Path(s"$dir/events.parquet/part-0.parquet"))
+        .withType(schema).build()
+      val ns = 1704450600L * 1000000000L + 123456789L // 2024-01-05T10:30:00.123456789
+      try writer.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", 1L).append("ts", ns))
+      finally writer.close()
+      val df = Tables.events(spark, dir)
+      assert(isSet)
+      assert(df.schema("ts").dataType == TimestampNTZType)
+      assert(df.select("ts").head().getAs[java.time.LocalDateTime](0) ==
+        java.time.LocalDateTime.parse("2024-01-05T10:30:00.123456"))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("funnel generalizes: 2-step and 4-step chains stay consistent") {
     // 2-step error → view: verify against a direct computation
     val two = SessionOps.funnel(events, Seq("error", "view")).collect()
