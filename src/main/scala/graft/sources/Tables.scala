@@ -76,16 +76,11 @@ object Tables {
       case _ =>
         val data = fromFooter.getOrElse(spark.read.parquet(path).schema)
         val parts = partitionSchema.getOrElse(new StructType())
-        parquetAs(spark, path,
-          StructType(data.filterNot(f => parts.fieldNames.contains(f.name)) ++ parts))
+        val schema =
+          StructType(data.filterNot(f => parts.fieldNames.contains(f.name)) ++ parts)
+        spark.read.schema(schema).parquet(path)
     }
   }
-
-  /** Read a parquet file or directory with a schema the caller already
-    * holds (the frame that wrote it), so no footer is read either. */
-  private[graft] def parquetAs(spark: SparkSession, path: String,
-                               schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
 
   /** The footer of [[schemaFile]], read on the driver. */
   private def footer(spark: SparkSession, path: String): Option[Footer] = {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{EventOps, StatsOps}
 import graft.sources.{Sinks, Tables}
@@ -196,35 +197,74 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     val path = SparkSpec.tempDir("graft_upsert")
       .toFile.getAbsolutePath
-    val base = Seq(
+    val base = Seq[(Long, String, String)](
       (1L, "one", "s0"), (2L, "two", "s0"),
-      (3L, "three", "s1"), (4L, "four", "s1")
+      (3L, "three", "s1"), (4L, "four", "s1"), (8L, "eight", null),
+      (10L, "ten", null)
     ).toDF("doc_id", "text", "source")
     Sinks.writePartitionedBy(base, path, "source")
     def filesOf(part: String): Set[String] =
       new java.io.File(s"$path/source=$part").listFiles()
         .map(_.getName).filter(_.endsWith(".parquet")).toSet
     val s1Before = filesOf("s1")
-    // replace doc 1, add doc 5 — both in partition s0; s1 untouched
-    val updates = Seq((1L, "one-v2", "s0"), (5L, "five", "s0"))
-      .toDF("doc_id", "text", "source")
+    // replace doc 1, add doc 5 in s0; replace doc 8 in the null
+    // partition, where doc 10 must survive; add doc 9 in s2, new to the
+    // layout; s1 untouched
+    val updates = Seq[(Long, String, String)]((1L, "one-v2", "s0"), (5L, "five", "s0"),
+      (8L, "eight-v2", null), (9L, "nine", "s2"))
+      .toDF("doc_id", "text", "source").persist()
     val touched = Sinks.upsertPartitioned(spark, updates, path, "source", "doc_id")
-    assert(touched == 1L)
-    val after = spark.read.parquet(path).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toMap
-    assert(after == Map(1L -> "one-v2", 2L -> "two", 3L -> "three",
-      4L -> "four", 5L -> "five"))
-    // dynamic overwrite left the untouched partition's FILES alone
+    assert(touched == 3L)
+    // the caller's cache is the caller's: still there afterwards
+    assert(updates.storageLevel != StorageLevel.NONE)
+    updates.unpersist()
+    val after = spark.read.schema("doc_id LONG, text STRING, source STRING")
+      .parquet(path).as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    assert(after == Seq((1L, "one-v2", "s0"), (2L, "two", "s0"),
+      (3L, "three", "s1"), (4L, "four", "s1"), (5L, "five", "s0"),
+      (8L, "eight-v2", null), (9L, "nine", "s2"), (10L, "ten", null)))
+    assert(new java.io.File(path).list().filter(_.startsWith("source=")).toSet ==
+      Set("source=s0", "source=s1", "source=s2", "source=__HIVE_DEFAULT_PARTITION__"))
+    // the commit left the untouched partition's FILES alone
     assert(filesOf("s1") == s1Before, "s1 must not be rewritten")
     // staging is cleaned up
     assert(!new java.io.File(path + ".upsert-staging").exists())
-    // a merge takes one row per key: duplicate update keys fail loudly
+    // a merge takes one row per key: duplicate update keys fail loudly,
+    // before any write, and the batch the call persisted is released
     val dupUpdates = Seq((7L, "seven", "s0"), (7L, "seven-again", "s0"))
       .toDF("doc_id", "text", "source")
     val e = intercept[IllegalArgumentException] {
       Sinks.upsertPartitioned(spark, dupUpdates, path, "source", "doc_id")
     }
-    assert(e.getMessage.contains("duplicate"))
+    assert(e.getMessage.contains("duplicate doc_id 7"), e.getMessage)
+    assert(dupUpdates.storageLevel == StorageLevel.NONE)
+    assert(!new java.io.File(path + ".upsert-staging").exists())
+  }
+
+  test("upsertPartitioned evaluates a non-deterministic update batch once") {
+    import spark.implicits._
+    val path = SparkSpec.tempDir("graft_upsert_nd")
+      .toFile.getAbsolutePath
+    Sinks.writePartitionedBy(Seq(
+      (1L, "one", "s0"), (2L, "two", "s0"), (3L, "three", "s1"), (4L, "four", "s1")
+    ).toDF("doc_id", "text", "source"), path, "source")
+    // s0 on the first call, s1 after: an upsert that evaluated the batch
+    // twice could read one partition and land doc 5 in the other,
+    // replacing that partition's rows with doc 5 alone
+    SinksSpec.sourceCalls.set(0)
+    val source = udf { () =>
+      if (SinksSpec.sourceCalls.getAndIncrement() == 0) "s0" else "s1"
+    }.asNondeterministic()
+    // a scan, not a local relation, so the UDF runs in tasks whenever a
+    // job evaluates the batch rather than once per optimizer pass
+    val updates = spark.range(5, 6)
+      .select(col("id").as("doc_id"), lit("five").as("text"), source().as("source"))
+    val touched = Sinks.upsertPartitioned(spark, updates, path, "source", "doc_id")
+    val docs = spark.read.parquet(path).select("doc_id").as[Long].collect().sorted.toSeq
+    assert(docs == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(touched == 1L)
+    assert(SinksSpec.sourceCalls.get == 1)
+    assert(updates.storageLevel == StorageLevel.NONE)
   }
 
   test("upsertPartitioned keeps string partition values that look numeric") {
@@ -295,4 +335,10 @@ class SinksSpec extends SparkSpec {
     assert(p50 <= p90 && p90 <= p99)
     assert(p50 > 0.0)
   }
+}
+
+object SinksSpec {
+  /** Calls of the non-deterministic spec's UDF; specs run `local`, so
+    * tasks and the driver share it. */
+  val sourceCalls = new java.util.concurrent.atomic.AtomicInteger
 }
