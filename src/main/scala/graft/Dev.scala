@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.GraftBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev measurement harness (measure first): for each named query, split
@@ -15,7 +16,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *   plan  = analysis + optimization + physical planning (`executedPlan`
   *           forced),
   *   exec  = the noop-sink run of the prepared plan —
-  * and count the Spark jobs the build and exec phases start. Each query
+  * and count the Spark jobs the build and exec phases start, and the
+  * longest task each of them ran (`max_task_ms`: one straggler or
+  * single-partition stage shows here, not in the seconds). Each query
   * runs `reps` times in one warm session (the first rep is the
   * codegen-compile pass; read the later reps); `total` is the query's
   * cold-to-result wall time. A final line sums the last rep over the
@@ -45,36 +48,43 @@ object Dev {
       else args(0).split(",").toSeq
     val spark = GraftSession.local(GraftSession.cpus(default = 32))
     val jobs = new AtomicInteger
+    val maxTaskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        maxTaskMs.accumulateAndGet(e.taskInfo.duration,
+          (a, b) => math.max(a, b))
     })
-    // seconds and jobs started while `f` runs; the drain makes every job
-    // `f` started visible to the listener before the count is read
-    def phase[A](f: => A): (A, Double, Int) = {
+    // seconds, jobs started and the longest task ended while `f` runs;
+    // the drain makes every job and task `f` started visible to the
+    // listener before the counts are read
+    def phase[A](f: => A): (A, Double, Int, Long) = {
       GraftBridge.drainListeners(spark.sparkContext)
       val j0 = jobs.get
+      maxTaskMs.set(0L)
       val t0 = System.nanoTime()
       val a = f
       val secs = (System.nanoTime() - t0) / 1e9
       GraftBridge.drainListeners(spark.sparkContext)
-      (a, secs, jobs.get - j0)
+      (a, secs, jobs.get - j0, maxTaskMs.get)
     }
     // (build jobs, exec jobs) of each key's last rep, for the summary line
     val lastRep = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     def measure(name: String): Unit = (1 to reps).foreach { rep =>
-      val (df, tBuild, jBuild) = phase(SparkEntry.queries(name)(spark, sfDir))
-      val (_, tPlan, _) = phase(df.queryExecution.executedPlan)
+      val (df, tBuild, jBuild, mBuild) =
+        phase(SparkEntry.queries(name)(spark, sfDir))
+      val (_, tPlan, _, _) = phase(df.queryExecution.executedPlan)
       if (rep == reps) planOut.foreach { case (dir, suffix) =>
         Files.createDirectories(dir)
         Files.writeString(dir.resolve(s"${name}_$suffix.txt"),
           df.queryExecution.explainString(FormattedMode))
       }
-      val (_, tExec, jExec) =
+      val (_, tExec, jExec, mExec) =
         phase(df.write.format("noop").mode("overwrite").save())
       println(f"[dev] $name rep$rep build=$tBuild%.3f plan=$tPlan%.3f " +
         f"exec=$tExec%.3f total=${tBuild + tPlan + tExec}%.3f " +
-        s"jobs=$jBuild+$jExec")
+        s"jobs=$jBuild+$jExec max_task_ms=$mBuild+$mExec")
       if (rep == reps) lastRep += ((jBuild, jExec))
     }
     val failed = names.filter { name =>

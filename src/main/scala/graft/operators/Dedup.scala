@@ -1177,10 +1177,6 @@ object DedupOps {
     for (phase <- Seq(0, EmbBandBits / 2); b <- 0 until EmbDims / EmbBandBits)
       yield (0 until EmbBandBits).map(i => (phase + b * EmbBandBits + i) % EmbDims)
 
-  /** Distinct LSH candidate pairs (pre-cosine-verify) — the blocks frame
-    * carries ONLY (vec_id, band, key): the 64-float payload never rides
-    * the exploded band stream or its shuffle; exposed for the
-    * candidate-volume spec. */
   /** The (vec_id, band, key) tiled-sign band stream — exposed so
     * PlanAuditSpec can assert the payload-free Generate on the frame
     * that actually executes (the candidates join checkpoints it, which
@@ -1194,14 +1190,26 @@ object DedupOps {
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
+  /** Distinct LSH candidate pairs (pre-cosine-verify) — the blocks frame
+    * carries ONLY (vec_id, band, key): the 64-float payload never rides
+    * the exploded band stream or its shuffle; exposed for the
+    * candidate-volume spec. */
   private[graft] def embeddingLshCandidates(embeddings: DataFrame): DataFrame =
+    embeddingLshCollisions(embeddings).distinct()
+
+  /** The tiled-sign band collisions [[dedupEmbeddingLsh]] verifies, one
+    * row per shared band ([[bandSelfJoin]]). */
+  private[graft] def embeddingLshCollisions(embeddings: DataFrame): DataFrame =
     // NO checkpoint: the tiled sign keys are cheap column slices —
     // recompute ≈ free (the minhash k<16 case), so lineage stays whole
     // for nothing.
     bandSelfJoin(embeddingLshBlocks(embeddings), checkpoint = false)
 
-  /** Self-join a (vec_id, band, key) block stream into distinct ordered
-    * candidate pairs. With `checkpoint` a lazy [[graft.Materialize]]
+  /** Self-join a (vec_id, band, key) block stream into its raw band
+    * collisions: one (vec_a, vec_b) row, vec_a < vec_b, per band the
+    * pair shares — NOT deduplicated. The verifying callers deduplicate
+    * after the cosine ([[cosineVerifiedPairs]]); the candidate accessors
+    * deduplicate here. With `checkpoint` a lazy [[graft.Materialize]]
     * stores the band keys once — AQE does not dedupe the two
     * identical self-join subtrees, so an expensive key map (the rp
     * scheme's 128×64 integer dots) is otherwise computed twice
@@ -1217,15 +1225,15 @@ object DedupOps {
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
   }
 
   /** §2-59 `q_dedup_embedding_lsh`: cosine near-dup pairs (cos ≥ τ) with
     * NO label/metadata requirement — the general-corpus embedding dedup.
     * Blocking = [[embeddingBandDims]] sign-LSH bands (equi-join on
     * (band, key), candidates bounded by real band collisions, never n²);
-    * verification = exact 6-dp cosine on the deduped candidate set, with
-    * per-row norms computed once before the pair join. The contract is
+    * verification = exact 6-dp cosine on every band collision, with
+    * per-row norms computed once before the pair join, and the pair
+    * dedup after it ([[cosineVerifiedPairs]]). The contract is
     * "collides in ≥ 1 band ∧ cos ≥ τ" — the DuckDB oracle derives the
     * SAME band keys, so both engines see the identical pair universe. */
   def dedupEmbeddingLsh(embeddings: DataFrame, tau: Double = 0.4): DataFrame =
@@ -1236,27 +1244,33 @@ object DedupOps {
     * in [[dedupEmbedding]] (NaN-vs-τ semantics diverge across engines);
     * they surface as singleton clusters downstream. */
   private def embeddingLshPairs(embeddings: DataFrame, tau: Double): DataFrame =
-    cosineVerifiedPairs(embeddings, embeddingLshCandidates(embeddings), tau)
+    cosineVerifiedPairs(embeddings, embeddingLshCollisions(embeddings), tau)
 
-  /** Exact 6-dp cosine verification of a blocked candidate-pair set —
-    * the shared back half of [[dedupEmbeddingLsh]] and
-    * [[dedupEmbeddingRp]]: per-row norms once BEFORE the pair join,
-    * zero-norm vectors out of the pair universe (NaN-vs-τ semantics
-    * diverge across engines). */
+  /** Exact 6-dp cosine verification of band collisions, then the pair
+    * dedup — the shared back half of the embedding pair operators:
+    * per-row norms once BEFORE the pair join, zero-norm vectors out of
+    * the pair universe (NaN-vs-τ semantics diverge across engines).
+    * `collisions` may repeat a pair once per band it shares (1.05× the
+    * distinct pairs for rp, 1.09× tiled, on the sf0.01 and sf0.1
+    * embeddings); verifying each repeat costs less than deduplicating
+    * first, because the cosine then runs inside the band join's own
+    * tasks (the two vector probes broadcast) and the one exchange above
+    * it, the `distinct`, carries only the pairs that pass τ. */
   private def cosineVerifiedPairs(embeddings: DataFrame,
-                                  candidates: DataFrame,
+                                  collisions: DataFrame,
                                   tau: Double): DataFrame = {
     graft.plans.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding"),
       VectorFuns.l2normNative(col("embedding")).as("nrm"))
       .filter(col("nrm") > 0.0)
-    candidates
+    collisions
       .join(e.as("ea"), col("vec_a") === col("ea.vec_id"))
       .join(e.as("eb"), col("vec_b") === col("eb.vec_id"))
       .select(col("vec_a"), col("vec_b"),
         VectorFuns.cosine6Pre(col("ea.embedding"), col("eb.embedding"),
           col("ea.nrm"), col("eb.nrm")).as("cos"))
       .filter(col("cos") >= tau)
+      .distinct()
   }
 
   /** §2-63 `q_dedup_embedding_rp`: hard-recall-floor embedding dedup —
@@ -1277,14 +1291,9 @@ object DedupOps {
                        bitsPerBand: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
     cosineVerifiedPairs(embeddings,
-      embeddingRpCandidates(embeddings, bands, bitsPerBand), tau)
+      embeddingRpCollisions(embeddings, bands, bitsPerBand), tau)
       .orderBy("vec_a", "vec_b")
 
-  /** Distinct random-hyperplane candidate pairs (pre-cosine-verify) —
-    * like [[embeddingLshCandidates]], the band stream carries ONLY
-    * (vec_id, band, key); the native `rp_band_keys` computes all 16 keys
-    * in one primitive-loop pass and `posexplode` supplies the band index.
-    * Exposed for the recall spec. */
   /** The (vec_id, band, key) random-hyperplane band stream (see
     * [[embeddingLshBlocks]] for why it is exposed). The (bands, bits)
     * geometry is THE corpus-size knob: band collisions scale
@@ -1305,11 +1314,24 @@ object DedupOps {
           .as(Seq("band", "key")))
   }
 
-  /** The rp band-collision candidate pairs. The rp key map (128×64
-    * integer dots per vector) is expensive, so its block stream is
-    * materialized once ([[bandSelfJoin]] with `checkpoint`) — reliably
-    * whenever the context has a checkpoint directory. */
+  /** Distinct random-hyperplane candidate pairs (pre-cosine-verify) —
+    * like [[embeddingLshCandidates]], the band stream carries ONLY
+    * (vec_id, band, key); the native `rp_band_keys` computes all 16 keys
+    * in one primitive-loop pass and `posexplode` supplies the band index.
+    * Exposed for the recall spec and [[AnnOps.knnGraphRp]], which ranks
+    * every candidate once. */
   private[graft] def embeddingRpCandidates(embeddings: DataFrame,
+                                           bands: Int = graft.plans.RpLsh.Bands,
+                                           bits: Int = graft.plans.RpLsh.BitsPerBand)
+      : DataFrame =
+    embeddingRpCollisions(embeddings, bands, bits).distinct()
+
+  /** The rp band collisions, one row per shared band ([[bandSelfJoin]]).
+    * The rp key map (128×64 integer dots per vector) is expensive, so
+    * its block stream is materialized once ([[bandSelfJoin]] with
+    * `checkpoint`) — reliably whenever the context has a checkpoint
+    * directory. */
+  private[graft] def embeddingRpCollisions(embeddings: DataFrame,
                                            bands: Int = graft.plans.RpLsh.Bands,
                                            bits: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
@@ -1344,12 +1366,11 @@ object DedupOps {
     val delta0 = bk.filter(pmod(col("vec_id"), lit(deltaMod)) === 0).as("d")
     val delta = if (broadcastDelta) broadcast(delta0) else delta0
     val corpus = bk.filter(pmod(col("vec_id"), lit(deltaMod)) =!= 0)
-    val cands = corpus.as("c")
+    val collisions = corpus.as("c")
       .join(delta,
         col("d.band") === col("c.band") && col("d.key") === col("c.key"))
       .select(col("d.vec_id").as("vec_a"), col("c.vec_id").as("vec_b"))
-      .distinct()
-    cosineVerifiedPairs(embeddings, cands, tau)
+    cosineVerifiedPairs(embeddings, collisions, tau)
       .select(col("vec_a").as("vec_new"), col("vec_b").as("vec_corpus"),
         col("cos"))
       .orderBy("vec_new", "vec_corpus")
@@ -1382,7 +1403,7 @@ object DedupOps {
                                            tau: Double, bands: Int,
                                            bitsPerBand: Int): DataFrame =
     cosineVerifiedPairs(embeddings,
-      embeddingRpCandidates(embeddings, bands, bitsPerBand), tau)
+      embeddingRpCollisions(embeddings, bands, bitsPerBand), tau)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
 
   /** §2-86 `q_dedup_embedding_representative`: the EMBEDDING family's

@@ -835,11 +835,11 @@ class PipelineOpsSpec extends SparkSpec {
     assert(cands > 0)
   }
 
-  test("dedupEmbeddingLsh: planted near-dup pairs are recalled without labels") {
+  /** Deterministic pseudo-random base vectors 0..49 (LCG), each with a
+    * planted near-twin i + 1000: 90% base + 10% fresh noise —
+    * cos ≈ 0.99; NO label column anywhere. */
+  private def plantedNearDups: org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    // deterministic pseudo-random base vectors (LCG), each with a planted
-    // near-twin: 90% base + 10% fresh noise, renormalized — cos ≈ 0.99;
-    // NO label column anywhere
     var seed = 42L
     def nextF(): Float = {
       seed = seed * 6364136223846793005L + 1442695040888963407L
@@ -851,12 +851,82 @@ class PipelineOpsSpec extends SparkSpec {
       val noise = vec()
       (i + 1000L, v.zip(noise).map { case (x, e) => 0.9f * x + 0.1f * e })
     }
-    val synth = (base ++ twins).toDF("vec_id", "embedding")
-    val found = DedupOps.dedupEmbeddingLsh(synth, tau = 0.8).collect()
+    (base ++ twins).toDF("vec_id", "embedding")
+  }
+
+  test("dedupEmbeddingLsh: planted near-dup pairs are recalled without labels") {
+    val found = DedupOps.dedupEmbeddingLsh(plantedNearDups, tau = 0.8).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val planted = base.map { case (i, _) => (i, i + 1000L) }.toSet
+    val planted = (0L until 50L).map(i => (i, i + 1000L)).toSet
     val missed = planted -- found
     assert(missed.isEmpty, s"planted near-twins missed: $missed")
+  }
+
+  test("embedding pair operators: verifying each band collision, then deduplicating, " +
+      "equals deduplicating candidates, then verifying") {
+    import org.apache.spark.sql.DataFrame
+    import graft.functions.VectorFuns
+    type Pair = (Long, Long, Double)
+    // the dedup-first order, computed here: the distinct candidates,
+    // then the exact 6-dp cosine and τ
+    def verified(e0: DataFrame, candidates: DataFrame): Set[Pair] = {
+      val e = e0.select(col("vec_id"), col("embedding"),
+        VectorFuns.l2normNative(col("embedding")).as("nrm"))
+        .filter(col("nrm") > 0.0)
+      candidates
+        .join(e.as("ea"), col("vec_a") === col("ea.vec_id"))
+        .join(e.as("eb"), col("vec_b") === col("eb.vec_id"))
+        .select(col("vec_a"), col("vec_b"),
+          VectorFuns.cosine6Pre(col("ea.embedding"), col("eb.embedding"),
+            col("ea.nrm"), col("eb.nrm")).as("cos"))
+        .filter(col("cos") >= 0.4)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    def rows(df: DataFrame): Seq[Pair] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def assertOnce[T](name: String, got: Seq[T], expected: Set[T]): Unit = {
+      assert(got.toSet == expected,
+        s"$name: extra=${got.toSet -- expected} missing=${expected -- got.toSet}")
+      val repeated = got.groupBy(identity).collect { case (p, ps) if ps.size > 1 => p }
+      assert(repeated.isEmpty, s"$name: repeated pairs $repeated")
+    }
+    // every operator on `e` against the dedup-first order; returns the
+    // tiled and rp verified pairs
+    def check(input: String, e: DataFrame): (Set[Pair], Set[Pair]) = {
+      val m = DedupOps.IncrementalDeltaMod
+      val lsh = verified(e, DedupOps.embeddingLshCandidates(e))
+      val rp = verified(e, DedupOps.embeddingRpCandidates(e))
+      assert(lsh.nonEmpty && rp.nonEmpty, input)
+      assertOnce(s"$input lsh", rows(DedupOps.dedupEmbeddingLsh(e)), lsh)
+      assertOnce(s"$input rp", rows(DedupOps.dedupEmbeddingRp(e)), rp)
+      // the cross-set (delta, corpus) pairs, oriented (new, corpus)
+      val cross = rp.collect {
+        case (a, b, c) if a % m == 0 && b % m != 0 => (a, b, c)
+        case (a, b, c) if a % m != 0 && b % m == 0 => (b, a, c)
+      }
+      assertOnce(s"$input incremental",
+        rows(DedupOps.dedupEmbeddingIncremental(e)), cross)
+      assertOnce(s"$input cluster pairs",
+        pairs(DedupOps.embeddingClusterPairs(e, 0.4,
+          graft.plans.RpLsh.Bands, graft.plans.RpLsh.BitsPerBand)),
+        rp.map { case (a, b, _) => (a, b) })
+      (lsh, rp)
+    }
+    check("sf0.001 embeddings", embs)
+    val planted = plantedNearDups
+    val (lsh, rp) = check("planted near-dups", planted)
+    // not vacuous: the raw collisions repeat verified pairs, so an
+    // operator that skipped the dedup would emit them twice
+    Seq("lsh" -> (DedupOps.embeddingLshCollisions(planted), lsh),
+        "rp" -> (DedupOps.embeddingRpCollisions(planted), rp)).foreach {
+      case (scheme, (raw, ok)) =>
+        val okPairs = ok.map { case (a, b, _) => (a, b) }
+        val repeats = pairs(raw).groupBy(identity)
+          .count { case (p, ps) => ps.size > 1 && okPairs(p) }
+        assert(repeats > 0, s"$scheme: no verified pair repeats")
+    }
   }
 
   test("dedupEmbeddingRp: exact band-collision ∧ cosine contract on real embeddings") {

@@ -357,6 +357,51 @@ class PlanAuditSpec extends SparkSpec {
       }
   }
 
+  test("q_dedup_embedding_rp / the clusters pair graph: the cosine runs below " +
+      "the first exchange above the band self-join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the nodes from the (band, key) join up to the first shuffle above
+    // it, that shuffle last; the plan is the one adaptive execution
+    // starts from, where every exchange is a plain node of the tree
+    def bandJoinToShuffle(df: DataFrame): Seq[SparkPlan] = {
+      spark.catalog.clearCache()
+      val root = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      def path(n: SparkPlan): Option[List[SparkPlan]] = n match {
+        case j: BaseJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "band")) =>
+          Some(List(j))
+        case _ =>
+          n.children.iterator.map(path).collectFirst { case Some(ps) => n :: ps }
+      }
+      val up = path(root).getOrElse(fail(s"no band self-join in\n$root")).reverse
+      val (below, rest) = up.span(!_.isInstanceOf[ShuffleExchangeExec])
+      assert(rest.nonEmpty, s"no shuffle above the band self-join in\n$root")
+      below :+ rest.head
+    }
+    val embeddings = Tables.embeddings(spark, sfDir)
+    Seq(
+      "q_dedup_embedding_rp" -> DedupOps.dedupEmbeddingRp(embeddings),
+      "clusters pair graph" -> DedupOps.embeddingClusterPairs(
+        Tables.spread(embeddings, "vec_id"), 0.4,
+        graft.plans.RpLsh.Bands, graft.plans.RpLsh.BitsPerBand)
+    ).foreach { case (name, df) =>
+      val nodes = bandJoinToShuffle(df)
+      // the exchange keyed on the pair carries verified rows only: the
+      // τ predicate's float_dot is evaluated under it
+      assert(nodes.init.exists(_.expressions.mkString.contains("float_dot")),
+        s"$name: no float_dot between the band join and the shuffle:\n" +
+          nodes.map(_.simpleString(200)).mkString("\n"))
+      assert(nodes.last.expressions.mkString.contains("vec_a"),
+        s"$name: ${nodes.last.simpleString(200)}")
+    }
+  }
+
   test("q_redact: pure row-level — no Exchange except the output sort") {
     val p = plan(TextOps.redact(Tables.documents(spark, sfDir)))
     assert(exchangeCount(p) <= 1, s"${exchangeCount(p)} exchanges:\n$p")
