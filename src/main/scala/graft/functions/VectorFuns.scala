@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * sequential left-to-right. Engine-specific summation order still differs
   * from DuckDB's list_sum in the last ulp, so any cross-engine-compared
   * cosine is rounded to 6 dp on BOTH sides.
+  *
+  * On a [[graft.GraftSession]] session the optimizer runs these through
+  * bit-identical kernels: `RewriteHofVectorOps` turns the HOF dot and norm
+  * into `FloatDot` / `FloatNorm` (a null-free row-format array is folded
+  * without a per-element null check), and `RewriteDoubleRound` turns the
+  * double `round(…, 6)` into `HalfUp.round`, which needs no `BigDecimal`
+  * unless the value sits within a few ulps of a tie.
   */
 object VectorFuns {
 

@@ -3,9 +3,11 @@ package graft.plans
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
 /** Native Catalyst expressions for the embedding hot path (SURVEY.md §7.6).
   *
@@ -23,6 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * element, or unequal lengths (zip_with null-pads the shorter side),
   * make the fold NULL — required for [[RewriteHofVectorOps]] to be a
   * sound rewrite of arbitrary user SQL, not just the library's calls.
+  * A null-free `UnsafeArrayData` (the row format's arrays) takes the
+  * [[DenseFloats]] fold, the same products summed in the same order;
+  * any other array keeps the per-element null check.
   */
 case class FloatDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -42,6 +47,7 @@ case class FloatDot(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     if (x.numElements() != y.numElements()) return null
+    if (DenseFloats.isDense(x) && DenseFloats.isDense(y)) return DenseFloats.dot(x, y)
     val n = x.numElements()
     var acc = 0.0
     var i = 0
@@ -61,6 +67,9 @@ case class FloatDot(left: Expression, right: Expression)
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
+         |} else if (graft.plans.DenseFloats.isDense($a) &&
+         |    graft.plans.DenseFloats.isDense($b)) {
+         |  ${ev.value} = graft.plans.DenseFloats.dot($a, $b);
          |} else {
          |  int $n = $a.numElements();
          |  double $acc = 0.0;
@@ -94,6 +103,7 @@ case class FloatNorm(child: Expression)
 
   override protected def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
+    if (DenseFloats.isDense(x)) return math.sqrt(DenseFloats.dot(x, x))
     var acc = 0.0
     var i = 0
     val n = x.numElements()
@@ -113,19 +123,59 @@ case class FloatNorm(child: Expression)
       val acc = ctx.freshName("acc")
       val v = ctx.freshName("v")
       s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $v = (double) $a.getFloat($i);
-         |  $acc += $v * $v;
+         |if (graft.plans.DenseFloats.isDense($a)) {
+         |  ${ev.value} = java.lang.Math.sqrt(graft.plans.DenseFloats.dot($a, $a));
+         |} else {
+         |  int $n = $a.numElements();
+         |  double $acc = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |    double $v = (double) $a.getFloat($i);
+         |    $acc += $v * $v;
+         |  }
+         |  if (!${ev.isNull}) ${ev.value} = java.lang.Math.sqrt($acc);
          |}
-         |if (!${ev.isNull}) ${ev.value} = java.lang.Math.sqrt($acc);
          |""".stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): FloatNorm =
     copy(child = newChild)
+}
+
+/** The dense path of [[FloatDot]] and [[FloatNorm]]: an `UnsafeArrayData`
+  * whose null bitmap is all zero (one word per 64 elements, checked
+  * once) is folded straight over its value region, 4 bytes per float,
+  * with no per-element `isNullAt`. */
+object DenseFloats {
+  /** An `UnsafeArrayData` with no null element. */
+  def isDense(x: ArrayData): Boolean = x match {
+    case u: UnsafeArrayData =>
+      !BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8,
+        (u.numElements() + 63) / 64)
+    case _ => false
+  }
+
+  /** Σ xᵢ·yᵢ over two dense arrays of equal length: each float widened
+    * to double, the products added left to right from 0.0 — the element
+    * loop's arithmetic exactly. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val u = x.asInstanceOf[UnsafeArrayData]
+    val w = y.asInstanceOf[UnsafeArrayData]
+    val n = u.numElements()
+    val header = UnsafeArrayData.calculateHeaderPortionInBytes(n)
+    val ub = u.getBaseObject
+    val wb = w.getBaseObject
+    var uo = u.getBaseOffset + header
+    var wo = w.getBaseOffset + header
+    val end = uo + 4L * n
+    var acc = 0.0
+    while (uo < end) {
+      acc += Platform.getFloat(ub, uo).toDouble * Platform.getFloat(wb, wo).toDouble
+      uo += 4
+      wo += 4
+    }
+    acc
+  }
 }
 
 /** Registration of the native functions.
@@ -137,8 +187,10 @@ case class FloatNorm(child: Expression)
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    // HOF dot/norm → native codegen expressions (bit-identical rewrite)
+    // HOF dot/norm → native codegen expressions, double round → the
+    // HalfUp kernel (both bit-identical rewrites)
     ext.injectOptimizerRule(_ => RewriteHofVectorOps)
+    ext.injectOptimizerRule(_ => RewriteDoubleRound)
   }
 }
 

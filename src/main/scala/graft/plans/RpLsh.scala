@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -76,15 +74,13 @@ object RpLsh {
   val planes: Array[Array[Long]] = planesFor(Bands, BitsPerBand)
 
   /** round(v×10⁶) with Spark `round`'s exact semantics (shortest-decimal
-    * BigDecimal, HALF_UP) — keeps this expression bit-aligned with the
-    * `CAST(round(CAST(v AS DOUBLE) * 1e6) AS BIGINT)` oracle twin.
-    * Callers must pre-check finiteness and magnitude: on NaN/Infinity
-    * `BigDecimal.valueOf` throws, and a float beyond ~9.2e12 overflows
-    * `longValueExact` — either would kill the whole job from one bad
-    * row. */
-  private def q6(v: Float): Long =
-    JBigDecimal.valueOf(v.toDouble * 1e6)
-      .setScale(0, RoundingMode.HALF_UP).longValueExact()
+    * half-up, through [[HalfUp.roundToLong]]) — keeps this expression
+    * bit-aligned with the `CAST(round(CAST(v AS DOUBLE) * 1e6) AS BIGINT)`
+    * oracle twin. Callers pre-check finiteness and magnitude (`|v| ≤`
+    * [[MaxAbs]], so the product stays below 2^52 and the kernel needs
+    * no `BigDecimal` but for an exact .5): a NaN/Infinity would throw,
+    * and one bad row must not kill the whole job. */
+  private def q6(v: Float): Long = HalfUp.roundToLong(v.toDouble * 1e6)
 
   /** Any |v| above this has no meaningful sign-LSH key anyway (the
     * overflow-freedom argument in the scaladoc assumes unit-ish

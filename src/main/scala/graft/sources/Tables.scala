@@ -160,9 +160,7 @@ object Tables {
   def spread(df: DataFrame, key: String = "doc_id"): DataFrame = {
     // streaming frames have no static split count (and micro-batch
     // parallelism is the source's business) — pass through untouched.
-    // SPARK_GRAFT_NO_SPREAD is the measurement kill-switch: one binary
-    // serves both sides of an A/B (and dumps the unspread plan).
-    if (df.isStreaming || sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df
+    if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (scanSplitCount(df).exists(_ < target))
       df.repartition(target, org.apache.spark.sql.functions.col(key))
