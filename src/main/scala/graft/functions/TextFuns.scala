@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-pipeline building blocks (SURVEY.md §2-B): normalization, tokens,
-  * and hash-parity weights.
+/** Text-pipeline building blocks (SURVEY.md §2-B): normalization, tokens
+  * and SQL literals.
   *
   * Everything is built from `org.apache.spark.sql.functions` + higher-order
   * array functions — codegen'd row-level expressions, no UDFs. Hashes are
@@ -29,20 +29,4 @@ object TextFuns {
     * stopwords) goes through this, so a future constant containing a
     * quote (e.g. "don't") cannot produce malformed oracle SQL. */
   def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** SimHash ±1 weight for bit `b` of a token: bits 0-31 test the parity
-    * (low bit) of hex digit `b` of the token's md5; bits 32-63 test the
-    * SECOND bit of hex digit `b−32` — two independent bit planes from one
-    * digest. SUM of these over a doc's tokens is the signed bit weight —
-    * exact integer math, identical to the oracle's
-    * `strpos('13579bdf'|'2367abef', digit) > 0` tests. */
-  def simhashWeight(tokenMd5Hex: Column, b: Int): Column = {
-    require(b >= 0 && b <= 63, s"simhash bit $b out of the two md5 bit planes")
-    val digitsWithBitSet = // hex digits whose bit (b >>> 5) is set
-      if (b < 32) Seq("1", "3", "5", "7", "9", "b", "d", "f")
-      else Seq("2", "3", "6", "7", "a", "b", "e", "f")
-    when(substring(tokenMd5Hex, (b & 31) + 1, 1)
-      .isin(digitsWithBitSet: _*), lit(1))
-      .otherwise(lit(-1))
-  }
 }

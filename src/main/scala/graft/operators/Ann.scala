@@ -721,7 +721,7 @@ object AnnOps {
     *
     * Zero shuffle end to end — a pure map over the embedding scan; a
     * real pipeline writes this frame label-partitioned
-    * (`Sinks.writePartitionedByLabel`) and [[annIvfQ8]] searches THAT,
+    * (`Sinks.writePartitionedBy` on `label`) and [[annIvfQ8]] searches THAT,
     * never the float column. */
   def quantizedVectors(embeddings: DataFrame): DataFrame =
     quantizedBase(embeddings)

@@ -429,7 +429,7 @@ object CrawlOps {
   }
 
   /** Header freshness signals straight off a WARC record frame (round
-    * 16) — the lean real face of [[headerSignals]]: `Last-Modified`
+    * 16) — the lean real face of [[headerSignalsFrom]]: `Last-Modified`
     * parsed from the HTTP header block alone (the bijective latin-1
     * view; the RFC 9110 IMF-fixdate → ISO date string, the lexical
     * comparison convention), keyed on the canonical URL. No body
@@ -446,7 +446,7 @@ object CrawlOps {
   }
 
   /** HTTP-caching expiry straight off a WARC record frame — the real
-    * face of [[expiresSignals]]: the stored copy's declared freshness
+    * face of [[expiresSignalsFrom]]: the stored copy's declared freshness
     * lifetime as an absolute ISO date. RFC 9111 §4.2.1 precedence:
     * `Cache-Control: max-age=N` over the response `Date` (seconds
     * arithmetic on the epoch — integer-exact) wins; the `Expires` date
@@ -567,10 +567,6 @@ object CrawlOps {
     * often compressed; the entry SET is unchanged, so the oracles hold).
     * Both engines derive the same entries from `source` alone. Returns
     * (source, url, body_bytes). */
-  private[graft] def sitemapBodies(documents: DataFrame): DataFrame =
-    sitemapBodiesFrom(documents.select(col("source")).distinct())
-
-  /** [[sitemapBodies]] over a pre-derived host frame. */
   private[graft] def sitemapBodiesFrom(hosts: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(hosts.sparkSession)
     val idx = expr("CAST(substr(source, 4, 10) AS INT)")
@@ -701,7 +697,7 @@ object CrawlOps {
 
   /** §2 `q_sitemap`: sitemap-SEEDED discovery — the crawl loop's other
     * input path beside outlink extraction: each host publishes the
-    * nested synthetic sitemap universe ([[sitemapBodies]] — a
+    * nested synthetic sitemap universe ([[sitemapBodiesFrom]] — a
     * `<sitemapindex>` over two `<urlset>` children, both engines build
     * the same bytes), entries are pulled through the general
     * [[parseSitemaps]] (one-level index recursion), canonized under the
@@ -738,9 +734,6 @@ object CrawlOps {
     * entry). Entry ids land in the hosts' fetch-universe residue
     * classes (the [[sitemapBodiesFrom]] `cls` arithmetic) so `fetched`
     * genuinely varies. */
-  private[graft] def feedBodies(documents: DataFrame): DataFrame =
-    feedBodiesFrom(documents.select(col("source")).distinct())
-
   private[graft] def feedBodiesFrom(hosts: DataFrame): DataFrame = {
     val idx = expr("CAST(substr(source, 4, 10) AS INT)")
     val host = concat(col("source"), lit(".example.com"))
@@ -810,7 +803,7 @@ object CrawlOps {
 
   /** §2 `q_feeds`: feed-SEEDED discovery — the third discovery channel
     * under the oracle: every host's synthetic RSS+Atom pair
-    * ([[feedBodies]]) parses through the general [[parseFeeds]],
+    * ([[feedBodiesFrom]]) parses through the general [[parseFeeds]],
     * canonizes under the fetch-log identity, dedupes keeping the
     * NEWEST date (the trailing-slash duplicate's older pubDate loses),
     * and triages through the SAME shared core as sitemap seeds —
@@ -896,14 +889,22 @@ object CrawlOps {
 
   /** The sitemap freshness SIGNAL frame (canon_url, lastmod, changefreq,
     * priority, etag_due=false) — one of [[recrawl]]'s three inputs. */
-  private def sitemapSignals(documents: DataFrame): DataFrame =
-    sitemapSignalsFrom(documents.select(col("source")).distinct())
-
-  /** [[sitemapSignals]] over a pre-derived host frame. */
   private def sitemapSignalsFrom(hosts: DataFrame): DataFrame =
     asSignals(parseSitemapBytes(sitemapBodiesFrom(hosts))
       .select(UrlOps.canon(col("loc")).as("canon_url"), col("lastmod"),
         col("changefreq"), col("priority")))
+
+  /** The canonical fetch-log universe WITH its path id — derived ONCE
+    * and locally checkpointed when several consumers need it
+    * ([[recrawl]]: header signals + etag signals + fetched flags each
+    * filter this frame; re-deriving it per consumer costs one
+    * corpus-scale distinct shuffle EACH — measured as 3 extra scans in
+    * the q_recrawl plan). */
+  private def fetchUniverse(documents: DataFrame): DataFrame =
+    UrlOps.canonUrls(documents)
+      .withColumn("_id",
+        expr("CAST(regexp_extract(canon_url, '/docs/([0-9]+)$', 1) AS INT)"))
+      .transform(Materialize(_, eager = false))
 
   /** Header-observed freshness signals — the SECOND recrawl input (round
     * 14): most hosts publish no sitemap, but many responses carry
@@ -917,21 +918,6 @@ object CrawlOps {
     * never due); both engines derive it from the path id alone. The
     * WARC face is [[HtmlOps.warcToDocuments]]'s `last_modified`
     * column. */
-  /** The canonical fetch-log universe WITH its path id — derived ONCE
-    * and locally checkpointed when several consumers need it
-    * ([[recrawl]]: header signals + etag signals + fetched flags each
-    * filter this frame; re-deriving it per consumer costs one
-    * corpus-scale distinct shuffle EACH — measured as 3 extra scans in
-    * the q_recrawl plan). */
-  private def fetchUniverse(documents: DataFrame): DataFrame =
-    UrlOps.canonUrls(documents)
-      .withColumn("_id",
-        expr("CAST(regexp_extract(canon_url, '/docs/([0-9]+)$', 1) AS INT)"))
-      .transform(Materialize(_, eager = false))
-
-  private[graft] def headerSignals(documents: DataFrame): DataFrame =
-    headerSignalsFrom(fetchUniverse(documents))
-
   private def headerSignalsFrom(universe: DataFrame): DataFrame =
     asSignals(universe
       .filter(col("_id") < 50 && col("_id") % 3 =!= 0)
@@ -948,9 +934,6 @@ object CrawlOps {
     * both engines derive it from the path id alone. The WARC face is
     * [[etagChanged]] over [[HtmlOps.warcToDocuments]]'s `etag` column
     * vs a prior fetch-log frame. */
-  private[graft] def etagSignals(documents: DataFrame): DataFrame =
-    etagSignalsFrom(fetchUniverse(documents))
-
   private def etagSignalsFrom(universe: DataFrame): DataFrame =
     asSignals(universe
       .filter(col("_id") < 50 && col("_id") % 5 === 2)
@@ -966,9 +949,6 @@ object CrawlOps {
     * [[RecrawlAsOf]] (due), id%7==4 after (not due) — both engines
     * derive it identically; dates are ISO strings under the lexical
     * comparison convention. The WARC face is [[expiresSignalsOf]]. */
-  private[graft] def expiresSignals(documents: DataFrame): DataFrame =
-    expiresSignalsFrom(fetchUniverse(documents))
-
   private def expiresSignalsFrom(universe: DataFrame): DataFrame =
     asSignals(universe
       .filter(col("_id") < 50 && (col("_id") % 7 === 1 || col("_id") % 7 === 4))
@@ -976,7 +956,7 @@ object CrawlOps {
         when(col("_id") % 7 === 1, lit("2026-07-01"))
           .otherwise(lit("2027-01-01")).as("expires")))
 
-  /** The real-WARC face of [[etagSignals]]: current observations
+  /** The real-WARC face of [[etagSignalsFrom]]: current observations
     * (canon_url, etag) vs the PRIOR fetch log's recorded etags — rows
     * whose strong validator changed (both present, unequal; RFC 9110
     * §8.8.3: a missing side is no evidence either way) come back as
@@ -1242,10 +1222,10 @@ object CrawlOps {
     *  1. `lastmod` — a sitemap `<lastmod>` or header `Last-Modified`
     *     POSTDATING the fetch date: the page changed since we took it;
     *  2. `etag` — conditional revalidation observed a different entity
-    *     tag ([[etagSignals]]): changed, but no date attached (the
+    *     tag ([[etagSignalsFrom]]): changed, but no date attached (the
     *     hosts that send no Last-Modified and publish no sitemap);
     *  3. `expired` — the stored copy's HTTP-caching lifetime
-    *     ([[expiresSignals]]: `Cache-Control: max-age` / `Expires`)
+    *     ([[expiresSignalsFrom]]: `Cache-Control: max-age` / `Expires`)
     *     has elapsed: an origin-stated revalidation trigger, sharper
     *     than the sitemap prior, weaker than an observed change;
     *  4. `changefreq` — no timestamp at all, but the sitemap declares a
@@ -1295,10 +1275,6 @@ object CrawlOps {
     * the shared url universe (d = the link universe's `p1` arithmetic,
     * so the chain lands in the frontier/fetch-log world), plus a 2-cycle
     * `/loop/a ↔ /loop/b` so the hop cap actually bites. */
-  private[graft] def redirectEdges(documents: DataFrame): DataFrame =
-    redirectEdgesFrom(documents.select(col("source")).distinct())
-
-  /** [[redirectEdges]] over a pre-derived host frame. */
   private def redirectEdgesFrom(hosts: DataFrame): DataFrame = {
     val host = concat(col("source"), lit(".example.com"))
     val d = ((expr("CAST(substr(source, 4, 10) AS INT)") * 7 + 13) % 100)
@@ -2116,13 +2092,13 @@ object CrawlOps {
 
   /** [[sitemapSeedCtes]] generalized over the signal UNION (round 14):
     * `q_sitemap` triages the sitemap entries alone; `q_recrawl` unions
-    * the header-observed lastmod signal ([[headerSignals]]' twin — the
+    * the header-observed lastmod signal ([[headerSignalsFrom]]'s twin — the
     * fetched universe with id%4-derived dates) before the max-dedup, so
     * header-dated staleness feeds the same politeness tail. */
   private def seedCtes(withHeaderSignals: Boolean): String = {
     def d(m: Int, a: Int): String =
       s"CAST((CAST(substr(source, 4, 10) AS INT) * $m + $a) % 100 AS VARCHAR)"
-    // the residue-class form — see sitemapBodies' cls()
+    // the residue-class form — see sitemapBodiesFrom's cls()
     def cls(m: Int, a: Int): String =
       s"CAST(((CAST(substr(source, 4, 10) AS INT) * $m + $a) % 5) * 20 + " +
         s"(CAST(substr(source, 4, 10) AS INT) % 20) AS VARCHAR)"

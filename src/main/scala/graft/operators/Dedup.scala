@@ -1190,15 +1190,10 @@ object DedupOps {
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Distinct LSH candidate pairs (pre-cosine-verify) — the blocks frame
-    * carries ONLY (vec_id, band, key): the 64-float payload never rides
-    * the exploded band stream or its shuffle; exposed for the
-    * candidate-volume spec. */
-  private[graft] def embeddingLshCandidates(embeddings: DataFrame): DataFrame =
-    embeddingLshCollisions(embeddings).distinct()
-
   /** The tiled-sign band collisions [[dedupEmbeddingLsh]] verifies, one
-    * row per shared band ([[bandSelfJoin]]). */
+    * row per shared band ([[bandSelfJoin]]). The blocks frame carries
+    * ONLY (vec_id, band, key): the 64-float payload never rides the
+    * exploded band stream or its shuffle. */
   private[graft] def embeddingLshCollisions(embeddings: DataFrame): DataFrame =
     // NO checkpoint: the tiled sign keys are cheap column slices —
     // recompute ≈ free (the minhash k<16 case), so lineage stays whole
@@ -1315,7 +1310,7 @@ object DedupOps {
   }
 
   /** Distinct random-hyperplane candidate pairs (pre-cosine-verify) —
-    * like [[embeddingLshCandidates]], the band stream carries ONLY
+    * like [[embeddingLshCollisions]], the band stream carries ONLY
     * (vec_id, band, key); the native `rp_band_keys` computes all 16 keys
     * in one primitive-loop pass and `posexplode` supplies the band index.
     * Exposed for the recall spec and [[AnnOps.knnGraphRp]], which ranks

@@ -408,7 +408,7 @@ object HtmlOps {
     // freshness/validator headers (round 14): most hosts publish no
     // sitemap, but nearly every response carries Last-Modified and/or
     // ETag — carried as columns so the recrawl scheduler can union them
-    // with sitemap lastmods (CrawlOps.headerSignals' real face). The
+    // with sitemap lastmods (CrawlOps.headerSignalsFrom's real face). The
     // RFC 9110 IMF-fixdate also lands as a DATE (weekday/zone dropped —
     // Spark's parser takes neither; fixdate is always GMT).
     val lmDate = to_date(HttpCodec.date(col("_lm")))
@@ -796,21 +796,6 @@ object HtmlOps {
     prior.unionByName(delta)
       .groupBy(col("dst_url"), col("anchor"), col("src"))
       .agg(sum("cnt").cast("long").as("cnt"))
-
-  /** REPLACE-merge (round 17): the additive [[anchorStateMerge]] is
-    * right when batches partition the crawl, but a RECRAWL of an
-    * unchanged page would inflate its counts on every visit — a real
-    * incremental anchor table wants the recrawled page's old
-    * contribution SUPERSEDED, not accumulated. Anti-join the prior on
-    * the delta's distinct source pages, then union: the two sides'
-    * (dst, anchor, src) triples are disjoint by construction, so no
-    * re-aggregation shuffle is needed — at 100 TB the link-graph-scale
-    * prior moves through one src-keyed anti-join only. */
-  def anchorStateMergeReplace(prior: DataFrame, delta: DataFrame): DataFrame =
-    prior
-      .join(delta.select(col("src")).distinct(), Seq("src"), "left_anti")
-      .unionByName(delta)
-      .select(col("dst_url"), col("anchor"), col("src"), col("cnt"))
 
   /** The anchor summary off a persisted state table — what a consumer
     * reads after any number of incremental merges. */

@@ -270,9 +270,6 @@ object PdfOps {
     StructField("text", StringType),
     StructField("n_chars", LongType),
     StructField("n_streams", IntegerType)))
-  private val quarantineSchema = StructType(Seq(
-    StructField("url", StringType),
-    StructField("reason", StringType)))
 
   /** Extract text from a (url, payload) frame of PDF bytes —
     * (clean, quarantine) pair, the [[HtmlOps.warcToDocuments]]

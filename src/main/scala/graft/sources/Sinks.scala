@@ -38,27 +38,16 @@ object Sinks {
       .partitionBy("day")
       .parquet(path)
 
-  /** Read back a day-partitioned event layout. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    Tables.parquet(spark, path)
-
-  /** The IVF index layout: embeddings partitioned by list id —
-    * `path/label=N/part-*.parquet`. An `AnnOps.annIvf` probe over this
-    * layout reads only the probed lists' directories: the probe set is
-    * a broadcast joined on the partition column, so dynamic partition
-    * pruning turns "scan the corpus" into "scan nProbe/nLists of it"
-    * (PartitionFilters carries the dynamicpruning subquery — asserted in
-    * `SinksSpec`). This is the §2-60 claim made physical. */
-  def writePartitionedByLabel(embeddings: DataFrame, path: String,
-                              maxRecordsPerFile: Long = 5000000L): Unit =
-    writePartitionedBy(embeddings, path, "label", maxRecordsPerFile)
-
-  /** The general list-keyed index layout — `path/<col>=N/part-*.parquet`.
-    * [[writePartitionedByLabel]] is this on the raw embeddings' label;
-    * the IVF-PQ code table writes through it on the LEARNED `list_id`
-    * (`AnnOps.pqIvfIndex`), so a `pqSearchIvfIndex` probe
-    * dynamic-partition-prunes the code directories the same way
-    * (asserted in `SinksSpec`). */
+  /** The list-keyed index layout — `path/<col>=N/part-*.parquet`. On
+    * the raw embeddings' `label` it is the IVF index layout: an
+    * `AnnOps.annIvf` probe over it reads only the probed lists'
+    * directories — the probe set is a broadcast joined on the partition
+    * column, so dynamic partition pruning turns "scan the corpus" into
+    * "scan nProbe/nLists of it" (PartitionFilters carries the
+    * dynamicpruning subquery — asserted in `SinksSpec`; the §2-60 claim
+    * made physical). The IVF-PQ code table writes through it on the
+    * LEARNED `list_id` (`AnnOps.pqIvfIndex`), so a `pqSearchIvfIndex`
+    * probe dynamic-partition-prunes the code directories the same way. */
   def writePartitionedBy(df: DataFrame, path: String, partitionCol: String,
                          maxRecordsPerFile: Long = 5000000L): Unit =
     df.write.mode("overwrite")

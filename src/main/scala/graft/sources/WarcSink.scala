@@ -103,7 +103,7 @@ object WarcSink {
             // off-heap memory) without closing the partition stream
             val shield = new java.io.FilterOutputStream(out) {
               override def write(b: Array[Byte], off: Int, len: Int): Unit =
-                out.write(b, off, len)
+                this.out.write(b, off, len)
               override def close(): Unit = flush()
             }
             val md = java.security.MessageDigest.getInstance("MD5")

@@ -67,7 +67,8 @@ object WarcSource {
       // `length` = version line + headers + payload (the inter-record
       // CRLFCRLF padding is excluded). For a plain .warc these are true
       // FILE offsets; for .warc.gz they index the decompressed stream
-      // ([[readAt]] skips to either — see [[cdxIndex]]).
+      // ([[readAtMember]] from member 0 skips to either — see
+      // [[cdxIndex]]).
       offset: Long,
       length: Long,
       // COMPRESSED coordinates (round 19 — the real Common Crawl CDX
@@ -513,7 +514,6 @@ object WarcSource {
     * tasks, never a driver collect). */
   def cdxIndex(records: DataFrame): DataFrame = {
     val spark = records.sparkSession
-    import spark.implicits._
     val base = records
       .filter(col("target_uri") =!= "")
       .select(
@@ -587,32 +587,6 @@ object WarcSource {
         col("payload_digest"))
   }
 
-  /** Random access by a [[cdxIndex]] row: open `file`, position at
-    * `offset` (a true seek is unavailable through the gzip sniff, so
-    * this skips through the stream — O(offset) decompression for .gz,
-    * effectively free for plain .warc where the skip is a buffered
-    * seek), parse ONE record. Returns None past EOF / on a torn
-    * record. */
-  def readAt(spark: SparkSession, file: String, offset: Long,
-             maxRecord: Int = 64 << 20): Option[WarcRecord] = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = sniffGzip(fs.open(hp))
-    try {
-      var toSkip = offset
-      while (toSkip > 0) {
-        val n = in.skip(toSkip)
-        if (n > 0) toSkip -= n
-        else if (in.read() >= 0) toSkip -= 1 // skip() can return 0 legally
-        else toSkip = 0 // EOF before offset → the walk below ends empty
-      }
-      val it = parseStream(file, in, maxRecord)
-      if (it.hasNext) Some(it.next()) else None
-    } finally {
-      try in.close() catch { case _: IOException => () }
-    }
-  }
-
   /** Random access by COMPRESSED coordinates (round 19) — the real
     * Common Crawl access pattern: a true `FileSystem.seek` to
     * `member_offset` (the gzip member's file offset from [[cdxIndex]]),
@@ -621,9 +595,11 @@ object WarcSource {
     * layout), then ONE record parsed. Cost is O(seek + one member),
     * never O(offset) re-inflation of the file head — on a plain
     * `.warc` the coordinates degrade to (offset, 0) and this is a pure
-    * seek, strictly better than [[readAt]]'s skip-through there too.
-    * The returned record's MEMBER coordinates are rebased to absolute
-    * file coordinates (the walk's relative member start plus the seek
+    * seek. `readAtMember(spark, file, 0L, offset)` re-reads by the
+    * decompressed `offset` axis instead: a skip through the stream,
+    * O(offset) inflation for `.gz`. None past EOF. The returned
+    * record's MEMBER coordinates are rebased to absolute file
+    * coordinates (the walk's relative member start plus the seek
     * position), so a re-fetched record round-trips through its own
     * index row; `offset`/`length` remain walk-relative (the global
     * decompressed position is unknowable without inflating the file
@@ -641,21 +617,33 @@ object WarcSource {
     try {
       if (memberOffset > 0) fsin.seek(memberOffset)
       in = sniffGzip(fsin)
-      var toSkip = memberSkip
-      while (toSkip > 0) {
-        val n = in.skip(toSkip)
-        if (n > 0) toSkip -= n
-        else if (in.read() >= 0) toSkip -= 1
-        else toSkip = 0 // EOF before the skip target → empty walk below
-      }
-      val it = parseStream(file, in, maxRecord)
-      if (it.hasNext) {
-        val r = it.next()
-        Some(r.copy(member_offset = memberOffset + r.member_offset))
-      } else None
+      recordAt(file, in, memberOffset, memberSkip, maxRecord)
+    } catch {
+      case _: EOFException => None // seek past EOF: no record there
     } finally {
       try in.close() catch { case _: IOException => () }
     }
+  }
+
+  /** Skip `skip` decompressed bytes of `in` (a stream opened at
+    * `memberOffset`), parse ONE record and rebase its member coordinates
+    * to absolute file coordinates; `offset`/`length` stay walk-relative.
+    * None when the stream ends first. */
+  private def recordAt(file: String, in: InputStream,
+                       memberOffset: Long, skip: Long,
+                       maxRecord: Int): Option[WarcRecord] = {
+    var toSkip = skip
+    while (toSkip > 0) {
+      val n = in.skip(toSkip)
+      if (n > 0) toSkip -= n
+      else if (in.read() >= 0) toSkip -= 1 // skip() can return 0 legally
+      else toSkip = 0 // EOF before the skip target → the walk ends empty
+    }
+    val walk = parseStream(file, in, maxRecord)
+    if (walk.hasNext) {
+      val r = walk.next()
+      Some(r.copy(member_offset = memberOffset + r.member_offset))
+    } else None
   }
 
   /** BATCH random access (round 19) — the distributed face of
@@ -710,24 +698,8 @@ object WarcSource {
             // — 10M index rows must not leave 10M native zlib handles
             // to the GC Cleaner (the FilterInputStream's no-op close
             // keeps the shared file handle alive)
-            try {
-              var toSkip = skip
-              var eof = false
-              while (toSkip > 0 && !eof) {
-                val n = s.skip(toSkip)
-                if (n > 0) toSkip -= n
-                else if (s.read() >= 0) toSkip -= 1
-                else { toSkip = 0; eof = true }
-              }
-              val walk = parseStream(file, s, maxRecord)
-              if (!eof && walk.hasNext) {
-                // member coordinates rebase to absolute file coordinates
-                // (readAtMember's contract); offset/length stay
-                // walk-relative
-                val r = walk.next()
-                Some(r.copy(member_offset = memberOffset + r.member_offset))
-              } else None
-            } finally {
+            try recordAt(file, s, memberOffset, skip, maxRecord)
+            finally {
               try s.close() catch { case _: IOException => () }
             }
           } catch {

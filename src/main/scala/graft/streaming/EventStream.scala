@@ -269,16 +269,6 @@ object EventStream {
       }
       .start()
 
-  /** §2-C streaming exactly-once dedup: drop duplicate event ids within
-    * the watermark horizon — the streaming twin of `q_dedup_exact` for an
-    * at-least-once ingest (Kafka replays, task retries). State is bounded
-    * by the watermark: ids older than it are evicted, which is the only
-    * way unbounded-stream dedup stays O(window). */
-  def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** §2-C streaming incremental NEAR-dup dedup: the streaming twin of
     * `DedupOps.dedupIncremental`, completing the twin pattern — the
     * micro-batch IS the delta. Each batch of (doc_id, text) documents
@@ -300,10 +290,10 @@ object EventStream {
     * pair set — the matches, not the corpus; a production deployment
     * whose stream carries an ingest timestamp should swap in
     * `dropDuplicatesWithinWatermark` to bound state by the replay
-    * horizon instead (the same trade [[dedupStream]] makes). Append
-    * mode; exactly-once into a file sink via checkpointed offsets +
-    * the transactional sink log (restart spec'd like
-    * [[writePartitionedStream]]). */
+    * horizon instead: ids older than the watermark are evicted, so
+    * state stays O(window). Append mode; exactly-once into a file sink
+    * via checkpointed offsets + the transactional sink log (restart
+    * spec'd like [[writePartitionedStream]]). */
   def dedupIncrementalStream(docs: DataFrame, corpusIndex: DataFrame,
                              k: Int = graft.operators.DedupOps.MinhashK,
                              bands: Int = graft.operators.DedupOps.Bands)
@@ -386,8 +376,9 @@ object EventStream {
     * State is one 32-char hash per distinct ingested text — never the
     * text itself; an ingest-timestamped deployment swaps in
     * `dropDuplicatesWithinWatermark` to bound it by the replay horizon
-    * ([[dedupStream]]'s trade). Append mode; exactly-once via the
-    * checkpointed transactional file sink like every sink here. */
+    * (ids older than the watermark are evicted). Append mode;
+    * exactly-once via the checkpointed transactional file sink like every
+    * sink here. */
   def curateStream(docs: DataFrame, corpusHashIndex: DataFrame,
                    publishedGates: Boolean = false,
                    badwords: Seq[String] = Nil): DataFrame = {
@@ -427,12 +418,12 @@ object EventStream {
     * `dropDuplicates`, whose state is the REPORTED hits only — false
     * positives included, a tiny fraction of the stream; an
     * ingest-timestamped deployment swaps in
-    * dropDuplicatesWithinWatermark, the [[dedupStream]] trade). The
-    * probes frame is static — file-backed probes snapshot their listing
-    * at DataFrame build, so a probe-set refresh needs a new path +
-    * query restart ([[anomalyStream]]'s contract). At 100 TB/day the
-    * stream cost is exactly the batch screen's: one pass, bitmap
-    * broadcast, only hits move. */
+    * dropDuplicatesWithinWatermark to evict ids older than the
+    * watermark). The probes frame is static — file-backed probes
+    * snapshot their listing at DataFrame build, so a probe-set refresh
+    * needs a new path + query restart ([[anomalyStream]]'s contract).
+    * At 100 TB/day the stream cost is exactly the batch screen's: one
+    * pass, bitmap broadcast, only hits move. */
   def contaminationBloomStream(docs: DataFrame, probes: DataFrame,
                                hexChars: Int = graft.plans.GraftBloom.DefaultHexChars)
       : DataFrame =
@@ -651,22 +642,4 @@ object EventStream {
       .partitionBy("day")
       .outputMode(OutputMode.Append())
       .start()
-
-  /** §2-C streaming twin of `SessionOps.windowAfter`: stream-stream
-    * interval join — for each type-A event, the type-B events of the same
-    * user within `band` after it. Watermarks on BOTH sides bound the join
-    * state (Spark drops buffered rows once the watermark passes the
-    * interval), which is what keeps an unbounded self-correlation feasible
-    * — state is O(events in the band window), not O(stream). Append mode. */
-  def windowAfterStream(typeA: DataFrame, typeB: DataFrame,
-                        band: String = "6 hours",
-                        watermark: String = "2 hours"): DataFrame = {
-    val a = typeA.withWatermark("ts", watermark)
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
-        col("ts").as("a_ts"))
-    val b = typeB.withWatermark("ts", watermark)
-      .select(col("user_id").as("b_user"), col("ts").as("b_ts"))
-    a.join(b, expr(
-      s"a_user = b_user AND b_ts > a_ts AND b_ts <= a_ts + interval $band"))
-  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.ClassifierOps
 import graft.sources.Tables
 

@@ -993,7 +993,6 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("bm25Multi: each probe's ranking equals the single-query bm25 over its own terms") {
-    import graft.functions.TextFuns
     val multi = CorpusOps.bm25Multi(docs).collect()
       .groupBy(_.getString(0))
       .view.mapValues(_.sortBy(_.getInt(1))

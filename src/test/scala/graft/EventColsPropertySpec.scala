@@ -80,7 +80,7 @@ class EventColsPropertySpec extends SparkSpec {
     val df = toks.toDF("tok")
       .withColumn("h", md5(col("tok").cast("binary")))
     val got = df.select(col("h"),
-      graft.functions.TextFuns.simhashWeight(col("h"), 0).as("w0")).collect()
+      TextHashExprSpec.simhashWeight(col("h"), 0).as("w0")).collect()
     got.foreach { r =>
       val digit = Integer.parseInt(r.getString(0).substring(0, 1), 16)
       val expected = if (digit % 2 == 1) 1 else -1

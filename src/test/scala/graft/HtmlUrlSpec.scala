@@ -808,8 +808,8 @@ class HtmlUrlSpec extends SparkSpec {
     assert(parse(corrupt).isEmpty, "corrupt gzip drops the row, never poisons")
     // the synthetic universe actually SHIPS child B gzipped — prove the
     // production path inflates it (its two entries carry the old lastmods)
-    val docs = Seq((20L, "src0")).toDF("doc_id", "source")
-    val viaUniverse = CrawlOps.parseSitemapBytes(CrawlOps.sitemapBodies(docs))
+    val hosts = Seq("src0").toDF("source")
+    val viaUniverse = CrawlOps.parseSitemapBytes(CrawlOps.sitemapBodiesFrom(hosts))
       .collect().map(r => Option(r.getString(2))).count(_.exists(_ < "2026-08"))
     assert(viaUniverse == 2, "child B's 2026-07-20/2026-06-10 entries must land")
   }
@@ -1446,7 +1446,6 @@ class HtmlUrlSpec extends SparkSpec {
   }
 
   test("warcToDocuments carries page-level robots directives from both routes") {
-    import spark.implicits._
     val dir = SparkSpec.tempDir("graft_warc_noidx")
     val metaPage = "<html><head><meta name=\"robots\" " +
       "content=\"noindex\"><title>t</title></head><body>secret page</body></html>"
@@ -2739,42 +2738,6 @@ class HtmlUrlSpec extends SparkSpec {
     assert(merged == whole, s"$merged vs $whole")
     assert(merged.contains(
       ("http://t.example/page", "Home", 3L, 4L, 2L, 2L)), merged)
-  }
-
-  test("anchorStateMergeReplace: a recrawled page supersedes, never inflates") {
-    import spark.implicits._
-    val mk = (links: Seq[(String, String)]) => "<html><body>" +
-      links.map { case (h, t) => s"""<a href="$h">$t</a>""" }.mkString +
-      "</body></html>"
-    val batch1 = Seq(
-      ("http://a.example/1", mk(Seq(
-        "http://t.example/page" -> "Home", "http://t.example/page" -> "Home"))),
-      ("http://b.example/1", mk(Seq("http://t.example/page" -> "home page"))))
-      .toDF("page_url", "html")
-    // the SAME page recrawled UNCHANGED plus a new source page: under
-    // the additive merge a's counts would double; replace-merge keeps
-    // the state identical to a fresh batch over the CURRENT page set
-    val recrawl = Seq(
-      ("http://a.example/1", mk(Seq(
-        "http://t.example/page" -> "Home", "http://t.example/page" -> "Home"))),
-      ("http://c.example/1", mk(Seq("http://t.example/other" -> "misc"))))
-      .toDF("page_url", "html")
-    val replaced = HtmlOps.anchorStateMergeReplace(
-      HtmlOps.anchorState(batch1), HtmlOps.anchorState(recrawl))
-    val fresh = HtmlOps.anchorState(Seq(
-      ("http://a.example/1", mk(Seq(
-        "http://t.example/page" -> "Home", "http://t.example/page" -> "Home"))),
-      ("http://b.example/1", mk(Seq("http://t.example/page" -> "home page"))),
-      ("http://c.example/1", mk(Seq("http://t.example/other" -> "misc"))))
-      .toDF("page_url", "html"))
-    assert(replaced.exceptAll(fresh).count() == 0 &&
-      fresh.exceptAll(replaced).count() == 0)
-    // idempotence — the property the additive merge lacks: merging the
-    // identical recrawl again changes nothing
-    val twice = HtmlOps.anchorStateMergeReplace(
-      replaced, HtmlOps.anchorState(recrawl))
-    assert(twice.exceptAll(replaced).count() == 0 &&
-      replaced.exceptAll(twice).count() == 0)
   }
 
   test("q_anchor_text: one/one again collapse onto one canonical target") {

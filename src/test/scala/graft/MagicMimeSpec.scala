@@ -2,8 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
-import org.apache.spark.sql.functions._
-
 import graft.plans.MagicMime
 
 /** Magic-byte MIME sniffing (SURVEY §2 row 166): the first-match walk,

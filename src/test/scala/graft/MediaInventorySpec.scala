@@ -2,7 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
-import graft.operators.{MediaOps, Mp3Ops, Mp4Ops, MultimodalOps, WebpOps}
+import graft.operators.{MediaOps, Mp3Ops, Mp4Ops, WebpOps}
 
 /** The unified media inventory (SURVEY §2-C): one pass naming every
   * response's bytes and reading the walked formats' metadata. */

@@ -827,7 +827,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("dedupEmbeddingLsh: candidate volume is a small fraction of n(n-1)/2") {
     val n = embs.count()
     val allPairs = n * (n - 1) / 2
-    val cands = DedupOps.embeddingLshCandidates(embs).count()
+    val cands = DedupOps.embeddingLshCollisions(embs).distinct().count()
     // measured 5.7% on this corpus; assert an order-of-magnitude margin
     // under the unblocked quadratic
     assert(cands * 10 <= allPairs,
@@ -896,7 +896,7 @@ class PipelineOpsSpec extends SparkSpec {
     // tiled and rp verified pairs
     def check(input: String, e: DataFrame): (Set[Pair], Set[Pair]) = {
       val m = DedupOps.IncrementalDeltaMod
-      val lsh = verified(e, DedupOps.embeddingLshCandidates(e))
+      val lsh = verified(e, DedupOps.embeddingLshCollisions(e).distinct())
       val rp = verified(e, DedupOps.embeddingRpCandidates(e))
       assert(lsh.nonEmpty && rp.nonEmpty, input)
       assertOnce(s"$input lsh", rows(DedupOps.dedupEmbeddingLsh(e)), lsh)
@@ -999,7 +999,8 @@ class PipelineOpsSpec extends SparkSpec {
       planted.count { case (ia, _, ib, _) => got.contains((ia, ib)) }
     }
     val rpRecall = detected(DedupOps.embeddingRpCandidates(df)).toDouble / nPairs
-    val tiledRecall = detected(DedupOps.embeddingLshCandidates(df)).toDouble / nPairs
+    val tiledRecall =
+      detected(DedupOps.embeddingLshCollisions(df).distinct()).toDouble / nPairs
     val p = 1.0 - math.acos(0.9) / math.Pi
     val formula = 1.0 - math.pow(1.0 - math.pow(p, 8), 16)
     // the headline claim of §2-63: independent projections measure AT OR
@@ -1265,7 +1266,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("annIvfQ8Multi: an indexed vector as external query reproduces annIvfQ8; batch answers all queries") {
-    import spark.implicits._
     val index = AnnOps.quantizedVectors(embs)
     // query table = raw embeddings of two indexed vectors, re-quantized
     // through the serving path from floats

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -16,7 +14,7 @@ class SinksSpec extends SparkSpec {
     val out = SparkSpec.tempDir("graft_part").toFile.getAbsolutePath
     val events = Tables.events(spark, sfDir)
     Sinks.writePartitionedByDay(events, out)
-    val back = Sinks.readPartitioned(spark, out)
+    val back = Tables.parquet(spark, out)
     assert(back.count() == events.count())
     val pruned = back.filter(col("day") === "2024-01-05")
     val p = pruned.queryExecution.explainString(FormattedMode)
@@ -32,7 +30,7 @@ class SinksSpec extends SparkSpec {
     import graft.operators.AnnOps
     val out = SparkSpec.tempDir("graft_ivf").toFile.getAbsolutePath
     val embs = Tables.embeddings(spark, sfDir)
-    Sinks.writePartitionedByLabel(embs, out)
+    Sinks.writePartitionedBy(embs, out, "label")
     val back = spark.read.parquet(out)
     val df = AnnOps.annIvf(back)
     val p = df.queryExecution.explainString(FormattedMode)

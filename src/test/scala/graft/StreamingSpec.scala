@@ -263,48 +263,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupStream drops replayed event ids within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val input = MemoryStream[Event]
-    val withId = input.toDF().withColumn("event_id", col("value").cast("long"))
-    val q = EventStream.dedupStream(withId)
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      input.addData(
-        Event(new Timestamp(base), 1L, "click", 7.0),
-        Event(new Timestamp(base + 1000), 1L, "click", 7.0), // replayed id 7
-        Event(new Timestamp(base + 2000), 2L, "view", 8.0))
-      q.processAllAvailable()
-      input.addData(Event(new Timestamp(base + 3000), 1L, "click", 7.0)) // replay again
-      q.processAllAvailable()
-      assert(spark.table("dedup").count() == 2)
-    } finally q.stop()
-  }
-
-  test("windowAfterStream: stream-stream interval join matches the batch twin") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val errs = MemoryStream[Event]
-    val views = MemoryStream[Event]
-    val errDf = errs.toDF().withColumn("event_id", col("value").cast("long"))
-    val q = EventStream.windowAfterStream(errDf, views.toDF())
-      .writeStream.format("memory").queryName("wa").outputMode("append").start()
-    try {
-      errs.addData(Event(new Timestamp(base), 1L, "error", 100.0))
-      views.addData(
-        Event(new Timestamp(base + 3600000), 1L, "view", 1.0),   // +1h: in band
-        Event(new Timestamp(base + 7 * 3600000), 1L, "view", 2.0), // +7h: out
-        Event(new Timestamp(base + 3600000), 2L, "view", 3.0))   // other user
-      q.processAllAvailable()
-      val rows = spark.table("wa").collect()
-      assert(rows.length == 1)
-      assert(rows.head.getAs[Long]("a_user") == 1L)
-    } finally q.stop()
-  }
-
   test("windowedCounts drops data later than the watermark (append mode)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -979,7 +937,8 @@ class StreamingSpec extends SparkSpec {
     val clickEvs = Seq(
       Event(ts(5), 1L, "click", 2.0), // within the 10 min gap → match
       Event(ts(20), 1L, "click", 3.0), // outside the gap → no match
-      Event(ts(3), 2L, "click", 4.0)) // match for user 2
+      Event(ts(3), 2L, "click", 4.0), // match for user 2
+      Event(ts(4), 3L, "click", 5.0)) // user 3 has no view → no match
     val views = MemoryStream[Event]
     val clicks = MemoryStream[Event]
     val q = EventStream.streamStreamJoin(views.toDF(), clicks.toDF())

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFuns
@@ -61,7 +62,7 @@ class TextHashExprSpec extends SparkSpec {
         explode(split(col("t"), " ")).as("tok"))
         .withColumn("h", md5(col("tok").cast("binary")))
       val sumExprs = (0 until bits).map(b =>
-        sum(TextFuns.simhashWeight(col("h"), b)).as(s"s$b"))
+        sum(TextHashExprSpec.simhashWeight(col("h"), b)).as(s"s$b"))
       val hof = toks.groupBy(col("doc_id"))
         .agg(sumExprs.head, sumExprs.tail: _*)
         .select(col("doc_id"),
@@ -87,7 +88,7 @@ class TextHashExprSpec extends SparkSpec {
 
   test("utf8_nfc: composes decomposed sequences, idempotent, codegen ≡ eval") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, call_function, length}
+    import org.apache.spark.sql.functions.{col, call_function}
     graft.plans.GraftFunctions.register(spark)
     val decomposed = "cafe\u0301 u\u0308ber" // e+combining acute, u+combining diaeresis
     val composed = "caf\u00e9 \u00fcber"
@@ -210,5 +211,25 @@ class TextHashExprSpec extends SparkSpec {
     // full 100-element set — and fails a size <= cap filter
     assert(df("hot").length == 9, df("hot").length.toString)
     assert(df("hot").distinct.length == 9)
+  }
+}
+
+object TextHashExprSpec {
+
+  /** SimHash ±1 weight for bit `b` of a token: bits 0-31 test the parity
+    * (low bit) of hex digit `b` of the token's md5; bits 32-63 test the
+    * SECOND bit of hex digit `b−32` — two independent bit planes from one
+    * digest. SUM of these over a doc's tokens is the signed bit weight —
+    * exact integer math, identical to the oracle's
+    * `strpos('13579bdf'|'2367abef', digit) > 0` tests. The declarative
+    * reference the native `simhash_fp` is compared against. */
+  def simhashWeight(tokenMd5Hex: Column, b: Int): Column = {
+    require(b >= 0 && b <= 63, s"simhash bit $b out of the two md5 bit planes")
+    val digitsWithBitSet = // hex digits whose bit (b >>> 5) is set
+      if (b < 32) Seq("1", "3", "5", "7", "9", "b", "d", "f")
+      else Seq("2", "3", "6", "7", "a", "b", "e", "f")
+    when(substring(tokenMd5Hex, (b & 31) + 1, 1)
+      .isin(digitsWithBitSet: _*), lit(1))
+      .otherwise(lit(-1))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.US_ASCII
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import graft.sources.WarcSource
@@ -12,7 +12,7 @@ import graft.sources.WarcSource
 class WarcSourceSpec extends SparkSpec {
 
   private def record(typ: String, uri: String, payload: Array[Byte],
-                     id: String = "rec"): Array[Byte] = {
+                     id: String): Array[Byte] = {
     val hdr = ("WARC/1.0\r\n" +
       s"WARC-Type: $typ\r\n" +
       s"WARC-Record-ID: <urn:test:$id>\r\n" +
@@ -60,7 +60,7 @@ class WarcSourceSpec extends SparkSpec {
       r.getAs[Long]("content_length") == r.getAs[Array[Byte]]("payload").length))
   }
 
-  test("cdxIndex records exact offsets; readAt re-reads exactly the indexed record") {
+  test("cdxIndex records exact offsets; readAtMember(0, offset) re-reads each record") {
     import org.apache.spark.sql.functions.col
     val dir = SparkSpec.tempDir("graft_warc_cdx")
     val plain = dir.resolve("seg-0.warc")
@@ -99,10 +99,11 @@ class WarcSourceSpec extends SparkSpec {
     val idx = WarcSource.cdxIndex(records).collect()
     assert(!WarcSource.cdxIndex(records).columns.contains("payload"))
     assert(idx.forall(_.getAs[String]("canon_url") != ""))
-    // readAt(file, offset) must return EXACTLY the indexed record, on
-    // the plain file (buffered skip) and through the gzip route alike
+    // a skip of `offset` from the file head must return EXACTLY the
+    // indexed record, on the plain file (buffered skip) and through the
+    // gzip route alike
     records.collect().foreach { r =>
-      val got = WarcSource.readAt(spark, r.getAs[String]("file"),
+      val got = WarcSource.readAtMember(spark, r.getAs[String]("file"), 0L,
         r.getAs[Long]("offset"))
       assert(got.nonEmpty, s"no record at ${r.getAs[Long]("offset")}")
       assert(got.get.record_id == r.getAs[String]("record_id"))
@@ -242,6 +243,34 @@ class WarcSourceSpec extends SparkSpec {
         r.getAs[Long]("member_offset"))
       assert(got.map(_.record_id).contains(r.getAs[String]("record_id")))
     }
+  }
+
+  test("readAtMember and readMembers agree row for row; a past-EOF row drops") {
+    import spark.implicits._
+    val dir = SparkSpec.tempDir("graft_warc_faces")
+    Files.write(dir.resolve("seg-0.warc"), warcBytes)
+    val gz = new ByteArrayOutputStream()
+    Seq(record("warcinfo", "", "software: graft-test\r\n".getBytes(US_ASCII), "info"),
+      record("response", "http://example.com/b", httpPayload, "resp2"),
+      record("request", "http://example.com/b",
+        "GET /b HTTP/1.1\r\n".getBytes(US_ASCII), "req2")).foreach { r =>
+      val o = new GZIPOutputStream(gz); o.write(r); o.finish()
+    }
+    Files.write(dir.resolve("seg-1.warc.gz"), gz.toByteArray)
+    val rows = WarcSource.read(spark, dir.toString)
+      .select("file", "member_offset", "member_skip").as[(String, Long, Long)]
+      .collect().toSeq
+    assert(rows.map(_._1).distinct.length == 2 && rows.length == 6)
+    val pastEof = rows.map(_._1).distinct.map(f => (f, 999999999L, 0L))
+    def key(r: WarcSource.WarcRecord) = (r.file, r.record_id, r.offset,
+      r.length, r.member_offset, r.member_skip, r.payload.toSeq)
+    val one = (rows ++ pastEof).flatMap { case (f, off, skip) =>
+      WarcSource.readAtMember(spark, f, off, skip) }.map(key)
+    val batch = WarcSource.readMembers(spark,
+        (rows ++ pastEof).toDF("file", "member_offset", "member_skip"))
+      .as[WarcSource.WarcRecord].collect().toSeq.map(key)
+    assert(one.length == 6, one.map(_._2))
+    assert(batch.sortBy(k => (k._1, k._5)) == one.sortBy(k => (k._1, k._5)))
   }
 
   test("a gzip member holding several records: shared member_offset, " +
@@ -540,7 +569,6 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("WarcSink round-trips: WET conversion records read back by WarcSource") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val dir = SparkSpec.tempDir("graft_wet").resolve("out").toString
     val docs = Seq(
@@ -779,7 +807,6 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("the full loop: WARC in → warcToDocuments → WET out → WARC in again") {
-    import org.apache.spark.sql.functions.col
     val dir = SparkSpec.tempDir("graft_loop")
     Files.write(dir.resolve("seg.warc"),
       record("response", "http://en.site/x",
