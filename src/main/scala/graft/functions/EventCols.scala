@@ -39,7 +39,12 @@ object EventCols {
       .as("us")
 
   /** Nested-payload extraction (reference reads `pass.end_location` etc from
-    * nested JSON; here the payload is a JSON string column). */
+    * nested JSON; here the payload is a JSON string column). Written as
+    * Spark's `get_json_object` cast; the session's
+    * [[graft.plans.RewriteJsonIntField]] runs it as the
+    * [[graft.plans.JsonIntField]] byte scan, which reads a `{"k": int}`
+    * payload without Jackson and evaluates this very expression for any
+    * other payload. The DuckDB mirror, [[sql.k]], is unchanged. */
   def k: Column = get_json_object(col("props"), "$.k").cast("int").as("k")
 
   // --- pitch geometry (120×80, reference coordinate system) ---------------

@@ -188,9 +188,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
     // HOF dot/norm → native codegen expressions, double round → the
-    // HalfUp kernel (both bit-identical rewrites)
+    // HalfUp kernel, an int cast of a one-field JSON path → the byte-scan
+    // JsonInt kernel (all three value-identical rewrites)
     ext.injectOptimizerRule(_ => RewriteHofVectorOps)
     ext.injectOptimizerRule(_ => RewriteDoubleRound)
+    ext.injectOptimizerRule(_ => RewriteJsonIntField)
   }
 }
 

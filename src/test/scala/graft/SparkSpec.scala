@@ -43,6 +43,18 @@ object SparkSpec {
     (a, counter.get - before)
   }
 
+  /** `f` run with the session confs `kvs` set, each restored (or unset)
+    * afterwards. */
+  def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val conf = session.conf
+    val before = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try f finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   private val tempDirs = new ConcurrentLinkedQueue[Path]()
   private lazy val deleteOnExit: Unit = {
     sys.addShutdownHook(tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
